@@ -2,9 +2,8 @@
 
 The reference's extensibility hook is the per-chunk Python callback of
 dump_r/dump_t (rcache.py:57-72, 83-106).  The Spark analogs are:
-grouped-map (applyInPandas / applyInPandasWithState — used by the
-streaming compactor) and grouped-aggregate Pandas UDFs (Arrow-batched
-UDAFs).  This module provides a real UDAF for when the aggregate truly
+grouped-map (applyInPandas) and grouped-aggregate Pandas UDFs
+(Arrow-batched UDAFs).  This module provides a real UDAF for when the aggregate truly
 isn't expressible with built-ins; anything expressible stays JVM-side.
 """
 

@@ -4,7 +4,7 @@ The reference's only extensibility hook is a per-row/per-chunk Python
 callback (rcache.py:57-72, 83-106).  Spark's richest analog family is:
 scalar `udf`/`pandas_udf`, grouped-agg `pandas_udf` (functions/udafs.py),
 grouped-map `applyInPandas` (plans/llm.py), `mapInPandas`
-(operators/multimodal.py), `foreachBatch` (streaming/compact_stream.py)
+(operators/multimodal.py), `foreachBatch` (streaming/compact_jvm.py)
 — and the table-valued form below: a Python UDTF (Spark 3.5+/4.x),
 which turns one input row into many output rows with arbitrary Python
 logic.

@@ -36,10 +36,15 @@ Spark realization — one shuffle, all JVM built-ins, no Python UDFs:
 Per-key event counts are bounded by the changelog between compactions
 (the reference flushes at cache_max_rows=2e6, cdc_config.py:42), so the
 collect_list stays small; the aggregate itself is a standard partial/
-final hash aggregate that scales linearly with executors.  The streaming
-twin (streaming/compact_stream.py) holds (fold_state, last_row) per key
-in the state store — O(1) per event — and must produce identical output
-(tested in tests/test_streaming_parity.py).
+final hash aggregate that scales linearly with executors.
+
+This module is the ONE home of that algebra.  A batch folds to its
+TRANSITION TUPLE (``batch_transitions``); ``compact`` is the from-empty
+leg of it, ``merge_state``/``merge_state_delta`` compose a tuple onto a
+compacted state, and the streaming twin (streaming/compact_jvm.py)
+commits the same tuples per micro-batch and composes them with the
+same ``_next_action`` indexing rule — so it must produce identical
+output (tested in tests/test_streaming_parity_jvm.py).
 """
 
 from __future__ import annotations
@@ -83,8 +88,9 @@ def _fold_actions_from(sorted_actions: Column, init: str) -> Column:
     over a seq-sorted array of action strings, starting from an
     arbitrary state ``init`` — the generalization that lets a batch be
     summarized as a TRANSITION TUPLE (one fold per possible incoming
-    state), the same shape streaming/compact_jvm.py proved
-    composition-exact.  Runs entirely in JVM codegen via F.aggregate."""
+    state, ``TRANSITION_FOLDS``).  The only Python spelling of the
+    merge table (the DuckDB oracles spell it as plans/cdc.py
+    ``_FOLD_LAMBDA``).  Runs entirely in JVM codegen via F.aggregate."""
     sentinel = F.lit(ACTION_FOLD_SENTINEL)
 
     def merge(state: Column, x: Column) -> Column:
@@ -107,6 +113,33 @@ def _fold_actions(sorted_actions: Column) -> Column:
     return _fold_actions_from(sorted_actions, ACTION_FOLD_SENTINEL)
 
 
+# The transition tuple: column -> the incoming state its fold starts
+# from.  ``update`` and ``delete`` transition identically under the
+# merge table (both take its last branch: insert -> update, anything
+# else kept), so one fold covers both and the tuple has three entries.
+TRANSITION_FOLDS = {
+    "f_absent": ACTION_FOLD_SENTINEL,
+    "f_insert": "insert",
+    "f_update": "update",
+}
+
+
+def _next_action(state: Column, tup) -> Column:
+    """Index a transition tuple by the key's incoming state: absent
+    (NULL — no state row — or the annihilation sentinel) → ``f_absent``,
+    insert → ``f_insert``, update/delete → ``f_update``.  ``tup`` is
+    anything indexable by the tuple's column names: a struct Column
+    (one element of a run composition) or ``F.struct`` of a joined
+    delta's columns.  The one tuple-indexing rule every composition
+    uses — the batch merge join, the stream's bkey join and the
+    composition of stream runs."""
+    return (
+        F.when(state.isNull() | (state == ACTION_FOLD_SENTINEL), tup["f_absent"])
+        .when(state == "insert", tup["f_insert"])
+        .otherwise(tup["f_update"])
+    )
+
+
 def compact(
     changelog: DataFrame,
     pk_cols: list[str] | tuple[str, ...],
@@ -121,25 +154,16 @@ def compact(
     values, wholesale).  Annihilated keys (insert...delete epochs) are
     absent; tombstones (first action delete/update then delete) survive
     with cdc_action='delete' — exactly rcache.py:214 firing only on
-    old=insert.
+    old=insert.  The from-empty leg of the transition tuple: the
+    optimizer prunes the unused folds and ``last_seq``, leaving one
+    aggregate and one fold.
     """
-    keyed = with_rid(changelog, pk_cols).filter(F.col("rid").isNotNull())
-    grouped = keyed.groupBy(F.col(table_col).alias("tbl"), "rid").agg(
-        # last values win wholesale (rcache.py:222); seq is unique so
-        # max_by is deterministic.
-        F.max_by(F.struct(*[F.col(c) for c in payload_cols]), F.col(seq_col)).alias("_last"),
-        # per-key ordered action log; sorted by seq (struct sort order is
-        # field order, seq first).
-        F.array_sort(
-            F.collect_list(F.struct(F.col(seq_col).alias("s"), F.col(action_col).alias("a")))
-        ).alias("_evs"),
+    return delta_to_state(
+        batch_transitions(
+            changelog, pk_cols, payload_cols, table_col, seq_col, action_col
+        ),
+        payload_cols,
     )
-    folded = grouped.withColumn(
-        "cdc_action",
-        _fold_actions(F.transform(F.col("_evs"), lambda ev: ev["a"])),
-    )
-    alive = folded.filter(F.col("cdc_action") != ACTION_FOLD_SENTINEL)
-    return alive.select("tbl", "rid", "cdc_action", "_last.*")
 
 
 # ---------------------------------------------------------------------------
@@ -160,7 +184,7 @@ def merge_state(
     state holds ≤1 row per key).
 
     Algebra: the new batch is folded per key into a TRANSITION TUPLE
-    ``(f_absent, f_insert, f_ud)`` — the fold outcome had the key's
+    ``(f_absent, f_insert, f_update)`` — the fold outcome had the key's
     state been absent / insert / update-or-delete when the batch
     arrived (``update`` and ``delete`` transition identically under
     rcache's merge table, so one fold covers both) — then full-outer
@@ -190,7 +214,7 @@ def merge_state(
     |state| + |new events| on every merge.  On a merge CASCADE the
     per-batch folds are independent subtrees that execute concurrently
     instead of strictly one-after-another."""
-    delta = _batch_transitions(new_changelog, pk_cols, payload_cols, table_col, seq_col)
+    delta = batch_transitions(new_changelog, pk_cols, payload_cols, table_col, seq_col)
     return merge_state_delta(state, delta, payload_cols, table_col)
 
 
@@ -200,8 +224,8 @@ def merge_state_delta(
     payload_cols: list[str] | tuple[str, ...],
     table_col: str = "tbl",
 ) -> DataFrame:
-    """Compose a PRE-FOLDED transition delta (``_batch_transitions``
-    output — one row per key: f_absent/f_insert/f_ud + _last payload)
+    """Compose a PRE-FOLDED transition delta (``batch_transitions``
+    output — one row per key: f_absent/f_insert/f_update + _last payload)
     into a compacted state: the join half of ``merge_state``, split out
     so a pipeline that stages its per-batch deltas merges them WITHOUT
     re-folding the raw events per level (the incremental-merge bench
@@ -220,12 +244,8 @@ def merge_state_delta(
     )
     j = s.join(delta, ["tbl", "rid"], "full_outer")
     d_present = F.col("f_absent").isNotNull()
-    s_present = F.col("_s_act").isNotNull()
-    new_action = (
-        F.when(~d_present, F.col("_s_act"))
-        .when(~s_present, F.col("f_absent"))
-        .when(F.col("_s_act") == "insert", F.col("f_insert"))
-        .otherwise(F.col("f_ud"))  # update and delete transition alike
+    new_action = F.when(~d_present, F.col("_s_act")).otherwise(
+        _next_action(F.col("_s_act"), F.struct(*TRANSITION_FOLDS))
     )
     merged = j.select(
         "tbl",
@@ -239,7 +259,7 @@ def merge_state_delta(
     return merged.filter(F.col("cdc_action") != ACTION_FOLD_SENTINEL)
 
 
-def _batch_transitions(
+def batch_transitions(
     changelog: DataFrame,
     pk_cols: list[str] | tuple[str, ...],
     payload_cols: list[str] | tuple[str, ...],
@@ -249,20 +269,27 @@ def _batch_transitions(
     extra_group_cols: list[str] | tuple[str, ...] = (),
 ) -> DataFrame:
     """One row per (tbl, rid) summarizing a changelog batch as its fold
-    transition tuple + last payload: ``f_absent`` / ``f_insert`` /
-    ``f_ud`` = the fold outcome from that incoming state (update and
-    delete transition identically under rcache's merge table — both
-    rows of the table map insert→update and keep update/delete — so one
-    fold covers both), ``_last`` = the newest event's payload struct
-    (values win wholesale, rcache.py:222).  Same single-shuffle groupBy
-    shape as compact()."""
+    transition tuple: columns ``tbl, rid, f_absent, f_insert, f_update,
+    last_seq, _last``.  ``f_s`` = the fold outcome had the key's state
+    been ``s`` when the batch arrived (``f_update`` also serves an
+    incoming delete, ``TRANSITION_FOLDS``), ``last_seq`` = the newest
+    event's seq, ``_last`` = the newest event's payload struct (values
+    win wholesale, rcache.py:222).  Composing batches through these
+    tuples is exactly event-at-a-time ingestion (pinned over every
+    action sequence × split point in tests/test_compaction_exhaustive.py
+    and tests/test_streaming_parity_jvm.py).  One single-shuffle
+    groupBy; the folds run in whole-stage codegen."""
     keyed = with_rid(changelog, pk_cols).filter(F.col("rid").isNotNull())
     grouped = keyed.groupBy(
         *extra_group_cols, F.col(table_col).alias("tbl"), "rid"
     ).agg(
+        # seq is unique per key, so max_by is deterministic
         F.max_by(
             F.struct(*[F.col(c) for c in payload_cols]), F.col(seq_col)
         ).alias("_last"),
+        F.max(F.col(seq_col)).alias("last_seq"),
+        # per-key ordered action log; struct sort order is field order,
+        # so this sorts by seq
         F.array_sort(
             F.collect_list(
                 F.struct(F.col(seq_col).alias("s"), F.col(action_col).alias("a"))
@@ -274,21 +301,28 @@ def _batch_transitions(
         *extra_group_cols,
         "tbl",
         "rid",
-        _fold_actions_from(acts, ACTION_FOLD_SENTINEL).alias("f_absent"),
-        _fold_actions_from(acts, "insert").alias("f_insert"),
-        _fold_actions_from(acts, "update").alias("f_ud"),
+        *[
+            _fold_actions_from(acts, init).alias(c)
+            for c, init in TRANSITION_FOLDS.items()
+        ],
+        "last_seq",
         "_last",
     )
 
 
 def delta_to_state(
-    delta: DataFrame, payload_cols: list[str] | tuple[str, ...]
+    delta: DataFrame,
+    payload_cols: list[str] | tuple[str, ...],
+    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """First batch (no prior state): the from-empty fold IS the state —
-    ``delta_to_state(_batch_transitions(b)) ≡ compact(b)`` by
-    construction (same fold, same wholesale-newest payload; pinned in
-    tests/test_compaction_exhaustive.py); annihilated keys vanish."""
+    ``delta_to_state(batch_transitions(b)) ≡ compact(b)`` by
+    construction (pinned in tests/test_compaction_exhaustive.py);
+    annihilated keys vanish.  ``carry_cols`` are delta columns kept in
+    front of the state's (the stream keeps its ``bkey`` and
+    ``last_seq``)."""
     return delta.filter(F.col("f_absent") != ACTION_FOLD_SENTINEL).select(
+        *carry_cols,
         "tbl",
         "rid",
         F.col("f_absent").alias("cdc_action"),

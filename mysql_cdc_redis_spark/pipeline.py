@@ -6,8 +6,10 @@ three entry points (SURVEY.md §3):
   loadcsv  (CSV → re-save through the same merge)      →  replay()
 
 One process, one SparkSession; offsets live in the stream checkpoint
-(K5), compacted state in a table-partitioned parquet dir (K4), dumps in
-date-partitioned chunked CSV (K1).  Usage:
+(K5), the stream's LSM state (transition runs + bucketed base, see
+streaming/compact_jvm.py) in its own sub-dir, the compacted-state
+snapshot in a parquet dir (K4), dumps in date-partitioned chunked CSV
+(K1).  Usage:
 
     from mysql_cdc_redis_spark.pipeline import CdcPipeline
     p = CdcPipeline(spark, work_dir, pk_cols, payload_cols, schema)
@@ -26,7 +28,7 @@ from pyspark.sql.types import StructType
 
 from .operators.compaction import compact, merge_state
 from .operators.dump import dump_to_csv, read_dump
-from .streaming.compact_stream import run_compaction_stream
+from .streaming.compact_jvm import run_compaction_stream_jvm
 
 
 class CdcPipeline:
@@ -44,7 +46,7 @@ class CdcPipeline:
         self.payload_cols = payload_cols
         self.schema = changelog_schema
         self.checkpoint_dir = os.path.join(work_dir, "checkpoint")  # K5 offsets
-        self.emissions_dir = os.path.join(work_dir, "emissions")
+        self.stream_state_dir = os.path.join(work_dir, "stream_state")
         self.state_dir = os.path.join(work_dir, "state")  # K4 cache
 
     # -- cdc.py analog ----------------------------------------------------
@@ -52,14 +54,14 @@ class CdcPipeline:
         """Consume all currently-available changelog files (blocking=False
         mode), fold through the keyed state, snapshot compacted state to
         the durable parquet dir.  Returns the new state."""
-        state = run_compaction_stream(
+        state = run_compaction_stream_jvm(
             self.spark,
             changelog_dir,
             self.schema,
             self.pk_cols,
             self.payload_cols,
             checkpoint_dir=self.checkpoint_dir,
-            emissions_dir=self.emissions_dir,
+            state_dir=self.stream_state_dir,
         )
         state.write.mode("overwrite").parquet(self.state_dir)
         return self.state()

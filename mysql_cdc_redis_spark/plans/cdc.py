@@ -445,7 +445,7 @@ def _merge4x_cuts(spark: SparkSession, sf_dir: str, fracs):
 )
 def cdc_incremental_merge_4x(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.compaction import (
-        _batch_transitions,
+        batch_transitions,
         delta_to_state,
         merge_state_delta,
     )
@@ -485,7 +485,7 @@ def cdc_incremental_merge_4x(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged_dir = tempfile.mkdtemp(prefix="cdc_merge4x_stage_")
     final_dir = tempfile.mkdtemp(prefix="cdc_merge4x_state_")
     try:
-        _batch_transitions(
+        batch_transitions(
             ch2.drop("_cuts"),
             LINEITEM_PK,
             LINEITEM_PAYLOAD,

@@ -27,7 +27,6 @@ from ..sources.changelog import (
     lineitem_changelog,
     orders_changelog,
 )
-from ..streaming import run_compaction_stream
 from ..streaming.changelog_files import stage_changelog_files, stage_event_files
 from .catalog import register
 from .cdc import _FOLD_LAMBDA, _oracle_compact_sql
@@ -42,33 +41,47 @@ def _tmp(name: str) -> str:
     "cdc_compact_stream_jvm_orders",
     doc="T1/T4/K5, pure-JVM form (round-5 verdict item 1): the "
     "foreachBatch + transition-tuple merge streaming compactor "
-    "(streaming/compact_jvm.py) — each micro-batch folds to its full "
-    "action-transition tuple (four JVM F.aggregate folds) and commits "
+    "(streaming/compact_jvm.py) — each micro-batch folds to its "
+    "action-transition tuple (three JVM F.aggregate folds) and commits "
     "as an immutable LSM run, O(|batch|) per commit; periodic "
     "compaction folds base+runs into a bucketed-by-key state table "
     "via a full-outer join whose base side plans Exchange-free.  Zero "
-    "per-key Python crossings — the 100x replacement for the "
-    "applyInPandasWithState twin's pandas crossing (21k ev/s -> >100k "
-    "ev/s measured on the same staged changelog).  Exactly-once via "
+    "per-key Python crossings (the retired applyInPandasWithState "
+    "form ran 21k ev/s; this one >100k ev/s on the same staged "
+    "changelog).  Exactly-once via "
     "immutable runs + an atomic batch_id->view commit log; must "
     "hash-match the batch compaction oracle.",
     tags=("cdc", "streaming", "jvm-state", "ref:T1", "ref:T4", "ref:K5"),
     oracle=_oracle_compact_sql(ORDERS_CHANGELOG_SQL, ORDERS_PK, ORDERS_PAYLOAD),
 )
 def cdc_compact_stream_jvm_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _compaction_stream_jvm(
+        spark, orders_changelog(spark, sf_dir), ORDERS_PK, ORDERS_PAYLOAD, n_chunks=4
+    )
+
+
+def _compaction_stream_jvm(
+    spark: SparkSession,
+    ch: DataFrame,
+    pk: tuple[str, ...],
+    payload: tuple[str, ...],
+    n_chunks: int,
+) -> DataFrame:
+    """Stage ``ch`` as ``n_chunks`` files, stream them one micro-batch
+    per file through ``run_compaction_stream_jvm``, return the final
+    compacted state detached from the (dropped) state tables."""
     from ..operators.staging import stage_parquet
     from ..streaming import drop_state_jvm, run_compaction_stream_jvm
 
-    ch = orders_changelog(spark, sf_dir)
     source_dir = _tmp("stream_jvm_src")
-    stage_changelog_files(ch, source_dir, n_chunks=4)
+    stage_changelog_files(ch, source_dir, n_chunks=n_chunks)
     state_dir = _tmp("stream_jvm_state")
     out = run_compaction_stream_jvm(
         spark,
         source_dir,
         ch.schema,
-        ORDERS_PK,
-        ORDERS_PAYLOAD,
+        pk,
+        payload,
         checkpoint_dir=_tmp("stream_jvm_ckpt"),
         state_dir=state_dir,
         max_files_per_trigger=1,
@@ -83,26 +96,15 @@ def cdc_compact_stream_jvm_orders(spark: SparkSession, sf_dir: str) -> DataFrame
 @register(
     "cdc_compact_stream_orders",
     doc="S1+T4: the streaming twin of cdc_compact_orders — file-backed "
-    "changelog stream, applyInPandasWithState keyed cache (the Redis "
-    "analog, rcache.py:224-259), foreachBatch sink, availableNow "
-    "trigger.  Must hash-match the *batch* compaction oracle.",
+    "changelog stream into the keyed cache (the Redis analog, "
+    "rcache.py:224-259), availableNow trigger.  Runs the one streaming "
+    "compactor, the same query as cdc_compact_stream_jvm_orders.  Must "
+    "hash-match the *batch* compaction oracle.",
     tags=("cdc", "streaming", "ref:S1", "ref:T4"),
     oracle=_oracle_compact_sql(ORDERS_CHANGELOG_SQL, ORDERS_PK, ORDERS_PAYLOAD),
 )
 def cdc_compact_stream_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ch = orders_changelog(spark, sf_dir)
-    source_dir = _tmp("stream_src")
-    stage_changelog_files(ch, source_dir, n_chunks=4)
-    return run_compaction_stream(
-        spark,
-        source_dir,
-        ch.schema,
-        ORDERS_PK,
-        ORDERS_PAYLOAD,
-        checkpoint_dir=_tmp("stream_ckpt"),
-        emissions_dir=_tmp("stream_emit"),
-        max_files_per_trigger=1,
-    )
+    return cdc_compact_stream_jvm_orders(spark, sf_dir)
 
 
 @register(
@@ -278,25 +280,19 @@ def stream_sliding_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cdc_compact_stream_lineitem",
-    doc="Streaming compaction with a COMPOSITE key: the applyInPandasWith"
-    "State cache keyed by (tbl, concat_ws('&', l_orderkey, l_linenumber))"
-    " — hash-matches the batch composite-key oracle.",
+    doc="Streaming compaction with a COMPOSITE key: the JVM streaming "
+    "compactor's state keyed by (tbl, concat_ws('&', l_orderkey, "
+    "l_linenumber)) — hash-matches the batch composite-key oracle.",
     tags=("cdc", "streaming", "ref:S1", "ref:T4", "ref:P3"),
     oracle=_oracle_compact_sql(LINEITEM_CHANGELOG_SQL, LINEITEM_PK, LINEITEM_PAYLOAD),
 )
 def cdc_compact_stream_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ch = lineitem_changelog(spark, sf_dir)
-    source_dir = _tmp("stream_li_src")
-    stage_changelog_files(ch, source_dir, n_chunks=3)
-    return run_compaction_stream(
+    return _compaction_stream_jvm(
         spark,
-        source_dir,
-        ch.schema,
+        lineitem_changelog(spark, sf_dir),
         LINEITEM_PK,
         LINEITEM_PAYLOAD,
-        checkpoint_dir=_tmp("stream_li_ckpt"),
-        emissions_dir=_tmp("stream_li_emit"),
-        max_files_per_trigger=1,
+        n_chunks=3,
     )
 
 
@@ -550,11 +546,7 @@ def stream_session_event_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     "of the reference's binlog replay (SURVEY.md §2.8 T1 — crash "
     "redelivery is immediate, not days late).  Fixture duplicates "
     "arrive in adjacent files ⇒ well inside the 1-hour delay ⇒ result "
-    "equals batch DISTINCT and the oracle is exact.  NOTE: "
-    "transformWithStateInPandas (the Spark 4 arbitrary-state successor) "
-    "is unavailable in this container — its driver worker needs "
-    "google.protobuf — so applyInPandasWithState (streaming/"
-    "compact_stream.py) remains the arbitrary-state surface here.",
+    "equals batch DISTINCT and the oracle is exact.",
     tags=("streaming", "dedup", "watermark", "ext"),
     oracle="""
 SELECT event_type, count(*) AS n_unique, round(sum(value), 2) AS total_value
@@ -775,7 +767,9 @@ def stream_global_counts_complete(spark: SparkSession, sf_dir: str) -> DataFrame
     "telescoping makes it exactly the aggregate of the final live "
     "state under ANY micro-batch slicing, with no reprocessing of "
     "unchanged keys.  DECIMAL money math ⇒ retract/add cancellation "
-    "is exact, so the stream result hash-matches the batch oracle.",
+    "is exact, so the stream result hash-matches the batch oracle.  "
+    "Runs the one streaming implementation, the same query as "
+    "stream_retraction_agg_jvm.",
     tags=("cdc", "streaming", "ivm", "retraction", "ext"),
     oracle=f"""
 WITH ch AS ({ORDERS_CHANGELOG_SQL}),
@@ -796,37 +790,7 @@ FROM state GROUP BY o_orderstatus ORDER BY o_orderstatus
 """,
 )
 def stream_retraction_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.compact_stream import run_retraction_stream
-
-    ch = orders_changelog(spark, sf_dir)
-    source_dir = _tmp("retract_src")
-    stage_changelog_files(ch, source_dir, n_chunks=4)
-    deltas = run_retraction_stream(
-        spark,
-        source_dir,
-        ch.schema,
-        ORDERS_PK,
-        ("o_orderstatus", "o_totalprice"),
-        checkpoint_dir=_tmp("retract_ckpt"),
-        deltas_dir=_tmp("retract_deltas"),
-        max_files_per_trigger=1,
-    )
-    return (
-        deltas.groupBy("o_orderstatus")
-        .agg(
-            F.sum("sign").alias("n_live"),
-            F.sum(
-                F.col("sign") * F.col("o_totalprice").cast("decimal(18,2)")
-            ).alias("total_price"),
-        )
-        .filter(F.col("n_live") > 0)
-        .select(
-            "o_orderstatus",
-            "n_live",
-            F.col("total_price").cast("decimal(18,2)").alias("total_price"),
-        )
-        .orderBy("o_orderstatus")
-    )
+    return stream_retraction_agg_jvm(spark, sf_dir)
 
 
 @register(
@@ -837,9 +801,8 @@ def stream_retraction_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "LSM state (broadcast semi-joins against base+runs, folded per "
     "key) — zero per-key Python crossings, "
     "and emissions are exactly-once (each batch overwrites its own "
-    "batch_id=N partition before the state commit, vs the pandas "
-    "twin's at-least-once append).  Same telescoping identity, same "
-    "batch oracle.",
+    "batch_id=N partition before the state commit).  Same telescoping "
+    "identity, same batch oracle.",
     tags=("cdc", "streaming", "ivm", "retraction", "jvm-state", "ext"),
     oracle=f"""
 WITH ch AS ({ORDERS_CHANGELOG_SQL}),
@@ -904,11 +867,12 @@ def stream_retraction_agg_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stream_scd2_history",
     doc="Streaming SCD2: the version history built INCREMENTALLY by the "
-    "stateful operator — each event emits its new open version and the "
-    "correction that closes the previous one; finalize keeps the "
-    "closed emission per (key, version), so any micro-batch slicing "
-    "converges to the batch history.  Must hash-match the batch SCD2 "
-    "oracle — the cross-paradigm check for history building, like the "
+    "stateful operator — each micro-batch closes the versions its "
+    "events supersede and keeps the open ones as state, so any "
+    "micro-batch slicing converges to the batch history.  Runs the one "
+    "streaming implementation, the same query as "
+    "stream_scd2_history_jvm.  Must hash-match the batch SCD2 oracle — "
+    "the cross-paradigm check for history building, like the "
     "compaction twins for latest-state.",
     tags=("cdc", "streaming", "scd2", "ext"),
     oracle=f"""
@@ -926,33 +890,7 @@ ORDER BY rid, version
 """,
 )
 def stream_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.compact_stream import run_scd2_stream
-
-    ch = orders_changelog(spark, sf_dir)
-    source_dir = _tmp("scd2stream_src")
-    stage_changelog_files(ch, source_dir, n_chunks=4)
-    hist = run_scd2_stream(
-        spark,
-        source_dir,
-        ch.schema,
-        ORDERS_PK,
-        ORDERS_PAYLOAD,
-        checkpoint_dir=_tmp("scd2stream_ckpt"),
-        emissions_dir=_tmp("scd2stream_emit"),
-        max_files_per_trigger=1,
-    )
-    return hist.select(
-        "tbl",
-        "rid",
-        "cdc_action",
-        F.col("valid_from").cast("timestamp_ntz").alias("valid_from"),
-        F.col("valid_to").cast("timestamp_ntz").alias("valid_to"),
-        "is_current",
-        "version",
-        # cdc_ts rides the payload through the fold but is not a history
-        # column (it IS valid_from) — same exclusion as batch scd2_history
-        *[c for c in ORDERS_PAYLOAD if c != "cdc_ts"],
-    ).orderBy("rid", "version")
+    return stream_scd2_history_jvm(spark, sf_dir)
 
 
 @register(
@@ -964,7 +902,7 @@ def stream_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     "closed versions are emitted — the open versions ARE the state "
     "rows — and emissions are exactly-once per-batch partitions.  Zero "
     "per-key Python crossings; must hash-match the same batch SCD2 "
-    "oracle as the applyInPandasWithState twin.",
+    "oracle as stream_scd2_history.",
     tags=("cdc", "streaming", "scd2", "jvm-state", "ext"),
     oracle=f"""
 WITH ch AS ({ORDERS_CHANGELOG_SQL})
@@ -1008,7 +946,7 @@ def stream_scd2_history_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_current",
         "version",
         # cdc_ts rides the payload through the fold but is not a history
-        # column (it IS valid_from) — same exclusion as the pandas twin
+        # column (it IS valid_from) — same exclusion as batch scd2_history
         *[c for c in ORDERS_PAYLOAD if c != "cdc_ts"],
     )
     # detach from the state tables, then drop them (warehouse hygiene);

@@ -5,22 +5,12 @@ from .compact_jvm import (
     run_retraction_stream_jvm,
     run_scd2_stream_jvm,
 )
-from .compact_stream import (
-    compact_stream,
-    finalize_stream_output,
-    run_compaction_pipeline_dual_sink,
-    run_compaction_stream,
-)
 from .dedup_stream import compact_lsh_state, run_dedup_stream_minhash
 
 __all__ = [
     "compact_lsh_state",
-    "compact_stream",
     "drop_state_jvm",
-    "finalize_stream_output",
-    "run_compaction_pipeline_dual_sink",
     "run_compaction_pipeline_dual_sink_jvm",
-    "run_compaction_stream",
     "run_compaction_stream_jvm",
     "run_dedup_stream_minhash",
     "run_retraction_stream_jvm",

@@ -1,28 +1,23 @@
-"""Pure-JVM streaming compactor — the foreachBatch + merge twin of the
-applyInPandasWithState compactor (round-5 verdict item 1; SURVEY.md
-§2.8 T1/T4/K5; reference rcache.py:224-259 periodic merge, cdc.py:119-134
-at-least-once replay safety).
-
-The applyInPandasWithState twin (streaming/compact_stream.py) is
-CORRECT but pays a pandas crossing per key per micro-batch — measured
-at 21.3k ev/s against 542k ev/s for the pure-JVM batch compactor on the
-same staged changelog (BENCH_r05), the engine's one perf-weak component
-at 100×.  The transformWithStateInPandas twin needs google.protobuf,
-absent in this environment.  This twin needs NEITHER: it keeps the
-stream JVM-side end to end.
+"""Pure-JVM streaming compactor — the engine's one streaming
+implementation of the CDC merge semantics: foreachBatch micro-batches
+over the algebra of operators/compaction.py (SURVEY.md §2.8 T1/T4/K5;
+reference rcache.py:224-259 periodic merge, cdc.py:119-134 at-least-
+once replay safety).  The stream stays JVM-side end to end: no per-key
+Python crossing, no protobuf-backed state store.
 
 Design — foreachBatch micro-batches, each JVM-compacted into an
 IMMUTABLE per-batch delta run; the state is the LSM of those runs:
 
-* Each micro-batch is first collapsed per key to its FULL fold
-  TRANSITION FUNCTION, not just its fold-from-empty outcome: four
-  ``F.aggregate`` folds over the seq-sorted action array, one per start
-  state {absent, insert, update, delete} (`compact_batch_transitions`).
-  The action algebra (rcache.py:196-222) is a deterministic finite
-  transducer on 4 states, so the tuple (f(absent), f(insert),
-  f(update), f(delete)) composes exactly: for ANY prior state s,
-  fold(s, batch_events) = tuple[s].  One shuffle of the (small) batch,
-  everything in whole-stage codegen.
+* Each micro-batch is first collapsed per key to its fold TRANSITION
+  TUPLE, not just its fold-from-empty outcome
+  (operators/compaction.py::batch_transitions — three ``F.aggregate``
+  folds over the seq-sorted action array, one per start state absent /
+  insert / update-or-delete).  The action algebra (rcache.py:196-222)
+  is a deterministic finite transducer, so the tuple composes exactly:
+  for ANY prior state s, fold(s, batch_events) = tuple[s]
+  (``_next_action``).  The stream only adds the single-column join /
+  bucket key ``bkey``.  One shuffle of the (small) batch, everything in
+  whole-stage codegen.
 * The batch's transition tuples are committed as an immutable RUN
   (``state_dir/runs/b=<batch_id>``) — per-batch commit cost ∝ |batch|,
   NOT ∝ |state|.  The r1-r9 design ping-ponged the ENTIRE state table
@@ -32,7 +27,9 @@ IMMUTABLE per-batch delta run; the state is the LSM of those runs:
   state (round-9 verdict item 1).  Because transition tuples compose
   associatively (`compose_transition_runs` — exhaustively pinned over
   every action sequence × every split point), the state at any moment
-  is the fold of base ∘ runs, recovered at read time.
+  is the fold of base ∘ runs, recovered at read time.  Runs written
+  with the older four-entry tuple (an extra ``f_delete`` column, equal
+  to ``f_update``) read back unchanged: composition never reads it.
 * PERIODIC COMPACTION bounds read amplification, mirroring the dedup
   stream's LSM: when the run count reaches ``max_runs`` (default 8,
   ``SPARK_GRAFT_JVM_MAX_RUNS``), base ∘ runs folds into a new BASE — a
@@ -51,15 +48,14 @@ IMMUTABLE per-batch delta run; the state is the LSM of those runs:
   versioned objects, no rename, correct on S3/GCS and POSIX alike).  A
   crash anywhere before the meta commit leaves the prior view intact;
   the retry overwrites the partial run/base.  Run dirs no longer
-  reachable from the retained views are GC'd at commit.  This is the
-  idempotent-replay contract the reference relies on (M5), upgraded to
-  exactly-once.
+  reachable from the retained views are GC'd at commit through the
+  same FS handle.  This is the idempotent-replay contract the reference
+  relies on (M5), upgraded to exactly-once.
 
 Parity with the batch compactor under ANY micro-batch slicing is
-pinned by tests/test_streaming_parity_jvm.py (mirroring the pandas
-twin's tests), plus exhaustive transition-composition tests over all
-action sequences × split points for BOTH the pairwise merge and the
-multi-run compose.
+pinned by tests/test_streaming_parity_jvm.py, plus exhaustive
+transition-composition tests over all action sequences × split points
+for BOTH the pairwise merge and the multi-run compose.
 """
 
 from __future__ import annotations
@@ -72,31 +68,19 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..operators.compaction import ACTION_FOLD_SENTINEL, with_rid
+from ..operators.compaction import (
+    ACTION_FOLD_SENTINEL,
+    TRANSITION_FOLDS,
+    _next_action,
+    batch_transitions,
+    delta_to_state,
+    with_rid,
+)
 from ..operators.scale import auto_bucket_count
 from .commitlog import LocalFS, ManifestLog
 
-_TRANSITION_STATES = ("insert", "update", "delete")
-
-
-def _fold_actions_from(sorted_actions: Column, init: str) -> Column:
-    """The rcache.py:196-222 merge algebra folded over a seq-sorted
-    action array from an arbitrary start state — the batch form of the
-    same fold in operators/compaction.py::_fold_actions, generalized so
-    the four folds below capture the batch's full transition table."""
-    sentinel = F.lit(ACTION_FOLD_SENTINEL)
-
-    def merge(state: Column, x: Column) -> Column:
-        return (
-            F.when(state == sentinel, x)
-            .when(
-                state == "insert",
-                F.when(x == "delete", sentinel).otherwise(F.lit("insert")),
-            )
-            .otherwise(F.when(x == "insert", F.lit("update")).otherwise(x))
-        )
-
-    return F.aggregate(sorted_actions, F.lit(init), merge)
+# what a stream state row carries besides tbl, rid, cdc_action, payload
+_STATE_CARRY = ("bkey", "last_seq")
 
 
 def _bkey(tbl: Column, rid: Column) -> Column:
@@ -105,90 +89,53 @@ def _bkey(tbl: Column, rid: Column) -> Column:
     return F.concat_ws("\x01", tbl, rid)
 
 
-def compact_batch_transitions(
+def keyed_transitions(
     batch: DataFrame,
     pk_cols: tuple[str, ...],
     payload_cols: tuple[str, ...],
-    table_col: str = "tbl",
-    seq_col: str = "seq",
-    action_col: str = "cdc_action",
 ) -> DataFrame:
-    """Collapse a micro-batch to one row per key carrying the batch's
-    fold TRANSITION TUPLE + last payload + max seq.
-
-    Columns: bkey, tbl, rid, f_absent, f_insert, f_update, f_delete,
-    last_seq, _last (payload struct).  ``f_s`` = the fold outcome had
-    the key's state been ``s`` when the batch arrived — composing
-    micro-batches through these tuples is exactly event-at-a-time
-    ingestion (exhaustively tested)."""
-    keyed = with_rid(batch, pk_cols).filter(F.col("rid").isNotNull())
-    grouped = keyed.groupBy(F.col(table_col).alias("tbl"), "rid").agg(
-        F.max_by(F.struct(*[F.col(c) for c in payload_cols]), F.col(seq_col)).alias(
-            "_last"
-        ),
-        F.max(F.col(seq_col)).alias("last_seq"),
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col(seq_col).alias("s"), F.col(action_col).alias("a"))
-            )
-        ).alias("_evs"),
-    )
-    acts = F.transform(F.col("_evs"), lambda ev: ev["a"])
-    return grouped.select(
-        _bkey(F.col("tbl"), F.col("rid")).alias("bkey"),
-        "tbl",
-        "rid",
-        _fold_actions_from(acts, ACTION_FOLD_SENTINEL).alias("f_absent"),
-        *[_fold_actions_from(acts, s).alias(f"f_{s}") for s in _TRANSITION_STATES],
-        "last_seq",
-        "_last",
+    """A micro-batch's transition tuples (``batch_transitions``) plus
+    the stream's ``bkey``."""
+    return batch_transitions(batch, pk_cols, payload_cols).withColumn(
+        "bkey", _bkey(F.col("tbl"), F.col("rid"))
     )
 
 
 def _delta_to_state(delta: DataFrame, payload_cols: tuple[str, ...]) -> DataFrame:
-    """First batch (no prior state): the from-empty fold IS the state;
-    annihilated keys vanish."""
-    return delta.filter(F.col("f_absent") != ACTION_FOLD_SENTINEL).select(
-        "bkey",
-        "tbl",
-        "rid",
-        F.col("f_absent").alias("cdc_action"),
-        "last_seq",
-        *[F.col(f"_last.{c}").alias(c) for c in payload_cols],
-    )
+    """The from-empty state of a keyed delta, keeping bkey/last_seq."""
+    return delta_to_state(delta, payload_cols, carry_cols=_STATE_CARRY)
 
 
 def merge_state_jvm(
     state: DataFrame, delta: DataFrame, payload_cols: tuple[str, ...]
 ) -> DataFrame:
     """Merge a transition-tuple delta into a compacted state: full-outer
-    join on bkey, new action = the delta's transition tuple indexed by
-    the stored action (absent key → f_absent), payload/seq from the
-    delta when the key saw events.  Sentinel results drop the key
-    (annihilation epoch-reset).  All JVM expressions — zero Python
-    crossings; with the state side bucketed by bkey the join plans
-    without an Exchange above the state scan."""
+    join on bkey, new action = the delta's tuple indexed by the stored
+    action (``_next_action``), payload/seq from the delta when the key
+    saw events.  Sentinel results drop the key (annihilation
+    epoch-reset).  All JVM expressions — zero Python crossings; with the
+    state side bucketed by bkey the join plans without an Exchange
+    above the state scan.  (The batch twin, ``merge_state_delta``, joins
+    on (tbl, rid) because its persisted state is bucketed that way.)"""
     s = state.alias("s")
     d = delta.alias("d")
     j = s.join(d, "bkey", "full_outer")
     d_present = F.col("d.rid").isNotNull()
-    s_present = F.col("s.rid").isNotNull()
-    new_action = (
-        F.when(~d_present, F.col("s.cdc_action"))
-        .when(~s_present, F.col("d.f_absent"))
-        .when(F.col("s.cdc_action") == "insert", F.col("d.f_insert"))
-        .when(F.col("s.cdc_action") == "update", F.col("d.f_update"))
-        .otherwise(F.col("d.f_delete"))
+    new_action = F.when(~d_present, F.col("s.cdc_action")).otherwise(
+        _next_action(
+            F.col("s.cdc_action"),
+            F.struct(*[F.col(f"d.{c}").alias(c) for c in TRANSITION_FOLDS]),
+        )
     )
     return (
         j.select(
             F.col("bkey"),
-            F.coalesce(F.col("d.tbl"), F.col("s.tbl")).alias("tbl"),
-            F.coalesce(F.col("d.rid"), F.col("s.rid")).alias("rid"),
-            new_action.alias("cdc_action"),
             F.when(d_present, F.col("d.last_seq"))
             .otherwise(F.col("s.last_seq"))
             .alias("last_seq"),
+            F.coalesce(F.col("d.tbl"), F.col("s.tbl")).alias("tbl"),
+            F.coalesce(F.col("d.rid"), F.col("s.rid")).alias("rid"),
+            new_action.alias("cdc_action"),
             *[
                 F.when(d_present, F.col(f"d._last.{c}"))
                 .otherwise(F.col(f"s.{c}"))
@@ -206,47 +153,30 @@ def compose_transition_runs(runs: DataFrame) -> DataFrame:
     tuple of the CONCATENATED batches, in batch order.
 
     Because the action algebra is a finite transducer, composition is
-    tuple indexing: (t2 ∘ t1)[s] = t2[t1[s]] (a mid-composition
-    sentinel means "annihilated → absent", so the next tuple indexes at
-    f_absent); payload/last_seq come wholesale from the NEWEST run that
-    saw the key (rcache.py:222 last-event-wins, exactly what the
-    pairwise `merge_state_jvm` does per level).  One groupBy of the
-    (small) runs — the folds run in whole-stage codegen.  Pinned
-    exhaustively: every action sequence ≤4 × every split point composed
-    through N runs equals the one-shot batch fold
+    tuple indexing: (t2 ∘ t1)[s] = t2[t1[s]] (``_next_action``; a
+    mid-composition sentinel means "annihilated → absent", so the next
+    tuple indexes at f_absent); payload/last_seq come wholesale from
+    the NEWEST run that saw the key (rcache.py:222 last-event-wins,
+    exactly what the pairwise `merge_state_jvm` does per level).  One
+    groupBy of the (small) runs — the folds run in whole-stage codegen.
+    Pinned exhaustively: every action sequence ≤4 × every split point
+    composed through N runs equals the one-shot batch fold
     (tests/test_streaming_parity_jvm.py)."""
-    tup = F.struct(
-        F.col("_run").alias("b"),
-        "f_absent",
-        "f_insert",
-        "f_update",
-        "f_delete",
-    )
+    tup = F.struct(F.col("_run").alias("b"), *TRANSITION_FOLDS)
     g = runs.groupBy("bkey").agg(
         F.max_by(
             F.struct("tbl", "rid", "last_seq", "_last"), F.col("_run")
         ).alias("_top"),
         F.array_sort(F.collect_list(tup)).alias("_tups"),
     )
-    sentinel = F.lit(ACTION_FOLD_SENTINEL)
-
-    def fold_from(init: str) -> Column:
-        def step(state: Column, t: Column) -> Column:
-            return (
-                F.when(state == sentinel, t["f_absent"])
-                .when(state == "insert", t["f_insert"])
-                .when(state == "update", t["f_update"])
-                .otherwise(t["f_delete"])
-            )
-
-        return F.aggregate(F.col("_tups"), F.lit(init), step)
-
     return g.select(
         "bkey",
         F.col("_top.tbl").alias("tbl"),
         F.col("_top.rid").alias("rid"),
-        fold_from(ACTION_FOLD_SENTINEL).alias("f_absent"),
-        *[fold_from(s).alias(f"f_{s}") for s in _TRANSITION_STATES],
+        *[
+            F.aggregate(F.col("_tups"), F.lit(init), _next_action).alias(c)
+            for c, init in TRANSITION_FOLDS.items()
+        ],
         F.col("_top.last_seq").alias("last_seq"),
         F.col("_top._last").alias("_last"),
     )
@@ -330,7 +260,8 @@ class _StateRuns:
         self.spark = spark
         self.state_dir = state_dir
         os.makedirs(state_dir, exist_ok=True)
-        self.log = ManifestLog(fs or LocalFS(), state_dir)
+        self.fs = fs or LocalFS()
+        self.log = ManifestLog(self.fs, state_dir)
         tag = uuid.uuid5(uuid.NAMESPACE_URL, os.path.abspath(state_dir)).hex[:16]
         self.tables = [f"cdc_jvm_state_{tag}_{i}" for i in (0, 1)]
         self.max_runs = int(
@@ -447,19 +378,15 @@ class _StateRuns:
         )
 
     def _gc_runs(self, kept_views: dict[int, dict]) -> None:
+        """Best-effort removal of run dirs no retained view references,
+        through the FS handle like every other state write — off the
+        correctness path: a crash mid-GC leaves unreferenced garbage
+        that the next commit's GC reclaims."""
         keep = {int(r) for v in kept_views.values() for r in v.get("runs", [])}
         runs_root = os.path.join(self.state_dir, "runs")
-        if not os.path.isdir(runs_root):
-            return
-        for d in os.listdir(runs_root):
-            if not d.startswith("b="):
-                continue
-            try:
-                rid = int(d[2:])
-            except ValueError:
-                continue
-            if rid not in keep:
-                shutil.rmtree(os.path.join(runs_root, d), ignore_errors=True)
+        for d in self.fs.list(runs_root):
+            if d.startswith("b=") and d[2:].isdigit() and int(d[2:]) not in keep:
+                self.fs.delete(os.path.join(runs_root, d))
 
     # ---- protocol ----------------------------------------------------
 
@@ -555,7 +482,7 @@ def run_compaction_stream_jvm(
     stream = reader.parquet(source_dir)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        delta = compact_batch_transitions(batch_df, pk_cols, payload_cols)
+        delta = keyed_transitions(batch_df, pk_cols, payload_cols)
         prev = slots.view_before(batch_id)
         view = slots.append(delta, batch_id, prev, fold)
         slots.commit(batch_id, view)
@@ -594,10 +521,9 @@ def run_retraction_stream_jvm(
     fs=None,
     max_runs: int | None = None,
 ) -> DataFrame:
-    """Pure-JVM retraction stream — the foreachBatch twin of
-    ``run_retraction_stream`` (streaming/compact_stream.py:362), the
-    Flink-style changelog-of-the-aggregate with zero per-key Python
-    crossings.
+    """Pure-JVM retraction stream — the Flink-style
+    changelog-of-the-aggregate (the streaming form of
+    cdc_ivm_agg_maintenance) with zero per-key Python crossings.
 
     Per micro-batch, the emitted delta rows are two point-reads of the
     LSM state restricted to the batch's touched keys (broadcast
@@ -609,14 +535,14 @@ def run_retraction_stream_jvm(
       addition) — where LIVE means present and not folded to 'delete'.
 
     Telescoping makes Σ sign·f(payload) equal f over the final live
-    state under ANY micro-batch slicing, exactly like the pandas twin
-    (pinned by tests/test_streaming_parity_jvm.py parity vs both the
-    pandas twin's emissions and the batch aggregate).
+    state under ANY micro-batch slicing (pinned by
+    tests/test_streaming_parity_jvm.py: the exact emission multiset vs
+    per-chunk batch compactions, and the 1- vs 4-chunk aggregate vs the
+    batch aggregate).
 
-    Exactly-once emissions (an upgrade over the pandas twin's
-    at-least-once append + _batch_id stamp): each batch overwrites its
-    own ``deltas_dir/batch_id=N`` partition BEFORE the meta commit, so
-    a retried batch replaces — never duplicates — its delta rows.
+    Exactly-once emissions: each batch overwrites its own
+    ``deltas_dir/batch_id=N`` partition BEFORE the meta commit, so a
+    retried batch replaces — never duplicates — its delta rows.
     Reference anchor: this is the streaming form of the reference's
     aggregate-maintenance pattern (rcache.py:224-259 merge keeps Redis
     aggregates current per poll loop)."""
@@ -639,7 +565,7 @@ def run_retraction_stream_jvm(
     stream = reader.parquet(source_dir)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        delta = compact_batch_transitions(batch_df, pk_cols, payload_cols)
+        delta = keyed_transitions(batch_df, pk_cols, payload_cols)
         prev = slots.view_before(batch_id)
         view = slots.append(delta, batch_id, prev, fold)
         touched = delta.select("bkey")
@@ -695,14 +621,13 @@ def run_scd2_stream_jvm(
     fs=None,
     max_runs: int | None = None,
 ) -> DataFrame:
-    """Pure-JVM incremental SCD2 — the foreachBatch twin of
-    ``run_scd2_stream`` (streaming/compact_stream.py:497), zero per-key
-    Python crossings.
+    """Pure-JVM incremental SCD2 (the streaming form of batch
+    ``scd2_history``), zero per-key Python crossings.
 
     Per micro-batch, version assignment is a window over the (small)
     batch joined LEFT against the LSM state restricted to the batch's
-    keys (replay guard: ``seq > stored last_seq``, mirroring the pandas
-    twin's per-event skip): ``version = stored_version + row_number()``,
+    keys (replay guard: ``seq > stored last_seq`` skips events the state
+    already holds): ``version = stored_version + row_number()``,
     intra-batch closures via ``lead(ts)``, plus one correction row
     closing the state's open version at the batch's first event.  The
     batch's OPEN versions are its immutable run — last-writer-wins per
@@ -854,8 +779,8 @@ def run_compaction_pipeline_dual_sink_jvm(
 ) -> DataFrame:
     """The reference's COMPOSED loop — cdc.py (binlog tail) → rcache.py
     (keyed cache merge) → dump2csv.py (date-partitioned CSV dump) — as
-    ONE streaming query, pure-JVM end to end (the foreachBatch twin of
-    ``run_compaction_pipeline_dual_sink``, zero Python row crossings):
+    ONE streaming query, pure-JVM end to end (zero Python row
+    crossings):
 
     * the micro-batch folds to transition tuples and commits as an
       immutable LSM run exactly like ``run_compaction_stream_jvm``;
@@ -864,14 +789,12 @@ def run_compaction_pipeline_dual_sink_jvm(
       the LSM restricted to the touched keys, with annihilated keys
       emitted as explicit ``ACTION_FOLD_SENTINEL`` tombstones —
       overwrite ``emissions_dir/batch_id=N``: an exactly-once commit
-      log (an upgrade over the pandas twin's at-least-once append +
-      ``_batch_id`` stamp);
+      log;
     * sink 2 (K1): the same batch's LIVE rows accrete into the
       date-partitioned CSV dump (``mode='append'`` — each poll adds
       files under its date partitions exactly like the reference's
-      periodic dumps; a retried batch may re-append, and exactly like
-      the pandas twin the finalize below is immune because it reads
-      sink 1, not the CSVs);
+      periodic dumps; a retried batch may re-append, and the finalize
+      below is immune because it reads sink 1, not the CSVs);
     * sink 3 (K4): after the availableNow run terminates, the finalized
       compacted state is dumped table-partitioned to ``snapshot_dir``
       (the durable Redis-state analog) and returned.
@@ -894,7 +817,7 @@ def run_compaction_pipeline_dual_sink_jvm(
     stream = reader.parquet(source_dir)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        delta = compact_batch_transitions(batch_df, pk_cols, payload_cols)
+        delta = keyed_transitions(batch_df, pk_cols, payload_cols)
         prev = slots.view_before(batch_id)
         view = slots.append(delta, batch_id, prev, fold)
         # emissions read the LSM at the new view restricted to the
@@ -923,10 +846,10 @@ def run_compaction_pipeline_dual_sink_jvm(
         emit.write.mode("overwrite").parquet(
             os.path.join(emissions_dir, f"batch_id={batch_id}")
         )
-        # tombstones ride into the CSV dump too (the pandas twin's
-        # emissions do the same): without them the dump's finalize
-        # could resurrect a key annihilated in a later poll.  Their
-        # date partition falls back to the dump's null-date bucket.
+        # tombstones ride into the CSV dump too: without them the
+        # dump's finalize could resurrect a key annihilated in a later
+        # poll.  Their date partition falls back to the dump's null-date
+        # bucket.
         dump_to_csv(emit, csv_dir, date_col=date_col, fmt=fmt, mode="append")
         slots.commit(batch_id, view)
 

@@ -294,13 +294,10 @@ _SLOW_NODE_IDS = frozenset({
     "tests/test_streaming_dedup.py::test_stream_dedup_reader_snapshot_survives_compaction",
     "tests/test_streaming_dedup.py::test_stream_dedup_rerun_is_idempotent",
     "tests/test_streaming_dedup.py::test_stream_dedup_uncommitted_pairs_partition_is_invisible",
-    "tests/test_streaming_parity.py::test_checkpoint_resume_processes_only_new_files",
-    "tests/test_streaming_parity.py::test_composed_pipeline_dual_sink_equals_batch",
-    "tests/test_streaming_parity.py::test_retraction_stream_slicing_invariant",
-    "tests/test_streaming_parity.py::test_stream_equals_batch",
     "tests/test_streaming_parity_jvm.py::test_dual_sink_pipeline_jvm_equals_batch_with_midway_resume",
-    "tests/test_streaming_parity_jvm.py::test_jvm_retraction_equals_pandas_twin_emissions",
-    "tests/test_streaming_parity_jvm.py::test_jvm_scd2_equals_pandas_twin",
+    "tests/test_streaming_parity_jvm.py::test_jvm_retraction_emissions_equal_per_chunk_batch_diff",
+    "tests/test_streaming_parity_jvm.py::test_jvm_retraction_stream_slicing_invariant",
+    "tests/test_streaming_parity_jvm.py::test_jvm_scd2_equals_batch_window",
 })
 
 

@@ -115,13 +115,13 @@ def test_merge_state_all_sequences_all_split_points(spark):
 
 
 def test_delta_to_state_equals_compact_all_sequences(spark):
-    """r10: ``delta_to_state(_batch_transitions(b)) ≡ compact(b)`` for
+    """r10: ``delta_to_state(batch_transitions(b)) ≡ compact(b)`` for
     every action sequence up to length 4 — the from-empty leg of the
     staged-delta incremental merge (plans/cdc.py merge_4x stages
     pre-folded transition tuples; level 0 materializes the first
     batch's tuples as the initial state through this helper)."""
     from mysql_cdc_redis_spark.operators.compaction import (
-        _batch_transitions,
+        batch_transitions,
         delta_to_state,
     )
 
@@ -135,7 +135,7 @@ def test_delta_to_state_equals_compact_all_sequences(spark):
     schema = "seq long, id int, cdc_action string, v string, tbl string"
     df = spark.createDataFrame(rows, schema)
     via_delta = delta_to_state(
-        _batch_transitions(df, ("id",), ("id", "v")), ("id", "v")
+        batch_transitions(df, ("id",), ("id", "v")), ("id", "v")
     )
     direct = compact(df, ("id",), ("id", "v"))
     k = lambda r: (r["tbl"], r["rid"])  # noqa: E731

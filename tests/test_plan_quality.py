@@ -1103,7 +1103,7 @@ def test_merge_state_delta_bucketed_state_is_exchange_free(spark, sf_dir):
     (SelectedBucketsCount in the scan), so at 100 TB the merge cost is
     ∝ |delta|, not |state|."""
     from mysql_cdc_redis_spark.operators.compaction import (
-        _batch_transitions,
+        batch_transitions,
         merge_state_delta,
     )
 
@@ -1135,7 +1135,7 @@ def test_merge_state_delta_bucketed_state_is_exchange_free(spark, sf_dir):
             .format("parquet")
             .saveAsTable(tbl)
         )
-        delta = _batch_transitions(
+        delta = batch_transitions(
             ch.filter(F.col("seq") % 4 >= 2), ORDERS_PK, ORDERS_PAYLOAD
         )
         merged = merge_state_delta(spark.table(tbl), delta, ORDERS_PAYLOAD)

@@ -74,12 +74,12 @@ def _merge4x_core(spark):
     try:
         # r10 form: transition-tuple staging + delta cascade
         from mysql_cdc_redis_spark.operators.compaction import (
-            _batch_transitions,
+            batch_transitions,
             delta_to_state,
             merge_state_delta,
         )
 
-        _batch_transitions(
+        batch_transitions(
             ch2.drop("_cuts"), LINEITEM_PK, LINEITEM_PAYLOAD,
             extra_group_cols=("_b",),
         ).write.mode("overwrite").partitionBy("_b").parquet(staged_dir)
@@ -140,12 +140,12 @@ def _jvm_compaction(spark):
         from mysql_cdc_redis_spark.streaming.compact_jvm import (
             _delta_to_state,
             _StateRuns,
-            compact_batch_transitions,
             fold_transition_state,
+            keyed_transitions,
         )
 
         slots = _StateRuns(spark, state_dir)
-        delta = compact_batch_transitions(ch, ORDERS_PK, ORDERS_PAYLOAD)
+        delta = keyed_transitions(ch, ORDERS_PK, ORDERS_PAYLOAD)
         slots.write_base(_delta_to_state(delta, ORDERS_PAYLOAD), 0, 16)
         df = fold_transition_state(
             slots.read_base(0), delta.withColumn("_run", F.lit(1)),

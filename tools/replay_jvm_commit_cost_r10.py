@@ -63,8 +63,8 @@ def main() -> None:
     )
     from mysql_cdc_redis_spark.streaming.compact_jvm import (
         _StateRuns,
-        compact_batch_transitions,
         fold_transition_state,
+        keyed_transitions,
     )
 
     spark = get_spark(app_name="replay_jvm_commit_cost")
@@ -92,7 +92,7 @@ def main() -> None:
         )
         spark.sparkContext.setJobDescription(f"replay batch {bidx}")
         t0 = time.perf_counter()
-        delta = compact_batch_transitions(batch_df, LINEITEM_PK, LINEITEM_PAYLOAD)
+        delta = keyed_transitions(batch_df, LINEITEM_PK, LINEITEM_PAYLOAD)
         prev = slots.view_before(bidx)
         view = slots.append(delta, bidx, prev, fold)
         slots.commit(bidx, view)
