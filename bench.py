@@ -61,7 +61,7 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from mysql_cdc_redis_spark.benchutil import checksum_row
     from mysql_cdc_redis_spark.plans import all_queries
-    from mysql_cdc_redis_spark.session import get_spark
+    from mysql_cdc_redis_spark.session import codegen_compiles, get_spark
 
     spark = get_spark(app_name="bench")
     catalog = all_queries()
@@ -136,14 +136,19 @@ def main() -> None:
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
     samples: dict[str, list[float]] = {name: [] for name in headline}
     chks: dict[str, list] = {name: [] for name in headline}
+    # classes Janino compiled per query per pass: nonzero after pass 1
+    # means the codegen cache is thrashing (session.py)
+    compiles: dict[str, list[int]] = {name: [] for name in headline}
     flushed: list[bool] = []
     for _ in range(n_runs):
         flushed.append(_flush_page_cache())
         spark.catalog.clearCache()
         for name, q in headline.items():
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             row = checksum_row(q.fn(spark, sf_dir))
             samples[name].append(time.perf_counter() - t0)
+            compiles[name].append(codegen_compiles(spark) - c0)
             chks[name].append((row["n"], str(row["chk"])))
 
     import statistics
@@ -408,6 +413,7 @@ def main() -> None:
         "queries_min": timings_min,
         "query_samples": query_samples,
         "query_checksums": chk_record,
+        "codegen_compiles": compiles,
         "variance_note": variance_note,
         "compaction_events": n_events,
         "stream_compact_events": n_staged,

@@ -181,10 +181,16 @@ def _certified_pairs_by_h(sh: DataFrame) -> DataFrame:
     # core count before the explode keeps each partial table in
     # execution memory: 7.3-8.9 s, spread ±10%.  Skipped when the
     # session's shuffle width already exceeds the fan (a real cluster's
-    # shuffle.partitions), so this never REDUCES parallelism at scale.
+    # shuffle.partitions), so this never REDUCES parallelism at scale,
+    # and when that width is not an integer (e.g. ``auto`` on some
+    # platforms), since then the platform sizes the shuffle itself.
     spark = sh.sparkSession
     fan = spark.sparkContext.defaultParallelism * 4
-    if int(spark.conf.get("spark.sql.shuffle.partitions", "200")) < fan:
+    try:
+        width = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    except ValueError:
+        width = None
+    if width is not None and width < fan:
         byh = byh.repartition(fan)
     return (
         byh.select(F.explode("ids").alias("a"), "ids")

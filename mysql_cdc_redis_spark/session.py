@@ -10,6 +10,19 @@ one you would also set on a real cluster:
 * Session timezone pinned to UTC — the DuckDB oracle reads the same
   parquet files as naive-UTC timestamps; an unpinned session would make
   every timestamp-bearing query hash-mismatch on machines in other zones.
+* Codegen cache sized to the working set — Spark keeps its generated
+  classes in an LRU cache of ``spark.sql.codegen.cache.maxEntries``
+  entries, 100 by default.  The engine re-runs the same plans over and
+  over (every stream micro-batch, every repeated catalog query), but one
+  pass of the six LLM queries alone needs ~155 distinct classes and the
+  CDC path ~110, so at 100 each repeat evicts what the next one needs
+  and Janino recompiles (and the JIT re-warms) every class on every
+  pass.  ``CODEGEN_CACHE_ENTRIES`` holds both working sets with room to
+  spare.  It is a STATIC conf: it takes effect only when the session's
+  SparkContext is built (``get_spark``); ``ensure_session_confs`` cannot
+  set it on a foreign session (one a caller created itself), which
+  keeps whatever value it was created with.  Override through
+  ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -19,6 +32,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# generated classes the codegen cache holds (module docstring)
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def _default_driver_mem() -> str:
@@ -108,6 +124,8 @@ def get_spark(
         .config("spark.sql.files.minPartitionNum", cpus)
         # --- broadcast: dims up to 64 MB go map-side, no shuffle ---
         .config("spark.sql.autoBroadcastJoinThreshold", "67108864")
+        # --- codegen: compile each repeated plan once (module docstring) ---
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # quiet the local harness
         .config("spark.ui.enabled", "false")
         # in local mode the driver JVM is also every executor: size the heap
@@ -124,3 +142,12 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far — the count of
+    Spark's ``CodegenMetrics`` compilation-time histogram.  Take the
+    difference around a piece of work to see how many classes it
+    generated that the codegen cache did not already hold."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -30,6 +30,14 @@ IMMUTABLE per-batch delta run; the state is the LSM of those runs:
   is the fold of base ∘ runs, recovered at read time.  Runs written
   with the older four-entry tuple (an extra ``f_delete`` column, equal
   to ``f_update``) read back unchanged: composition never reads it.
+* RUN LAYOUT: a run dir holds the delta exactly as computed.  Readers
+  take each row's ``_run`` (the batch id composition orders by) from
+  the ``b=<batch_id>`` dir name through partition discovery, so no
+  per-batch literal enters any generated class and every micro-batch
+  after the first runs on cached code.  Runs that still store a
+  ``_run`` column read back the same way (the stored column is
+  dropped).  A batch whose run dir holds no data file is not recorded
+  in the view: it changed nothing, and it has no schema to read.
 * PERIODIC COMPACTION bounds read amplification, mirroring the dedup
   stream's LSM: when the run count reaches ``max_runs`` (default 8,
   ``SPARK_GRAFT_JVM_MAX_RUNS``), base ∘ runs folds into a new BASE — a
@@ -230,6 +238,10 @@ def fold_lww_state(base: DataFrame | None, runs: DataFrame | None) -> DataFrame 
 # ---------------------------------------------------------------------------
 
 
+def _holds_state(view: dict) -> bool:
+    return view.get("base") is not None or bool(view.get("runs"))
+
+
 class _StateRuns:
     """Immutable per-batch delta runs + two bucketed base tables + a
     manifest commit log keyed by foreachBatch batch_id.  Table/dir names
@@ -299,6 +311,14 @@ class _StateRuns:
             for b, v in payload["views"].items()
         }
 
+    def final_view(self) -> dict | None:
+        """The newest committed view, or None while it holds no state
+        (no batch has fired, or every batch so far wrote an empty run)."""
+        views = self.load_views()
+        if not views or not _holds_state(views[max(views)]):
+            return None
+        return views[max(views)]
+
     def view_before(self, batch_id: int) -> tuple[int, dict] | None:
         """(batch_id, view) of the newest committed batch < batch_id —
         the deterministic merge source for batch_id (commits ≥ batch_id
@@ -335,18 +355,32 @@ class _StateRuns:
     def run_path(self, batch_id: int) -> str:
         return os.path.join(self.state_dir, "runs", f"b={int(batch_id)}")
 
-    def write_run(self, delta: DataFrame, batch_id: int) -> None:
+    def write_run(self, delta: DataFrame, batch_id: int) -> bool:
         """Commit a batch's delta as an immutable run — O(|batch|).
         A replayed batch overwrites its own dir; nothing else is
-        touched."""
-        delta.withColumn("_run", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).parquet(self.run_path(batch_id))
+        touched.  The delta is written as is: the batch id lives only in
+        the ``b=<id>`` path (a literal column would give every batch its
+        own generated class).  Returns whether the dir holds a data
+        file — a run without one has no schema to read back."""
+        path = self.run_path(batch_id)
+        delta.write.mode("overwrite").parquet(path)
+        return any(not n.startswith(("_", ".")) for n in self.fs.list(path))
 
     def read_runs(self, run_ids: list[int]) -> DataFrame | None:
+        """The union of the given runs, each row stamped with its
+        ``_run`` = batch id, read through partition discovery from the
+        ``b=<id>`` dir.  A stored ``_run`` column (runs written before
+        the id moved into the path) is dropped: the path carries the
+        same value."""
         if not run_ids:
             return None
-        return self.spark.read.parquet(*[self.run_path(b) for b in run_ids])
+        runs = (
+            self.spark.read.option("basePath", os.path.join(self.state_dir, "runs"))
+            .parquet(*[self.run_path(b) for b in run_ids])
+        )
+        # cast: a session with partition type inference off reads b as
+        # a string, which would order run 10 before run 9
+        return runs.drop("_run").withColumn("_run", F.col("b").cast("long")).drop("b")
 
     def read_base(self, slot: int | None) -> DataFrame | None:
         if slot is None:
@@ -406,8 +440,9 @@ class _StateRuns:
         crash anywhere before the meta commit leaves the prior view
         intact."""
         prev_view = prev[1] if prev else {"base": None, "buckets": None, "runs": []}
-        self.write_run(delta, batch_id)
-        run_ids = [*prev_view["runs"], int(batch_id)]
+        run_ids = list(prev_view["runs"])
+        if self.write_run(delta, batch_id):
+            run_ids.append(int(batch_id))
         if len(run_ids) < self.max_runs:
             return {
                 "base": prev_view["base"],
@@ -496,15 +531,15 @@ def run_compaction_stream_jvm(
     )
     q.awaitTermination()
 
-    views = slots.load_views()
-    if not views:  # empty source: no batch ever fired
+    view = slots.final_view()
+    if view is None:  # empty source: no state stored
         return spark.createDataFrame(
             [],
             "tbl string, rid string, cdc_action string"
             + "".join(f", {c} {source_schema[c].dataType.simpleString()}"
                       for c in payload_cols),
         )
-    state = slots.state_at(views[max(views)], fold)
+    state = slots.state_at(view, fold)
     return state.select("tbl", "rid", "cdc_action", *payload_cols)
 
 
@@ -568,6 +603,9 @@ def run_retraction_stream_jvm(
         delta = keyed_transitions(batch_df, pk_cols, payload_cols)
         prev = slots.view_before(batch_id)
         view = slots.append(delta, batch_id, prev, fold)
+        if not _holds_state(view):  # only empty batches so far
+            slots.commit(batch_id, view)
+            return
         touched = delta.select("bkey")
         plus = _live_rows(slots.state_at(view, fold, keys=touched), 1)
         old_state = (
@@ -737,10 +775,10 @@ def run_scd2_stream_jvm(
         "tbl string, rid string, cdc_action string, valid_from string, "
         "valid_to string, is_current boolean, version int" + payload_ddl
     )
-    views = slots.load_views()
-    if not views:  # empty source: no batch ever fired
+    view = slots.final_view()
+    if view is None:  # empty source: no state stored
         return spark.createDataFrame([], out_ddl)
-    open_rows = slots.state_at(views[max(views)], fold).select(
+    open_rows = slots.state_at(view, fold).select(
         "tbl", "rid", "cdc_action", "valid_from",
         F.lit(None).cast("string").alias("valid_to"),
         F.lit(True).alias("is_current"),
@@ -820,6 +858,9 @@ def run_compaction_pipeline_dual_sink_jvm(
         delta = keyed_transitions(batch_df, pk_cols, payload_cols)
         prev = slots.view_before(batch_id)
         view = slots.append(delta, batch_id, prev, fold)
+        if not _holds_state(view):  # only empty batches so far
+            slots.commit(batch_id, view)
+            return
         # emissions read the LSM at the new view restricted to the
         # touched keys (one point-read, not a second merge);
         # annihilated keys become explicit tombstones carrying the seq
@@ -862,15 +903,15 @@ def run_compaction_pipeline_dual_sink_jvm(
     )
     q.awaitTermination()
 
-    views = slots.load_views()
-    if not views:  # empty source: no batch ever fired
+    view = slots.final_view()
+    if view is None:  # empty source: no state stored
         return spark.createDataFrame(
             [],
             "tbl string, rid string, cdc_action string"
             + "".join(f", {c} {source_schema[c].dataType.simpleString()}"
                       for c in payload_cols),
         )
-    final = slots.state_at(views[max(views)], fold).select(
+    final = slots.state_at(view, fold).select(
         "tbl", "rid", "cdc_action", *payload_cols
     )
     dump_state_parquet(final, snapshot_dir)

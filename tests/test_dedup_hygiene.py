@@ -91,3 +91,37 @@ def test_connected_components_leaves_no_persisted_rdds(spark):
     assert _persistent_rdd_count(spark) == before, (
         "connected_components must not grow the persisted-RDD set"
     )
+
+
+def test_certified_pairs_fan_out_reads_shuffle_width_defensively(spark):
+    """The naive route's fan-out compares the session's shuffle width
+    with 4× the core count.  A non-integer width (``auto`` on some
+    platforms) must skip the fan-out, not fail the dedup query; an
+    integer width below the fan keeps it, one above skips it."""
+    from types import SimpleNamespace
+
+    from mysql_cdc_redis_spark.operators import dedup as dd
+
+    class Rel:
+        """Stands in for the shingle relation; records repartitions."""
+
+        def __init__(self, width):
+            self.sparkSession = SimpleNamespace(
+                conf=SimpleNamespace(get=lambda key, default=None: width),
+                sparkContext=SimpleNamespace(defaultParallelism=4),
+            )
+            self.fans = []
+
+        def repartition(self, n):
+            self.fans.append(n)
+            return self
+
+        def _chain(self, *args, **kwargs):
+            return self
+
+        groupBy = agg = select = where = _chain
+
+    for width, fans in (("auto", []), ("8", [16]), ("64", [])):
+        rel = Rel(width)
+        dd._certified_pairs_by_h(rel)
+        assert rel.fans == fans, width

@@ -441,12 +441,14 @@ def test_jvm_resume_over_four_tuple_runs(spark, sf_dir):
         resume()
         slots = _StateRuns(spark, state_dir)
         assert slots.load_views() == {0: {"base": None, "buckets": None, "runs": [0]}}
-        # rewrite run 0 exactly as the four-entry layout stored it
+        # rewrite run 0 exactly as the four-entry layout stored it,
+        # with the stored _run column that layout also carried
         run0 = slots.run_path(0)
         old = _tmp("jvm_upgrade_old_run")
         spark.read.parquet(run0).select(
             "bkey", "tbl", "rid", "f_absent", "f_insert", "f_update",
-            F.col("f_update").alias("f_delete"), "last_seq", "_last", "_run",
+            F.col("f_update").alias("f_delete"), "last_seq", "_last",
+            F.lit(0).alias("_run"),
         ).write.parquet(old)
         shutil.rmtree(run0)
         shutil.move(old, run0)
@@ -462,6 +464,75 @@ def test_jvm_resume_over_four_tuple_runs(spark, sf_dir):
         out = resume()
         assert slots.load_views()[2]["base"] is not None
         assert _rows(out, cols) == _rows(compact(ch, ORDERS_PK, ORDERS_PAYLOAD), cols)
+    finally:
+        drop_state_jvm(spark, state_dir)
+
+
+def test_jvm_empty_micro_batch_keeps_state_and_resume(spark, sf_dir):
+    """A zero-row (schema-bearing) increment is a valid micro-batch: the
+    stream over data, empty, data equals compact() over everything, and
+    a resume over one more file still reads every run back.  A run dir
+    holding no data file is never recorded in a view."""
+    from mysql_cdc_redis_spark.streaming.compact_jvm import _StateRuns
+
+    ch = orders_changelog(spark, sf_dir).filter(F.col("seq") % 120 < 40)
+    parts = [ch.filter(F.col("seq") % 4 == e) for e in (0, 1)]
+    parts.append(ch.filter(F.col("seq") % 4 >= 2))
+    src = _tmp("jvm_empty_src")
+    ckpt = _tmp("jvm_empty_ckpt")
+    state_dir = _tmp("jvm_empty_state")
+    cols = ["tbl", "rid", "cdc_action", *ORDERS_PAYLOAD]
+    _append_chunk(parts[0], src, "chunk-0000")
+    _append_chunk(ch.limit(0), src, "chunk-0001")  # the empty increment
+    _append_chunk(parts[1], src, "chunk-0002")
+
+    def run():
+        return run_compaction_stream_jvm(
+            spark, src, ch.schema, ORDERS_PK, ORDERS_PAYLOAD, ckpt, state_dir,
+            max_files_per_trigger=1,
+        )
+
+    slots = _StateRuns(spark, state_dir)
+    try:
+        assert _rows(run(), cols) == _rows(
+            compact(parts[0].unionByName(parts[1]), ORDERS_PK, ORDERS_PAYLOAD), cols
+        )
+        for b in slots.load_views()[2]["runs"]:
+            assert any(f.endswith(".parquet") for f in os.listdir(slots.run_path(b)))
+        _append_chunk(parts[2], src, "chunk-0003")
+        assert _rows(run(), cols) == _rows(compact(ch, ORDERS_PK, ORDERS_PAYLOAD), cols)
+    finally:
+        drop_state_jvm(spark, state_dir)
+
+
+def test_jvm_run_without_data_file_is_not_recorded(spark, sf_dir):
+    """A run dir that holds no data file, only the ``_SUCCESS`` marker,
+    has no schema to read back: the view skips it, and a view that so
+    far holds nothing reads as no state instead of failing."""
+    from mysql_cdc_redis_spark.streaming.commitlog import LocalFS
+    from mysql_cdc_redis_spark.streaming.compact_jvm import (
+        _StateRuns,
+        fold_transition_state,
+        keyed_transitions,
+    )
+
+    class NoDataFS(LocalFS):
+        def list(self, path):
+            return [n for n in super().list(path) if n.startswith(("_", "."))]
+
+    state_dir = _tmp("jvm_nodata_state")
+    slots = _StateRuns(spark, state_dir, fs=NoDataFS())
+    ch = orders_changelog(spark, sf_dir)
+    try:
+        view = slots.append(
+            keyed_transitions(ch.limit(0), ORDERS_PK, ORDERS_PAYLOAD), 0, None,
+            lambda base, runs, buckets=None: fold_transition_state(
+                base, runs, ORDERS_PAYLOAD, buckets
+            ),
+        )
+        assert view == {"base": None, "buckets": None, "runs": []}
+        slots.commit(0, view)
+        assert slots.final_view() is None
     finally:
         drop_state_jvm(spark, state_dir)
 
