@@ -39,11 +39,11 @@ IMMUTABLE per-batch delta run; the state is the LSM of those runs:
   dropped).  A batch whose run dir holds no data file is not recorded
   in the view: it changed nothing, and it has no schema to read.
 * PERIODIC COMPACTION bounds read amplification, mirroring the dedup
-  stream's LSM: when the run count reaches ``max_runs`` (default 8,
-  ``SPARK_GRAFT_JVM_MAX_RUNS``), base ∘ runs folds into a new BASE — a
-  bucketed-by-bkey warehouse table (sorted within buckets) ping-ponged
-  between two slots, so the fold's full-outer merge join plans
-  Exchange-free above the base scan (only the composed runs shuffle).
+  stream's LSM: when the run count reaches ``max_runs`` (default 8),
+  base ∘ runs folds into a new BASE — a bucketed-by-bkey warehouse
+  table (sorted within buckets) ping-ponged between two slots, so the
+  fold's full-outer merge join plans Exchange-free above the base scan
+  (only the composed runs shuffle).
   Amortized compaction cost per batch ≈ |state| / max_runs; with
   Delta/Iceberg the fold becomes MERGE INTO.
 * Exactly-once: Spark's checkpoint replays an uncommitted batch with
@@ -59,6 +59,15 @@ IMMUTABLE per-batch delta run; the state is the LSM of those runs:
   reachable from the retained views are GC'd at commit through the
   same FS handle.  This is the idempotent-replay contract the reference
   relies on (M5), upgraded to exactly-once.
+
+One availableNow foreachBatch loop drives all four public streams
+(``_run_lsm_stream``).  Per micro-batch it reads the prior view
+(``view_before``), calls the variant's hook ``batch(batch_df, prev) ->
+(run_df, emit)``, appends the run, writes ``emit(view)`` over
+``emit_dir/batch_id=<id>`` while the view holds state (``emit`` is
+None when the variant emits nothing), and commits the view LAST.  The
+exactly-once order lives there alone; variants differ only in their
+hook, their fold (transition tuples or last-writer-wins) and finalize.
 
 Parity with the batch compactor under ANY micro-batch slicing is
 pinned by tests/test_streaming_parity_jvm.py, plus exhaustive
@@ -276,11 +285,7 @@ class _StateRuns:
         self.log = ManifestLog(self.fs, state_dir)
         tag = uuid.uuid5(uuid.NAMESPACE_URL, os.path.abspath(state_dir)).hex[:16]
         self.tables = [f"cdc_jvm_state_{tag}_{i}" for i in (0, 1)]
-        self.max_runs = int(
-            max_runs
-            if max_runs is not None
-            else os.environ.get("SPARK_GRAFT_JVM_MAX_RUNS", "8")
-        )
+        self.max_runs = 8 if max_runs is None else max_runs
         if self.max_runs < 1:
             raise ValueError("max_runs must be >= 1")
 
@@ -481,6 +486,67 @@ class _StateRuns:
             self.spark.sql(f"DROP TABLE IF EXISTS `{t}`")
 
 
+def _ddl(head: str, schema: StructType, payload_cols: tuple[str, ...]) -> str:
+    """A DDL schema string: the ``head`` columns, then ``payload_cols``
+    typed as in ``schema``."""
+    return head + "".join(
+        f", {c} {schema[c].dataType.simpleString()}" for c in payload_cols
+    )
+
+
+_STATE_DDL = "tbl string, rid string, cdc_action string"
+
+
+def _transition_fold(payload_cols: tuple[str, ...]):
+    def fold(base, runs, buckets=None):
+        return fold_transition_state(base, runs, payload_cols, buckets)
+
+    return fold
+
+
+def _run_lsm_stream(
+    spark: SparkSession,
+    source_dir: str,
+    source_schema: StructType,
+    checkpoint_dir: str,
+    slots: _StateRuns,
+    fold,
+    batch,
+    max_files_per_trigger: int | None = None,
+    emit_dir: str | None = None,
+) -> dict | None:
+    """The micro-batch loop of every public stream (hook contract: see
+    the module docstring).  ``emit_dir`` is created up front, so
+    finalize reads it with a known schema even when nothing was
+    emitted.  Returns the final committed view (``final_view``)."""
+    if emit_dir is not None:
+        os.makedirs(emit_dir, exist_ok=True)
+    reader = spark.readStream.schema(source_schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        prev = slots.view_before(batch_id)
+        run, emit = batch(batch_df, prev)
+        view = slots.append(run, batch_id, prev, fold)
+        if emit is not None and _holds_state(view):
+            emit(view).write.mode("overwrite").parquet(
+                os.path.join(emit_dir, f"batch_id={batch_id}")
+            )
+        slots.commit(batch_id, view)
+
+    (
+        reader.parquet(source_dir)
+        .writeStream.foreachBatch(_apply)
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return slots.final_view()
+
+
 def run_compaction_stream_jvm(
     spark: SparkSession,
     source_dir: str,
@@ -507,37 +573,15 @@ def run_compaction_stream_jvm(
     same state_dir — call ``drop_state_jvm`` to dispose of it when the
     pipeline is decommissioned."""
     slots = _StateRuns(spark, state_dir, fs=fs, max_runs=max_runs)
-
-    def fold(base, runs, buckets=None):
-        return fold_transition_state(base, runs, payload_cols, buckets)
-
-    reader = spark.readStream.schema(source_schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        delta = keyed_transitions(batch_df, pk_cols, payload_cols)
-        prev = slots.view_before(batch_id)
-        view = slots.append(delta, batch_id, prev, fold)
-        slots.commit(batch_id, view)
-
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold = _transition_fold(payload_cols)
+    view = _run_lsm_stream(
+        spark, source_dir, source_schema, checkpoint_dir, slots, fold,
+        lambda df, prev: (keyed_transitions(df, pk_cols, payload_cols), None),
+        max_files_per_trigger,
     )
-    q.awaitTermination()
-
-    view = slots.final_view()
     if view is None:  # empty source: no state stored
         return spark.createDataFrame(
-            [],
-            "tbl string, rid string, cdc_action string"
-            + "".join(f", {c} {source_schema[c].dataType.simpleString()}"
-                      for c in payload_cols),
+            [], _ddl(_STATE_DDL, source_schema, payload_cols)
         )
     state = slots.state_at(view, fold)
     return state.select("tbl", "rid", "cdc_action", *payload_cols)
@@ -582,67 +626,32 @@ def run_retraction_stream_jvm(
     aggregate-maintenance pattern (rcache.py:224-259 merge keeps Redis
     aggregates current per poll loop)."""
     slots = _StateRuns(spark, state_dir, fs=fs, max_runs=max_runs)
-    touched_payloads = [F.col(c) for c in payload_cols]
-
-    def fold(base, runs, buckets=None):
-        return fold_transition_state(base, runs, payload_cols, buckets)
+    fold = _transition_fold(payload_cols)
 
     def _live_rows(state: DataFrame, sign: int) -> DataFrame:
         return (
             state.filter(F.col("cdc_action") != "delete")
             .select("tbl", "rid", F.lit(sign).cast("long").alias("sign"),
-                    *touched_payloads)
+                    *payload_cols)
         )
 
-    reader = spark.readStream.schema(source_schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def batch(batch_df: DataFrame, prev):
         delta = keyed_transitions(batch_df, pk_cols, payload_cols)
-        prev = slots.view_before(batch_id)
-        view = slots.append(delta, batch_id, prev, fold)
-        if not _holds_state(view):  # only empty batches so far
-            slots.commit(batch_id, view)
-            return
         touched = delta.select("bkey")
-        plus = _live_rows(slots.state_at(view, fold, keys=touched), 1)
-        old_state = (
-            slots.state_at(prev[1], fold, keys=touched) if prev is not None else None
-        )
-        emit = (
-            _live_rows(old_state, -1).unionByName(plus)
-            if old_state is not None
-            else plus
-        )
-        emit.write.mode("overwrite").parquet(
-            os.path.join(deltas_dir, f"batch_id={batch_id}")
-        )
-        slots.commit(batch_id, view)
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        def emit(view: dict) -> DataFrame:
+            plus = _live_rows(slots.state_at(view, fold, keys=touched), 1)
+            old = slots.state_at(prev[1], fold, keys=touched) if prev else None
+            return plus if old is None else _live_rows(old, -1).unionByName(plus)
 
-    empty = spark.createDataFrame(
-        [],
-        "tbl string, rid string, sign long"
-        + "".join(f", {c} {source_schema[c].dataType.simpleString()}"
-                  for c in payload_cols),
+        return delta, emit
+
+    _run_lsm_stream(
+        spark, source_dir, source_schema, checkpoint_dir, slots, fold, batch,
+        max_files_per_trigger, emit_dir=deltas_dir,
     )
-    if not slots.load_views():  # empty source: no batch ever fired
-        return empty
-    try:
-        out = spark.read.parquet(deltas_dir)
-    except Exception:
-        # every batch emitted zero rows: no parquet footer to infer from
-        return empty
+    ddl = _ddl("tbl string, rid string, sign long", source_schema, payload_cols)
+    out = spark.read.schema(ddl).parquet(deltas_dir)
     return out.select("tbl", "rid", "sign", *payload_cols)
 
 
@@ -679,23 +688,16 @@ def run_scd2_stream_jvm(
     from pyspark.sql.window import Window
 
     slots = _StateRuns(spark, state_dir, fs=fs, max_runs=max_runs)
-    payload_ddl = "".join(
-        f", {c} {source_schema[c].dataType.simpleString()}" for c in payload_cols
-    )
-    state_ddl = (
+    state_ddl = _ddl(
         "bkey string, tbl string, rid string, version long, last_seq long, "
-        "valid_from string, cdc_action string" + payload_ddl
+        "valid_from string, cdc_action string",
+        source_schema, payload_cols,
     )
 
     def fold(base, runs, buckets=None):
         return fold_lww_state(base, runs)
 
-    reader = spark.readStream.schema(source_schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def batch(batch_df: DataFrame, prev):
         keyed = (
             with_rid(batch_df, pk_cols)
             .filter(F.col("rid").isNotNull())
@@ -707,12 +709,7 @@ def run_scd2_stream_jvm(
             )
             .dropDuplicates(["bkey", "seq"])
         )
-        prev = slots.view_before(batch_id)
-        state_prev = (
-            slots.state_at(prev[1], fold, keys=keyed)
-            if prev is not None
-            else None
-        )
+        state_prev = slots.state_at(prev[1], fold, keys=keyed) if prev else None
         if state_prev is None:
             state_prev = spark.createDataFrame([], state_ddl)
         s = state_prev.select(
@@ -756,28 +753,27 @@ def run_scd2_stream_jvm(
             F.col("_ts").alias("valid_from"), "cdc_action",
             *payload_as("_p_"),
         )
-        view = slots.append(opens, batch_id, prev, fold)
-        closed_batch.unionByName(closed_prior).write.mode("overwrite").parquet(
-            os.path.join(emissions_dir, f"batch_id={batch_id}")
-        )
-        slots.commit(batch_id, view)
+        closed = closed_batch.unionByName(closed_prior)
+        return opens, lambda view: closed
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    view = _run_lsm_stream(
+        spark, source_dir, source_schema, checkpoint_dir, slots, fold, batch,
+        max_files_per_trigger, emit_dir=emissions_dir,
     )
-    q.awaitTermination()
-
-    out_ddl = (
-        "tbl string, rid string, cdc_action string, valid_from string, "
-        "valid_to string, is_current boolean, version int" + payload_ddl
+    # the stored version is a long (stored_version + row_number())
+    emitted_ddl = _ddl(
+        "tbl string, rid string, version long, cdc_action string, "
+        "valid_from string, valid_to string",
+        source_schema, payload_cols,
     )
-    view = slots.final_view()
+    closed = spark.read.schema(emitted_ddl).parquet(emissions_dir).select(
+        "tbl", "rid", "cdc_action", "valid_from", "valid_to",
+        F.lit(False).alias("is_current"),
+        F.col("version").cast("int").alias("version"),
+        *payload_cols,
+    )
     if view is None:  # empty source: no state stored
-        return spark.createDataFrame([], out_ddl)
+        return closed
     open_rows = slots.state_at(view, fold).select(
         "tbl", "rid", "cdc_action", "valid_from",
         F.lit(None).cast("string").alias("valid_to"),
@@ -785,16 +781,6 @@ def run_scd2_stream_jvm(
         F.col("version").cast("int").alias("version"),
         *payload_cols,
     )
-    try:
-        closed = spark.read.parquet(emissions_dir).select(
-            "tbl", "rid", "cdc_action", "valid_from", "valid_to",
-            F.lit(False).alias("is_current"),
-            F.col("version").cast("int").alias("version"),
-            *payload_cols,
-        )
-    except Exception:
-        # every batch emitted zero closed versions (e.g. one event/key)
-        return open_rows
     return closed.unionByName(open_rows)
 
 
@@ -845,71 +831,52 @@ def run_compaction_pipeline_dual_sink_jvm(
     from ..operators.dump import dump_state_parquet, dump_to_csv
 
     slots = _StateRuns(spark, state_dir, fs=fs, max_runs=max_runs)
+    fold = _transition_fold(payload_cols)
 
-    def fold(base, runs, buckets=None):
-        return fold_transition_state(base, runs, payload_cols, buckets)
-
-    reader = spark.readStream.schema(source_schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def batch(batch_df: DataFrame, prev):
         delta = keyed_transitions(batch_df, pk_cols, payload_cols)
-        prev = slots.view_before(batch_id)
-        view = slots.append(delta, batch_id, prev, fold)
-        if not _holds_state(view):  # only empty batches so far
-            slots.commit(batch_id, view)
-            return
-        # emissions read the LSM at the new view restricted to the
-        # touched keys (one point-read, not a second merge);
-        # annihilated keys become explicit tombstones carrying the seq
-        # that killed them, so a per-key max_by(last_seq) finalize over
-        # the emission/CSV logs is total (a tombstone supersedes the
-        # key's earlier live rows; a re-insert supersedes the tombstone)
-        touched = delta.select("bkey", "tbl", "rid", "last_seq")
-        live = slots.state_at(view, fold, keys=touched)
-        gone = (
-            touched.join(live.select("bkey"), "bkey", "left_anti")
-            .select(
-                "bkey", "tbl", "rid",
-                F.lit(ACTION_FOLD_SENTINEL).alias("cdc_action"),
-                "last_seq",
-                *[
-                    F.lit(None).cast(source_schema[c].dataType).alias(c)
-                    for c in payload_cols
-                ],
+
+        def emit(view: dict) -> DataFrame:
+            # emissions read the LSM at the new view restricted to the
+            # touched keys (one point-read, not a second merge);
+            # annihilated keys become explicit tombstones carrying the
+            # seq that killed them, so a per-key max_by(last_seq)
+            # finalize over the emission/CSV logs is total (a tombstone
+            # supersedes the key's earlier live rows; a re-insert
+            # supersedes the tombstone)
+            touched = delta.select("bkey", "tbl", "rid", "last_seq")
+            live = slots.state_at(view, fold, keys=touched)
+            gone = (
+                touched.join(live.select("bkey"), "bkey", "left_anti")
+                .select(
+                    "bkey", "tbl", "rid",
+                    F.lit(ACTION_FOLD_SENTINEL).alias("cdc_action"),
+                    "last_seq",
+                    *[
+                        F.lit(None).cast(source_schema[c].dataType).alias(c)
+                        for c in payload_cols
+                    ],
+                )
             )
-        )
-        emit = live.unionByName(gone).select(
-            "tbl", "rid", "cdc_action", "last_seq", *payload_cols
-        )
-        emit.write.mode("overwrite").parquet(
-            os.path.join(emissions_dir, f"batch_id={batch_id}")
-        )
-        # tombstones ride into the CSV dump too: without them the
-        # dump's finalize could resurrect a key annihilated in a later
-        # poll.  Their date partition falls back to the dump's null-date
-        # bucket.
-        dump_to_csv(emit, csv_dir, date_col=date_col, fmt=fmt, mode="append")
-        slots.commit(batch_id, view)
+            out = live.unionByName(gone).select(
+                "tbl", "rid", "cdc_action", "last_seq", *payload_cols
+            )
+            # tombstones ride into the CSV dump too: without them the
+            # dump's finalize could resurrect a key annihilated in a
+            # later poll.  Their date partition falls back to the dump's
+            # null-date bucket.
+            dump_to_csv(out, csv_dir, date_col=date_col, fmt=fmt, mode="append")
+            return out
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        return delta, emit
+
+    view = _run_lsm_stream(
+        spark, source_dir, source_schema, checkpoint_dir, slots, fold, batch,
+        max_files_per_trigger, emit_dir=emissions_dir,
     )
-    q.awaitTermination()
-
-    view = slots.final_view()
     if view is None:  # empty source: no state stored
         return spark.createDataFrame(
-            [],
-            "tbl string, rid string, cdc_action string"
-            + "".join(f", {c} {source_schema[c].dataType.simpleString()}"
-                      for c in payload_cols),
+            [], _ddl(_STATE_DDL, source_schema, payload_cols)
         )
     final = slots.state_at(view, fold).select(
         "tbl", "rid", "cdc_action", *payload_cols

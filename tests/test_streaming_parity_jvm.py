@@ -14,6 +14,7 @@ import time
 import uuid
 from itertools import product
 
+import pytest
 from pyspark.sql import functions as F
 
 from mysql_cdc_redis_spark.operators.compaction import (
@@ -1053,3 +1054,81 @@ def test_dual_sink_pipeline_jvm_equals_batch_with_midway_resume(spark, sf_dir):
         assert _rows(fin_csv.select(*cols), cols) == _rows(batch.select(*cols), cols)
     finally:
         drop_state_jvm(spark, dirs["state_dir"])
+
+
+def test_jvm_retraction_torn_commit_emits_exactly_once(spark, sf_dir):
+    """A crash between a batch's emission and its manifest commit: batch
+    1's delta partition lands, then its commit TEARS.  The restart
+    replays batch 1 from the prior view over its own partition, so the
+    emission multiset equals a clean run's — no duplicated rows."""
+    from mysql_cdc_redis_spark.streaming import run_retraction_stream_jvm
+
+    from .fs_double import HostileFS, InjectedCrash
+
+    ch = orders_changelog(spark, sf_dir).filter(F.col("o_orderkey") % 5 == 2)
+    payload = ("o_orderstatus", "o_totalprice")
+    src = _tmp("jvm_retract_torn_src")
+    stage_changelog_files(ch, src, n_chunks=3)
+    cols = ["tbl", "rid", "sign", *payload]
+    torn = [_tmp(f"jvm_retract_torn_{d}") for d in ("ckpt", "state", "out")]
+    clean = [_tmp(f"jvm_retract_clean_{d}") for d in ("ckpt", "state", "out")]
+
+    def run(ckpt, state_dir, deltas_dir, fs=None):
+        return run_retraction_stream_jvm(
+            spark, src, ch.schema, ORDERS_PK, payload, ckpt, state_dir,
+            deltas_dir, max_files_per_trigger=1, fs=fs,
+        )
+
+    fs = HostileFS()
+    fs.tear_write_at = 2  # batch 0 commits; batch 1 emits, then its commit tears
+    try:
+        with pytest.raises(Exception) as ei:
+            run(*torn, fs=fs)
+        assert "InjectedCrash" in str(ei.value) or isinstance(
+            ei.value, InjectedCrash
+        )
+        emitted = os.listdir(torn[2])
+        assert "batch_id=1" in emitted and "batch_id=2" not in emitted
+        fs.disarm()
+        resumed = run(*torn, fs=fs)
+        assert _rows(resumed, cols) == _rows(run(*clean), cols)
+    finally:
+        drop_state_jvm(spark, torn[1])
+        drop_state_jvm(spark, clean[1])
+
+
+@pytest.mark.parametrize("variant", ["retraction", "scd2"])
+def test_jvm_emitting_stream_over_empty_source(spark, sf_dir, variant):
+    """A source holding only a zero-row, schema-bearing file: the
+    emitting streams return zero rows with their documented columns and
+    types, read from an emission dir no batch wrote data into."""
+    from mysql_cdc_redis_spark.streaming import (
+        run_retraction_stream_jvm,
+        run_scd2_stream_jvm,
+    )
+
+    if variant == "retraction":
+        run = run_retraction_stream_jvm
+        head = {"tbl": "string", "rid": "string", "sign": "bigint"}
+    else:
+        run = run_scd2_stream_jvm
+        head = {
+            "tbl": "string", "rid": "string", "cdc_action": "string",
+            "valid_from": "string", "valid_to": "string",
+            "is_current": "boolean", "version": "int",
+        }
+    ch = orders_changelog(spark, sf_dir)
+    src = _tmp(f"jvm_empty_{variant}_src")
+    _append_chunk(ch.limit(0), src, "chunk-0000")
+    state_dir = _tmp(f"jvm_empty_{variant}_state")
+    try:
+        out = run(
+            spark, src, ch.schema, ORDERS_PK, ORDERS_PAYLOAD,
+            _tmp(f"jvm_empty_{variant}_ckpt"), state_dir,
+            _tmp(f"jvm_empty_{variant}_out"),
+        )
+        payload = {c: ch.schema[c].dataType.simpleString() for c in ORDERS_PAYLOAD}
+        assert out.dtypes == list({**head, **payload}.items())
+        assert out.count() == 0
+    finally:
+        drop_state_jvm(spark, state_dir)
