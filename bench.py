@@ -11,7 +11,7 @@ action (benchutil.checksum_row): every output column is materialized
 (a bare count would let Catalyst prune computed columns — the round-7
 blind spot), and passes are value-comparable via the recorded checksum.
 
-Round-8 measurement discipline (inherited from tools/bench_sf10_r7.py,
+Round-8 measurement discipline (shared with tools/bench_sf10.py,
 round-7 verdict item 2 — the driver's r7 capture was noise-dominated):
 * ``spark.local.dir`` pinned via SPARK_LOCAL_DIRS so passes never
   migrate between devices mid-series (SPARK_GRAFT_SHUFFLE_DIR).
@@ -34,6 +34,16 @@ import sys
 import time
 
 
+def _pin_shuffle_dir() -> str:
+    """Pin the shuffle/staging device; call BEFORE the JVM comes up.
+    An explicit SPARK_LOCAL_DIRS wins.  Returns the dir Spark uses."""
+    shuffle_dir = os.environ.get(
+        "SPARK_GRAFT_SHUFFLE_DIR", "/tmp/spark_graft_shuffle"
+    )
+    os.makedirs(shuffle_dir, exist_ok=True)
+    return os.environ.setdefault("SPARK_LOCAL_DIRS", shuffle_dir)
+
+
 def _flush_page_cache() -> bool:
     """Best-effort drop of the OS page cache between passes; the
     outcome is recorded in the artifact either way."""
@@ -50,13 +60,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
-
-    # pin the shuffle/staging device BEFORE the JVM comes up
-    shuffle_dir = os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_DIR", "/tmp/spark_graft_shuffle"
-    )
-    os.makedirs(shuffle_dir, exist_ok=True)
-    os.environ.setdefault("SPARK_LOCAL_DIRS", shuffle_dir)
+    _pin_shuffle_dir()
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from mysql_cdc_redis_spark.benchutil import checksum_row
@@ -316,7 +320,7 @@ def main() -> None:
         # TWO passes with min+spread (round-5 verdict item 3): the sf10
         # probes proved single-pass numbers on this box swing tens of
         # seconds on page-cache state alone; min-of-2 separates noise
-        # from regression the same way tools/bench_sf10_r5.py does.
+        # from regression the same way tools/bench_sf10.py does.
         sf1_runs = int(os.environ.get("SPARK_GRAFT_SF1_RUNS", "2"))
         sf1_samples: dict[str, list[float]] = {n: [] for n in headline}
         sf1_flushed: list[bool] = []

@@ -1,4 +1,4 @@
-"""Measurement-harness helpers shared by bench.py and tools/bench_sf10_*.
+"""Measurement-harness helpers shared by bench.py and tools/bench_sf10.py.
 
 The round-7 harness proved two things about honest benching on this
 engine (SCALING.md "Round 7"):

@@ -223,6 +223,8 @@ def merge_state_delta(
     delta: DataFrame,
     payload_cols: list[str] | tuple[str, ...],
     table_col: str = "tbl",
+    key: tuple[str, ...] = ("tbl", "rid"),
+    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Compose a PRE-FOLDED transition delta (``batch_transitions``
     output — one row per key: f_absent/f_insert/f_update + _last payload)
@@ -231,25 +233,40 @@ def merge_state_delta(
     re-folding the raw events per level (the incremental-merge bench
     path folds all batches in ONE shared groupBy at staging time,
     guide §2.3 "aggregate before you shuffle") — and so the state side
-    can come from a PERSISTED rid-bucketed table
-    (operators/scale.py::write_bucketed): a rid-bucketed state scan
-    satisfies the merge join's distribution, so a merge against
-    persisted state plans with ZERO state-side exchanges — only the
-    delta shuffles (guide §2.4; plan-pinned in
-    tests/test_plan_quality.py).  Same non-null ``table_col`` contract
-    as ``merge_state``."""
+    can come from a PERSISTED bucketed table
+    (operators/scale.py::write_bucketed): a state scan bucketed on the
+    join ``key`` satisfies the merge join's distribution, so a merge
+    against persisted state plans with ZERO state-side exchanges — only
+    the delta shuffles (guide §2.4; plan-pinned in
+    tests/test_plan_quality.py and, for the stream's base,
+    tests/test_streaming_parity_jvm.py).  Same non-null ``table_col``
+    contract as ``merge_state``.
+
+    ``key`` is the full-outer join key and ``carry_cols`` the non-key
+    columns kept from whichever side holds the newer row (the delta
+    when the key saw events).  The batch state joins on (tbl, rid) and
+    carries nothing; the stream's LSM base (streaming/compact_jvm.py)
+    joins on its single-column ``bkey`` and carries ``last_seq, tbl,
+    rid``.  Output: ``key, carry_cols, cdc_action, payload``."""
+    if table_col != "tbl":
+        state = state.withColumnRenamed(table_col, "tbl")
     s = state.select(
-        F.col(table_col).alias("tbl"), "rid", F.col("cdc_action").alias("_s_act"),
+        *key,
+        *[F.col(c).alias(f"_s_{c}") for c in carry_cols],
+        F.col("cdc_action").alias("_s_act"),
         *payload_cols,
     )
-    j = s.join(delta, ["tbl", "rid"], "full_outer")
+    j = s.join(delta, list(key), "full_outer")
     d_present = F.col("f_absent").isNotNull()
     new_action = F.when(~d_present, F.col("_s_act")).otherwise(
         _next_action(F.col("_s_act"), F.struct(*TRANSITION_FOLDS))
     )
     merged = j.select(
-        "tbl",
-        "rid",
+        *key,
+        *[
+            F.when(d_present, F.col(c)).otherwise(F.col(f"_s_{c}")).alias(c)
+            for c in carry_cols
+        ],
         new_action.alias("cdc_action"),
         *[
             F.when(d_present, F.col(f"_last.{c}")).otherwise(F.col(c)).alias(c)

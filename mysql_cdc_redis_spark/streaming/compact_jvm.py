@@ -91,6 +91,7 @@ from ..operators.compaction import (
     _next_action,
     batch_transitions,
     delta_to_state,
+    merge_state_delta,
     with_rid,
 )
 from ..operators.scale import auto_bucket_count
@@ -123,47 +124,6 @@ def _delta_to_state(delta: DataFrame, payload_cols: tuple[str, ...]) -> DataFram
     return delta_to_state(delta, payload_cols, carry_cols=_STATE_CARRY)
 
 
-def merge_state_jvm(
-    state: DataFrame, delta: DataFrame, payload_cols: tuple[str, ...]
-) -> DataFrame:
-    """Merge a transition-tuple delta into a compacted state: full-outer
-    join on bkey, new action = the delta's tuple indexed by the stored
-    action (``_next_action``), payload/seq from the delta when the key
-    saw events.  Sentinel results drop the key (annihilation
-    epoch-reset).  All JVM expressions — zero Python crossings; with the
-    state side bucketed by bkey the join plans without an Exchange
-    above the state scan.  (The batch twin, ``merge_state_delta``, joins
-    on (tbl, rid) because its persisted state is bucketed that way.)"""
-    s = state.alias("s")
-    d = delta.alias("d")
-    j = s.join(d, "bkey", "full_outer")
-    d_present = F.col("d.rid").isNotNull()
-    new_action = F.when(~d_present, F.col("s.cdc_action")).otherwise(
-        _next_action(
-            F.col("s.cdc_action"),
-            F.struct(*[F.col(f"d.{c}").alias(c) for c in TRANSITION_FOLDS]),
-        )
-    )
-    return (
-        j.select(
-            F.col("bkey"),
-            F.when(d_present, F.col("d.last_seq"))
-            .otherwise(F.col("s.last_seq"))
-            .alias("last_seq"),
-            F.coalesce(F.col("d.tbl"), F.col("s.tbl")).alias("tbl"),
-            F.coalesce(F.col("d.rid"), F.col("s.rid")).alias("rid"),
-            new_action.alias("cdc_action"),
-            *[
-                F.when(d_present, F.col(f"d._last.{c}"))
-                .otherwise(F.col(f"s.{c}"))
-                .alias(c)
-                for c in payload_cols
-            ],
-        )
-        .filter(F.col("cdc_action") != ACTION_FOLD_SENTINEL)
-    )
-
-
 def compose_transition_runs(runs: DataFrame) -> DataFrame:
     """Compose per-batch transition-tuple runs — each ≤1 row per key,
     stamped with its ``_run`` = batch_id — into the single transition
@@ -174,7 +134,7 @@ def compose_transition_runs(runs: DataFrame) -> DataFrame:
     mid-composition sentinel means "annihilated → absent", so the next
     tuple indexes at f_absent); payload/last_seq come wholesale from
     the NEWEST run that saw the key (rcache.py:222 last-event-wins,
-    exactly what the pairwise `merge_state_jvm` does per level).  One
+    exactly what the pairwise ``merge_state_delta`` does per level).  One
     groupBy of the (small) runs — the folds run in whole-stage codegen.
     Pinned exhaustively: every action sequence ≤4 × every split point
     composed through N runs equals the one-shot batch fold
@@ -222,7 +182,10 @@ def fold_transition_state(
     composed = compose_transition_runs(runs)
     if base is None:
         return _delta_to_state(composed, payload_cols)
-    return merge_state_jvm(base, composed, payload_cols)
+    return merge_state_delta(
+        base, composed, payload_cols,
+        key=("bkey",), carry_cols=("last_seq", "tbl", "rid"),
+    )
 
 
 def fold_lww_state(base: DataFrame | None, runs: DataFrame | None) -> DataFrame | None:
@@ -402,19 +365,14 @@ class _StateRuns:
             .saveAsTable(self.tables[slot])
         )
 
-    def table_bytes(self, slot: int) -> int | None:
-        # the slots are always parquet saveAsTable output, so the bytes
-        # live under the catalog warehouse dir (DESCRIBE DETAIL is
-        # Delta-only and would just log a per-batch analysis error)
+    def table_bytes(self, slot: int) -> int:
+        """On-disk bytes of a base slot (0 when absent), sized through
+        the FS handle like every other state access.  The slots are
+        always parquet saveAsTable output, so the bytes live under the
+        catalog warehouse dir (DESCRIBE DETAIL is Delta-only and would
+        just log a per-batch analysis error)."""
         wh = self.spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        path = os.path.join(wh.removeprefix("file:"), self.tables[slot])
-        if not os.path.isdir(path):
-            return None
-        return sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(path)
-            for f in fs
-        )
+        return self.fs.du(os.path.join(wh.removeprefix("file:"), self.tables[slot]))
 
     def _gc_runs(self, kept_views: dict[int, dict]) -> None:
         """Best-effort removal of run dirs no retained view references,

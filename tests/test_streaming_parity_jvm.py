@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from mysql_cdc_redis_spark.operators.compaction import (
     ACTION_FOLD_SENTINEL,
     compact,
+    merge_state_delta,
     with_rid,
 )
 from mysql_cdc_redis_spark.sources.changelog import (
@@ -164,7 +165,6 @@ def test_transition_tuple_composes_exhaustively(spark):
     from mysql_cdc_redis_spark.streaming.compact_jvm import (
         _delta_to_state,
         keyed_transitions,
-        merge_state_jvm,
     )
 
     actions = ("insert", "update", "delete")
@@ -193,7 +193,9 @@ def test_transition_tuple_composes_exhaustively(spark):
     d1 = keyed_transitions(b1, pk, payload)
     state1 = _delta_to_state(d1, payload)
     d2 = keyed_transitions(b2, pk, payload)
-    merged = merge_state_jvm(state1, d2, payload)
+    merged = merge_state_delta(
+        state1, d2, payload, key=("bkey",), carry_cols=("last_seq", "tbl", "rid")
+    )
 
     cols = ["tbl", "rid", "cdc_action", "pk", "val"]
     assert _rows(merged.select(*cols), cols) == _rows(
