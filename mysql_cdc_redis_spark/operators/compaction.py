@@ -90,7 +90,9 @@ def _fold_actions_from(sorted_actions: Column, init: str) -> Column:
     summarized as a TRANSITION TUPLE (one fold per possible incoming
     state, ``TRANSITION_FOLDS``).  The only Python spelling of the
     merge table (the DuckDB oracles spell it as plans/cdc.py
-    ``_FOLD_LAMBDA``).  Runs entirely in JVM codegen via F.aggregate."""
+    ``_FOLD_LAMBDA``).  Runs JVM-side via F.aggregate, but interpreted:
+    ``ArrayAggregate`` is a ``CodegenFallback`` expression in Spark 4.1,
+    so whole-stage codegen calls it through ``eval``."""
     sentinel = F.lit(ACTION_FOLD_SENTINEL)
 
     def merge(state: Column, x: Column) -> Column:
@@ -295,7 +297,10 @@ def batch_transitions(
     tuples is exactly event-at-a-time ingestion (pinned over every
     action sequence × split point in tests/test_compaction_exhaustive.py
     and tests/test_streaming_parity_jvm.py).  One single-shuffle
-    groupBy; the folds run in whole-stage codegen."""
+    groupBy.  ``collect_list`` plans it as an ObjectHashAggregate, which
+    falls back to sort-based aggregation past 128 keys per task
+    (``spark.sql.objectHashAggregate.sortBased.fallbackThreshold``), and
+    the folds are interpreted (``_fold_actions_from``)."""
     keyed = with_rid(changelog, pk_cols).filter(F.col("rid").isNotNull())
     grouped = keyed.groupBy(
         *extra_group_cols, F.col(table_col).alias("tbl"), "rid"

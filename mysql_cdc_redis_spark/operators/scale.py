@@ -13,8 +13,20 @@ key salting for pathological skew.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
+
+# The one codec of every persisted-state writer (stream runs and base
+# slots, bucketed batch state, dedup-stream runs).  On the CDC state
+# zstd pages measured 26-30% smaller than Spark's default snappy.
+STATE_CODEC = "zstd"
+
+
+def state_writer(df: DataFrame) -> DataFrameWriter:
+    """``df.write`` for persisted state: parquet pages in ``STATE_CODEC``."""
+    return df.write.option("compression", STATE_CODEC)
 
 
 def auto_bucket_count(
@@ -36,13 +48,43 @@ def auto_bucket_count(
     multi-TB prefix relation sizes itself into thousands of buckets
     instead of 64 multi-GB ones.  ``None`` bytes (relation not staged,
     size unknown) falls back to ``default``."""
-    import math
-
     if not n_bytes or n_bytes <= 0:
         return default
     want = max(1, math.ceil(n_bytes / target_bucket_bytes))
     p = 1 << (want - 1).bit_length()  # next power of two >= want
     return int(min(hi, max(lo, p)))
+
+
+def state_bucket_count(
+    n_bytes: int, open_cost_bytes: int, lo: int = 16, hi: int = 4096
+) -> int:
+    """Bucket count of a persisted state of ``n_bytes``: the byte-sized
+    count with floor ``lo`` (``auto_bucket_count``), cut to the next
+    power of two of ⌈n_bytes / open_cost_bytes⌉.
+
+    ``open_cost_bytes`` is ``spark.sql.files.openCostInBytes``, Spark's
+    own price of opening one file in bytes: a bucket below it costs more
+    to open than to read, and every bucket file repeats its own
+    dictionaries, footer and ``.crc``.  So a sub-MB state writes one
+    file, while from ``lo × open_cost_bytes`` up (64 MB at the defaults)
+    the floor binds and the count is the byte-sized one."""
+    sized = auto_bucket_count(n_bytes, lo=lo, hi=hi, default=lo)
+    want = max(1, math.ceil(n_bytes / open_cost_bytes))
+    return min(sized, 1 << (want - 1).bit_length())
+
+
+def open_cost_bytes(spark: SparkSession) -> int:
+    """The session's ``spark.sql.files.openCostInBytes``, as Spark parses it."""
+    return int(spark._jsparkSession.sessionState().conf().filesOpenCostInBytes())
+
+
+def plan_input_bytes(df: DataFrame) -> int:
+    """Σ ``sizeInBytes`` of the plan's leaf relations: the statistics
+    Spark already holds from its file indexes, so nothing is listed.
+    A leaf without a known size reports ``spark.sql.defaultSizeInBytes``
+    (Long.MaxValue by default), which sizes as a large state."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return sum(int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size()))
 
 
 # Logical nodes that preserve a scan's partitioning (narrow, 1:1 on
@@ -109,12 +151,24 @@ def ensure_min_parallelism(df: DataFrame, target: int | None = None) -> DataFram
 
 
 def write_bucketed(
-    df: DataFrame, table_name: str, bucket_col: str, n_buckets: int = 32
+    df: DataFrame, table_name: str, bucket_col: str, n_buckets: int | None = None
 ) -> None:
     """Persist as a bucketed warehouse table (sorted within buckets so
-    merge joins skip the sort too)."""
+    merge joins skip the sort too), in ``STATE_CODEC`` pages.
+
+    ``n_buckets`` defaults to ``state_bucket_count`` of the plan's input
+    bytes (``plan_input_bytes``) with the former constant 32 as both
+    floor and cap: a sub-MB state writes one bucket, and from 128 MB of
+    input up the table keeps 32.  Tables joined bucket-to-bucket need
+    equal counts, so pass ``n_buckets`` explicitly when the two sides
+    are written from inputs of different sizes."""
+    if n_buckets is None:
+        n_buckets = state_bucket_count(
+            plan_input_bytes(df), open_cost_bytes(df.sparkSession), lo=32, hi=32
+        )
     (
-        df.write.mode("overwrite")
+        state_writer(df)
+        .mode("overwrite")
         .bucketBy(n_buckets, bucket_col)
         .sortBy(bucket_col)
         .format("parquet")

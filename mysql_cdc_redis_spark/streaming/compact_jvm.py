@@ -16,8 +16,10 @@ IMMUTABLE per-batch delta run; the state is the LSM of those runs:
   is a deterministic finite transducer, so the tuple composes exactly:
   for ANY prior state s, fold(s, batch_events) = tuple[s]
   (``_next_action``).  The stream only adds the single-column join /
-  bucket key ``bkey``.  One shuffle of the (small) batch, everything in
-  whole-stage codegen.
+  bucket key ``bkey``.  One shuffle of the (small) batch; the folds
+  are interpreted (``ArrayAggregate`` is a ``CodegenFallback``), and
+  the ``collect_list`` groupBy is an ObjectHashAggregate that falls
+  back to sort past 128 keys per task.
 * The batch's transition tuples are committed as an immutable RUN
   (``state_dir/runs/b=<batch_id>``) — per-batch commit cost ∝ |batch|,
   NOT ∝ |state|.  The r1-r9 design ping-ponged the ENTIRE state table
@@ -43,7 +45,12 @@ IMMUTABLE per-batch delta run; the state is the LSM of those runs:
   base ∘ runs folds into a new BASE — a bucketed-by-bkey warehouse
   table (sorted within buckets) ping-ponged between two slots, so the
   fold's full-outer merge join plans Exchange-free above the base scan
-  (only the composed runs shuffle).
+  (only the composed runs shuffle).  Its bucket count follows the bytes
+  the fold reads (``state_bucket_count``: one file for a sub-MB state,
+  never more than the byte-sized count), and once no retained view
+  references the superseded slot its data is dropped, so one base is
+  live on disk.  Runs and bases are written in zstd pages
+  (``operators/scale.py::state_writer``).
   Amortized compaction cost per batch ≈ |state| / max_runs; with
   Delta/Iceberg the fold becomes MERGE INTO.
 * Exactly-once: Spark's checkpoint replays an uncommitted batch with
@@ -94,7 +101,7 @@ from ..operators.compaction import (
     merge_state_delta,
     with_rid,
 )
-from ..operators.scale import auto_bucket_count
+from ..operators.scale import open_cost_bytes, state_bucket_count, state_writer
 from .commitlog import LocalFS, ManifestLog
 
 # what a stream state row carries besides tbl, rid, cdc_action, payload
@@ -135,7 +142,9 @@ def compose_transition_runs(runs: DataFrame) -> DataFrame:
     tuple indexes at f_absent); payload/last_seq come wholesale from
     the NEWEST run that saw the key (rcache.py:222 last-event-wins,
     exactly what the pairwise ``merge_state_delta`` does per level).  One
-    groupBy of the (small) runs — the folds run in whole-stage codegen.
+    groupBy of the (small) runs; like ``batch_transitions`` it is an
+    ObjectHashAggregate (sort fallback past 128 keys per task) with
+    interpreted folds.
     Pinned exhaustively: every action sequence ≤4 × every split point
     composed through N runs equals the one-shot batch fold
     (tests/test_streaming_parity_jvm.py)."""
@@ -215,11 +224,12 @@ def _holds_state(view: dict) -> bool:
 
 
 class _StateRuns:
-    """Immutable per-batch delta runs + two bucketed base tables + a
-    manifest commit log keyed by foreachBatch batch_id.  Table/dir names
-    derive from state_dir, so a checkpoint-resumed run (same dirs) finds
-    its state; distinct runs (distinct dirs) never collide in the shared
-    warehouse.
+    """Immutable per-batch delta runs + two bucketed base slots (one
+    holding data once the superseded one ages out of the retained
+    views) + a manifest commit log keyed by foreachBatch batch_id.
+    Table/dir names derive from state_dir, so a checkpoint-resumed run
+    (same dirs) finds its state; distinct runs (distinct dirs) never
+    collide in the shared warehouse.
 
     Per-batch commit cost is ∝ |batch| (one run write + one O(1)
     manifest PUT); the O(|state|) fold is paid only every ``max_runs``
@@ -304,9 +314,9 @@ class _StateRuns:
         newest entry below its batch, and the one batch that can still
         be replayed is the newest — whose replay reads the second-
         newest.  Anything older is unreachable, so carrying it forward
-        would grow every manifest O(batches); run dirs reachable from
-        neither retained view are GC'd here too, so disk stays
-        O(|state| + max_runs · |batch|)."""
+        would grow every manifest O(batches); run dirs and the base
+        slot reachable from neither retained view are GC'd here too, so
+        disk stays O(|state| + max_runs · |batch|)."""
         views = self.load_views()
         views[int(batch_id)] = {
             "base": view.get("base"),
@@ -317,6 +327,7 @@ class _StateRuns:
         kept = {b: views[b] for b in top}
         self.log.commit({"views": {str(b): kept[b] for b in kept}})
         self._gc_runs(kept)
+        self._gc_bases(kept)
 
     # ---- physical layout --------------------------------------------
 
@@ -331,7 +342,7 @@ class _StateRuns:
         own generated class).  Returns whether the dir holds a data
         file — a run without one has no schema to read back."""
         path = self.run_path(batch_id)
-        delta.write.mode("overwrite").parquet(path)
+        state_writer(delta).mode("overwrite").parquet(path)
         return any(not n.startswith(("_", ".")) for n in self.fs.list(path))
 
     def read_runs(self, run_ids: list[int]) -> DataFrame | None:
@@ -357,22 +368,26 @@ class _StateRuns:
 
     def write_base(self, df: DataFrame, slot: int, n_buckets: int) -> None:
         (
-            df.repartition(n_buckets, "bkey")
-            .write.mode("overwrite")
+            state_writer(df.repartition(n_buckets, "bkey"))
+            .mode("overwrite")
             .bucketBy(n_buckets, "bkey")
             .sortBy("bkey")
             .format("parquet")
             .saveAsTable(self.tables[slot])
         )
 
+    def table_dir(self, slot: int) -> str:
+        """A base slot's data dir.  The slots are always parquet
+        saveAsTable output, so it lives under the catalog warehouse dir
+        (DESCRIBE DETAIL is Delta-only and would just log a per-batch
+        analysis error)."""
+        wh = self.spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+        return os.path.join(wh.removeprefix("file:"), self.tables[slot])
+
     def table_bytes(self, slot: int) -> int:
         """On-disk bytes of a base slot (0 when absent), sized through
-        the FS handle like every other state access.  The slots are
-        always parquet saveAsTable output, so the bytes live under the
-        catalog warehouse dir (DESCRIBE DETAIL is Delta-only and would
-        just log a per-batch analysis error)."""
-        wh = self.spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        return self.fs.du(os.path.join(wh.removeprefix("file:"), self.tables[slot]))
+        the FS handle like every other state access."""
+        return self.fs.du(self.table_dir(slot))
 
     def _gc_runs(self, kept_views: dict[int, dict]) -> None:
         """Best-effort removal of run dirs no retained view references,
@@ -384,6 +399,17 @@ class _StateRuns:
         for d in self.fs.list(runs_root):
             if d.startswith("b=") and d[2:].isdigit() and int(d[2:]) not in keep:
                 self.fs.delete(os.path.join(runs_root, d))
+
+    def _gc_bases(self, kept_views: dict[int, dict]) -> None:
+        """Drop the data of a base slot no retained view references —
+        the superseded slot, once the view that still read it ages out —
+        so one live base is on disk instead of two.  Same best-effort
+        FS-handle path as run GC; the slot's catalog entry stays, and
+        the next compaction into it overwrites the table whole."""
+        live = {v.get("base") for v in kept_views.values()}
+        for slot in (0, 1):
+            if slot not in live and self.table_bytes(slot):
+                self.fs.delete(self.table_dir(slot))
 
     # ---- protocol ----------------------------------------------------
 
@@ -417,11 +443,13 @@ class _StateRuns:
             self.read_base(src), self.read_runs(run_ids), prev_view.get("buckets")
         )
         dst = 0 if src is None else 1 - src
-        prev_bytes = None if src is None else self.table_bytes(src)
-        # floor 16: the compaction join's parallelism IS the bucket
-        # count — a few-MB state would otherwise plan 4 tasks on a
-        # 32-core box; beyond ~4 GB the byte-based sizing takes over
-        n_buckets = auto_bucket_count(prev_bytes, lo=16, default=16)
+        # the compaction join's parallelism IS the bucket count, so it
+        # follows the bytes the fold reads: one file for a sub-MB state,
+        # 16 from 64 MB, the byte-sized count beyond ~4 GB
+        state_bytes = (0 if src is None else self.table_bytes(src)) + sum(
+            self.fs.du(self.run_path(r)) for r in run_ids
+        )
+        n_buckets = state_bucket_count(state_bytes, open_cost_bytes(self.spark))
         self.write_base(state, dst, n_buckets)
         return {"base": dst, "buckets": n_buckets, "runs": []}
 

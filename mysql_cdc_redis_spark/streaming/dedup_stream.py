@@ -106,7 +106,7 @@ from ..operators.dedup import (
     minhash_signatures,
     shingle_hashes,
 )
-from ..operators.scale import auto_bucket_count
+from ..operators.scale import auto_bucket_count, state_writer
 from .commitlog import LocalFS, ManifestLog
 
 # Push the probe-key set as a literal IN predicate (row-group skipping
@@ -272,8 +272,8 @@ def _write_run(
         # still lands whole and sorted in exactly one task.)
         bucketed = bucketed.repartition(n_buckets, "bucket")
     (
-        bucketed.sortWithinPartitions("bucket", sort_col)
-        .write.mode("overwrite")
+        state_writer(bucketed.sortWithinPartitions("bucket", sort_col))
+        .mode("overwrite")
         .option("partitionOverwriteMode", "static")
         .partitionBy("bucket")
         .parquet(_run_dir(root, {"gen": gen, "rid": batch_id}))

@@ -116,6 +116,50 @@ def test_auto_bucket_count_sizing():
         assert n & (n - 1) == 0 and 32 <= n <= 4096
 
 
+def test_state_bucket_count_sizing():
+    """Persisted state is bucketed by its measured bytes: a sub-MB state
+    writes one bucket, from 64 MB up (16 × the 4 MB default
+    openCostInBytes) the count is the byte-sized one the stream used
+    before, and 100 TB reaches the 4096 cap."""
+    from mysql_cdc_redis_spark.operators.scale import (
+        auto_bucket_count,
+        state_bucket_count,
+    )
+
+    mb, open_cost = 1 << 20, 4 << 20
+    for n in (0, 1, 300 * 1024, mb - 1):
+        assert state_bucket_count(n, open_cost) == 1
+    assert state_bucket_count(5 * mb, open_cost) == 2
+    assert state_bucket_count(33 * mb, open_cost) == 16  # ⌈33/4⌉ = 9 -> 16
+    for n in (64 * mb, 100 * mb, 5 * 1024 * mb, 100 * 1024 * mb):
+        assert state_bucket_count(n, open_cost) == auto_bucket_count(n, lo=16, default=16)
+    assert state_bucket_count(100 * 1024 * 1024 * mb, open_cost) == 4096
+    # the batch writer's rule: the former constant 32 is floor and cap
+    assert state_bucket_count(700 * 1024, open_cost, lo=32, hi=32) == 1
+    assert state_bucket_count(128 * mb, open_cost, lo=32, hi=32) == 32
+    assert state_bucket_count(1 << 62, open_cost, lo=32, hi=32) == 32
+
+
+def test_write_bucketed_sizes_from_input_stats(spark):
+    """``write_bucketed``'s default count comes from the sizeInBytes
+    statistics of the plan's input relations: a sub-MB input writes one
+    bucket; an explicit count still wins."""
+    from mysql_cdc_redis_spark.operators.scale import plan_input_bytes
+
+    df = spark.range(1000).select(F.col("id").cast("string").alias("k"))
+    assert 0 < plan_input_bytes(df) < 1 << 20
+    try:
+        write_bucketed(df, "b_sized", "k")
+        write_bucketed(df, "b_fixed", "k", 8)
+        for name, want in (("b_sized", "1"), ("b_fixed", "8")):
+            info = {r[0]: r[1] for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()}
+            assert info["Num Buckets"] == want, (name, info)
+        assert spark.table("b_sized").count() == 1000
+    finally:
+        spark.sql("DROP TABLE IF EXISTS b_sized")
+        spark.sql("DROP TABLE IF EXISTS b_fixed")
+
+
 def test_stage_parquet_reap(spark):
     """Round-5 advice (medium): intra-call staging dirs are reaped by
     the operator, not left for process exit.  stage_parquet carries its

@@ -589,6 +589,128 @@ def test_jvm_gc_crash_mid_delete_recovers_and_reclaims(spark, sf_dir):
         drop_state_jvm(spark, state_dir)
 
 
+def _slots_holding_data(slots) -> list[int]:
+    return [slot for slot in (0, 1) if slots.table_bytes(slot)]
+
+
+def test_jvm_long_stream_keeps_one_base_slot(spark, sf_dir):
+    """Once no retained view references the superseded base slot, its
+    data is dropped: after three compactions (batches 1, 3, 5 at
+    max_runs=2) and one plain batch, one slot holds data."""
+    from mysql_cdc_redis_spark.streaming.compact_jvm import _StateRuns
+
+    ch = orders_changelog(spark, sf_dir).filter(F.col("seq") % 120 < 40)
+    src = _tmp("jvm_slot_src")
+    stage_changelog_files(ch, src, n_chunks=7)
+    state_dir = _tmp("jvm_slot_state")
+    slots = _StateRuns(spark, state_dir)
+    try:
+        out = run_compaction_stream_jvm(
+            spark, src, ch.schema, ORDERS_PK, ORDERS_PAYLOAD, _tmp("jvm_slot_ckpt"),
+            state_dir, max_files_per_trigger=1, max_runs=2,
+        )
+        cols = ["tbl", "rid", "cdc_action", *ORDERS_PAYLOAD]
+        assert _rows(out, cols) == _rows(compact(ch, ORDERS_PK, ORDERS_PAYLOAD), cols)
+        views = slots.load_views()
+        assert sorted(views) == [5, 6] and views[6]["runs"] == [6]
+        assert _slots_holding_data(slots) == [views[6]["base"]]
+    finally:
+        drop_state_jvm(spark, state_dir)
+
+
+def test_jvm_base_drop_crash_mid_delete_reruns_to_compact(spark, sf_dir):
+    """The superseded slot's drop goes through the injected FS handle:
+    a HostileFS delete that dies halfway through it (after batch 4's
+    view commit) fails the batch; the rerun replays it, the next
+    compaction overwrites the half-dropped slot, and the final state
+    equals ``compact()`` with one slot holding data."""
+    from mysql_cdc_redis_spark.streaming.compact_jvm import _StateRuns
+
+    from .fs_double import HostileFS, InjectedCrash
+
+    ch = orders_changelog(spark, sf_dir).filter(F.col("seq") % 120 < 40)
+    src = _tmp("jvm_drop_src")
+    stage_changelog_files(ch, src, n_chunks=7)
+    ckpt = _tmp("jvm_drop_ckpt")
+    state_dir = _tmp("jvm_drop_state")
+    fs = HostileFS()
+    # max_runs=2: deletes #1-#4 are run GC (batches 1-4); batch 4's
+    # commit then drops slot 0, superseded by batch 3's compaction
+    fs.arm_crash_delete(5)
+
+    def run():
+        return run_compaction_stream_jvm(
+            spark, src, ch.schema, ORDERS_PK, ORDERS_PAYLOAD, ckpt, state_dir,
+            max_files_per_trigger=1, fs=fs, max_runs=2,
+        )
+
+    slots = _StateRuns(spark, state_dir, fs=fs)
+    try:
+        with pytest.raises(Exception) as ei:
+            run()
+        assert "InjectedCrash" in str(ei.value) or isinstance(ei.value, InjectedCrash)
+        assert fs.deletes == 5
+        assert _slots_holding_data(slots) == [0, 1], "crash must leave slot 0 half-dropped"
+        assert slots.load_views()[4]["base"] == 1
+        fs.disarm()
+        out = run()
+        cols = ["tbl", "rid", "cdc_action", *ORDERS_PAYLOAD]
+        assert _rows(out, cols) == _rows(compact(ch, ORDERS_PK, ORDERS_PAYLOAD), cols)
+        assert _slots_holding_data(slots) == [slots.final_view()["base"]]
+    finally:
+        drop_state_jvm(spark, state_dir)
+
+
+def test_persisted_state_is_zstd(spark, sf_dir):
+    """Every persisted-state writer writes zstd pages: a stream run, a
+    base slot, a ``write_bucketed`` table and a dedup-stream run."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from mysql_cdc_redis_spark.operators.scale import write_bucketed
+    from mysql_cdc_redis_spark.streaming.compact_jvm import (
+        _StateRuns,
+        _transition_fold,
+        keyed_transitions,
+    )
+    from mysql_cdc_redis_spark.streaming.dedup_stream import _write_run
+
+    ch = orders_changelog(spark, sf_dir).filter(F.col("o_orderkey") % 20 == 7)
+    state_dir = _tmp("jvm_zstd_state")
+    # max_runs=1: the first batch writes its run and compacts it into a base
+    slots = _StateRuns(spark, state_dir, max_runs=1)
+    dedup_root = _tmp("dedup_zstd_runs")
+    try:
+        delta = keyed_transitions(ch, ORDERS_PK, ORDERS_PAYLOAD)
+        view = slots.append(delta, 0, None, _transition_fold(ORDERS_PAYLOAD))
+        assert view["base"] == 0
+        write_bucketed(ch, "zstd_bucketed", "o_orderkey")
+        _write_run(ch.select(F.col("o_orderkey").alias("k")), dedup_root, 0, "k", 4)
+        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+        dirs = {
+            "stream run": slots.run_path(0),
+            "base slot": slots.table_dir(0),
+            "write_bucketed": os.path.join(wh, "zstd_bucketed"),
+            "dedup run": dedup_root,
+        }
+        for what, d in dirs.items():
+            files = glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
+            assert files, what
+            for f in files:
+                md = pq.ParquetFile(f).metadata
+                codecs = {
+                    md.row_group(g).column(c).compression
+                    for g in range(md.num_row_groups)
+                    for c in range(md.num_columns)
+                }
+                assert codecs == {"ZSTD"}, (what, f, codecs)
+    finally:
+        spark.sql("DROP TABLE IF EXISTS zstd_bucketed")
+        shutil.rmtree(dedup_root, ignore_errors=True)
+        drop_state_jvm(spark, state_dir)
+
+
 def test_jvm_commit_cost_scales_with_batch_not_state(spark, sf_dir):
     """Round-9 verdict item 1 (the named scale-killer): the per-batch
     commit must write O(|batch|) bytes, not O(|state|).  Feed the same
@@ -966,6 +1088,44 @@ def test_jvm_compaction_join_is_exchange_free_on_base_side(spark, sf_dir):
         # must be exchange-free — verify via bucketed-scan marker
         assert "SelectedBucketsCount" in plan, plan
         assert exchanges_before_state <= 1, plan
+    finally:
+        drop_state_jvm(spark, state_dir)
+
+
+def test_jvm_sized_base_keeps_compaction_join_exchange_free(spark, sf_dir):
+    """A base written by ``append()`` at its byte-sized bucket count
+    (one bucket for this sub-MB state) still folds with the next runs
+    through a merge join whose base side has no Exchange."""
+    from mysql_cdc_redis_spark.streaming.compact_jvm import (
+        _StateRuns,
+        _transition_fold,
+        fold_transition_state,
+        keyed_transitions,
+    )
+
+    ch = orders_changelog(spark, sf_dir).filter(F.col("o_orderkey") % 20 == 7)
+    state_dir = _tmp("jvm_sized_plan_state")
+    slots = _StateRuns(spark, state_dir, max_runs=1)
+    pk, payload = ORDERS_PK, ORDERS_PAYLOAD
+    try:
+        delta = keyed_transitions(ch, pk, payload)
+        view = slots.append(delta, 0, None, _transition_fold(payload))
+        assert view["buckets"] == 1, view
+        merged = fold_transition_state(
+            slots.read_base(view["base"]),
+            delta.withColumn("_run", F.lit(1)),
+            payload,
+            base_buckets=view["buckets"],
+        )
+        plan = merged._jdf.queryExecution().executedPlan().toString()
+        join_at = plan.find("SortMergeJoin")
+        state_scan_at = plan.find(slots.tables[view["base"]])
+        assert 0 <= join_at < state_scan_at, plan
+        assert "SelectedBucketsCount: 1 out of 1" in plan, plan
+        # the runs branch prints first and holds the one Exchange
+        assert plan.count("Exchange", join_at, state_scan_at) <= 1, plan
+        base_line = plan[plan.rfind("\n", 0, state_scan_at) + 1:state_scan_at]
+        assert "Exchange" not in base_line, plan
     finally:
         drop_state_jvm(spark, state_dir)
 

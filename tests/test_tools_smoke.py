@@ -25,13 +25,17 @@ def _run(tool: str, *args: str, cwd, env: dict[str, str] | None = None) -> str:
 
 
 def test_replay_stream_cost_compacts_and_passes_its_checksum_gate(tmp_path):
-    out = _run("replay_stream_cost.py", "--increments", "3", "--max-runs", "2", cwd=tmp_path)
+    out = _run("replay_stream_cost.py", "--increments", "4", "--max-runs", "2", cwd=tmp_path)
     records = [json.loads(line) for line in out.splitlines() if line.startswith("{")]
     *batches, summary = records
-    assert [b["batch"] for b in batches] == [0, 1, 2, 3]  # snapshot + 3 increments
+    assert [b["batch"] for b in batches] == [0, 1, 2, 3, 4]  # snapshot + 4 increments
     assert all(b["run_bytes"] > 0 for b in batches)
     assert summary["compactions"] == sum(b["compacted"] for b in batches) >= 1
     assert summary["state_equals_compact"] is True
+    # batch 4 follows the second compaction, so the superseded slot is
+    # dropped: one live base plus run 4.  This sub-MB state is one bucket
+    assert 0 < summary["state_bytes"] < 1 << 20
+    assert summary["base_buckets"] == 1
 
 
 def test_capture_plans_writes_pseudo_target_plans(tmp_path):

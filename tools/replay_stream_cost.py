@@ -15,7 +15,9 @@ around it, so the walls are the state store's alone.
 
 Prints one JSON line per batch — ``append_s`` (run write plus any
 compaction), ``write_run_s``, ``compacted`` and ``run_bytes`` — then a
-summary line.  Exits with an error unless the final state's value
+summary line, which includes ``state_bytes`` (base slots plus live runs
+on disk, through the state FS handle) and ``base_buckets`` (the final
+base's bucket count).  Exits with an error unless the final state's value
 checksum (benchutil.checksum_row) equals compact()'s over the same
 events.
 """
@@ -114,10 +116,14 @@ def main() -> None:
             batches.append(rec)
             print(json.dumps(rec), flush=True)
 
+        final = slots.final_view()
+        state_bytes = slots.fs.du(os.path.join(slots.state_dir, "runs")) + sum(
+            slots.table_bytes(slot) for slot in (0, 1)
+        )
         spark.sparkContext.setJobDescription("replay final fold")
         cols = ["tbl", "rid", "cdc_action", *LINEITEM_PAYLOAD]
         t0 = time.perf_counter()
-        got = checksum_row(slots.state_at(slots.final_view(), fold).select(*cols))
+        got = checksum_row(slots.state_at(final, fold).select(*cols))
         final_fold_s = round(time.perf_counter() - t0, 3)
         want = checksum_row(
             compact(spark.read.parquet(*files), LINEITEM_PK, LINEITEM_PAYLOAD).select(*cols)
@@ -137,6 +143,8 @@ def main() -> None:
             ),
             "plain_append_p50_s": round(statistics.median(plain), 3) if plain else None,
             "final_fold_s": final_fold_s,
+            "state_bytes": state_bytes,
+            "base_buckets": final["buckets"],
             "state_rows": int(got["n"]),
             "state_chk": str(got["chk"]),
             "state_equals_compact": got == want,
