@@ -29,6 +29,13 @@ def state_writer(df: DataFrame) -> DataFrameWriter:
     return df.write.option("compression", STATE_CODEC)
 
 
+def pow2_at_least(n: int) -> int:
+    """Smallest power of two >= n.  Every bucket modulus of persisted
+    state is one, so moduli project onto each other exactly (b mod M
+    determines b mod m whenever m | M)."""
+    return 1 << (max(1, int(n)) - 1).bit_length()
+
+
 def auto_bucket_count(
     n_bytes: int | None,
     target_bucket_bytes: int = 256 << 20,
@@ -50,8 +57,7 @@ def auto_bucket_count(
     size unknown) falls back to ``default``."""
     if not n_bytes or n_bytes <= 0:
         return default
-    want = max(1, math.ceil(n_bytes / target_bucket_bytes))
-    p = 1 << (want - 1).bit_length()  # next power of two >= want
+    p = pow2_at_least(math.ceil(n_bytes / target_bucket_bytes))
     return int(min(hi, max(lo, p)))
 
 
@@ -69,8 +75,7 @@ def state_bucket_count(
     file, while from ``lo × open_cost_bytes`` up (64 MB at the defaults)
     the floor binds and the count is the byte-sized one."""
     sized = auto_bucket_count(n_bytes, lo=lo, hi=hi, default=lo)
-    want = max(1, math.ceil(n_bytes / open_cost_bytes))
-    return min(sized, 1 << (want - 1).bit_length())
+    return min(sized, pow2_at_least(math.ceil(n_bytes / open_cost_bytes)))
 
 
 def open_cost_bytes(spark: SparkSession) -> int:

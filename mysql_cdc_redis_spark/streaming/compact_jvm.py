@@ -21,25 +21,28 @@ IMMUTABLE per-batch delta run; the state is the LSM of those runs:
   the ``collect_list`` groupBy is an ObjectHashAggregate that falls
   back to sort past 128 keys per task.
 * The batch's transition tuples are committed as an immutable RUN
-  (``state_dir/runs/b=<batch_id>``) — per-batch commit cost ∝ |batch|,
-  NOT ∝ |state|.  The r1-r9 design ping-ponged the ENTIRE state table
-  through two slots every micro-batch: O(|state|) I/O per batch,
-  O(batches × |state|) over a stream's life — the measured 75-85% of
-  each ~2.1 s batch wall at sf0.1, and THE scale-killer at 100 TB of
-  state (round-9 verdict item 1).  Because transition tuples compose
+  (generation 0, run id = batch_id, under ``state_dir/runs``) —
+  per-batch commit cost ∝ |batch|, NOT ∝ |state|.  The r1-r9 design ping-ponged the
+  ENTIRE state table through two slots every micro-batch: O(|state|)
+  I/O per batch, O(batches × |state|) over a stream's life — the
+  measured 75-85% of each ~2.1 s batch wall at sf0.1, and THE
+  scale-killer at 100 TB of state (round-9 verdict item 1).  Because transition tuples compose
   associatively (`compose_transition_runs` — exhaustively pinned over
   every action sequence × every split point), the state at any moment
-  is the fold of base ∘ runs, recovered at read time.  Runs written
-  with the older four-entry tuple (an extra ``f_delete`` column, equal
-  to ``f_update``) read back unchanged: composition never reads it.
-* RUN LAYOUT: a run dir holds the delta exactly as computed.  Readers
-  take each row's ``_run`` (the batch id composition orders by) from
-  the ``b=<batch_id>`` dir name through partition discovery, so no
-  per-batch literal enters any generated class and every micro-batch
-  after the first runs on cached code.  Runs that still store a
-  ``_run`` column read back the same way (the stored column is
-  dropped).  A batch whose run dir holds no data file is not recorded
-  in the view: it changed nothing, and it has no schema to read.
+  is the fold of base ∘ runs, recovered at read time.
+* RUN LAYOUT: runs live in the run store both streams share
+  (streaming/runstore.py: layout, write, read, GC), bucketed by
+  ``bkey`` into ``bucket=B`` dirs at a modulus sized from the
+  micro-batch's input bytes.  Below ``openCostInBytes`` that is one
+  bucket, written by the tasks that fold the batch: no exchange, so a
+  large batch keeps its fold parallel and a small one is one file.  A
+  view lists each run as the run store's manifest entry ``{rid, gen,
+  n_buckets}``.  Readers take each row's ``_run`` (the batch id
+  composition orders by) from the run's ``ingest_id`` partition dir
+  through partition discovery, so no per-batch literal enters any
+  generated class and every micro-batch after the first runs on cached
+  code.  A batch whose run dir holds no data file is not recorded in
+  the view: it changed nothing, and it has no schema to read.
 * PERIODIC COMPACTION bounds read amplification, mirroring the dedup
   stream's LSM: when the run count reaches ``max_runs`` (default 8),
   base ∘ runs folds into a new BASE — a bucketed-by-bkey warehouse
@@ -57,7 +60,7 @@ IMMUTABLE per-batch delta run; the state is the LSM of those runs:
   the SAME batch_id; the replay recomputes DETERMINISTICALLY from the
   manifest view committed by the latest batch < batch_id (runs are
   immutable; a retried batch overwrites only ITS own run dir / base
-  slot), and the view map — {batch_id: {base slot, run ids}}, pruned
+  slot), and the view map — {batch_id: {base slot, run entries}}, pruned
   to the top two reachable entries — commits as the LAST step through
   the PUT-only manifest log (streaming/commitlog.py: checksummed
   versioned objects, no rename, correct on S3/GCS and POSIX alike).  A
@@ -101,8 +104,14 @@ from ..operators.compaction import (
     merge_state_delta,
     with_rid,
 )
-from ..operators.scale import open_cost_bytes, state_bucket_count, state_writer
+from ..operators.scale import (
+    open_cost_bytes,
+    plan_input_bytes,
+    state_bucket_count,
+    state_writer,
+)
 from .commitlog import LocalFS, ManifestLog
+from .runstore import gc_runs, read_runs, run_dir, write_run
 
 # what a stream state row carries besides tbl, rid, cdc_action, payload
 _STATE_CARRY = ("bkey", "last_seq")
@@ -227,6 +236,8 @@ class _StateRuns:
     """Immutable per-batch delta runs + two bucketed base slots (one
     holding data once the superseded one ages out of the retained
     views) + a manifest commit log keyed by foreachBatch batch_id.
+    Runs live in the shared run store (runstore.py) under
+    ``state_dir/runs``.
     Table/dir names derive from state_dir, so a checkpoint-resumed run
     (same dirs) finds its state; distinct runs (distinct dirs) never
     collide in the shared warehouse.
@@ -256,6 +267,7 @@ class _StateRuns:
         os.makedirs(state_dir, exist_ok=True)
         self.fs = fs or LocalFS()
         self.log = ManifestLog(self.fs, state_dir)
+        self.runs_root = os.path.join(state_dir, "runs")
         tag = uuid.uuid5(uuid.NAMESPACE_URL, os.path.abspath(state_dir)).hex[:16]
         self.tables = [f"cdc_jvm_state_{tag}_{i}" for i in (0, 1)]
         self.max_runs = 8 if max_runs is None else max_runs
@@ -268,25 +280,27 @@ class _StateRuns:
         head = self.log.head()
         if head is None:
             return {}
-        payload = head[1]
-        if "views" not in payload:
-            # a pre-LSM ping-pong manifest: resuming it under run
-            # semantics would silently restart the state from empty —
-            # reject loudly instead (the dedup stream's legacy-state
-            # standard)
+        views = head[1].get("views")
+        if views is None or any(
+            not isinstance(r, dict) for v in views.values() for r in v.get("runs", [])
+        ):
+            # a pre-LSM ping-pong manifest, or views listing bare run
+            # ids (the unbucketed runs/b=<id> layout): resuming either
+            # would silently restart the state from empty — reject
+            # loudly instead (the dedup stream's legacy-state standard)
             raise ValueError(
-                f"{self.state_dir}: legacy ping-pong state manifest "
-                "(pre-LSM layout) is not resumable by this version; "
-                "finalize it with the version that wrote it or start a "
-                "fresh state_dir"
+                f"{self.state_dir}: state in a legacy ping-pong manifest "
+                "(pre-LSM) or in the runs/b=<id> run layout is not "
+                "resumable by this version; finalize it with the version "
+                "that wrote it or start a fresh state_dir"
             )
         return {
             int(b): {
                 "base": v.get("base"),
                 "buckets": v.get("buckets"),
-                "runs": [int(r) for r in v.get("runs", [])],
+                "runs": list(v.get("runs", [])),
             }
-            for b, v in payload["views"].items()
+            for b, v in views.items()
         }
 
     def final_view(self) -> dict | None:
@@ -321,45 +335,23 @@ class _StateRuns:
         views[int(batch_id)] = {
             "base": view.get("base"),
             "buckets": view.get("buckets"),
-            "runs": [int(r) for r in view.get("runs", [])],
+            "runs": list(view.get("runs", [])),
         }
         top = sorted(views, reverse=True)[:2]
         kept = {b: views[b] for b in top}
         self.log.commit({"views": {str(b): kept[b] for b in kept}})
-        self._gc_runs(kept)
+        gc_runs(self.fs, [self.runs_root], {
+            (int(r["gen"]), int(r["rid"])) for v in kept.values() for r in v["runs"]
+        })
         self._gc_bases(kept)
 
     # ---- physical layout --------------------------------------------
 
-    def run_path(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, "runs", f"b={int(batch_id)}")
-
-    def write_run(self, delta: DataFrame, batch_id: int) -> bool:
-        """Commit a batch's delta as an immutable run — O(|batch|).
-        A replayed batch overwrites its own dir; nothing else is
-        touched.  The delta is written as is: the batch id lives only in
-        the ``b=<id>`` path (a literal column would give every batch its
-        own generated class).  Returns whether the dir holds a data
-        file — a run without one has no schema to read back."""
-        path = self.run_path(batch_id)
-        state_writer(delta).mode("overwrite").parquet(path)
-        return any(not n.startswith(("_", ".")) for n in self.fs.list(path))
-
-    def read_runs(self, run_ids: list[int]) -> DataFrame | None:
-        """The union of the given runs, each row stamped with its
-        ``_run`` = batch id, read through partition discovery from the
-        ``b=<id>`` dir.  A stored ``_run`` column (runs written before
-        the id moved into the path) is dropped: the path carries the
-        same value."""
-        if not run_ids:
-            return None
-        runs = (
-            self.spark.read.option("basePath", os.path.join(self.state_dir, "runs"))
-            .parquet(*[self.run_path(b) for b in run_ids])
-        )
-        # cast: a session with partition type inference off reads b as
-        # a string, which would order run 10 before run 9
-        return runs.drop("_run").withColumn("_run", F.col("b").cast("long")).drop("b")
+    def run_buckets(self, batch: DataFrame) -> int:
+        """The bucket modulus of a micro-batch's run, sized from the
+        batch's input bytes: its run's own plan may also read the state
+        (the SCD2 hook joins it), and would size as the state."""
+        return state_bucket_count(plan_input_bytes(batch), open_cost_bytes(self.spark))
 
     def read_base(self, slot: int | None) -> DataFrame | None:
         if slot is None:
@@ -389,17 +381,6 @@ class _StateRuns:
         the FS handle like every other state access."""
         return self.fs.du(self.table_dir(slot))
 
-    def _gc_runs(self, kept_views: dict[int, dict]) -> None:
-        """Best-effort removal of run dirs no retained view references,
-        through the FS handle like every other state write — off the
-        correctness path: a crash mid-GC leaves unreferenced garbage
-        that the next commit's GC reclaims."""
-        keep = {int(r) for v in kept_views.values() for r in v.get("runs", [])}
-        runs_root = os.path.join(self.state_dir, "runs")
-        for d in self.fs.list(runs_root):
-            if d.startswith("b=") and d[2:].isdigit() and int(d[2:]) not in keep:
-                self.fs.delete(os.path.join(runs_root, d))
-
     def _gc_bases(self, kept_views: dict[int, dict]) -> None:
         """Drop the data of a base slot no retained view references —
         the superseded slot, once the view that still read it ages out —
@@ -419,8 +400,10 @@ class _StateRuns:
         batch_id: int,
         prev: tuple[int, dict] | None,
         fold,
+        n_buckets: int = 1,
     ) -> dict:
-        """Write batch_id's immutable run; when the run count reaches
+        """Write batch_id's immutable run at ``n_buckets``
+        (``run_buckets``); when the run count reaches
         ``max_runs``, fold base ∘ runs into the OTHER base slot
         (periodic compaction — deterministic on replay because it reads
         only the prior view's immutable inputs, never the slot it
@@ -429,25 +412,26 @@ class _StateRuns:
         crash anywhere before the meta commit leaves the prior view
         intact."""
         prev_view = prev[1] if prev else {"base": None, "buckets": None, "runs": []}
-        run_ids = list(prev_view["runs"])
-        if self.write_run(delta, batch_id):
-            run_ids.append(int(batch_id))
-        if len(run_ids) < self.max_runs:
-            return {
-                "base": prev_view["base"],
-                "buckets": prev_view.get("buckets"),
-                "runs": run_ids,
-            }
-        src = prev_view["base"]
-        state = fold(
-            self.read_base(src), self.read_runs(run_ids), prev_view.get("buckets")
-        )
+        run = {"rid": int(batch_id), "gen": 0, "n_buckets": int(n_buckets)}
+        write_run(delta, self.runs_root, batch_id, "bkey", n_buckets)
+        view = {**prev_view, "runs": list(prev_view["runs"])}
+        # a replayed batch overwrote its own dir; a run without a data
+        # file has no schema to read back
+        if any(
+            not n.startswith(("_", "."))
+            for n in self.fs.list(run_dir(self.runs_root, run))
+        ):
+            view["runs"].append(run)
+        if len(view["runs"]) < self.max_runs:
+            return view
+        src = view["base"]
+        state = self.state_at(view, fold)
         dst = 0 if src is None else 1 - src
         # the compaction join's parallelism IS the bucket count, so it
         # follows the bytes the fold reads: one file for a sub-MB state,
         # 16 from 64 MB, the byte-sized count beyond ~4 GB
         state_bytes = (0 if src is None else self.table_bytes(src)) + sum(
-            self.fs.du(self.run_path(r)) for r in run_ids
+            self.fs.du(run_dir(self.runs_root, r)) for r in view["runs"]
         )
         n_buckets = state_bucket_count(state_bytes, open_cost_bytes(self.spark))
         self.write_base(state, dst, n_buckets)
@@ -460,7 +444,13 @@ class _StateRuns:
         the emission variants (the fold is per-key, so folding a key
         subset equals subsetting the fold)."""
         base = self.read_base(view.get("base"))
-        runs = self.read_runs(view.get("runs", []))
+        runs = read_runs(self.spark, self.runs_root, view.get("runs", []))
+        if runs is not None:
+            # cast: a session with partition type inference off reads
+            # ingest_id as a string, which would order run 10 before 9
+            runs = runs.withColumn("_run", F.col("ingest_id").cast("long")).drop(
+                "gen", "ingest_id", "bucket"
+            )
         if keys is not None:
             kb = F.broadcast(keys.select("bkey").distinct())
             base = base.join(kb, "bkey", "left_semi") if base is not None else None
@@ -514,7 +504,7 @@ def _run_lsm_stream(
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         prev = slots.view_before(batch_id)
         run, emit = batch(batch_df, prev)
-        view = slots.append(run, batch_id, prev, fold)
+        view = slots.append(run, batch_id, prev, fold, slots.run_buckets(batch_df))
         if emit is not None and _holds_state(view):
             emit(view).write.mode("overwrite").parquet(
                 os.path.join(emit_dir, f"batch_id={batch_id}")

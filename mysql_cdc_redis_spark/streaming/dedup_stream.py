@@ -12,19 +12,16 @@ BATCH, never the corpus:
 
 * **State = an LSM of immutable sorted BUCKETED runs, defined by a
   MANIFEST, not by directory listings.**  Each micro-batch appends two
-  runs: the batch's banded MinHash digests
-  (``sig/gen=G/ingest_id=N/bucket=B``, bucketed by
-  ``pmod(xxhash64(bkey), n_buckets)`` and key-sorted within buckets)
-  and its shingle inverted index (``sh/gen=G/ingest_id=N/bucket=B``,
-  bucketed on doc id the same way), then COMMITS a manifest
+  runs to the run store (streaming/runstore.py, which owns the run
+  layout, reads and GC): the batch's banded MinHash digests under
+  ``sig/``, bucketed and key-sorted on ``bkey``, and its shingle
+  inverted index under ``sh/``, on doc id.  It then COMMITS a manifest
   (streaming/commitlog.py) listing every live run with its own bucket
-  modulus.  Runs are written once and never rewritten; readers take
-  their file list from the newest valid manifest, so partial data from
-  a crashed attempt is invisible until its retry commits (the
-  reference's upload.info/bqload.info manifest shape, dump2csv.py:
-  199-230, promoted to the engine's own commit protocol).  The whole
-  protocol is PUT-only — no rename, atomic or otherwise — so it is
-  correct on S3/GCS, where rename is copy+delete, exactly as on POSIX.
+  modulus; partial data from a crashed attempt stays invisible until
+  its retry commits (the reference's upload.info/bqload.info manifest
+  shape, dump2csv.py:199-230).  The whole protocol is PUT-only — no
+  rename, atomic or otherwise — so it is correct on S3/GCS, where
+  rename is copy+delete, exactly as on POSIX.
 * **Probe I/O scales with the batch, not the corpus** (the round-6
   perf-weak fix).  The batch's probe-key set is small and known before
   the state read, so it prunes at TWO granularities: (1) the touched
@@ -34,9 +31,8 @@ BATCH, never the corpus:
   IN predicate, which the key-sorted runs' tight row-group min/max
   footers turn into row-group skips WITHIN touched buckets.  Per-batch
   read cost is O(row-groups containing batch keys), independent of
-  accumulated corpus size; bucket moduli are powers of two, so a
-  footprint computed at the largest live modulus M projects exactly
-  onto every older run's modulus m via ``b mod m`` (m | M).  Pinned by
+  accumulated corpus size; the footprint, computed at the largest live
+  modulus, projects exactly onto every run's own.  Pinned by
   test_plan_quality.py (PartitionFilters + PushedFilters) and by a
   behavioral test that corrupts every untouched bucket's files and
   still probes correctly (test_streaming_dedup.py).
@@ -96,7 +92,7 @@ from __future__ import annotations
 import functools
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -106,8 +102,9 @@ from ..operators.dedup import (
     minhash_signatures,
     shingle_hashes,
 )
-from ..operators.scale import auto_bucket_count, state_writer
+from ..operators.scale import auto_bucket_count, pow2_at_least
 from .commitlog import LocalFS, ManifestLog
+from .runstore import bucket_of, gc_runs, read_runs, run_dir, write_run
 
 # Push the probe-key set as a literal IN predicate (row-group skipping
 # inside touched buckets) only while it stays cheap to ship.  MEASURED
@@ -142,18 +139,6 @@ _DOCS_PER_BUCKET = 131_072
 # stay on the broadcast plan.
 _BROADCAST_DOC_CAP = 2_000_000
 
-# Touched-bucket partition filters are literal isin lists; after
-# compaction re-buckets to a large modulus (auto_bucket_count hi=1<<20
-# at 100-TB scale) a large batch can touch tens of thousands of
-# buckets, and per-literal driver planning cost is the same ~2 ms/value
-# the key push's _KEY_PUSH_CAP exists to avoid.  Past this many
-# projected bucket ids for a run, the bucket filter is DROPPED for that
-# run (the footprint covers most of it anyway — a filter passing >4k of
-# the buckets prunes little) and only the ingest_id partition predicate
-# remains; correctness never depended on the prune (it is a semantic
-# no-op under the downstream joins).
-_BUCKET_PUSH_CAP = 4_096
-
 # Data GC retention (round-8 verdict #4): a run directory is reclaimed
 # only once NO manifest among the newest _GC_RETAIN_MANIFESTS valid
 # generations references it — so a reader that planned its scan from
@@ -161,28 +146,6 @@ _BUCKET_PUSH_CAP = 4_096
 # (the reader-snapshot grace window), while a crashed attempt's
 # directory (referenced by NO manifest, ever) is reclaimed immediately.
 _GC_RETAIN_MANIFESTS = 3
-
-
-def _pow2_at_least(n: int) -> int:
-    """Smallest power of two >= n.  Every bucket modulus in the state
-    is a power of two so that moduli project onto each other exactly
-    (b mod M determines b mod m whenever m | M) — the property that
-    lets one probe footprint prune runs written at different scales."""
-    n = max(1, int(n))
-    return 1 << (n - 1).bit_length()
-
-
-def _bucket_of(col: Column, n_buckets: int) -> Column:
-    """Stable bucket id for a run key: pmod (never abs%, see
-    operators/scale.py:salt_from_hash) of the 64-bit hash.  The SAME
-    expression assigns buckets at write time and derives the touched
-    set at probe time — determinism across JVMs is what makes the
-    partition filter sound."""
-    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
-
-
-def _run_dir(root: str, run: dict) -> str:
-    return os.path.join(root, f"gen={run['gen']}", f"ingest_id={run['rid']}")
 
 
 def _load_state(state_dir: str, fs) -> dict:
@@ -233,107 +196,6 @@ def _add_to_ranges(ranges: list, b: int) -> list:
     return merged
 
 
-def _write_run(
-    df: DataFrame,
-    root: str,
-    batch_id: int,
-    sort_col: str,
-    n_buckets: int = _DEFAULT_BUCKETS,
-    gen: int = 0,
-    single_task: bool = False,
-) -> None:
-    """One immutable sorted bucketed run: overwrite this run's
-    directory (idempotent under replay — static overwrite replaces
-    the WHOLE ``gen=G/ingest_id=N`` tree, so no stale bucket dir from a
-    crashed attempt survives a retry that happens to produce fewer
-    buckets), bucketed by the probe key's hash so probes prune at the
-    directory level, and key-sorted within buckets so row-group
-    min/max statistics are disjoint and tight for the pushed IN
-    predicate.  The run is INVISIBLE until a manifest references it."""
-    bucketed = df.withColumn("bucket", _bucket_of(F.col(sort_col), n_buckets))
-    # Layout invariant either branch: one file per bucket dir
-    # (partitionBy splits a task's output by partition value), rows
-    # key-sorted within each file, so per-file row-group min/max stats
-    # stay disjoint and tight for the pushed IN predicate.
-    if single_task:
-        # tiny batch (point probe / trickle ingest): n_buckets tasks of
-        # a handful of rows each are pure scheduler overhead — one task
-        # writes every bucket dir in one pass (round-7 advice #6)
-        bucketed = bucketed.coalesce(1)
-    else:
-        # hash-repartition on the bucket id, NOT repartitionByRange:
-        # range partitioning runs a sampling job per write (two extra
-        # jobs per micro-batch), and all it buys here is splitting an
-        # oversized bucket across tasks — but auto_bucket_count sizes
-        # buckets to ~256 MB precisely so one-task-per-bucket is right.
-        # (murmur3 collisions can co-locate 2-3 buckets in one task and
-        # leave ~1/e of tasks empty — a write-throughput wobble, not a
-        # correctness or probe-I/O concern, since each bucket value
-        # still lands whole and sorted in exactly one task.)
-        bucketed = bucketed.repartition(n_buckets, "bucket")
-    (
-        state_writer(bucketed.sortWithinPartitions("bucket", sort_col))
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("bucket")
-        .parquet(_run_dir(root, {"gen": gen, "rid": batch_id}))
-    )
-
-
-def _read_runs(
-    spark: SparkSession,
-    root: str,
-    runs: list[dict],
-    schema: str,
-    key_col: str | None = None,
-    keys: list | None = None,
-    touched: list[int] | None = None,
-    probe_modulus: int | None = None,
-) -> DataFrame | None:
-    """Union of the given manifest runs, pruned to the batch's probe
-    footprint.  The file list comes from the MANIFEST (explicit run
-    directories), never from a listing — uncommitted or superseded
-    directories are invisible, which is what makes crashed attempts
-    and mid-GC states unreadable by construction.
-
-    ``touched`` (bucket ids at ``probe_modulus``) prunes at
-    file-listing time: each run's own modulus m receives the projected
-    set {b mod m} (exact, since moduli are powers of two and m divides
-    the probe modulus), and untouched ``bucket=B`` dirs are never
-    listed, their footers never read.  ``keys`` (when the caller's key
-    set fit under _KEY_PUSH_CAP) is pushed to the parquet reader as a
-    literal IN, skipping row groups inside touched buckets via the
-    runs' sorted min/max footers.  Both are semantic no-ops — the
-    downstream joins already restrict to these keys — so correctness
-    never depends on them.  ``schema`` (DDL string, including the
-    gen/ingest_id/bucket partition columns) skips schema inference —
-    without it the reader opens ONE arbitrary footer to infer, which
-    may belong to a bucket the probe never touches."""
-    if not runs:
-        return None
-    paths = [_run_dir(root, r) for r in runs]
-    df = spark.read.option("basePath", root).schema(schema).parquet(*paths)
-    if touched is not None and probe_modulus is not None:
-        preds = []
-        for r in runs:
-            m = int(r["n_buckets"])
-            tb = sorted({int(b) % m for b in touched})
-            rp = F.col("ingest_id") == int(r["rid"])
-            # cap the pushed literal set (round-8 advice #2): past
-            # _BUCKET_PUSH_CAP projected ids the per-literal planning
-            # cost (~2 ms/value, the _KEY_PUSH_CAP measurement) exceeds
-            # what a that-unselective filter can prune — and a set
-            # covering the whole modulus prunes nothing by definition.
-            # Dropping the bucket term is safe: it was a semantic no-op.
-            if 0 < len(tb) < m and len(tb) <= _BUCKET_PUSH_CAP:
-                rp = rp & F.col("bucket").isin(tb)
-            preds.append(rp)
-        df = df.filter(functools.reduce(lambda a, b: a | b, preds))
-    if keys is not None and key_col is not None:
-        df = df.filter(F.col(key_col).isin(keys))
-    return df
-
-
 def _probe_footprint(
     df: DataFrame, col: str, n_buckets: int
 ) -> tuple[list | None, list[int]]:
@@ -344,7 +206,7 @@ def _probe_footprint(
     O(batch), never O(corpus) — a licensed collect."""
     kb = (
         df.select(
-            F.col(col).alias("k"), _bucket_of(F.col(col), n_buckets).alias("b")
+            F.col(col).alias("k"), bucket_of(F.col(col), n_buckets).alias("b")
         )
         .distinct()
         .limit(_KEY_PUSH_CAP + 1)
@@ -353,7 +215,7 @@ def _probe_footprint(
     if len(kb) <= _KEY_PUSH_CAP:
         return [r["k"] for r in kb], sorted({r["b"] for r in kb})
     buckets = (
-        df.select(_bucket_of(F.col(col), n_buckets).alias("b")).distinct().collect()
+        df.select(bucket_of(F.col(col), n_buckets).alias("b")).distinct().collect()
     )
     return None, sorted(r["b"] for r in buckets)
 
@@ -378,45 +240,6 @@ def _cross_candidates(
         .select("a", "b")
         .distinct()
     )
-
-
-def _gc_runs(fs, state_dir: str, log: ManifestLog, retain: int) -> None:
-    """Best-effort, RETENTION-LAGGED removal of run directories —
-    strictly OFF the correctness path (readers never list, so garbage
-    is invisible).  A directory is reclaimed only when NONE of the
-    newest ``retain`` valid manifests references it (round-8 verdict
-    #4): manifest retention alone was not snapshot isolation for DATA —
-    a long-running reader that planned its scan from manifest vN would
-    have lost files mid-query when the compactor committed vN+1 and
-    GC'd immediately.  Now the reader-snapshot contract is explicit:
-    a scan planned from any of the newest ``retain`` manifests keeps
-    its files for at least ``retain - 1`` further commits.  A crashed
-    attempt's directory is in NO manifest and is reclaimed on the next
-    pass regardless.
-
-    GC runs only during compaction — at entry (clearing garbage from
-    prior crashed attempts) and after the compaction commit (superseded
-    generations, once they age out of the retention window); ingest
-    batches never delete anything (superseded directories first appear
-    at compaction)."""
-    live = {
-        (int(r["gen"]), int(r["rid"]))
-        for _v, payload in log.recent(retain)
-        for r in payload.get("runs", [])
-    }
-    for rel in ("sig", "sh"):
-        root = os.path.join(state_dir, rel)
-        for gdir in fs.list(root):
-            if not gdir.startswith("gen="):
-                continue
-            gen = int(gdir.split("=", 1)[1])
-            gpath = os.path.join(root, gdir)
-            for rdir in fs.list(gpath):
-                if not rdir.startswith("ingest_id="):
-                    continue
-                rid = int(rdir.split("=", 1)[1])
-                if (gen, rid) not in live:
-                    fs.delete(os.path.join(gpath, rdir))
 
 
 def run_dedup_stream_minhash(
@@ -482,7 +305,7 @@ def run_dedup_stream_minhash(
     os.makedirs(state_dir, exist_ok=True)
     sig_root = os.path.join(state_dir, "sig")
     sh_root = os.path.join(state_dir, "sh")
-    w_buckets = _pow2_at_least(n_buckets)
+    w_buckets = pow2_at_least(n_buckets)
     # explicit run schemas (incl. partition cols): state reads must
     # never infer — inference opens an arbitrary footer, which defeats
     # the bucket prune's "untouched files are never opened" guarantee
@@ -518,7 +341,7 @@ def run_dedup_stream_minhash(
             fp = banded_b.agg(
                 F.countDistinct("doc_id").alias("n_docs"),
                 F.countDistinct("bkey").alias("n_keys"),
-                F.collect_set(_bucket_of(F.col("bkey"), probe_m)).alias("buckets"),
+                F.collect_set(bucket_of(F.col("bkey"), probe_m)).alias("buckets"),
             ).first()
             n_b = int(fp["n_docs"])
             do_prune = state_docs > prune_min_state_ratio * max(n_b, 1)
@@ -550,7 +373,7 @@ def run_dedup_stream_minhash(
                 ]
             probe = bool(bkts) if do_prune else bool(n_b and state_docs)
             state_sig = (
-                _read_runs(
+                read_runs(
                     spark, sig_root, runs_before, sig_schema,
                     key_col="bkey", keys=bkeys,
                     touched=bkts, probe_modulus=probe_m if do_prune else None,
@@ -590,7 +413,7 @@ def run_dedup_stream_minhash(
                         # band collisions — broadcastable exactly when
                         # the batch itself is
                         cand_ids = F.broadcast(cand_ids)
-                    sh_a = _read_runs(
+                    sh_a = read_runs(
                         spark, sh_root, runs_before, sh_schema,
                         key_col="doc_id", keys=a_ids,
                         touched=a_bkts, probe_modulus=probe_m if do_prune else None,
@@ -625,13 +448,13 @@ def run_dedup_stream_minhash(
             tiny = n_b <= 2_048
             run_m = max(
                 w_buckets,
-                _pow2_at_least(-(-n_b // _DOCS_PER_BUCKET)) if n_b else w_buckets,
+                pow2_at_least(-(-n_b // _DOCS_PER_BUCKET)) if n_b else w_buckets,
             )
-            _write_run(
+            write_run(
                 banded_b.select("doc_id", "band", "bkey"),
                 sig_root, batch_id, "bkey", run_m, single_task=tiny,
             )
-            _write_run(
+            write_run(
                 sh_b.select("doc_id", "h"), sh_root, batch_id, "doc_id",
                 run_m, single_task=tiny,
             )
@@ -748,14 +571,14 @@ def compact_lsh_state(
     before and after compaction.
 
     CRASH SAFETY, rename-free (round-7 advice #1): the merged run is
-    written COMPLETE into a fresh generation directory
-    (``gen=G/ingest_id=target``, G = max live gen + 1 — a name no
-    manifest references), then ONE manifest commit flips the live run
+    written COMPLETE into a fresh generation (run id = target, gen =
+    max live gen + 1 — a dir no manifest references), then ONE manifest commit flips the live run
     set to {merged, newest}, then directories outside the retention
     window are garbage-collected best-effort (RETENTION LAG, round-8
     verdict #4: superseded runs stay on disk until they age out of the
     newest ``gc_retain_manifests`` manifests, so a reader that planned
-    its scan from a recent manifest completes it — see ``_gc_runs``).
+    its scan from a recent manifest completes it — see
+    ``_GC_RETAIN_MANIFESTS``).
     A crash before the commit leaves the old manifest pointing at
     intact old runs (the partial new directory is unreferenced garbage,
     cleared by the next pass); a torn manifest write self-invalidates
@@ -780,10 +603,21 @@ def compact_lsh_state(
         return False
     state = head[1]
     runs = sorted(state["runs"], key=lambda r: int(r["rid"]))
+    roots = [os.path.join(state_dir, rel) for rel in ("sig", "sh")]
+
+    def gc() -> None:
+        # a run dir stays while any of the newest gc_retain_manifests
+        # manifests lists it
+        gc_runs(fs, roots, {
+            (int(r["gen"]), int(r["rid"]))
+            for _v, payload in log.recent(gc_retain_manifests)
+            for r in payload.get("runs", [])
+        })
+
     # clear garbage from a previously crashed compaction or batch
     # attempt — idempotent; everything it removes is outside the
     # manifest retention window (crashed attempts are in NO manifest)
-    _gc_runs(fs, state_dir, log, gc_retain_manifests)
+    gc()
     if len(runs) < 2:
         return False  # nothing safely mergeable below the newest run
     merged_runs, newest = runs[:-1], runs[-1]
@@ -792,26 +626,16 @@ def compact_lsh_state(
     # size the merged run from what it will actually hold: the bigger
     # relation's bytes govern (sig and sh share the modulus so one
     # footprint collect serves both probes)
-    n_bytes = max(
-        sum(fs.du(_run_dir(os.path.join(state_dir, rel), r)) for r in merged_runs)
-        for rel in ("sig", "sh")
-    )
+    n_bytes = max(sum(fs.du(run_dir(root, r)) for r in merged_runs) for root in roots)
     floor = max(int(r["n_buckets"]) for r in merged_runs)
     new_m = auto_bucket_count(
         n_bytes, target_bucket_bytes=target_bucket_bytes,
         lo=floor, hi=1 << 20, default=floor,
     )
-    for rel, key in (("sig", "bkey"), ("sh", "doc_id")):
-        root = os.path.join(state_dir, rel)
-        merged = (
-            spark.read.option("basePath", root)
-            .parquet(*[_run_dir(root, r) for r in merged_runs])
-            .drop("gen", "ingest_id", "bucket")
-        )
-        # same layout discipline as _write_run (bucket recomputed at
-        # the new modulus, whole buckets per task, key-sorted tight
-        # row-group stats), into the fresh generation dir
-        _write_run(merged, root, target, key, new_m, gen=gen_new)
+    for root, key in zip(roots, ("bkey", "doc_id")):
+        merged = read_runs(spark, root, merged_runs).drop("gen", "ingest_id", "bucket")
+        # re-bucketed at the new modulus, into the fresh generation dir
+        write_run(merged, root, target, key, new_m, gen=gen_new)
     merged_entry = {
         "rid": target,
         "gen": gen_new,
@@ -824,5 +648,5 @@ def compact_lsh_state(
             "pair_ranges": state["pair_ranges"],
         }
     )
-    _gc_runs(fs, state_dir, log, gc_retain_manifests)
+    gc()
     return True

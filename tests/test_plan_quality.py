@@ -955,11 +955,8 @@ def test_stream_dedup_probe_never_shuffles_state(spark, sf_dir):
         shingle_hashes,
     )
     from mysql_cdc_redis_spark.sources import load_table
-    from mysql_cdc_redis_spark.streaming.dedup_stream import (
-        _cross_candidates,
-        _read_runs,
-        _write_run,
-    )
+    from mysql_cdc_redis_spark.streaming.dedup_stream import _cross_candidates
+    from mysql_cdc_redis_spark.streaming.runstore import read_runs, write_run
 
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
@@ -969,11 +966,11 @@ def test_stream_dedup_probe_never_shuffles_state(spark, sf_dir):
 
     sig_root = os.path.join(tempfile.gettempdir(), f"plq_sig_{uuid.uuid4().hex[:8]}")
     try:
-        _write_run(
+        write_run(
             _banded(mh(corpus).select("doc_id", *mh_cols), 16, 4),
-            sig_root, 0, "bkey",
+            sig_root, 0, "bkey", 16,
         )
-        state_sig = _read_runs(
+        state_sig = read_runs(
             spark, sig_root,
             [{"rid": 0, "gen": 0, "n_buckets": 16}],
             "doc_id bigint, band int, bkey string, gen int, ingest_id int, bucket int",
@@ -1024,10 +1021,7 @@ def test_stream_dedup_state_read_prunes_buckets_and_keys(spark, sf_dir):
         shingle_hashes,
     )
     from mysql_cdc_redis_spark.sources import load_table
-    from mysql_cdc_redis_spark.streaming.dedup_stream import (
-        _read_runs,
-        _write_run,
-    )
+    from mysql_cdc_redis_spark.streaming.runstore import read_runs, write_run
 
     docs = load_table(spark, sf_dir, "documents")
     mh = minhash_signatures(shingle_hashes(docs, 3), 16, with_sizes=True)
@@ -1035,8 +1029,8 @@ def test_stream_dedup_state_read_prunes_buckets_and_keys(spark, sf_dir):
 
     sig_root = os.path.join(tempfile.gettempdir(), f"plq_prune_{uuid.uuid4().hex[:8]}")
     try:
-        _write_run(banded, sig_root, 0, "bkey", n_buckets=16)
-        pruned = _read_runs(
+        write_run(banded, sig_root, 0, "bkey", n_buckets=16)
+        pruned = read_runs(
             spark, sig_root,
             [{"rid": 0, "gen": 0, "n_buckets": 16}],
             "doc_id bigint, band int, bkey string, gen int, ingest_id int, bucket int",

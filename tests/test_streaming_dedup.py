@@ -98,10 +98,11 @@ def test_stream_dedup_probe_footprint_overflow_falls_back_to_buckets(spark):
     many-thousand-literal IN costs ~2ms of driver time PER LITERAL per
     batch — measured, SCALING.md round 7) and return only the touched
     bucket ids; below it, both.  The bucket set must come from the same
-    _bucket_of expression the writes use."""
+    bucket_of expression the writes use."""
     from pyspark.sql import functions as F  # noqa: F811
 
     from mysql_cdc_redis_spark.streaming import dedup_stream as ds
+    from mysql_cdc_redis_spark.streaming.runstore import bucket_of
 
     big = spark.range(ds._KEY_PUSH_CAP + 200).select(
         F.concat(F.lit("k"), F.col("id")).alias("bkey")
@@ -115,7 +116,7 @@ def test_stream_dedup_probe_footprint_overflow_falls_back_to_buckets(spark):
     assert keys is not None and len(keys) == 5
     expected = sorted(
         r[0]
-        for r in small.select(ds._bucket_of(F.col("bkey"), 16)).distinct().collect()
+        for r in small.select(bucket_of(F.col("bkey"), 16)).distinct().collect()
     )
     assert buckets == expected
 
@@ -288,10 +289,8 @@ def test_stream_dedup_probe_reads_only_touched_buckets(spark, sf_dir):
         minhash_signatures,
         shingle_hashes,
     )
-    from mysql_cdc_redis_spark.streaming.dedup_stream import (
-        _bucket_of,
-        _cross_candidates,
-    )
+    from mysql_cdc_redis_spark.streaming.dedup_stream import _cross_candidates
+    from mysql_cdc_redis_spark.streaming.runstore import bucket_of
 
     docs = load_table(spark, sf_dir, "documents")
     expected = _pairs(minhash_lsh_pairs(docs, n=3, k=16, bands=4, threshold=0.2))
@@ -316,14 +315,14 @@ def test_stream_dedup_probe_reads_only_touched_buckets(spark, sf_dir):
         4,
     )
     sig_touched = {
-        r[0] for r in banded.select(_bucket_of(F.col("bkey"), n_buckets)).distinct().collect()
+        r[0] for r in banded.select(bucket_of(F.col("bkey"), n_buckets)).distinct().collect()
     }
     state_sig = spark.read.option(
         "basePath", os.path.join(dirs["state_dir"], "sig")
     ).parquet(os.path.join(dirs["state_dir"], "sig"))
     cand = _cross_candidates(state_sig, banded)
     sh_touched = {
-        r[0] for r in cand.select(_bucket_of(F.col("a"), n_buckets)).distinct().collect()
+        r[0] for r in cand.select(bucket_of(F.col("a"), n_buckets)).distinct().collect()
     }
     assert sh_touched, "probe doc must have corpus candidates (fixture pairs)"
 
@@ -499,7 +498,7 @@ def test_stream_dedup_reader_snapshot_survives_compaction(spark, sf_dir):
     every directory any of the newest _GC_RETAIN_MANIFESTS manifests
     references.  (Immediate GC failed exactly this: the planned file
     list pointed at deleted runs.)"""
-    from mysql_cdc_redis_spark.streaming.dedup_stream import _run_dir
+    from mysql_cdc_redis_spark.streaming.runstore import run_dir
 
     docs = load_table(spark, sf_dir, "documents")
     src = _tmp("dstream_snap_src")
@@ -513,7 +512,7 @@ def test_stream_dedup_reader_snapshot_survives_compaction(spark, sf_dir):
     state_v_n = _load_state(dirs["state_dir"], LocalFS())
     sig_root = os.path.join(dirs["state_dir"], "sig")
     planned = spark.read.option("basePath", sig_root).parquet(
-        *[_run_dir(sig_root, r) for r in state_v_n["runs"]]
+        *[run_dir(sig_root, r) for r in state_v_n["runs"]]
     )
     expected_rows = sum(4 * r["n_docs"] for r in state_v_n["runs"])  # 4 bands/doc
 

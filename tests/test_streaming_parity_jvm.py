@@ -7,6 +7,7 @@ bucketed state scan."""
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
@@ -33,6 +34,7 @@ from mysql_cdc_redis_spark.streaming import (
     run_compaction_stream_jvm,
 )
 from mysql_cdc_redis_spark.streaming.changelog_files import stage_changelog_files
+from mysql_cdc_redis_spark.streaming.runstore import run_dir
 
 
 def _rows(df, cols):
@@ -41,6 +43,15 @@ def _rows(df, cols):
 
 def _tmp(name):
     return os.path.join(tempfile.gettempdir(), f"{name}_{uuid.uuid4().hex[:8]}")
+
+
+def _run(rid: int) -> dict:
+    """The manifest entry of a one-bucket JVM stream run."""
+    return {"rid": rid, "gen": 0, "n_buckets": 1}
+
+
+def _run_path(slots, rid: int) -> str:
+    return run_dir(slots.runs_root, _run(rid))
 
 
 def _append_chunk(df, src_dir: str, name: str) -> None:
@@ -340,8 +351,8 @@ def test_jvm_view_meta_torn_commit_reads_as_prior_state(spark):
     state_dir = _tmp("jvm_torn_meta")
     fs = HostileFS()
     slots = _StateRuns(spark, state_dir, fs=fs)
-    v0 = {"base": None, "buckets": None, "runs": [0]}
-    v1 = {"base": None, "buckets": None, "runs": [0, 1]}
+    v0 = {"base": None, "buckets": None, "runs": [_run(0)]}
+    v1 = {"base": None, "buckets": None, "runs": [_run(0), _run(1)]}
     try:
         slots.commit(0, v0)
         assert slots.view_before(1) == (0, v0)
@@ -373,15 +384,15 @@ def test_jvm_view_map_stays_o1_over_many_batches(spark):
     slots = _StateRuns(spark, state_dir, fs=LocalFS(), max_runs=4)
     try:
         for b in range(100):
-            slots.commit(b, {"base": b % 2, "runs": [b]})
+            slots.commit(b, {"base": b % 2, "runs": [_run(b)]})
         views = slots.load_views()
         assert set(views) == {98, 99}, views
         # the two lookups the protocol can still issue:
         assert slots.view_before(100) == (
-            99, {"base": 1, "buckets": None, "runs": [99]}
+            99, {"base": 1, "buckets": None, "runs": [_run(99)]}
         )
         assert slots.view_before(99) == (
-            98, {"base": 0, "buckets": None, "runs": [98]}
+            98, {"base": 0, "buckets": None, "runs": [_run(98)]}
         )
         # the on-disk head payload itself is bounded, not just the view
         log_dir = os.path.join(state_dir, "_log")
@@ -389,7 +400,7 @@ def test_jvm_view_map_stays_o1_over_many_batches(spark):
         with open(os.path.join(log_dir, newest)) as f:
             assert len(json.load(f)["payload"]["views"]) <= 2
         # a replayed newest batch re-commits without growing the map
-        slots.commit(99, {"base": 1, "runs": [99]})
+        slots.commit(99, {"base": 1, "runs": [_run(99)]})
         assert set(slots.load_views()) == {98, 99}
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
@@ -414,11 +425,35 @@ def test_jvm_legacy_pingpong_manifest_rejected(spark):
         shutil.rmtree(state_dir, ignore_errors=True)
 
 
+def test_jvm_bare_run_ids_rejected(spark, sf_dir):
+    """State in the retired ``runs/b=<id>`` layout — views that list
+    bare int run ids — makes the stream raise instead of resuming it as
+    empty state, and nothing is committed over it."""
+    from mysql_cdc_redis_spark.streaming.commitlog import LocalFS, ManifestLog
+
+    ch = orders_changelog(spark, sf_dir).filter(F.col("o_orderkey") % 20 == 7)
+    src = _tmp("jvm_bare_ids_src")
+    stage_changelog_files(ch, src, n_chunks=1)
+    state_dir = _tmp("jvm_bare_ids_state")
+    log = ManifestLog(LocalFS(), state_dir)
+    try:
+        log.commit({"views": {"0": {"base": None, "buckets": None, "runs": [0]}}})
+        head = log.head()
+        with pytest.raises(Exception, match=r"runs/b=<id>"):
+            run_compaction_stream_jvm(
+                spark, src, ch.schema, ORDERS_PK, ORDERS_PAYLOAD,
+                _tmp("jvm_bare_ids_ckpt"), state_dir,
+            )
+        assert log.head() == head
+    finally:
+        drop_state_jvm(spark, state_dir)
+
+
 def test_jvm_resume_over_four_tuple_runs(spark, sf_dir):
-    """Upgrade path: a state_dir whose committed view holds a run in the
-    older layout — the four-entry tuple with its extra ``f_delete``
-    column (always equal to ``f_update``) — resumes under the
-    three-entry tuple.  The old and new runs read back through one
+    """A committed run whose files carry columns composition never
+    reads — the older four-entry tuple's extra ``f_delete`` column
+    (always equal to ``f_update``) and a stored ``_run`` — resumes under
+    the three-entry tuple.  The old and new runs read back through one
     parquet scan, compose at read time, and fold through a periodic
     compaction; the final state equals compact() over all files."""
     from mysql_cdc_redis_spark.streaming.compact_jvm import _StateRuns
@@ -443,10 +478,12 @@ def test_jvm_resume_over_four_tuple_runs(spark, sf_dir):
     try:
         resume()
         slots = _StateRuns(spark, state_dir)
-        assert slots.load_views() == {0: {"base": None, "buckets": None, "runs": [0]}}
+        assert slots.load_views() == {
+            0: {"base": None, "buckets": None, "runs": [_run(0)]}
+        }
         # rewrite run 0 exactly as the four-entry layout stored it,
         # with the stored _run column that layout also carried
-        run0 = slots.run_path(0)
+        run0 = os.path.join(_run_path(slots, 0), "bucket=0")
         old = _tmp("jvm_upgrade_old_run")
         spark.read.parquet(run0).select(
             "bkey", "tbl", "rid", "f_absent", "f_insert", "f_update",
@@ -500,8 +537,8 @@ def test_jvm_empty_micro_batch_keeps_state_and_resume(spark, sf_dir):
         assert _rows(run(), cols) == _rows(
             compact(parts[0].unionByName(parts[1]), ORDERS_PK, ORDERS_PAYLOAD), cols
         )
-        for b in slots.load_views()[2]["runs"]:
-            assert any(f.endswith(".parquet") for f in os.listdir(slots.run_path(b)))
+        for r in slots.load_views()[2]["runs"]:
+            assert glob.glob(os.path.join(run_dir(slots.runs_root, r), "*", "*.parquet"))
         _append_chunk(parts[2], src, "chunk-0003")
         assert _rows(run(), cols) == _rows(compact(ch, ORDERS_PK, ORDERS_PAYLOAD), cols)
     finally:
@@ -575,16 +612,16 @@ def test_jvm_gc_crash_mid_delete_recovers_and_reclaims(spark, sf_dir):
             ei.value, InjectedCrash
         )
         assert fs.deletes == 2
-        assert os.path.isdir(slots.run_path(0)), "crash must leave run 0 half-deleted"
+        assert os.path.isdir(_run_path(slots, 0)), "crash must leave run 0 half-deleted"
         fs.disarm()
         out = run()
         cols = ["tbl", "rid", "cdc_action", *ORDERS_PAYLOAD]
         assert _rows(out, cols) == _rows(compact(ch, ORDERS_PK, ORDERS_PAYLOAD), cols)
         # only runs a retained view references are left on disk
-        kept = {r for v in slots.load_views().values() for r in v["runs"]}
-        on_disk = fs.list(os.path.join(state_dir, "runs"))
-        assert on_disk == sorted(f"b={r}" for r in kept), (on_disk, kept)
-        assert not os.path.isdir(slots.run_path(0))
+        kept = {r["rid"] for v in slots.load_views().values() for r in v["runs"]}
+        on_disk = fs.list(os.path.join(state_dir, "runs", "gen=0"))
+        assert on_disk == sorted(f"ingest_id={r}" for r in kept), (on_disk, kept)
+        assert not os.path.isdir(_run_path(slots, 0))
     finally:
         drop_state_jvm(spark, state_dir)
 
@@ -612,7 +649,7 @@ def test_jvm_long_stream_keeps_one_base_slot(spark, sf_dir):
         cols = ["tbl", "rid", "cdc_action", *ORDERS_PAYLOAD]
         assert _rows(out, cols) == _rows(compact(ch, ORDERS_PK, ORDERS_PAYLOAD), cols)
         views = slots.load_views()
-        assert sorted(views) == [5, 6] and views[6]["runs"] == [6]
+        assert sorted(views) == [5, 6] and views[6]["runs"] == [_run(6)]
         assert _slots_holding_data(slots) == [views[6]["base"]]
     finally:
         drop_state_jvm(spark, state_dir)
@@ -664,8 +701,6 @@ def test_jvm_base_drop_crash_mid_delete_reruns_to_compact(spark, sf_dir):
 def test_persisted_state_is_zstd(spark, sf_dir):
     """Every persisted-state writer writes zstd pages: a stream run, a
     base slot, a ``write_bucketed`` table and a dedup-stream run."""
-    import glob
-
     import pyarrow.parquet as pq
 
     from mysql_cdc_redis_spark.operators.scale import write_bucketed
@@ -674,7 +709,7 @@ def test_persisted_state_is_zstd(spark, sf_dir):
         _transition_fold,
         keyed_transitions,
     )
-    from mysql_cdc_redis_spark.streaming.dedup_stream import _write_run
+    from mysql_cdc_redis_spark.streaming.runstore import write_run
 
     ch = orders_changelog(spark, sf_dir).filter(F.col("o_orderkey") % 20 == 7)
     state_dir = _tmp("jvm_zstd_state")
@@ -686,10 +721,10 @@ def test_persisted_state_is_zstd(spark, sf_dir):
         view = slots.append(delta, 0, None, _transition_fold(ORDERS_PAYLOAD))
         assert view["base"] == 0
         write_bucketed(ch, "zstd_bucketed", "o_orderkey")
-        _write_run(ch.select(F.col("o_orderkey").alias("k")), dedup_root, 0, "k", 4)
+        write_run(ch.select(F.col("o_orderkey").alias("k")), dedup_root, 0, "k", 4)
         wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
         dirs = {
-            "stream run": slots.run_path(0),
+            "stream run": _run_path(slots, 0),
             "base slot": slots.table_dir(0),
             "write_bucketed": os.path.join(wh, "zstd_bucketed"),
             "dedup run": dedup_root,
@@ -748,18 +783,18 @@ def test_jvm_commit_cost_scales_with_batch_not_state(spark, sf_dir):
         slots.commit(0, slots.append(
             keyed_transitions(big, pk, payload), 0, None, fold
         ))
-        big_run_bytes = dir_bytes(slots.run_path(0))
-        state_rows = spark.read.parquet(slots.run_path(0)).count()
+        big_run_bytes = dir_bytes(_run_path(slots, 0))
+        state_rows = spark.read.parquet(_run_path(slots, 0)).count()
         prev = slots.view_before(1)
         v1 = slots.append(keyed_transitions(tiny, pk, payload), 1, prev, fold)
         slots.commit(1, v1)
-        tiny_run_bytes = dir_bytes(slots.run_path(1))
-        tiny_run_rows = spark.read.parquet(slots.run_path(1)).count()
+        tiny_run_bytes = dir_bytes(_run_path(slots, 1))
+        tiny_run_rows = spark.read.parquet(_run_path(slots, 1)).count()
         # commit cost followed the batch, not the accumulated state:
         # the tiny batch's run holds its own keys only (rows are the
         # honest O(|batch|) metric — bytes carry fixed parquet footer
         # overhead), and nothing else was rewritten
-        assert v1["base"] is None and v1["runs"] == [0, 1]  # no compaction yet
+        assert v1["base"] is None and v1["runs"] == [_run(0), _run(1)]  # no compaction yet
         assert tiny_run_rows < state_rows / 3, (tiny_run_rows, state_rows)
         assert tiny_run_bytes < big_run_bytes / 2, (tiny_run_bytes, big_run_bytes)
         # third batch reaches max_runs: compaction folds into a base...
@@ -774,7 +809,7 @@ def test_jvm_commit_cost_scales_with_batch_not_state(spark, sf_dir):
         )
         # GC: run 0 is reachable from neither retained view (views 1, 2)
         slots.commit(3, v2)  # advance once more so view 0/1's runs age out
-        assert not os.path.isdir(slots.run_path(0))
+        assert not os.path.isdir(_run_path(slots, 0))
     finally:
         drop_state_jvm(spark, state_dir)
 

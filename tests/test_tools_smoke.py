@@ -36,6 +36,8 @@ def test_replay_stream_cost_compacts_and_passes_its_checksum_gate(tmp_path):
     # dropped: one live base plus run 4.  This sub-MB state is one bucket
     assert 0 < summary["state_bytes"] < 1 << 20
     assert summary["base_buckets"] == 1
+    # each increment's input is far below openCostInBytes: one-bucket runs
+    assert summary["run_buckets"] == 1
 
 
 def test_capture_plans_writes_pseudo_target_plans(tmp_path):

@@ -1,25 +1,27 @@
 """Per-batch cost replay of the LSM stream state store (``_StateRuns``,
-streaming/compact_jvm.py): how much of each micro-batch is its
-O(|batch|) run commit and how much the periodic O(|state|) compaction —
-the delta/snapshot split of Structured Streaming's state store.
+streaming/compact_jvm.py, over streaming/runstore.py): how much of each
+micro-batch is its O(|batch|) run commit and how much the periodic
+O(|state|) compaction — the delta/snapshot split of Structured
+Streaming's state store.
 
 Input is perfbench's seeded CDC generator at the cdc_pipeline
 workload's shape: the snapshot changelog of a ``CDC_KEYS``-row lineitem
 base table is batch 0, then each of ``--increments`` increments of
 ``CDC_EVENTS_PER_INCREMENT`` events is one batch.  Every batch goes
 through the stream's own per-batch protocol — ``keyed_transitions``,
-``view_before``, ``append``, ``commit`` — with no streaming query
-around it, so the walls are the state store's alone.
+``view_before``, ``run_buckets``, ``append``, ``commit`` — with no
+streaming query around it, so the walls are the state store's alone.
 
     python tools/replay_stream_cost.py [--increments 40] [--max-runs 8] [--seed 7]
 
 Prints one JSON line per batch — ``append_s`` (run write plus any
-compaction), ``write_run_s``, ``compacted`` and ``run_bytes`` — then a
-summary line, which includes ``state_bytes`` (base slots plus live runs
-on disk, through the state FS handle) and ``base_buckets`` (the final
-base's bucket count).  Exits with an error unless the final state's value
-checksum (benchutil.checksum_row) equals compact()'s over the same
-events.
+compaction), ``write_run_s`` (the run store's ``write_run``),
+``compacted`` and ``run_bytes`` — then a summary line, which includes
+``state_bytes`` (base slots plus live runs on disk, through the state FS
+handle), ``base_buckets`` (the final base's bucket count) and
+``run_buckets`` (the largest bucket modulus among the live runs).
+Exits with an error unless the final state's value checksum
+(benchutil.checksum_row) equals compact()'s over the same events.
 """
 
 from __future__ import annotations
@@ -72,11 +74,13 @@ def main() -> None:
     from mysql_cdc_redis_spark.operators.compaction import compact
     from mysql_cdc_redis_spark.session import get_spark
     from mysql_cdc_redis_spark.sources.changelog import LINEITEM_PAYLOAD, LINEITEM_PK
+    from mysql_cdc_redis_spark.streaming import compact_jvm
     from mysql_cdc_redis_spark.streaming.compact_jvm import (
         _StateRuns,
         _transition_fold,
         keyed_transitions,
     )
+    from mysql_cdc_redis_spark.streaming.runstore import run_dir
 
     work = tempfile.mkdtemp(prefix="replay_stream_cost_")
     spark = get_spark(
@@ -87,37 +91,39 @@ def main() -> None:
     try:
         files = _stage(spark, work, args.increments, args.seed)
         fold = _transition_fold(LINEITEM_PAYLOAD)
-        write_run, write_s = slots.write_run, []
+        write_run, write_s = compact_jvm.write_run, []
 
-        def timed_write_run(delta, batch_id):
+        def timed_write_run(*args, **kwargs):
             t0 = time.perf_counter()
             try:
-                return write_run(delta, batch_id)
+                return write_run(*args, **kwargs)
             finally:
                 write_s.append(time.perf_counter() - t0)
 
-        slots.write_run = timed_write_run
+        compact_jvm.write_run = timed_write_run
         batches = []
         for b, path in enumerate(files):
             spark.sparkContext.setJobDescription(f"replay batch {b}")
-            delta = keyed_transitions(spark.read.parquet(path), LINEITEM_PK, LINEITEM_PAYLOAD)
-            prev = slots.view_before(b)
+            batch = spark.read.parquet(path)
+            delta = keyed_transitions(batch, LINEITEM_PK, LINEITEM_PAYLOAD)
+            prev, n_buckets = slots.view_before(b), slots.run_buckets(batch)
             t0 = time.perf_counter()
-            view = slots.append(delta, b, prev, fold)
+            view = slots.append(delta, b, prev, fold, n_buckets)
             rec = {
                 "batch": b,
                 "append_s": round(time.perf_counter() - t0, 3),
                 "write_run_s": round(write_s[-1], 3),
                 "compacted": view["base"] != (prev[1]["base"] if prev else None),
                 # before the commit: its GC drops runs a compaction folded in
-                "run_bytes": slots.fs.du(slots.run_path(b)),
+                "run_bytes": slots.fs.du(run_dir(slots.runs_root, {"gen": 0, "rid": b})),
             }
             slots.commit(b, view)
             batches.append(rec)
             print(json.dumps(rec), flush=True)
 
         final = slots.final_view()
-        state_bytes = slots.fs.du(os.path.join(slots.state_dir, "runs")) + sum(
+        live_runs = [r for v in slots.load_views().values() for r in v["runs"]]
+        state_bytes = slots.fs.du(slots.runs_root) + sum(
             slots.table_bytes(slot) for slot in (0, 1)
         )
         spark.sparkContext.setJobDescription("replay final fold")
@@ -145,6 +151,7 @@ def main() -> None:
             "final_fold_s": final_fold_s,
             "state_bytes": state_bytes,
             "base_buckets": final["buckets"],
+            "run_buckets": max((r["n_buckets"] for r in live_runs), default=None),
             "state_rows": int(got["n"]),
             "state_chk": str(got["chk"]),
             "state_equals_compact": got == want,
