@@ -4,16 +4,27 @@ Each entry runs a real Structured Streaming query in the reference's
 blocking=False mode (trigger availableNow ≡ cdc_config.py:36) to
 completion, then returns the finalized result as a batch DataFrame so
 the driver can diff it against the same DuckDB oracle as the batch twin
-— the strongest possible cross-paradigm check."""
+— the strongest possible cross-paradigm check.
+
+Every entry reads, runs and emits through the package's one stream
+driver (streaming/changelog_files.py): ``file_stream`` reads the staged
+files, ``run_available_now`` drains them, and each foreachBatch sink
+overwrites its batch's ``batch_id=<id>`` partition through
+``write_emission``, so a replayed batch emits exactly once in every
+output mode.  Update- and complete-mode entries finalize with the last
+emission per key (``_last_emission``)."""
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.compaction import ACTION_FOLD_SENTINEL
 from ..sources import load_table
@@ -27,25 +38,79 @@ from ..sources.changelog import (
     lineitem_changelog,
     orders_changelog,
 )
-from ..streaming.changelog_files import stage_changelog_files, stage_event_files
+from ..streaming.changelog_files import (
+    file_stream,
+    run_available_now,
+    stage_changelog_files,
+    stage_event_files,
+    write_emission,
+)
 from .catalog import register
 from .cdc import _FOLD_LAMBDA, _oracle_compact_sql
 from .llm import _minhash_oracle
 
 
 def _tmp(name: str) -> str:
-    return os.path.join(tempfile.gettempdir(), f"{name}_{uuid.uuid4().hex[:8]}")
+    """A fresh temp path, removed at interpreter exit (the same backstop
+    as ``stage_parquet``): the lazily read results of an entry may still
+    scan it, so it cannot go when the entry returns."""
+    d = os.path.join(tempfile.gettempdir(), f"{name}_{uuid.uuid4().hex[:8]}")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
-def _write_emission(batch_df: DataFrame, emissions_dir: str, batch_id: int) -> None:
-    """Overwrite micro-batch ``batch_id``'s emission partition; reading
-    ``emissions_dir`` back yields its ``batch_id`` column through
-    partition discovery.  A retried batch replaces its rows instead of
-    appending them twice, and no per-batch literal enters the plan (a
-    literal column would give every micro-batch its own generated
-    class)."""
-    batch_df.write.mode("overwrite").parquet(
-        os.path.join(emissions_dir, f"batch_id={batch_id}")
+def _drain(stream: DataFrame, name: str, output_mode: str = "append") -> str:
+    """Run ``stream`` to completion with each micro-batch overwriting its
+    own partition of a fresh emissions dir; return that dir."""
+    emit_dir = _tmp(f"{name}_emit")
+    run_available_now(
+        stream,
+        _tmp(f"{name}_ckpt"),
+        lambda df, batch_id: write_emission(df, emit_dir, batch_id),
+        output_mode,
+    )
+    return emit_dir
+
+
+def _last_emission(
+    spark: SparkSession, emissions_dir: str, keys: list[str], values: list[str]
+) -> DataFrame:
+    """The last emitted ``values`` per ``keys``: update and complete mode
+    re-emit a key each batch it changes, so its final value is the one
+    of the highest ``batch_id``."""
+    last = F.max_by(F.struct(*values), F.col("batch_id")).alias("m")
+    return (
+        spark.read.parquet(emissions_dir)
+        .groupBy(*keys)
+        .agg(last)
+        .select(*keys, *[F.col(f"m.{v}").alias(v) for v in values])
+    )
+
+
+def _view_purchase_join(
+    spark: SparkSession, source_dir: str, schema: StructType, how: str
+) -> DataFrame:
+    """Views joined ``how`` to the same user's purchases in the following
+    30 minutes, each side its own file stream over ``source_dir``.  Both
+    sides carry 2-hour watermarks, so the join state stays bounded by
+    that horizon per side, keyed by user_id."""
+    views, buys = (
+        file_stream(spark, source_dir, schema, max_files_per_trigger=1)
+        .filter(F.col("event_type") == etype)
+        .withWatermark("ts", "2 hours")
+        .select(
+            F.col("user_id").alias(f"{p}_user"),
+            F.col("ts").alias(f"{p}_ts"),
+            F.col("event_id").alias(f"{p}_id"),
+        )
+        for etype, p in (("view", "v"), ("purchase", "p"))
+    )
+    return views.join(
+        buys,
+        (F.col("v_user") == F.col("p_user"))
+        & (F.col("p_ts") > F.col("v_ts"))
+        & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
+        how,
     )
 
 
@@ -139,46 +204,25 @@ def stream_windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     source_dir = _tmp("evstream_src")
     stage_event_files(events, source_dir, n_chunks=2)
-    emissions_dir = _tmp("evstream_emit")
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
     agg = (
-        stream.withWatermark("ts", "30 minutes")
+        file_stream(spark, source_dir, events.schema, max_files_per_trigger=1)
+        .withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
     )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _write_emission(batch_df, emissions_dir, batch_id)
-
-    q = (
-        agg.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .option("checkpointLocation", _tmp("evstream_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
     # finalize: last emission per (window, event_type) is the closed count
-    emitted = spark.read.parquet(emissions_dir)
-    return (
-        emitted.groupBy("w", "event_type")
-        .agg(
-            F.max_by(F.struct("n_events", "sum_value"), F.col("batch_id")).alias("m")
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            F.col("m.n_events").alias("n_events"),
-            F.round(F.col("m.sum_value"), 2).alias("total_value"),
-        )
-        .orderBy("window_start", "event_type")
+    emitted = _last_emission(
+        spark,
+        _drain(agg, "evstream", "update"),
+        ["w", "event_type"],
+        ["n_events", "sum_value"],
     )
+    return emitted.select(
+        F.col("w.start").alias("window_start"),
+        "event_type",
+        "n_events",
+        F.round("sum_value", 2).alias("total_value"),
+    ).orderBy("window_start", "event_type")
 
 
 @register(
@@ -198,28 +242,13 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     source_dir = _tmp("dedupstream_src")
     # duplicate the stream on purpose: two copies of every event
     stage_event_files(events.unionByName(events), source_dir, n_chunks=2)
-    emissions_dir = _tmp("dedupstream_emit")
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
+    deduped = (
+        file_stream(spark, source_dir, events.schema, max_files_per_trigger=1)
+        .withWatermark("ts", "1 hour")
+        .dropDuplicates(["event_id"])
     )
-    deduped = stream.withWatermark("ts", "1 hour").dropDuplicates(["event_id"])
-
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(emissions_dir)
-
-    q = (
-        deduped.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", _tmp("dedupstream_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.read.parquet(emissions_dir)
+        spark.read.parquet(_drain(deduped, "dedupstream"))
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique"))
         .orderBy("event_type")
@@ -248,42 +277,20 @@ def stream_sliding_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     source_dir = _tmp("slidestream_src")
     stage_event_files(events, source_dir, n_chunks=2)
-    emissions_dir = _tmp("slidestream_emit")
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
     agg = (
-        stream.withWatermark("ts", "30 minutes")
+        file_stream(spark, source_dir, events.schema, max_files_per_trigger=1)
+        .withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "20 minutes", "10 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
     )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _write_emission(batch_df, emissions_dir, batch_id)
-
-    q = (
-        agg.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .option("checkpointLocation", _tmp("slidestream_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    emitted = _last_emission(
+        spark, _drain(agg, "slidestream", "update"), ["w"], ["n_events", "sum_value"]
     )
-    q.awaitTermination()
-
-    emitted = spark.read.parquet(emissions_dir)
-    return (
-        emitted.groupBy("w")
-        .agg(F.max_by(F.struct("n_events", "sum_value"), F.col("batch_id")).alias("m"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("m.n_events").alias("n_events"),
-            F.round(F.col("m.sum_value"), 2).alias("total_value"),
-        )
-        .orderBy("window_start")
-    )
+    return emitted.select(
+        F.col("w.start").alias("window_start"),
+        "n_events",
+        F.round("sum_value", 2).alias("total_value"),
+    ).orderBy("window_start")
 
 
 @register(
@@ -327,43 +334,22 @@ def stream_static_enrich_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     source_dir = _tmp("enrichstream_src")
     stage_event_files(events, source_dir, n_chunks=2)
-    emissions_dir = _tmp("enrichstream_emit")
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
     agg = (
-        stream.join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
+        file_stream(spark, source_dir, events.schema, max_files_per_trigger=1)
+        .join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
     )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _write_emission(batch_df, emissions_dir, batch_id)
-
-    q = (
-        agg.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .option("checkpointLocation", _tmp("enrichstream_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    emitted = _last_emission(
+        spark,
+        _drain(agg, "enrichstream", "update"),
+        ["n_name"],
+        ["n_events", "sum_value"],
     )
-    q.awaitTermination()
-
-    emitted = spark.read.parquet(emissions_dir)
-    return (
-        emitted.groupBy("n_name")
-        .agg(F.max_by(F.struct("n_events", "sum_value"), F.col("batch_id")).alias("m"))
-        .select(
-            "n_name",
-            F.col("m.n_events").alias("n_events"),
-            F.round(F.col("m.sum_value"), 2).alias("total_value"),
-        )
-        .orderBy("n_name")
-    )
+    return emitted.select(
+        "n_name", "n_events", F.round("sum_value", 2).alias("total_value")
+    ).orderBy("n_name")
 
 
 @register(
@@ -374,10 +360,9 @@ def stream_static_enrich_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "minutes.  Both sides carry watermarks so the join state is "
     "bounded — at scale Spark buffers only the watermark horizon per "
     "side, keyed by user_id (state partitions by the equi key).  "
-    "Emitted pairs are deduped on (view, purchase) ids in the batch "
-    "finalize (foreachBatch append is at-least-once under retries), "
-    "then aggregated per user.  Result equals the batch interval join "
-    "the oracle runs.",
+    "Each batch's pairs overwrite its own emission partition, so a "
+    "retried batch emits them once; the finalize aggregates them per "
+    "user.  Result equals the batch interval join the oracle runs.",
     tags=("streaming", "join", "ext"),
     oracle="""
 SELECT a.user_id,
@@ -398,44 +383,8 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     source_dir = _tmp("ssj_src")
     stage_event_files(events, source_dir, n_chunks=2)
-    emissions_dir = _tmp("ssj_emit")
-
-    def _side(etype: str, prefix: str):
-        s = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(source_dir)
-            .filter(F.col("event_type") == etype)
-            .withWatermark("ts", "2 hours")
-        )
-        return s.select(
-            F.col("user_id").alias(f"{prefix}_user"),
-            F.col("ts").alias(f"{prefix}_ts"),
-            F.col("event_id").alias(f"{prefix}_id"),
-        )
-
-    views, buys = _side("view", "v"), _side("purchase", "p")
-    joined = views.join(
-        buys,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") > F.col("v_ts"))
-        & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "inner",
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(emissions_dir)
-
-    q = (
-        joined.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", _tmp("ssj_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    emitted = spark.read.parquet(emissions_dir).dropDuplicates(["v_id", "p_id"])
+    joined = _view_purchase_join(spark, source_dir, events.schema, "inner")
+    emitted = spark.read.parquet(_drain(joined, "ssj"))
     return (
         emitted.groupBy(F.col("v_user").alias("user_id"))
         .agg(
@@ -501,32 +450,13 @@ def stream_session_event_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AFTER a batch completes, so same-batch real events are never late;
     # the trailing no-data micro-batch then closes every real session.
     stage_event_files(events.unionByName(sentinel), source_dir, n_chunks=2)
-    emissions_dir = _tmp("sessstream_emit")
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
     agg = (
-        stream.withWatermark("ts", "0 seconds")
+        file_stream(spark, source_dir, events.schema, max_files_per_trigger=1)
+        .withWatermark("ts", "0 seconds")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
     )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(emissions_dir)
-
-    q = (
-        agg.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", _tmp("sessstream_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    emitted = spark.read.parquet(emissions_dir)
+    emitted = spark.read.parquet(_drain(agg, "sessstream"))
     return (
         emitted.where(F.col("user_id") >= 0)
         .select(
@@ -572,30 +502,13 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     # path order = time order, and identical-ts duplicates can never
     # straddle a range boundary
     stage_event_files(events.unionByName(events), source_dir, n_chunks=4)
-    emissions_dir = _tmp("wmdedup_emit")
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
+    deduped = (
+        file_stream(spark, source_dir, events.schema, max_files_per_trigger=1)
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark(["event_id"])
     )
-    deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(emissions_dir)
-
-    q = (
-        deduped.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", _tmp("wmdedup_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.read.parquet(emissions_dir)
+        spark.read.parquet(_drain(deduped, "wmdedup"))
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_unique"),
@@ -668,47 +581,9 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
                 os.utime(dst, None)
         _time.sleep(0.05)
 
-    emissions_dir = _tmp("sslo_emit")
-
-    def _side(etype: str, prefix: str):
-        s = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(source_dir)
-            .filter(F.col("event_type") == etype)
-            .withWatermark("ts", "2 hours")
-        )
-        return s.select(
-            F.col("user_id").alias(f"{prefix}_user"),
-            F.col("ts").alias(f"{prefix}_ts"),
-            F.col("event_id").alias(f"{prefix}_id"),
-        )
-
-    views, buys = _side("view", "v"), _side("purchase", "p")
-    joined = views.join(
-        buys,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") > F.col("v_ts"))
-        & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer",
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(emissions_dir)
-
-    q = (
-        joined.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", _tmp("sslo_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    emitted = (
-        spark.read.parquet(emissions_dir)
-        .filter(F.col("v_user") >= 0)  # drop sentinels
-        .dropDuplicates(["v_id", "p_id"])  # foreachBatch is at-least-once
+    joined = _view_purchase_join(spark, source_dir, events.schema, "left_outer")
+    emitted = spark.read.parquet(_drain(joined, "sslo")).filter(
+        F.col("v_user") >= 0  # drop sentinels
     )
     return (
         emitted.groupBy(F.col("v_user").alias("user_id"))
@@ -727,10 +602,11 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     "stream_global_counts_complete",
     doc="COMPLETE output mode (the third and last output mode, untouched "
     "by the other entries): a global streaming aggregate re-emits the "
-    "full result table every micro-batch into a memory sink; the final "
-    "emission IS the answer — no finalize dedup needed, complete mode "
-    "replaces prior output wholesale.  State = one row per event_type "
-    "(A1/A2's cache-size counters as a live streaming dashboard).",
+    "full result table every micro-batch, each into its own emission "
+    "partition; the last emission per event_type IS the answer, because "
+    "complete mode replaces prior output wholesale.  State = one row "
+    "per event_type (A1/A2's cache-size counters as a live streaming "
+    "dashboard).",
     tags=("streaming", "complete-mode", "agg", "ext"),
     oracle="""
 SELECT event_type, count(*) AS n_events, round(sum(value), 2) AS total_value
@@ -743,24 +619,20 @@ def stream_global_counts_complete(spark: SparkSession, sf_dir: str) -> DataFrame
     events = load_table(spark, sf_dir, "events")
     source_dir = _tmp("cmpl_src")
     stage_event_files(events, source_dir, n_chunks=2)
-    table = f"cmpl_{uuid.uuid4().hex[:8]}"
-    q = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
+    agg = (
+        file_stream(spark, source_dir, events.schema, max_files_per_trigger=1)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 2).alias("total_value"),
         )
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(table)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return spark.table(table).orderBy("event_type")
+    return _last_emission(
+        spark,
+        _drain(agg, "cmpl", "complete"),
+        ["event_type"],
+        ["n_events", "total_value"],
+    ).orderBy("event_type")
 
 
 @register(
@@ -996,37 +868,15 @@ def stream_topk_event_types_hourly(spark: SparkSession, sf_dir: str) -> DataFram
     events = load_table(spark, sf_dir, "events")
     source_dir = _tmp("topk_src")
     stage_event_files(events, source_dir, n_chunks=2)
-    emissions_dir = _tmp("topk_emit")
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
     agg = (
-        stream.withWatermark("ts", "30 minutes")
+        file_stream(spark, source_dir, events.schema, max_files_per_trigger=1)
+        .withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _write_emission(batch_df, emissions_dir, batch_id)
-
-    q = (
-        agg.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .option("checkpointLocation", _tmp("topk_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    emitted = spark.read.parquet(emissions_dir)
-    final = (
-        emitted.groupBy("w", "event_type")
-        .agg(F.max_by("n_events", "batch_id").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
+    final = _last_emission(
+        spark, _drain(agg, "topk", "update"), ["w", "event_type"], ["n_events"]
+    ).select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     w_rank = Window.partitionBy("window_start").orderBy(
         F.desc("n_events"), "event_type"
     )
@@ -1048,9 +898,11 @@ def stream_topk_event_types_hourly(spark: SparkSession, sf_dir: str) -> DataFram
     doc="Multi-sink fan-out (the Spark spelling of the reference's "
     "dump->upload->bq queue pipeline, dump2csv.py:45-46/280-305): ONE "
     "foreachBatch writes each micro-batch to BOTH a parquet state sink "
-    "and a header'd CSV dump sink; the result reconciles per-table row "
-    "counts across the two sinks against the source — equal counts "
-    "prove exactly-once fan-out under availableNow restart semantics.",
+    "and a header'd CSV dump sink, each batch overwriting its own "
+    "batch_id partition in both, so a replayed batch replaces its rows "
+    "in each sink.  The result reconciles per-table row counts across "
+    "the two sinks against the source — equal counts show exactly-once "
+    "fan-out under availableNow restart semantics.",
     tags=("streaming", "sink", "ref:T7", "ref:K1", "ref:K4"),
     oracle=f"""
 WITH ch AS ({ORDERS_CHANGELOG_SQL})
@@ -1068,29 +920,23 @@ def stream_foreachbatch_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq_dir = _tmp("fanout_pq")
     csv_dir = _tmp("fanout_csv")
 
-    stream = (
-        spark.readStream.schema(ch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
     def _fanout(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
-            batch_df.write.mode("append").parquet(pq_dir)
+            write_emission(batch_df, pq_dir, batch_id)
             batch_df.withColumn("cdc_ts", F.col("cdc_ts").cast("string")).withColumn(
                 "o_orderdate", F.col("o_orderdate").cast("string")
-            ).write.mode("append").option("header", True).csv(csv_dir)
+            ).write.mode("overwrite").option("header", True).csv(
+                os.path.join(csv_dir, f"batch_id={batch_id}")
+            )
         finally:
             batch_df.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_fanout)
-        .option("checkpointLocation", _tmp("fanout_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        file_stream(spark, source_dir, ch.schema, max_files_per_trigger=1),
+        _tmp("fanout_ckpt"),
+        _fanout,
     )
-    q.awaitTermination()
 
     pq_counts = (
         spark.read.parquet(pq_dir)
@@ -1119,9 +965,10 @@ def stream_foreachbatch_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     "user purchases within the following 30 minutes — existence, not "
     "pairing, so each view is emitted at most once no matter how many "
     "qualifying purchases arrive (state stays bounded by the watermark "
-    "horizon per side, keyed by user).  Finalize dedupes on view id "
-    "(append under foreachBatch is at-least-once) and folds to per-user "
-    "converting-view counts; must hash-match the batch EXISTS oracle.",
+    "horizon per side, keyed by user).  Each batch's views overwrite "
+    "its own emission partition, so a retried batch emits them once; "
+    "finalize folds them to per-user converting-view counts.  Must "
+    "hash-match the batch EXISTS oracle.",
     tags=("streaming", "join", "ext"),
     oracle="""
 SELECT a.user_id, count(*) AS n_converting_views
@@ -1142,44 +989,8 @@ def stream_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     source_dir = _tmp("sssemi_src")
     stage_event_files(events, source_dir, n_chunks=2)
-    emissions_dir = _tmp("sssemi_emit")
-
-    def _side(etype: str, prefix: str):
-        s = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(source_dir)
-            .filter(F.col("event_type") == etype)
-            .withWatermark("ts", "2 hours")
-        )
-        return s.select(
-            F.col("user_id").alias(f"{prefix}_user"),
-            F.col("ts").alias(f"{prefix}_ts"),
-            F.col("event_id").alias(f"{prefix}_id"),
-        )
-
-    views, buys = _side("view", "v"), _side("purchase", "p")
-    joined = views.join(
-        buys,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") > F.col("v_ts"))
-        & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_semi",
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(emissions_dir)
-
-    q = (
-        joined.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", _tmp("sssemi_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    emitted = spark.read.parquet(emissions_dir).dropDuplicates(["v_id"])
+    joined = _view_purchase_join(spark, source_dir, events.schema, "left_semi")
+    emitted = spark.read.parquet(_drain(joined, "sssemi"))
     return (
         emitted.groupBy(F.col("v_user").alias("user_id"))
         .agg(F.count(F.lit(1)).alias("n_converting_views"))
@@ -1232,37 +1043,15 @@ def stream_distribution_drift_monitor(spark: SparkSession, sf_dir: str) -> DataF
     events = load_table(spark, sf_dir, "events")
     source_dir = _tmp("driftmon_src")
     stage_event_files(events, source_dir, n_chunks=2)
-    emissions_dir = _tmp("driftmon_emit")
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
     agg = (
-        stream.withWatermark("ts", "30 minutes")
+        file_stream(spark, source_dir, events.schema, max_files_per_trigger=1)
+        .withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _write_emission(batch_df, emissions_dir, batch_id)
-
-    q = (
-        agg.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .option("checkpointLocation", _tmp("driftmon_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    emitted = spark.read.parquet(emissions_dir)
-    w = (
-        emitted.groupBy("w", "event_type")
-        .agg(F.max_by("n", F.col("batch_id")).alias("n"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n")
-    )
+    w = _last_emission(
+        spark, _drain(agg, "driftmon", "update"), ["w", "event_type"], ["n"]
+    ).select(F.col("w.start").alias("ws"), "event_type", "n")
     base = events.groupBy("event_type").agg(F.count(F.lit(1)).alias("nb"))
     btot = base.agg(F.sum("nb").alias("nbt"))
     tot = w.groupBy("ws").agg(F.sum("n").alias("nw"))

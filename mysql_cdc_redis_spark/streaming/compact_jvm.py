@@ -70,14 +70,17 @@ IMMUTABLE per-batch delta run; the state is the LSM of those runs:
   same FS handle.  This is the idempotent-replay contract the reference
   relies on (M5), upgraded to exactly-once.
 
-One availableNow foreachBatch loop drives all four public streams
-(``_run_lsm_stream``).  Per micro-batch it reads the prior view
+``_run_lsm_stream`` is the batch body all four public streams share;
+it reads through the package's one file source and runs on its one
+availableNow query loop (streaming/changelog_files.py: ``file_stream``,
+``run_available_now``).  Per micro-batch it reads the prior view
 (``view_before``), calls the variant's hook ``batch(batch_df, prev) ->
 (run_df, emit)``, appends the run, writes ``emit(view)`` over
-``emit_dir/batch_id=<id>`` while the view holds state (``emit`` is
-None when the variant emits nothing), and commits the view LAST.  The
-exactly-once order lives there alone; variants differ only in their
-hook, their fold (transition tuples or last-writer-wins) and finalize.
+``emit_dir/batch_id=<id>`` (``write_emission``) while the view holds
+state (``emit`` is None when the variant emits nothing), and commits
+the view LAST.  The exactly-once order lives there alone; variants
+differ only in their hook, their fold (transition tuples or
+last-writer-wins) and finalize.
 
 Parity with the batch compactor under ANY micro-batch slicing is
 pinned by tests/test_streaming_parity_jvm.py, plus exhaustive
@@ -110,6 +113,7 @@ from ..operators.scale import (
     state_bucket_count,
     state_writer,
 )
+from .changelog_files import file_stream, run_available_now, write_emission
 from .commitlog import LocalFS, ManifestLog
 from .runstore import gc_runs, read_runs, run_dir, write_run
 
@@ -491,35 +495,24 @@ def _run_lsm_stream(
     max_files_per_trigger: int | None = None,
     emit_dir: str | None = None,
 ) -> dict | None:
-    """The micro-batch loop of every public stream (hook contract: see
-    the module docstring).  ``emit_dir`` is created up front, so
-    finalize reads it with a known schema even when nothing was
-    emitted.  Returns the final committed view (``final_view``)."""
+    """Drive one public stream's batches through the shared availableNow
+    loop (hook contract: see the module docstring).  ``emit_dir`` is
+    created up front, so finalize reads it with a known schema even
+    when nothing was emitted.  Returns the final committed view
+    (``final_view``)."""
     if emit_dir is not None:
         os.makedirs(emit_dir, exist_ok=True)
-    reader = spark.readStream.schema(source_schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         prev = slots.view_before(batch_id)
         run, emit = batch(batch_df, prev)
         view = slots.append(run, batch_id, prev, fold, slots.run_buckets(batch_df))
         if emit is not None and _holds_state(view):
-            emit(view).write.mode("overwrite").parquet(
-                os.path.join(emit_dir, f"batch_id={batch_id}")
-            )
+            write_emission(emit(view), emit_dir, batch_id)
         slots.commit(batch_id, view)
 
-    (
-        reader.parquet(source_dir)
-        .writeStream.foreachBatch(_apply)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    stream = file_stream(spark, source_dir, source_schema, max_files_per_trigger)
+    run_available_now(stream, checkpoint_dir, _apply, output_mode="update")
     return slots.final_view()
 
 

@@ -81,6 +81,13 @@ BATCH, never the corpus:
   the old manifest (old state intact) or the new one (new state
   complete) plus unreferenced garbage — never a half-visible state.
 
+The stream reads through the package's one file source and runs on its
+one availableNow query loop (streaming/changelog_files.py:
+``file_stream``, ``run_available_now``).  Its pairs keep their own
+``ingest_id=N`` partition name, not the ``batch_id=N`` of
+``write_emission``, because the manifest's ``pair_ranges`` filter
+reads that name.
+
 Everything is JVM expression algebra — zero Python row crossings.  The
 only collects are the per-batch probe-key collects, bounded by
 O(min(batch keys, _KEY_PUSH_CAP) + n_buckets) — proportional to the
@@ -103,6 +110,7 @@ from ..operators.dedup import (
     shingle_hashes,
 )
 from ..operators.scale import auto_bucket_count, pow2_at_least
+from .changelog_files import file_stream, run_available_now
 from .commitlog import LocalFS, ManifestLog
 from .runstore import bucket_of, gc_runs, read_runs, run_dir, write_run
 
@@ -492,18 +500,8 @@ def run_dedup_stream_minhash(
                 if df is not None:
                     df.unpersist()
 
-    reader = spark.readStream.schema(source_schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = file_stream(spark, source_dir, source_schema, max_files_per_trigger)
+    run_available_now(stream, checkpoint_dir, _apply, output_mode="update")
 
     state = _load_state(state_dir, fs)
     if auto_compact_runs and len(state["runs"]) > auto_compact_runs:

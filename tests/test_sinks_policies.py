@@ -5,9 +5,12 @@ from __future__ import annotations
 
 import glob
 import os
+import subprocess
+import sys
 import tempfile
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from mysql_cdc_redis_spark.operators.compaction import compact
@@ -242,3 +245,67 @@ def test_latency_alert_feed_streaming_side_output(spark, sf_dir):
         alerts.select("tbl", "bucket").distinct().count()
         == batch_alerts.select("tbl", "bucket").distinct().count()
     )
+
+
+def test_available_now_replays_a_failed_batch_exactly_once(spark, sf_dir, tmp_path):
+    """A batch that fails after its emission write is replayed under the
+    same batch_id on restart; ``write_emission`` overwrites its partition,
+    so every source row is emitted exactly once across the two runs."""
+    from mysql_cdc_redis_spark.streaming.changelog_files import (
+        file_stream,
+        run_available_now,
+        stage_changelog_files,
+        write_emission,
+    )
+
+    ch = orders_changelog(spark, sf_dir).limit(400)
+    src, ckpt, emit_dir = (str(tmp_path / d) for d in ("src", "ckpt", "emit"))
+    stage_changelog_files(ch, src, n_chunks=2)
+    failed = []
+
+    def _fail_batch_1_once(batch_df, batch_id):
+        write_emission(batch_df, emit_dir, batch_id)
+        if batch_id == 1 and not failed:
+            failed.append(batch_id)
+            raise RuntimeError("injected failure after the emission write")
+
+    def _run():
+        stream = file_stream(spark, src, ch.schema, max_files_per_trigger=1)
+        run_available_now(stream, ckpt, _fail_batch_1_once)
+
+    with pytest.raises(Exception, match="injected failure"):
+        _run()
+    _run()  # same checkpoint: batch 1 is replayed
+
+    assert failed == [1]
+    emitted = spark.read.parquet(emit_dir)
+    batch_ids = {r["batch_id"] for r in emitted.select("batch_id").distinct().collect()}
+    assert batch_ids == {0, 1}
+    staged = spark.read.schema(ch.schema).parquet(src)
+    rows = emitted.drop("batch_id")
+    assert rows.count() == staged.count()
+    assert rows.exceptAll(staged).count() == 0 and staged.exceptAll(rows).count() == 0
+
+
+def test_streaming_tmp_dirs_are_removed_at_exit(tmp_path):
+    """The streaming catalog's per-call dirs do not outlive the process
+    that made them."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os\n"
+        "from mysql_cdc_redis_spark.plans.streaming_queries import _tmp\n"
+        "d = _tmp('exit_probe')\n"
+        "os.makedirs(os.path.join(d, 'batch_id=0'))\n"
+        "print(d)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    d = out.stdout.strip().splitlines()[-1]
+    assert d.startswith(str(tmp_path))
+    assert not os.path.exists(d)
