@@ -21,11 +21,6 @@ def md5long(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def md5long_sql(expr: str) -> str:
-    """DuckDB spelling of md5long for oracle construction."""
-    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
-
-
 def norm_text(col: Column) -> Column:
     """Canonical text normalization used by dedup/fingerprint ops:
     lowercase, trim, collapse whitespace runs."""

@@ -86,16 +86,6 @@ def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
     )
 
 
-def drop_exact_dups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Survivors only — dropDuplicates on content with a deterministic
-    keeper (min id)."""
-    w_fp = exact_dedup_groups(docs, id_col, text_col).select(
-        "fp", F.col("keeper").alias(id_col)
-    )
-    keyed = docs.withColumn("fp", fingerprint(F.col(text_col)))
-    return keyed.join(w_fp, ["fp", id_col], "inner").drop("fp")
-
-
 # ---------------------------------------------------------------------------
 # Shingling (shared by Jaccard + MinHash)
 # ---------------------------------------------------------------------------

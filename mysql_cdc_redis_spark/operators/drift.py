@@ -11,15 +11,8 @@ payload column, fingerprinted with real map_keys."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def dataframe_fingerprint(df: DataFrame) -> tuple[str, ...]:
-    """P4 for a fixed-schema DataFrame: tuple(sorted(columns)) — the
-    direct analog of dump2csv.py:54-59 where a row's schema is its dict
-    keys."""
-    return tuple(sorted(df.columns))
 
 
 def schema_fingerprint(map_col: Column) -> Column:
@@ -27,20 +20,3 @@ def schema_fingerprint(map_col: Column) -> Column:
     All JVM built-ins: map_keys -> array_sort -> array_join."""
     return F.array_join(F.array_sort(F.map_keys(map_col)), ",")
 
-
-def drift_groups(df: DataFrame, map_col: str, table_col: str = "tbl") -> DataFrame:
-    """A4: group rows by fingerprint per table and flag drift (more than
-    one fingerprint observed — dump2csv.py:78-80).  Returns one row per
-    (table, fingerprint) with counts and the drift flag; the caller
-    routes drifted groups to the `.tmp` quarantine sink."""
-    from pyspark.sql.window import Window
-
-    fp = df.select(
-        F.col(table_col).alias("tbl"), schema_fingerprint(F.col(map_col)).alias("fingerprint")
-    )
-    per_table = Window.partitionBy("tbl")
-    return (
-        fp.groupBy("tbl", "fingerprint")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .withColumn("drifted", F.count(F.lit(1)).over(per_table) > 1)
-    )

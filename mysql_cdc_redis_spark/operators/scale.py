@@ -20,12 +20,21 @@ from pyspark.sql import functions as F
 
 # The one codec of every persisted-state writer (stream runs and base
 # slots, bucketed batch state, dedup-stream runs).  On the CDC state
-# zstd pages measured 26-30% smaller than Spark's default snappy.
+# zstd pages measured 26-30% smaller than Spark's default snappy.  The
+# other half of the persisted format, the timestamp type (INT64
+# ``TIMESTAMP(MICROS)``), is a session conf: see ``state_writer``.
 STATE_CODEC = "zstd"
 
 
 def state_writer(df: DataFrame) -> DataFrameWriter:
-    """``df.write`` for persisted state: parquet pages in ``STATE_CODEC``."""
+    """``df.write`` for persisted state: parquet pages in ``STATE_CODEC``,
+    timestamps as INT64 ``TIMESTAMP(MICROS)`` with min/max statistics.
+
+    The timestamp type is not a write option: Spark's parquet writer
+    replaces a per-write ``outputTimestampType`` with the session's, so
+    ``session.py`` sets ``spark.sql.parquet.outputTimestampType`` on
+    every session (``get_spark``, ``ensure_session_confs``).  On the CDC
+    state it cut ~18% of the bytes against the INT96 default."""
     return df.write.option("compression", STATE_CODEC)
 
 

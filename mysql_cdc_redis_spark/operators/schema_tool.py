@@ -74,12 +74,3 @@ def warehouse_schema(df: DataFrame, with_system_cols: bool = True) -> list[tuple
         fields += [("cdc_action", "string"), ("cdc_ts", "timestamp")]
     return sorted(fields, key=lambda p: p[0])
 
-
-def warehouse_schema_json(df: DataFrame, with_system_cols: bool = True) -> str:
-    """The per-table JSON schema file the reference writes under
-    bq_schema/<system>/<sid>/<db>/<table> (bq_schema_from_mysql.py:94-119)."""
-    import json
-
-    return json.dumps(
-        [{"name": n, "type": t} for n, t in warehouse_schema(df, with_system_cols)]
-    )

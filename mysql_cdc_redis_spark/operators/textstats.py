@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5long, norm_text
+from ..functions.hashing import norm_text
 
 # Tiny English stopword list shared verbatim with the oracle SQL.
 STOPWORDS = ("the", "a", "of", "to", "and", "in", "is", "it", "for", "on")
@@ -28,11 +28,6 @@ def tokens(col: Column) -> Column:
 
 def token_count(col: Column) -> Column:
     return F.size(tokens(col))
-
-
-def bpe_token_count(col: Column) -> Column:
-    """Token count under the BPE-ish regex pre-tokenizer."""
-    return F.size(F.regexp_extract_all(norm_text(col), F.lit(BPE_TOKEN_RE), 0))
 
 
 def stopword_ratio(col: Column) -> Column:
@@ -71,11 +66,6 @@ def fingerprint(col: Column) -> Column:
     """Document fingerprint: md5 of normalized text (exact-dup key).
     Engine-portable; the rolling/simhash variants live in dedup.py."""
     return F.md5(norm_text(col))
-
-
-def content_hash60(col: Column) -> Column:
-    """60-bit integer fingerprint (join-friendly)."""
-    return md5long(norm_text(col))
 
 
 def winnow_fingerprints(docs, k: int = 8, w: int = 4, id_col: str = "doc_id", text_col: str = "text"):

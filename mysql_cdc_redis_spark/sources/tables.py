@@ -60,14 +60,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     for t in TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
-
-def read_csv_table(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """CSV scan with header, the Spark spelling of readcsv
-    (reference loadcsv.py:91-94).  With an explicit schema Spark skips the
-    inference pass — always pass one in production paths."""
-    reader = spark.read.option("header", True)
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
-    return reader.csv(path)

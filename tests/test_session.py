@@ -33,3 +33,10 @@ def test_ensure_session_confs_reads_cpus_at_call_time(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
     session.ensure_session_confs(stub)
     assert stub.conf.values["spark.sql.shuffle.partitions"] == "3"
+
+
+def test_ensure_session_confs_persists_int64_timestamps():
+    # a foreign session still on Spark's INT96 default writes INT64 micros
+    stub = _StubSession({"spark.sql.parquet.outputTimestampType": "INT96"})
+    session.ensure_session_confs(stub)
+    assert stub.conf.values["spark.sql.parquet.outputTimestampType"] == "TIMESTAMP_MICROS"

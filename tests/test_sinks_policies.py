@@ -7,8 +7,6 @@ import glob
 import os
 import subprocess
 import sys
-import tempfile
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,16 +17,13 @@ from mysql_cdc_redis_spark.operators.dump import (
     dump_to_csv,
     read_dump,
 )
+from mysql_cdc_redis_spark.plans.streaming_queries import _tmp  # removed at exit
 from mysql_cdc_redis_spark.sources.changelog import (
     ORDERS_PAYLOAD,
     ORDERS_PK,
     orders_changelog,
 )
 from mysql_cdc_redis_spark.streaming.policies import FlushPolicy, with_progress_metrics
-
-
-def _tmp(name):
-    return os.path.join(tempfile.gettempdir(), f"{name}_{uuid.uuid4().hex[:8]}")
 
 
 def test_csv_dump_chunking_and_layout(spark, sf_dir):

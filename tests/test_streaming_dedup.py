@@ -11,14 +11,13 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import time
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from mysql_cdc_redis_spark.operators.dedup import minhash_lsh_pairs
+from mysql_cdc_redis_spark.plans.streaming_queries import _tmp  # removed at exit
 from mysql_cdc_redis_spark.sources import load_table
 from mysql_cdc_redis_spark.streaming import (
     compact_lsh_state,
@@ -31,10 +30,6 @@ from mysql_cdc_redis_spark.streaming.dedup_stream import _load_state
 from .fs_double import HostileFS, InjectedCrash
 
 FS_BACKENDS = [LocalFS, HostileFS]
-
-
-def _tmp(name):
-    return os.path.join(tempfile.gettempdir(), f"{name}_{uuid.uuid4().hex[:8]}")
 
 
 def _pairs(df):

@@ -10,9 +10,8 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 import time
-import uuid
+from contextlib import contextmanager
 from itertools import product
 
 import pytest
@@ -24,6 +23,7 @@ from mysql_cdc_redis_spark.operators.compaction import (
     merge_state_delta,
     with_rid,
 )
+from mysql_cdc_redis_spark.plans.streaming_queries import _tmp  # removed at exit
 from mysql_cdc_redis_spark.sources.changelog import (
     ORDERS_PAYLOAD,
     ORDERS_PK,
@@ -39,10 +39,6 @@ from mysql_cdc_redis_spark.streaming.runstore import run_dir
 
 def _rows(df, cols):
     return sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
-
-
-def _tmp(name):
-    return os.path.join(tempfile.gettempdir(), f"{name}_{uuid.uuid4().hex[:8]}")
 
 
 def _run(rid: int) -> dict:
@@ -698,11 +694,50 @@ def test_jvm_base_drop_crash_mid_delete_reruns_to_compact(spark, sf_dir):
         drop_state_jvm(spark, state_dir)
 
 
-def test_persisted_state_is_zstd(spark, sf_dir):
-    """Every persisted-state writer writes zstd pages: a stream run, a
-    base slot, a ``write_bucketed`` table and a dedup-stream run."""
+TS_COLS = ("cdc_ts", "o_orderdate")
+
+
+def _ltz(df):
+    """``df`` with its TIMESTAMP_NTZ columns cast to TIMESTAMP.  The sf
+    fixtures store naive timestamps, which Spark writes as INT64 micros
+    whatever the session's ``outputTimestampType``; a TIMESTAMP column,
+    as Debezium sources and perfbench's generator produce, follows it."""
+    return df.select(
+        *[
+            F.col(f.name).cast("timestamp") if f.dataType.typeName() == "timestamp_ntz"
+            else F.col(f.name)
+            for f in df.schema.fields
+        ]
+    )
+
+
+def _parquet_columns(d):
+    """``(file, row-group column chunk, schema column)`` of every parquet
+    column chunk under ``d``."""
     import pyarrow.parquet as pq
 
+    files = glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
+    assert files, d
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                yield f, md.row_group(g).column(c), md.schema.column(c)
+
+
+def _ts_physical_types(d) -> set[str]:
+    """Physical parquet types of the ``TS_COLS`` columns under ``d``."""
+    return {
+        col.physical_type
+        for _, chunk, col in _parquet_columns(d)
+        if chunk.path_in_schema.split(".")[-1] in TS_COLS
+    }
+
+
+@contextmanager
+def _persisted_state(spark, sf_dir):
+    """One file group of each persisted-state writer, by name: a stream
+    run, a base slot, a ``write_bucketed`` table and a dedup-stream run."""
     from mysql_cdc_redis_spark.operators.scale import write_bucketed
     from mysql_cdc_redis_spark.streaming.compact_jvm import (
         _StateRuns,
@@ -711,7 +746,7 @@ def test_persisted_state_is_zstd(spark, sf_dir):
     )
     from mysql_cdc_redis_spark.streaming.runstore import write_run
 
-    ch = orders_changelog(spark, sf_dir).filter(F.col("o_orderkey") % 20 == 7)
+    ch = _ltz(orders_changelog(spark, sf_dir).filter(F.col("o_orderkey") % 20 == 7))
     state_dir = _tmp("jvm_zstd_state")
     # max_runs=1: the first batch writes its run and compacts it into a base
     slots = _StateRuns(spark, state_dir, max_runs=1)
@@ -723,27 +758,155 @@ def test_persisted_state_is_zstd(spark, sf_dir):
         write_bucketed(ch, "zstd_bucketed", "o_orderkey")
         write_run(ch.select(F.col("o_orderkey").alias("k")), dedup_root, 0, "k", 4)
         wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        dirs = {
+        yield {
             "stream run": _run_path(slots, 0),
             "base slot": slots.table_dir(0),
             "write_bucketed": os.path.join(wh, "zstd_bucketed"),
             "dedup run": dedup_root,
         }
-        for what, d in dirs.items():
-            files = glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
-            assert files, what
-            for f in files:
-                md = pq.ParquetFile(f).metadata
-                codecs = {
-                    md.row_group(g).column(c).compression
-                    for g in range(md.num_row_groups)
-                    for c in range(md.num_columns)
-                }
-                assert codecs == {"ZSTD"}, (what, f, codecs)
     finally:
         spark.sql("DROP TABLE IF EXISTS zstd_bucketed")
         shutil.rmtree(dedup_root, ignore_errors=True)
         drop_state_jvm(spark, state_dir)
+
+
+def test_persisted_state_is_zstd(spark, sf_dir):
+    """Every persisted-state writer writes zstd pages: a stream run, a
+    base slot, a ``write_bucketed`` table and a dedup-stream run."""
+    with _persisted_state(spark, sf_dir) as dirs:
+        for what, d in dirs.items():
+            for f, chunk, _ in _parquet_columns(d):
+                assert chunk.compression == "ZSTD", (what, f, chunk.path_in_schema)
+
+
+def test_persisted_timestamps_are_int64_micros_with_statistics(spark, sf_dir):
+    """Every persisted timestamp is INT64 ``TIMESTAMP(MICROS)``, adjusted
+    to UTC, with min/max statistics: in a stream run (inside ``_last``),
+    a base slot and a ``write_bucketed`` table.  The dedup run holds no
+    timestamp."""
+    import json
+
+    with _persisted_state(spark, sf_dir) as dirs:
+        for what, d in dirs.items():
+            seen = set()
+            for f, chunk, col in _parquet_columns(d):
+                name = chunk.path_in_schema.split(".")[-1]
+                assert col.physical_type != "INT96", (what, f, name)
+                if name not in TS_COLS:
+                    continue
+                seen.add(name)
+                logical = json.loads(col.logical_type.to_json())
+                assert col.physical_type == "INT64", (what, f, name)
+                assert logical["Type"] == "Timestamp", (what, f, logical)
+                assert logical["timeUnit"] == "microseconds", (what, f, logical)
+                assert logical["isAdjustedToUTC"], (what, f, logical)
+                assert chunk.statistics is not None and chunk.statistics.has_min_max
+            assert seen == (set() if what == "dedup run" else set(TS_COLS)), what
+
+
+def test_jvm_stream_resumes_over_int96_state(spark, sf_dir):
+    """State written while timestamps were INT96 (Spark's default) —
+    runs and a compacted base slot — resumes under INT64 micros: the
+    batch after the restart reads the INT96 base beside its INT64 run,
+    the next compaction folds both into an INT64 base, and the state
+    equals compact() at both points."""
+    from mysql_cdc_redis_spark.streaming.compact_jvm import _StateRuns
+
+    ch = _ltz(orders_changelog(spark, sf_dir).filter(F.col("seq") % 120 < 40))
+    # seq = orderkey*4 + e: seq-ordered per-key slices e=0, e=1, then
+    # e>=2 cut in two by orderkey (only even orderkeys have an e=2 row;
+    # e=3 rows carry a NULL key)
+    parts = [ch.filter(F.col("seq") % 4 == e) for e in (0, 1)]
+    late = ch.filter(F.col("seq") % 4 >= 2)
+    parts += [late.filter(F.col("seq") % 16 < 8), late.filter(F.col("seq") % 16 >= 8)]
+    src = _tmp("jvm_int96_src")
+    ckpt = _tmp("jvm_int96_ckpt")
+    state_dir = _tmp("jvm_int96_state")
+    cols = ["tbl", "rid", "cdc_action", *ORDERS_PAYLOAD]
+    conf = "spark.sql.parquet.outputTimestampType"
+    _append_chunk(parts[0], src, "chunk-0000")
+    _append_chunk(parts[1], src, "chunk-0001")
+
+    def resume():
+        return run_compaction_stream_jvm(
+            spark, src, ch.schema, ORDERS_PK, ORDERS_PAYLOAD, ckpt, state_dir,
+            max_files_per_trigger=1, max_runs=2,
+        )
+
+    slots = _StateRuns(spark, state_dir)
+    prior = spark.conf.get(conf)
+    try:
+        # batches 0-1 under INT96; batch 1 compacts both runs into a base
+        spark.conf.set(conf, "INT96")
+        try:
+            resume()
+        finally:
+            spark.conf.set(conf, prior)
+        old_base = slots.final_view()["base"]
+        assert old_base is not None
+        assert _ts_physical_types(slots.table_dir(old_base)) == {"INT96"}
+
+        # batch 2: a plain INT64 run over the INT96 base
+        _append_chunk(parts[2], src, "chunk-0002")
+        out = resume()
+        view = slots.final_view()
+        assert view["base"] == old_base and view["runs"] == [_run(2)]
+        assert _ts_physical_types(_run_path(slots, 2)) == {"INT64"}
+        assert _rows(out, cols) == _rows(
+            compact(parts[0].unionByName(parts[1]).unionByName(parts[2]),
+                    ORDERS_PK, ORDERS_PAYLOAD),
+            cols,
+        )
+
+        # batch 3 compacts the INT96 base and the INT64 runs
+        _append_chunk(parts[3], src, "chunk-0003")
+        out = resume()
+        new_base = slots.final_view()["base"]
+        assert new_base != old_base
+        assert _ts_physical_types(slots.table_dir(new_base)) == {"INT64"}
+        assert _rows(out, cols) == _rows(compact(ch, ORDERS_PK, ORDERS_PAYLOAD), cols)
+    finally:
+        drop_state_jvm(spark, state_dir)
+
+
+def _scan_output_rows(df) -> int:
+    """Collect ``df``; return the rows its file scans handed upward (the
+    scans' ``numOutputRows``, counted after row-group skipping)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.size())]
+    assert scans and all("Scan parquet" in s.nodeName() for s in scans), plan.toString()
+    return sum(int(s.metrics().apply("numOutputRows").value()) for s in scans)
+
+
+def test_timestamp_range_filter_skips_the_other_state_file(spark, sf_dir):
+    """The min/max statistics of INT64 timestamps let a ``cdc_ts`` range
+    filter skip state: over a two-file state written by ``state_writer``,
+    split at the midpoint of ``cdc_ts``, a filter that matches only the
+    later file reads only that file's rows.  (An INT96 column has no
+    statistics and no pushed filter: the scan read both files.)"""
+    from mysql_cdc_redis_spark.operators.scale import state_writer
+
+    ch = _ltz(orders_changelog(spark, sf_dir)).filter(F.col("cdc_ts").isNotNull())
+    mid_us = ch.select(
+        ((F.unix_micros(F.min("cdc_ts")) + F.unix_micros(F.max("cdc_ts"))) / 2).cast("long")
+    ).first()[0]
+    late_cond = F.col("cdc_ts") >= F.timestamp_micros(F.lit(mid_us))
+    d = _tmp("ts_range_state")
+    try:
+        state_writer(ch.filter(~late_cond).coalesce(1)).parquet(d)
+        state_writer(ch.filter(late_cond).coalesce(1)).mode("append").parquet(d)
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 2
+        n_late, n_all = ch.filter(late_cond).count(), ch.count()
+        assert 0 < n_late < n_all
+        q = spark.read.parquet(d).filter(late_cond)
+        assert _scan_output_rows(q) == n_late
+        assert q.count() == n_late
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_jvm_commit_cost_scales_with_batch_not_state(spark, sf_dir):
