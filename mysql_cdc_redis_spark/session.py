@@ -65,9 +65,9 @@ def _default_driver_mem() -> str:
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
     """Force the correctness-critical runtime confs, and the persisted
-    timestamp type, onto ANY session — the driver harness passes its own
-    SparkSession, which may not have been built by get_spark().  All of
-    these are runtime-settable.
+    timestamp type, onto ANY session — a caller may pass its own
+    SparkSession, one not built by get_spark().  All of these are
+    runtime-settable.
 
     Called from the table scan chokepoint (sources/tables.py) so every
     catalog query self-configures."""
