@@ -43,39 +43,38 @@ IMMUTABLE per-batch delta run; the state is the LSM of those runs:
   generated class and every micro-batch after the first runs on cached
   code.  A batch whose run dir holds no data file is not recorded in
   the view: it changed nothing, and it has no schema to read.
-* PERIODIC COMPACTION bounds read amplification, mirroring the dedup
-  stream's LSM: when the run count reaches ``max_runs`` (default 8),
-  base ∘ runs folds into a new BASE — a bucketed-by-bkey warehouse
-  table (sorted within buckets) ping-ponged between two slots, so the
-  fold's full-outer merge join plans Exchange-free above the base scan
-  (only the composed runs shuffle).  Its bucket count follows the bytes
-  the fold reads (``state_bucket_count``: one file for a sub-MB state,
-  never more than the byte-sized count), and once no retained view
-  references the superseded slot its data is dropped, so one base is
-  live on disk.  Runs and bases are written in zstd pages
-  (``operators/scale.py::state_writer``).
+* PERIODIC COMPACTION bounds read amplification (the run log's
+  compaction selection, streaming/runstore.py): once the run count
+  exceeds ``max_runs`` (default 8), base ∘ every run but the batch's
+  own folds into a new BASE — a bucketed-by-bkey ``write_bucketed``
+  table ping-ponged between two slots, so the fold's full-outer merge
+  join plans Exchange-free above the base scan (only the composed runs
+  shuffle).  Its bucket count follows the bytes the fold reads
+  (``state_bucket_count``), and the commit that stops listing the
+  superseded slot drops its data, so one base is live on disk.  Runs
+  and bases are written in zstd pages (``scale.py::state_writer``).
   Amortized compaction cost per batch ≈ |state| / max_runs; with
   Delta/Iceberg the fold becomes MERGE INTO.
 * Exactly-once: Spark's checkpoint replays an uncommitted batch with
-  the SAME batch_id; the replay recomputes DETERMINISTICALLY from the
-  manifest view committed by the latest batch < batch_id (runs are
-  immutable; a retried batch overwrites only ITS own run dir / base
-  slot), and the view map — {batch_id: {base slot, run entries}}, pruned
-  to the top two reachable entries — commits as the LAST step through
-  the PUT-only manifest log (streaming/commitlog.py: checksummed
-  versioned objects, no rename, correct on S3/GCS and POSIX alike).  A
-  crash anywhere before the meta commit leaves the prior view intact;
-  the retry overwrites the partial run/base.  Run dirs no longer
-  reachable from the retained views are GC'd at commit through the
-  same FS handle.  This is the idempotent-replay contract the reference
-  relies on (M5), upgraded to exactly-once.
+  the SAME batch_id; the replay recomputes DETERMINISTICALLY by the
+  run log's replay rule, from the head's base plus its runs with
+  ``rid < batch_id`` (runs are immutable; a retried batch overwrites
+  only ITS own run dir / base slot), and the new view ``{base,
+  buckets, runs}`` commits as the LAST step, one PUT through the
+  PUT-only manifest log (streaming/commitlog.py: checksummed versioned
+  objects, no rename, correct on S3/GCS and POSIX alike).  A crash
+  anywhere before the meta commit leaves the prior view intact; the
+  retry overwrites the partial run/base.  Runs and the base slot the
+  head no longer lists are GC'd at commit through the same FS handle.
+  This is the idempotent-replay contract the reference relies on (M5),
+  upgraded to exactly-once.
 
 ``_run_lsm_stream`` is the batch body all four public streams share;
 it reads through the package's one file source and runs on its one
 availableNow query loop (streaming/changelog_files.py: ``file_stream``,
 ``run_available_now``).  Per micro-batch it reads the prior view
-(``view_before``), calls the variant's hook ``batch(batch_df, prev) ->
-(run_df, emit)``, appends the run, writes ``emit(view)`` over
+(``state_before`` the head), calls the variant's hook ``batch(batch_df,
+prev) -> (run_df, emit)``, appends the run, writes ``emit(view)`` over
 ``emit_dir/batch_id=<id>`` (``write_emission``) while the view holds
 state (``emit`` is None when the variant emits nothing), and commits
 the view LAST.  The exactly-once order lives there alone; variants
@@ -111,11 +110,20 @@ from ..operators.scale import (
     open_cost_bytes,
     plan_input_bytes,
     state_bucket_count,
-    state_writer,
+    write_bucketed,
 )
 from .changelog_files import file_stream, run_available_now, write_emission
 from .commitlog import LocalFS, ManifestLog
-from .runstore import gc_runs, read_runs, run_dir, write_run
+from .runstore import (
+    gc_live,
+    gc_runs,
+    read_runs,
+    run_dir,
+    runs_to_fold,
+    state_before,
+    with_run,
+    write_run,
+)
 
 # what a stream state row carries besides tbl, rid, cdc_action, payload
 _STATE_CARRY = ("bkey", "last_seq")
@@ -228,7 +236,7 @@ def fold_lww_state(base: DataFrame | None, runs: DataFrame | None) -> DataFrame 
 
 # ---------------------------------------------------------------------------
 # Durable LSM state: immutable per-batch delta runs + bucketed base slots
-# + an atomic batch_id -> view commit log
+# + a manifest log of views
 # ---------------------------------------------------------------------------
 
 
@@ -236,26 +244,28 @@ def _holds_state(view: dict) -> bool:
     return view.get("base") is not None or bool(view.get("runs"))
 
 
+_VIEW_KEYS = {"base", "buckets", "runs"}
+
+
 class _StateRuns:
     """Immutable per-batch delta runs + two bucketed base slots (one
-    holding data once the superseded one ages out of the retained
-    views) + a manifest commit log keyed by foreachBatch batch_id.
-    Runs live in the shared run store (runstore.py) under
-    ``state_dir/runs``.
+    holding data) + a manifest log of views ``{base, buckets, runs}``,
+    kept by the run store's rules (runstore.py; runs under
+    ``state_dir/runs``).
     Table/dir names derive from state_dir, so a checkpoint-resumed run
     (same dirs) finds its state; distinct runs (distinct dirs) never
     collide in the shared warehouse.
 
     Per-batch commit cost is ∝ |batch| (one run write + one O(1)
-    manifest PUT); the O(|state|) fold is paid only every ``max_runs``
-    batches (periodic compaction into the other base slot) and at
-    finalize — the LSM shape the dedup stream already set
+    manifest PUT); the O(|state|) fold is paid only when the run count
+    exceeds ``max_runs`` (periodic compaction into the other base slot)
+    and at finalize — the LSM shape the dedup stream already set
     (dedup_stream.py), replacing the r1-r9 full-state ping-pong that
     rewrote O(|state|) EVERY batch (round-9 verdict item 1).
 
-    The batch_id → view map commits through the PUT-only ManifestLog
+    The view commits through the PUT-only ManifestLog
     (streaming/commitlog.py) rather than an os.replace of _meta.json:
-    a torn commit self-invalidates and reads as the prior map — the
+    a torn commit self-invalidates and reads as the prior view — the
     same crash semantics, with no atomic-rename requirement, so the
     exactly-once contract survives on object stores (round-7 advice)."""
 
@@ -280,74 +290,39 @@ class _StateRuns:
 
     # ---- manifest ---------------------------------------------------
 
-    def load_views(self) -> dict[int, dict]:
+    def head(self) -> dict:
+        """The newest committed view; one holding no state before any
+        batch committed."""
         head = self.log.head()
         if head is None:
-            return {}
-        views = head[1].get("views")
-        if views is None or any(
-            not isinstance(r, dict) for v in views.values() for r in v.get("runs", [])
-        ):
-            # a pre-LSM ping-pong manifest, or views listing bare run
-            # ids (the unbucketed runs/b=<id> layout): resuming either
-            # would silently restart the state from empty — reject
-            # loudly instead (the dedup stream's legacy-state standard)
+            return {"base": None, "buckets": None, "runs": []}
+        view = head[1]
+        if set(view) != _VIEW_KEYS:
+            # a ``slots`` or ``views`` manifest (the latter may list bare
+            # run ids): resuming either as empty state would lose it —
+            # reject loudly (the dedup stream's legacy-state standard)
             raise ValueError(
                 f"{self.state_dir}: state in a legacy ping-pong manifest "
-                "(pre-LSM) or in the runs/b=<id> run layout is not "
-                "resumable by this version; finalize it with the version "
-                "that wrote it or start a fresh state_dir"
+                "(pre-LSM), in the runs/b=<id> run layout or in a batch→view "
+                "map manifest is not resumable by this version; finalize it "
+                "with the version that wrote it or start a fresh state_dir"
             )
-        return {
-            int(b): {
-                "base": v.get("base"),
-                "buckets": v.get("buckets"),
-                "runs": list(v.get("runs", [])),
-            }
-            for b, v in views.items()
-        }
+        return view
 
-    def final_view(self) -> dict | None:
-        """The newest committed view, or None while it holds no state
-        (no batch has fired, or every batch so far wrote an empty run)."""
-        views = self.load_views()
-        if not views or not _holds_state(views[max(views)]):
-            return None
-        return views[max(views)]
-
-    def view_before(self, batch_id: int) -> tuple[int, dict] | None:
-        """(batch_id, view) of the newest committed batch < batch_id —
-        the deterministic merge source for batch_id (commits ≥ batch_id
-        are replays of the batch being retried and are ignored)."""
-        views = self.load_views()
-        prior = [b for b in views if b < batch_id]
-        if not prior:
-            return None
-        b = max(prior)
-        return b, views[b]
-
-    def commit(self, batch_id: int, view: dict) -> None:
-        """Record batch_id → view, pruned to the TOP TWO batch ids
-        (round-8 verdict #2): ``view_before`` only ever consults the
-        newest entry below its batch, and the one batch that can still
-        be replayed is the newest — whose replay reads the second-
-        newest.  Anything older is unreachable, so carrying it forward
-        would grow every manifest O(batches); run dirs and the base
-        slot reachable from neither retained view are GC'd here too, so
-        disk stays O(|state| + max_runs · |batch|)."""
-        views = self.load_views()
-        views[int(batch_id)] = {
-            "base": view.get("base"),
-            "buckets": view.get("buckets"),
-            "runs": list(view.get("runs", [])),
-        }
-        top = sorted(views, reverse=True)[:2]
-        kept = {b: views[b] for b in top}
-        self.log.commit({"views": {str(b): kept[b] for b in kept}})
-        gc_runs(self.fs, [self.runs_root], {
-            (int(r["gen"]), int(r["rid"])) for v in kept.values() for r in v["runs"]
-        })
-        self._gc_bases(kept)
+    def commit(self, view: dict) -> None:
+        """Publish ``view`` as the new head, then GC the runs and base
+        slot it no longer lists (k = 1: a replay reads only the head,
+        whose base covers every ``rid < b``), so disk stays O(|state| +
+        max_runs · |batch|)."""
+        self.log.commit(view)
+        live_runs, live_bases = gc_live(self.log, 1)
+        gc_runs(self.fs, [self.runs_root], live_runs)
+        # one live base on disk instead of two: same best-effort
+        # FS-handle path as run GC; the slot's catalog entry stays, and
+        # the next compaction into it overwrites the table whole
+        for slot in (0, 1):
+            if slot not in live_bases and self.table_bytes(slot):
+                self.fs.delete(self.table_dir(slot))
 
     # ---- physical layout --------------------------------------------
 
@@ -363,13 +338,8 @@ class _StateRuns:
         return self.spark.table(self.tables[slot])
 
     def write_base(self, df: DataFrame, slot: int, n_buckets: int) -> None:
-        (
-            state_writer(df.repartition(n_buckets, "bkey"))
-            .mode("overwrite")
-            .bucketBy(n_buckets, "bkey")
-            .sortBy("bkey")
-            .format("parquet")
-            .saveAsTable(self.tables[slot])
+        write_bucketed(
+            df.repartition(n_buckets, "bkey"), self.tables[slot], "bkey", n_buckets
         )
 
     def table_dir(self, slot: int) -> str:
@@ -385,61 +355,50 @@ class _StateRuns:
         the FS handle like every other state access."""
         return self.fs.du(self.table_dir(slot))
 
-    def _gc_bases(self, kept_views: dict[int, dict]) -> None:
-        """Drop the data of a base slot no retained view references —
-        the superseded slot, once the view that still read it ages out —
-        so one live base is on disk instead of two.  Same best-effort
-        FS-handle path as run GC; the slot's catalog entry stays, and
-        the next compaction into it overwrites the table whole."""
-        live = {v.get("base") for v in kept_views.values()}
-        for slot in (0, 1):
-            if slot not in live and self.table_bytes(slot):
-                self.fs.delete(self.table_dir(slot))
-
     # ---- protocol ----------------------------------------------------
 
     def append(
         self,
         delta: DataFrame,
         batch_id: int,
-        prev: tuple[int, dict] | None,
+        prev: dict,
         fold,
         n_buckets: int = 1,
     ) -> dict:
         """Write batch_id's immutable run at ``n_buckets``
-        (``run_buckets``); when the run count reaches
-        ``max_runs``, fold base ∘ runs into the OTHER base slot
-        (periodic compaction — deterministic on replay because it reads
-        only the prior view's immutable inputs, never the slot it
+        (``run_buckets``) onto ``prev``, the view before the batch
+        (``state_before``); once the run count exceeds ``max_runs``,
+        fold base ∘ every run but the batch's own into the OTHER base
+        slot (periodic compaction — deterministic on replay because it
+        reads only the prior view's immutable inputs, never the slot it
         overwrites).  Returns the new view, NOT yet committed: callers
         commit after their own idempotent per-batch emissions so a
         crash anywhere before the meta commit leaves the prior view
         intact."""
-        prev_view = prev[1] if prev else {"base": None, "buckets": None, "runs": []}
         run = {"rid": int(batch_id), "gen": 0, "n_buckets": int(n_buckets)}
         write_run(delta, self.runs_root, batch_id, "bkey", n_buckets)
-        view = {**prev_view, "runs": list(prev_view["runs"])}
+        runs = prev["runs"]
         # a replayed batch overwrote its own dir; a run without a data
         # file has no schema to read back
         if any(
             not n.startswith(("_", "."))
             for n in self.fs.list(run_dir(self.runs_root, run))
         ):
-            view["runs"].append(run)
-        if len(view["runs"]) < self.max_runs:
-            return view
-        src = view["base"]
-        state = self.state_at(view, fold)
+            runs = with_run(runs, run)
+        folded = runs_to_fold(runs, self.max_runs)
+        if not folded:
+            return {**prev, "runs": runs}
+        src = prev["base"]
         dst = 0 if src is None else 1 - src
         # the compaction join's parallelism IS the bucket count, so it
         # follows the bytes the fold reads: one file for a sub-MB state,
         # 16 from 64 MB, the byte-sized count beyond ~4 GB
         state_bytes = (0 if src is None else self.table_bytes(src)) + sum(
-            self.fs.du(run_dir(self.runs_root, r)) for r in view["runs"]
+            self.fs.du(run_dir(self.runs_root, r)) for r in folded
         )
         n_buckets = state_bucket_count(state_bytes, open_cost_bytes(self.spark))
-        self.write_base(state, dst, n_buckets)
-        return {"base": dst, "buckets": n_buckets, "runs": []}
+        self.write_base(self.state_at({**prev, "runs": folded}, fold), dst, n_buckets)
+        return {"base": dst, "buckets": n_buckets, "runs": runs[len(folded):]}
 
     def state_at(self, view: dict, fold, keys: DataFrame | None = None):
         """The folded state as of ``view``; with ``keys`` (a DataFrame
@@ -494,26 +453,24 @@ def _run_lsm_stream(
     batch,
     max_files_per_trigger: int | None = None,
     emit_dir: str | None = None,
-) -> dict | None:
+) -> None:
     """Drive one public stream's batches through the shared availableNow
     loop (hook contract: see the module docstring).  ``emit_dir`` is
     created up front, so finalize reads it with a known schema even
-    when nothing was emitted.  Returns the final committed view
-    (``final_view``)."""
+    when nothing was emitted."""
     if emit_dir is not None:
         os.makedirs(emit_dir, exist_ok=True)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        prev = slots.view_before(batch_id)
+        prev = state_before(slots.head(), batch_id)
         run, emit = batch(batch_df, prev)
         view = slots.append(run, batch_id, prev, fold, slots.run_buckets(batch_df))
         if emit is not None and _holds_state(view):
             write_emission(emit(view), emit_dir, batch_id)
-        slots.commit(batch_id, view)
+        slots.commit(view)
 
     stream = file_stream(spark, source_dir, source_schema, max_files_per_trigger)
     run_available_now(stream, checkpoint_dir, _apply, output_mode="update")
-    return slots.final_view()
 
 
 def run_compaction_stream_jvm(
@@ -543,16 +500,16 @@ def run_compaction_stream_jvm(
     pipeline is decommissioned."""
     slots = _StateRuns(spark, state_dir, fs=fs, max_runs=max_runs)
     fold = _transition_fold(payload_cols)
-    view = _run_lsm_stream(
+    _run_lsm_stream(
         spark, source_dir, source_schema, checkpoint_dir, slots, fold,
         lambda df, prev: (keyed_transitions(df, pk_cols, payload_cols), None),
         max_files_per_trigger,
     )
-    if view is None:  # empty source: no state stored
+    state = slots.state_at(slots.head(), fold)
+    if state is None:  # empty source: no state stored
         return spark.createDataFrame(
             [], _ddl(_STATE_DDL, source_schema, payload_cols)
         )
-    state = slots.state_at(view, fold)
     return state.select("tbl", "rid", "cdc_action", *payload_cols)
 
 
@@ -610,7 +567,7 @@ def run_retraction_stream_jvm(
 
         def emit(view: dict) -> DataFrame:
             plus = _live_rows(slots.state_at(view, fold, keys=touched), 1)
-            old = slots.state_at(prev[1], fold, keys=touched) if prev else None
+            old = slots.state_at(prev, fold, keys=touched)
             return plus if old is None else _live_rows(old, -1).unionByName(plus)
 
         return delta, emit
@@ -678,7 +635,7 @@ def run_scd2_stream_jvm(
             )
             .dropDuplicates(["bkey", "seq"])
         )
-        state_prev = slots.state_at(prev[1], fold, keys=keyed) if prev else None
+        state_prev = slots.state_at(prev, fold, keys=keyed)
         if state_prev is None:
             state_prev = spark.createDataFrame([], state_ddl)
         s = state_prev.select(
@@ -725,7 +682,7 @@ def run_scd2_stream_jvm(
         closed = closed_batch.unionByName(closed_prior)
         return opens, lambda view: closed
 
-    view = _run_lsm_stream(
+    _run_lsm_stream(
         spark, source_dir, source_schema, checkpoint_dir, slots, fold, batch,
         max_files_per_trigger, emit_dir=emissions_dir,
     )
@@ -741,9 +698,10 @@ def run_scd2_stream_jvm(
         F.col("version").cast("int").alias("version"),
         *payload_cols,
     )
-    if view is None:  # empty source: no state stored
+    state = slots.state_at(slots.head(), fold)
+    if state is None:  # empty source: no state stored
         return closed
-    open_rows = slots.state_at(view, fold).select(
+    open_rows = state.select(
         "tbl", "rid", "cdc_action", "valid_from",
         F.lit(None).cast("string").alias("valid_to"),
         F.lit(True).alias("is_current"),
@@ -839,17 +797,16 @@ def run_compaction_pipeline_dual_sink_jvm(
 
         return delta, emit
 
-    view = _run_lsm_stream(
+    _run_lsm_stream(
         spark, source_dir, source_schema, checkpoint_dir, slots, fold, batch,
         max_files_per_trigger, emit_dir=emissions_dir,
     )
-    if view is None:  # empty source: no state stored
+    state = slots.state_at(slots.head(), fold)
+    if state is None:  # empty source: no state stored
         return spark.createDataFrame(
             [], _ddl(_STATE_DDL, source_schema, payload_cols)
         )
-    final = slots.state_at(view, fold).select(
-        "tbl", "rid", "cdc_action", *payload_cols
-    )
+    final = state.select("tbl", "rid", "cdc_action", *payload_cols)
     dump_state_parquet(final, snapshot_dir)
     return spark.read.parquet(snapshot_dir).select(
         "tbl", "rid", "cdc_action", *payload_cols

@@ -112,7 +112,17 @@ from ..operators.dedup import (
 from ..operators.scale import auto_bucket_count, pow2_at_least
 from .changelog_files import file_stream, run_available_now
 from .commitlog import LocalFS, ManifestLog
-from .runstore import bucket_of, gc_runs, read_runs, run_dir, write_run
+from .runstore import (
+    bucket_of,
+    gc_live,
+    gc_runs,
+    read_runs,
+    run_dir,
+    runs_to_fold,
+    state_before,
+    with_run,
+    write_run,
+)
 
 # Push the probe-key set as a literal IN predicate (row-group skipping
 # inside touched buckets) only while it stays cheap to ship.  MEASURED
@@ -336,7 +346,7 @@ def run_dedup_stream_minhash(
             # not probe (or double-count) its own crashed attempt, and
             # a checkpoint replay of the newest batch must see exactly
             # the pre-batch corpus
-            runs_before = [r for r in state["runs"] if int(r["rid"]) < batch_id]
+            runs_before = state_before(state, batch_id)["runs"]
             state_docs = sum(int(r["n_docs"]) for r in runs_before)
             # footprints are computed at the LARGEST live modulus; each
             # run's filter projects them down exactly (powers of two)
@@ -470,11 +480,7 @@ def run_dedup_stream_minhash(
                 "rid": int(batch_id), "gen": 0,
                 "n_docs": int(n_b), "n_buckets": int(run_m),
             }
-            committed_runs = sorted(
-                [r for r in state["runs"] if int(r["rid"]) != batch_id]
-                + [new_run],
-                key=lambda r: int(r["rid"]),
-            )
+            committed_runs = with_run(state["runs"], new_run)
             log.commit(
                 {
                     # a replayed batch REPLACES its own run entry
@@ -493,7 +499,7 @@ def run_dedup_stream_minhash(
             # and the newest run (this batch, the only replayable one)
             # is never a merge target, so the existing replay rule
             # holds unchanged.
-            if auto_compact_runs and len(committed_runs) > auto_compact_runs:
+            if auto_compact_runs and runs_to_fold(committed_runs, auto_compact_runs):
                 compact_lsh_state(spark, state_dir, fs=fs)
         finally:
             for df in (cand_cross, banded_b, sig_b, sh_b):
@@ -504,7 +510,7 @@ def run_dedup_stream_minhash(
     run_available_now(stream, checkpoint_dir, _apply, output_mode="update")
 
     state = _load_state(state_dir, fs)
-    if auto_compact_runs and len(state["runs"]) > auto_compact_runs:
+    if auto_compact_runs and runs_to_fold(state["runs"], auto_compact_runs):
         compact_lsh_state(spark, state_dir, fs=fs)
         state = _load_state(state_dir, fs)
 
@@ -555,28 +561,26 @@ def compact_lsh_state(
     24/7 ``blocking=True`` trickle stream's run count bounded,
     round-8 verdict #5).
 
-    REPLAY SAFETY (round-6 advice #1): the manifest commit runs inside
-    foreachBatch BEFORE the streaming checkpoint commits the batch, so
-    the HIGHEST manifest run may belong to a batch a restarted stream
-    will replay — compacting it away (or into itself) would make the
-    replay's ``rid < top`` probe see an empty corpus and its run
-    overwrite destroy the merged state.  Every batch BELOW the max is
-    provably checkpoint-committed (foreachBatch is sequential: batch
-    N+1 appearing in the manifest implies N's checkpoint commit
-    preceded it), so the merge target is the SECOND-highest id: the
-    newest run is never rewritten or garbage-collected, and a replayed
-    top batch sees exactly the same row set through its run-list filter
-    before and after compaction.
+    REPLAY SAFETY (round-6 advice #1): the run log's rules
+    (streaming/runstore.py, shared with the JVM stream).  The manifest
+    commit runs inside foreachBatch BEFORE the streaming checkpoint
+    commits the batch, so the HIGHEST manifest run may belong to a
+    batch a restarted stream will replay; every batch below it is
+    provably checkpoint-committed (foreachBatch is sequential).  The
+    compaction selection (``runs_to_fold``) therefore never takes the
+    newest run, and the merge target is the SECOND-highest id, so a
+    replayed top batch sees exactly the same row set through the replay
+    rule (``state_before``) before and after compaction.
 
     CRASH SAFETY, rename-free (round-7 advice #1): the merged run is
     written COMPLETE into a fresh generation (run id = target, gen =
-    max live gen + 1 — a dir no manifest references), then ONE manifest commit flips the live run
-    set to {merged, newest}, then directories outside the retention
-    window are garbage-collected best-effort (RETENTION LAG, round-8
-    verdict #4: superseded runs stay on disk until they age out of the
-    newest ``gc_retain_manifests`` manifests, so a reader that planned
-    its scan from a recent manifest completes it — see
-    ``_GC_RETAIN_MANIFESTS``).
+    max live gen + 1 — a dir no manifest references), then ONE manifest
+    commit flips the live run set to {merged, newest}, then directories
+    outside the retention window are garbage-collected best-effort
+    (RETENTION LAG, round-8 verdict #4: superseded runs stay on disk
+    until they age out of the newest ``gc_retain_manifests`` manifests,
+    the run log's GC-live set, so a reader that planned its scan from a
+    recent manifest completes it — see ``_GC_RETAIN_MANIFESTS``).
     A crash before the commit leaves the old manifest pointing at
     intact old runs (the partial new directory is unreferenced garbage,
     cleared by the next pass); a torn manifest write self-invalidates
@@ -604,21 +608,16 @@ def compact_lsh_state(
     roots = [os.path.join(state_dir, rel) for rel in ("sig", "sh")]
 
     def gc() -> None:
-        # a run dir stays while any of the newest gc_retain_manifests
-        # manifests lists it
-        gc_runs(fs, roots, {
-            (int(r["gen"]), int(r["rid"]))
-            for _v, payload in log.recent(gc_retain_manifests)
-            for r in payload.get("runs", [])
-        })
+        gc_runs(fs, roots, gc_live(log, gc_retain_manifests)[0])
 
     # clear garbage from a previously crashed compaction or batch
     # attempt — idempotent; everything it removes is outside the
     # manifest retention window (crashed attempts are in NO manifest)
     gc()
-    if len(runs) < 2:
+    merged_runs = runs_to_fold(runs, 1)
+    if not merged_runs:
         return False  # nothing safely mergeable below the newest run
-    merged_runs, newest = runs[:-1], runs[-1]
+    newest = runs[-1]
     target = int(merged_runs[-1]["rid"])
     gen_new = max(int(r["gen"]) for r in runs) + 1
     # size the merged run from what it will actually hold: the bigger

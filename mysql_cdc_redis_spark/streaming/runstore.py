@@ -13,9 +13,11 @@ an older run's m via ``b mod m`` (m | M).
 A run is invisible until a manifest (commitlog.py) lists its entry
 ``{rid, gen, n_buckets, ...}``: readers never list, so a crashed
 attempt's partial run cannot be read.  GC deletes every run dir outside
-the live ``(gen, rid)`` set through the state FS handle.  Each stream
-keeps its own manifest payload, replay rule and compaction policy, and
-decides which runs are live.
+the live ``(gen, rid)`` set through the state FS handle.
+
+Both streams keep their run log by the four rules below (replay,
+commit, compaction selection, GC-live); a manifest lists the live runs,
+and the JVM stream's base slot, beside its stream's own payload.
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.scale import state_writer
+from .commitlog import ManifestLog
 
 # Touched-bucket partition filters are literal isin lists, and each
 # literal costs ~2 ms of driver planning (the dedup probe's
@@ -146,3 +149,40 @@ def gc_runs(fs, roots: list[str], live: set[tuple[int, int]]) -> None:
                     continue
                 if (gen, int(rdir.split("=", 1)[1])) not in live:
                     fs.delete(os.path.join(gpath, rdir))
+
+
+def state_before(manifest: dict, batch_id: int) -> dict:
+    """The REPLAY RULE: ``manifest`` with only its runs of ``rid <
+    batch_id``.  foreachBatch replays only the newest batch, so its
+    replay recomputes from exactly what its first attempt read."""
+    return {
+        **manifest,
+        "runs": [r for r in manifest.get("runs", []) if int(r["rid"]) < batch_id],
+    }
+
+
+def with_run(runs: list[dict], run: dict) -> list[dict]:
+    """The COMMIT RULE: ``runs`` plus ``run``, whose entry replaces any
+    entry with its own rid, in rid order."""
+    return sorted(
+        [r for r in runs if int(r["rid"]) != int(run["rid"])] + [run],
+        key=lambda r: int(r["rid"]),
+    )
+
+
+def runs_to_fold(runs: list[dict], max_runs: int) -> list[dict]:
+    """The COMPACTION SELECTION: every run but the newest once more
+    than ``max_runs`` are live, else none.  The newest may be the batch
+    a restart replays; never folding it keeps its replay's rows."""
+    if len(runs) <= max_runs:
+        return []
+    return sorted(runs, key=lambda r: int(r["rid"]))[:-1]
+
+
+def gc_live(log: ManifestLog, k: int) -> tuple[set[tuple[int, int]], set]:
+    """The GC-LIVE SET: the ``(gen, rid)`` of every run, and every base
+    slot, listed by the newest ``k`` valid manifests.  A torn newest
+    commit is not valid, so nothing its predecessor lists is freed."""
+    recent = [payload for _v, payload in log.recent(k)]
+    runs = {(int(r["gen"]), int(r["rid"])) for p in recent for r in p.get("runs", [])}
+    return runs, {p.get("base") for p in recent}

@@ -282,45 +282,47 @@ def test_compose_transition_runs_exhaustively(spark):
 def test_jvm_retry_is_deterministic(spark, sf_dir):
     """Exactly-once: re-running an already-committed batch id (the
     foreachBatch retry case) must reproduce the identical state — the
-    replay reads the view committed by the latest batch BEFORE it
+    replay reads the head's base plus its runs before the batch
     (immutable runs + the base slot it does not overwrite), including
-    when the retried batch triggers a compaction."""
+    when the first attempt compacted."""
     from mysql_cdc_redis_spark.streaming.compact_jvm import (
         _StateRuns,
         fold_transition_state,
         keyed_transitions,
     )
+    from mysql_cdc_redis_spark.streaming.runstore import state_before
 
     ch = orders_changelog(spark, sf_dir).filter(F.col("o_orderkey") % 20 == 7)
     b1 = ch.filter(F.col("seq") % 2 == 0)
     b2 = ch.filter(F.col("seq") % 2 == 1)
     state_dir = _tmp("jvm_retry_state")
     pk, payload = ORDERS_PK, ORDERS_PAYLOAD
-    # max_runs=2 → batch 1 triggers a compaction, the risky replay path
-    slots = _StateRuns(spark, state_dir, max_runs=2)
+    # max_runs=1 → batch 1 triggers a compaction, the risky replay path
+    slots = _StateRuns(spark, state_dir, max_runs=1)
 
     def fold(base, runs, buckets=None):
         return fold_transition_state(base, runs, payload, buckets)
 
     cols = ["tbl", "rid", "cdc_action", *payload]
     try:
-        prev0 = slots.view_before(0)
-        assert prev0 is None
-        slots.commit(0, slots.append(
+        prev0 = state_before(slots.head(), 0)
+        assert prev0 == {"base": None, "buckets": None, "runs": []}
+        slots.commit(slots.append(
             keyed_transitions(b1, pk, payload), 0, prev0, fold
         ))
 
         def apply_batch_1():
-            prev = slots.view_before(1)
-            assert prev is not None and prev[0] == 0
+            prev = state_before(slots.head(), 1)
+            # run 0 alone, or (on the retry) the base that folded it
+            assert prev["base"] is not None or prev["runs"] == [_run(0)]
             view = slots.append(
                 keyed_transitions(b2, pk, payload), 1, prev, fold
             )
-            slots.commit(1, view)
+            slots.commit(view)
             return view
 
         v1 = apply_batch_1()
-        assert v1["base"] is not None and v1["runs"] == []  # compacted
+        assert v1["base"] is not None and v1["runs"] == [_run(1)]  # compacted
         first = _rows(slots.state_at(v1, fold).select(*cols), cols)
         v1b = apply_batch_1()  # the retry: same batch id, meta has it
         second = _rows(slots.state_at(v1b, fold).select(*cols), cols)
@@ -335,12 +337,13 @@ def test_jvm_retry_is_deterministic(spark, sf_dir):
 def test_jvm_view_meta_torn_commit_reads_as_prior_state(spark):
     """The view commit log rides the PUT-only manifest protocol
     (round-7 advice #1): a commit torn mid-write must read back as the
-    PRIOR batch→view map (the transition never happened), and the retry
-    must land under a fresh version — no rename, no atomic-replace
-    assumption anywhere."""
+    PRIOR view (the transition never happened), and the retry must land
+    under a fresh version — no rename, no atomic-replace assumption
+    anywhere."""
     import pytest
 
     from mysql_cdc_redis_spark.streaming.compact_jvm import _StateRuns
+    from mysql_cdc_redis_spark.streaming.runstore import state_before
 
     from .fs_double import HostileFS, InjectedCrash
 
@@ -350,81 +353,75 @@ def test_jvm_view_meta_torn_commit_reads_as_prior_state(spark):
     v0 = {"base": None, "buckets": None, "runs": [_run(0)]}
     v1 = {"base": None, "buckets": None, "runs": [_run(0), _run(1)]}
     try:
-        slots.commit(0, v0)
-        assert slots.view_before(1) == (0, v0)
+        slots.commit(v0)
+        assert state_before(slots.head(), 1) == v0
         fs.arm_tear_write()
         with pytest.raises(InjectedCrash):
-            slots.commit(1, v1)
+            slots.commit(v1)
         # the torn commit is invisible: batch 1 still folds from view 0
-        assert slots.view_before(2) == (0, v0)
+        assert slots.head() == v0
+        assert state_before(slots.head(), 2) == v0
         fs.disarm()
-        slots.commit(1, v1)  # the replay's commit
-        assert slots.view_before(2) == (1, v1)
+        slots.commit(v1)  # the replay's commit
+        assert state_before(slots.head(), 2) == v1
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
 
 
 def test_jvm_view_map_stays_o1_over_many_batches(spark):
-    """Round-8 verdict #2 standard, carried to the LSM: the batch→view
-    map must NOT grow O(batches) — a year-long stream commits 10^5-10^6
+    """Round-8 verdict #2 standard, carried to the LSM: the manifest
+    must NOT grow O(batches) — a year-long stream commits 10^5-10^6
     batches and the manifest must stay O(1).  After 100 commits the
-    HEAD manifest carries at most the top two views (newest = current,
-    second-newest = what the newest batch's replay would fold from),
-    and both reachable lookups still resolve."""
+    HEAD manifest is one view, the only one a replay reads, and a
+    replayed newest batch re-commits without growing it."""
     import json
 
     from mysql_cdc_redis_spark.streaming.commitlog import LocalFS
     from mysql_cdc_redis_spark.streaming.compact_jvm import _StateRuns
+    from mysql_cdc_redis_spark.streaming.runstore import state_before
 
     state_dir = _tmp("jvm_o1_meta")
     slots = _StateRuns(spark, state_dir, fs=LocalFS(), max_runs=4)
-    try:
-        for b in range(100):
-            slots.commit(b, {"base": b % 2, "runs": [_run(b)]})
-        views = slots.load_views()
-        assert set(views) == {98, 99}, views
-        # the two lookups the protocol can still issue:
-        assert slots.view_before(100) == (
-            99, {"base": 1, "buckets": None, "runs": [_run(99)]}
-        )
-        assert slots.view_before(99) == (
-            98, {"base": 0, "buckets": None, "runs": [_run(98)]}
-        )
-        # the on-disk head payload itself is bounded, not just the view
-        log_dir = os.path.join(state_dir, "_log")
+    log_dir = os.path.join(state_dir, "_log")
+
+    def head_payload() -> dict:
         newest = sorted(os.listdir(log_dir))[-1]
         with open(os.path.join(log_dir, newest)) as f:
-            assert len(json.load(f)["payload"]["views"]) <= 2
-        # a replayed newest batch re-commits without growing the map
-        slots.commit(99, {"base": 1, "runs": [_run(99)]})
-        assert set(slots.load_views()) == {98, 99}
-    finally:
-        shutil.rmtree(state_dir, ignore_errors=True)
+            return json.load(f)["payload"]
 
-
-def test_jvm_legacy_pingpong_manifest_rejected(spark):
-    """A pre-LSM ping-pong manifest (``slots`` payload) must be rejected
-    loudly, not silently restarted from empty state — the dedup
-    stream's legacy-state standard."""
-    import pytest
-
-    from mysql_cdc_redis_spark.streaming.commitlog import LocalFS, ManifestLog
-    from mysql_cdc_redis_spark.streaming.compact_jvm import _StateRuns
-
-    state_dir = _tmp("jvm_legacy_meta")
     try:
-        ManifestLog(LocalFS(), state_dir).commit({"slots": {"0": 0}})
-        slots = _StateRuns(spark, state_dir)
-        with pytest.raises(ValueError, match="legacy ping-pong"):
-            slots.load_views()
+        for b in range(100):
+            slots.commit({"base": b % 2, "buckets": None, "runs": [_run(b)]})
+        v99 = {"base": 1, "buckets": None, "runs": [_run(99)]}
+        assert slots.head() == v99
+        # the lookups the protocol can still issue: a replay of batch 99
+        # and the next batch
+        assert state_before(slots.head(), 99) == {**v99, "runs": []}
+        assert state_before(slots.head(), 100) == v99
+        # the on-disk head payload itself is bounded, not just the view
+        assert head_payload() == v99
+        # a replayed newest batch re-commits without growing the view
+        slots.commit(v99)
+        assert head_payload() == v99
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
 
 
-def test_jvm_bare_run_ids_rejected(spark, sf_dir):
-    """State in the retired ``runs/b=<id>`` layout — views that list
-    bare int run ids — makes the stream raise instead of resuming it as
-    empty state, and nothing is committed over it."""
+@pytest.mark.parametrize(
+    "payload",
+    [
+        {"views": {"0": {"base": None, "buckets": None, "runs": [0]}}},
+        {"views": {"0": {"base": None, "buckets": None, "runs": [_run(0)]}}},
+        {"slots": {"0": 0}},
+    ],
+    ids=["bare_ids", "view_map", "slots"],
+)
+def test_jvm_bare_run_ids_rejected(spark, sf_dir, payload):
+    """State in a retired layout — views that list bare int run ids (the
+    ``runs/b=<id>`` layout), a batch→view map of run entries, or a
+    pre-LSM ping-pong ``slots`` manifest — makes the stream raise
+    instead of resuming it as empty state, and nothing is committed
+    over it."""
     from mysql_cdc_redis_spark.streaming.commitlog import LocalFS, ManifestLog
 
     ch = orders_changelog(spark, sf_dir).filter(F.col("o_orderkey") % 20 == 7)
@@ -433,9 +430,9 @@ def test_jvm_bare_run_ids_rejected(spark, sf_dir):
     state_dir = _tmp("jvm_bare_ids_state")
     log = ManifestLog(LocalFS(), state_dir)
     try:
-        log.commit({"views": {"0": {"base": None, "buckets": None, "runs": [0]}}})
+        log.commit(payload)
         head = log.head()
-        with pytest.raises(Exception, match=r"runs/b=<id>"):
+        with pytest.raises(Exception, match=r"legacy ping-pong[\s\S]*runs/b=<id>"):
             run_compaction_stream_jvm(
                 spark, src, ch.schema, ORDERS_PK, ORDERS_PAYLOAD,
                 _tmp("jvm_bare_ids_ckpt"), state_dir,
@@ -468,15 +465,13 @@ def test_jvm_resume_over_four_tuple_runs(spark, sf_dir):
     def resume():
         return run_compaction_stream_jvm(
             spark, src, ch.schema, ORDERS_PK, ORDERS_PAYLOAD, ckpt, state_dir,
-            max_files_per_trigger=1, max_runs=3,
+            max_files_per_trigger=1, max_runs=2,
         )
 
     try:
         resume()
         slots = _StateRuns(spark, state_dir)
-        assert slots.load_views() == {
-            0: {"base": None, "buckets": None, "runs": [_run(0)]}
-        }
+        assert slots.head() == {"base": None, "buckets": None, "runs": [_run(0)]}
         # rewrite run 0 exactly as the four-entry layout stored it,
         # with the stored _run column that layout also carried
         run0 = os.path.join(_run_path(slots, 0), "bucket=0")
@@ -495,10 +490,10 @@ def test_jvm_resume_over_four_tuple_runs(spark, sf_dir):
         assert _rows(resume(), cols) == _rows(
             compact(parts[0].unionByName(parts[1]), ORDERS_PK, ORDERS_PAYLOAD), cols
         )
-        # batch 2 reaches max_runs: runs 0-2 compact into a base
+        # batch 2 exceeds max_runs: runs 0-1 compact into a base
         _append_chunk(parts[2], src, "chunk-0002")
         out = resume()
-        assert slots.load_views()[2]["base"] is not None
+        assert slots.head()["base"] is not None
         assert _rows(out, cols) == _rows(compact(ch, ORDERS_PK, ORDERS_PAYLOAD), cols)
     finally:
         drop_state_jvm(spark, state_dir)
@@ -533,7 +528,7 @@ def test_jvm_empty_micro_batch_keeps_state_and_resume(spark, sf_dir):
         assert _rows(run(), cols) == _rows(
             compact(parts[0].unionByName(parts[1]), ORDERS_PK, ORDERS_PAYLOAD), cols
         )
-        for r in slots.load_views()[2]["runs"]:
+        for r in slots.head()["runs"]:
             assert glob.glob(os.path.join(run_dir(slots.runs_root, r), "*", "*.parquet"))
         _append_chunk(parts[2], src, "chunk-0003")
         assert _rows(run(), cols) == _rows(compact(ch, ORDERS_PK, ORDERS_PAYLOAD), cols)
@@ -560,15 +555,16 @@ def test_jvm_run_without_data_file_is_not_recorded(spark, sf_dir):
     slots = _StateRuns(spark, state_dir, fs=NoDataFS())
     ch = orders_changelog(spark, sf_dir)
     try:
+        def fold(base, runs, buckets=None):
+            return fold_transition_state(base, runs, ORDERS_PAYLOAD, buckets)
+
         view = slots.append(
-            keyed_transitions(ch.limit(0), ORDERS_PK, ORDERS_PAYLOAD), 0, None,
-            lambda base, runs, buckets=None: fold_transition_state(
-                base, runs, ORDERS_PAYLOAD, buckets
-            ),
+            keyed_transitions(ch.limit(0), ORDERS_PK, ORDERS_PAYLOAD), 0,
+            slots.head(), fold,
         )
         assert view == {"base": None, "buckets": None, "runs": []}
-        slots.commit(0, view)
-        assert slots.final_view() is None
+        slots.commit(view)
+        assert slots.state_at(slots.head(), fold) is None
     finally:
         drop_state_jvm(spark, state_dir)
 
@@ -590,8 +586,8 @@ def test_jvm_gc_crash_mid_delete_recovers_and_reclaims(spark, sf_dir):
     ckpt = _tmp("jvm_gc_ckpt")
     state_dir = _tmp("jvm_gc_state")
     fs = HostileFS()
-    # max_runs=2: batch 1 compacts and its commit GCs run 1 (delete #1);
-    # batch 2's commit GCs run 0 (delete #2) — crash in the middle of it
+    # max_runs=2: batch 2 compacts runs 0-1, and its commit GCs run 0
+    # (delete #1), then run 1 (delete #2) — crash in the middle of it
     fs.arm_crash_delete(2)
 
     def run():
@@ -608,16 +604,16 @@ def test_jvm_gc_crash_mid_delete_recovers_and_reclaims(spark, sf_dir):
             ei.value, InjectedCrash
         )
         assert fs.deletes == 2
-        assert os.path.isdir(_run_path(slots, 0)), "crash must leave run 0 half-deleted"
+        assert os.path.isdir(_run_path(slots, 1)), "crash must leave run 1 half-deleted"
         fs.disarm()
         out = run()
         cols = ["tbl", "rid", "cdc_action", *ORDERS_PAYLOAD]
         assert _rows(out, cols) == _rows(compact(ch, ORDERS_PK, ORDERS_PAYLOAD), cols)
-        # only runs a retained view references are left on disk
-        kept = {r["rid"] for v in slots.load_views().values() for r in v["runs"]}
+        # only runs the head references are left on disk
+        kept = {r["rid"] for r in slots.head()["runs"]}
         on_disk = fs.list(os.path.join(state_dir, "runs", "gen=0"))
         assert on_disk == sorted(f"ingest_id={r}" for r in kept), (on_disk, kept)
-        assert not os.path.isdir(_run_path(slots, 0))
+        assert not os.path.isdir(_run_path(slots, 1))
     finally:
         drop_state_jvm(spark, state_dir)
 
@@ -627,9 +623,9 @@ def _slots_holding_data(slots) -> list[int]:
 
 
 def test_jvm_long_stream_keeps_one_base_slot(spark, sf_dir):
-    """Once no retained view references the superseded base slot, its
-    data is dropped: after three compactions (batches 1, 3, 5 at
-    max_runs=2) and one plain batch, one slot holds data."""
+    """Once the head no longer references the superseded base slot, its
+    data is dropped: after three compactions (batches 2, 4, 6 at
+    max_runs=2), one slot holds data."""
     from mysql_cdc_redis_spark.streaming.compact_jvm import _StateRuns
 
     ch = orders_changelog(spark, sf_dir).filter(F.col("seq") % 120 < 40)
@@ -644,9 +640,9 @@ def test_jvm_long_stream_keeps_one_base_slot(spark, sf_dir):
         )
         cols = ["tbl", "rid", "cdc_action", *ORDERS_PAYLOAD]
         assert _rows(out, cols) == _rows(compact(ch, ORDERS_PK, ORDERS_PAYLOAD), cols)
-        views = slots.load_views()
-        assert sorted(views) == [5, 6] and views[6]["runs"] == [_run(6)]
-        assert _slots_holding_data(slots) == [views[6]["base"]]
+        head = slots.head()
+        assert head["runs"] == [_run(6)]
+        assert _slots_holding_data(slots) == [head["base"]]
     finally:
         drop_state_jvm(spark, state_dir)
 
@@ -667,8 +663,9 @@ def test_jvm_base_drop_crash_mid_delete_reruns_to_compact(spark, sf_dir):
     ckpt = _tmp("jvm_drop_ckpt")
     state_dir = _tmp("jvm_drop_state")
     fs = HostileFS()
-    # max_runs=2: deletes #1-#4 are run GC (batches 1-4); batch 4's
-    # commit then drops slot 0, superseded by batch 3's compaction
+    # max_runs=2: deletes #1-#4 are run GC (batch 2's commit drops runs
+    # 0-1, batch 4's runs 2-3); batch 4's commit then drops slot 0,
+    # superseded by its own compaction
     fs.arm_crash_delete(5)
 
     def run():
@@ -684,12 +681,12 @@ def test_jvm_base_drop_crash_mid_delete_reruns_to_compact(spark, sf_dir):
         assert "InjectedCrash" in str(ei.value) or isinstance(ei.value, InjectedCrash)
         assert fs.deletes == 5
         assert _slots_holding_data(slots) == [0, 1], "crash must leave slot 0 half-dropped"
-        assert slots.load_views()[4]["base"] == 1
+        assert slots.head()["base"] == 1
         fs.disarm()
         out = run()
         cols = ["tbl", "rid", "cdc_action", *ORDERS_PAYLOAD]
         assert _rows(out, cols) == _rows(compact(ch, ORDERS_PK, ORDERS_PAYLOAD), cols)
-        assert _slots_holding_data(slots) == [slots.final_view()["base"]]
+        assert _slots_holding_data(slots) == [slots.head()["base"]]
     finally:
         drop_state_jvm(spark, state_dir)
 
@@ -748,12 +745,14 @@ def _persisted_state(spark, sf_dir):
 
     ch = _ltz(orders_changelog(spark, sf_dir).filter(F.col("o_orderkey") % 20 == 7))
     state_dir = _tmp("jvm_zstd_state")
-    # max_runs=1: the first batch writes its run and compacts it into a base
+    # max_runs=1: the second batch compacts the first's run into a base
     slots = _StateRuns(spark, state_dir, max_runs=1)
     dedup_root = _tmp("dedup_zstd_runs")
     try:
         delta = keyed_transitions(ch, ORDERS_PK, ORDERS_PAYLOAD)
-        view = slots.append(delta, 0, None, _transition_fold(ORDERS_PAYLOAD))
+        fold = _transition_fold(ORDERS_PAYLOAD)
+        view = slots.append(delta, 0, slots.head(), fold)
+        view = slots.append(delta, 1, view, fold)
         assert view["base"] == 0
         write_bucketed(ch, "zstd_bucketed", "o_orderkey")
         write_run(ch.select(F.col("o_orderkey").alias("k")), dedup_root, 0, "k", 4)
@@ -813,10 +812,12 @@ def test_jvm_stream_resumes_over_int96_state(spark, sf_dir):
     from mysql_cdc_redis_spark.streaming.compact_jvm import _StateRuns
 
     ch = _ltz(orders_changelog(spark, sf_dir).filter(F.col("seq") % 120 < 40))
-    # seq = orderkey*4 + e: seq-ordered per-key slices e=0, e=1, then
-    # e>=2 cut in two by orderkey (only even orderkeys have an e=2 row;
-    # e=3 rows carry a NULL key)
-    parts = [ch.filter(F.col("seq") % 4 == e) for e in (0, 1)]
+    # seq = orderkey*4 + e: seq-ordered per-key slices e=0 (cut in two by
+    # orderkey parity), e=1, then e>=2 cut in two by orderkey (only even
+    # orderkeys have an e=2 row; e=3 rows carry a NULL key)
+    first = ch.filter(F.col("seq") % 4 == 0)
+    parts = [first.filter(F.col("seq") % 8 < 4), first.filter(F.col("seq") % 8 >= 4)]
+    parts.append(ch.filter(F.col("seq") % 4 == 1))
     late = ch.filter(F.col("seq") % 4 >= 2)
     parts += [late.filter(F.col("seq") % 16 < 8), late.filter(F.col("seq") % 16 >= 8)]
     src = _tmp("jvm_int96_src")
@@ -824,8 +825,8 @@ def test_jvm_stream_resumes_over_int96_state(spark, sf_dir):
     state_dir = _tmp("jvm_int96_state")
     cols = ["tbl", "rid", "cdc_action", *ORDERS_PAYLOAD]
     conf = "spark.sql.parquet.outputTimestampType"
-    _append_chunk(parts[0], src, "chunk-0000")
-    _append_chunk(parts[1], src, "chunk-0001")
+    for i in range(3):
+        _append_chunk(parts[i], src, f"chunk-000{i}")
 
     def resume():
         return run_compaction_stream_jvm(
@@ -836,32 +837,32 @@ def test_jvm_stream_resumes_over_int96_state(spark, sf_dir):
     slots = _StateRuns(spark, state_dir)
     prior = spark.conf.get(conf)
     try:
-        # batches 0-1 under INT96; batch 1 compacts both runs into a base
+        # batches 0-2 under INT96; batch 2 compacts runs 0-1 into a base
         spark.conf.set(conf, "INT96")
         try:
             resume()
         finally:
             spark.conf.set(conf, prior)
-        old_base = slots.final_view()["base"]
+        old_base = slots.head()["base"]
         assert old_base is not None
         assert _ts_physical_types(slots.table_dir(old_base)) == {"INT96"}
 
-        # batch 2: a plain INT64 run over the INT96 base
-        _append_chunk(parts[2], src, "chunk-0002")
+        # batch 3: a plain INT64 run over the INT96 base and run 2
+        _append_chunk(parts[3], src, "chunk-0003")
         out = resume()
-        view = slots.final_view()
-        assert view["base"] == old_base and view["runs"] == [_run(2)]
-        assert _ts_physical_types(_run_path(slots, 2)) == {"INT64"}
+        view = slots.head()
+        assert view["base"] == old_base and view["runs"] == [_run(2), _run(3)]
+        assert _ts_physical_types(_run_path(slots, 3)) == {"INT64"}
         assert _rows(out, cols) == _rows(
-            compact(parts[0].unionByName(parts[1]).unionByName(parts[2]),
-                    ORDERS_PK, ORDERS_PAYLOAD),
+            compact(parts[0].unionByName(parts[1]).unionByName(parts[2])
+                    .unionByName(parts[3]), ORDERS_PK, ORDERS_PAYLOAD),
             cols,
         )
 
-        # batch 3 compacts the INT96 base and the INT64 runs
-        _append_chunk(parts[3], src, "chunk-0003")
+        # batch 4 compacts the INT96 base and runs into an INT64 base
+        _append_chunk(parts[4], src, "chunk-0004")
         out = resume()
-        new_base = slots.final_view()["base"]
+        new_base = slots.head()["base"]
         assert new_base != old_base
         assert _ts_physical_types(slots.table_dir(new_base)) == {"INT64"}
         assert _rows(out, cols) == _rows(compact(ch, ORDERS_PK, ORDERS_PAYLOAD), cols)
@@ -914,13 +915,14 @@ def test_jvm_commit_cost_scales_with_batch_not_state(spark, sf_dir):
     commit must write O(|batch|) bytes, not O(|state|).  Feed the same
     keys' events as one big first batch then a tiny second batch: the
     tiny batch's run bytes must be a small fraction of the state's, no
-    base compaction may fire below max_runs, and runs older than the
-    retained views must be GC'd after a compaction."""
+    base compaction may fire until the run count exceeds max_runs, and
+    runs the head no longer lists must be GC'd after a compaction."""
     from mysql_cdc_redis_spark.streaming.compact_jvm import (
         _StateRuns,
         fold_transition_state,
         keyed_transitions,
     )
+    from mysql_cdc_redis_spark.streaming.runstore import state_before
 
     ch = orders_changelog(spark, sf_dir)
     # key-disjoint slices (a key's events never span batches, so batch
@@ -930,7 +932,7 @@ def test_jvm_commit_cost_scales_with_batch_not_state(spark, sf_dir):
     tiny2 = ch.filter(F.col("o_orderkey") % 16 == 1)  # ~6%
     state_dir = _tmp("jvm_cost_state")
     pk, payload = ORDERS_PK, ORDERS_PAYLOAD
-    slots = _StateRuns(spark, state_dir, max_runs=3)
+    slots = _StateRuns(spark, state_dir, max_runs=2)
 
     def fold(base, runs, buckets=None):
         return fold_transition_state(base, runs, payload, buckets)
@@ -943,14 +945,14 @@ def test_jvm_commit_cost_scales_with_batch_not_state(spark, sf_dir):
         ) if os.path.isdir(p) else 0
 
     try:
-        slots.commit(0, slots.append(
-            keyed_transitions(big, pk, payload), 0, None, fold
+        slots.commit(slots.append(
+            keyed_transitions(big, pk, payload), 0, slots.head(), fold
         ))
         big_run_bytes = dir_bytes(_run_path(slots, 0))
         state_rows = spark.read.parquet(_run_path(slots, 0)).count()
-        prev = slots.view_before(1)
+        prev = state_before(slots.head(), 1)
         v1 = slots.append(keyed_transitions(tiny, pk, payload), 1, prev, fold)
-        slots.commit(1, v1)
+        slots.commit(v1)
         tiny_run_bytes = dir_bytes(_run_path(slots, 1))
         tiny_run_rows = spark.read.parquet(_run_path(slots, 1)).count()
         # commit cost followed the batch, not the accumulated state:
@@ -960,18 +962,18 @@ def test_jvm_commit_cost_scales_with_batch_not_state(spark, sf_dir):
         assert v1["base"] is None and v1["runs"] == [_run(0), _run(1)]  # no compaction yet
         assert tiny_run_rows < state_rows / 3, (tiny_run_rows, state_rows)
         assert tiny_run_bytes < big_run_bytes / 2, (tiny_run_bytes, big_run_bytes)
-        # third batch reaches max_runs: compaction folds into a base...
-        prev = slots.view_before(2)
+        # third batch exceeds max_runs: compaction folds runs 0-1 into a
+        # base and keeps run 2...
+        prev = state_before(slots.head(), 2)
         v2 = slots.append(keyed_transitions(tiny2, pk, payload), 2, prev, fold)
-        slots.commit(2, v2)
-        assert v2["base"] is not None and v2["runs"] == []
+        slots.commit(v2)
+        assert v2["base"] is not None and v2["runs"] == [_run(2)]
         # ...and the state equals the batch compactor over everything
         cols = ["tbl", "rid", "cdc_action", *payload]
         assert _rows(slots.state_at(v2, fold).select(*cols), cols) == _rows(
             compact(big.unionByName(tiny).unionByName(tiny2), pk, payload), cols
         )
-        # GC: run 0 is reachable from neither retained view (views 1, 2)
-        slots.commit(3, v2)  # advance once more so view 0/1's runs age out
+        # GC: the head lists neither run 0 nor run 1
         assert not os.path.isdir(_run_path(slots, 0))
     finally:
         drop_state_jvm(spark, state_dir)
@@ -1307,7 +1309,8 @@ def test_jvm_sized_base_keeps_compaction_join_exchange_free(spark, sf_dir):
     pk, payload = ORDERS_PK, ORDERS_PAYLOAD
     try:
         delta = keyed_transitions(ch, pk, payload)
-        view = slots.append(delta, 0, None, _transition_fold(payload))
+        view = slots.append(delta, 0, slots.head(), _transition_fold(payload))
+        view = slots.append(delta, 1, view, _transition_fold(payload))
         assert view["buckets"] == 1, view
         merged = fold_transition_state(
             slots.read_base(view["base"]),

@@ -32,7 +32,7 @@ def test_replay_stream_cost_compacts_and_passes_its_checksum_gate(tmp_path):
     assert all(b["run_bytes"] > 0 for b in batches)
     assert summary["compactions"] == sum(b["compacted"] for b in batches) >= 1
     assert summary["state_equals_compact"] is True
-    # batch 4 follows the second compaction, so the superseded slot is
+    # batch 4 is the second compaction, so the superseded slot is
     # dropped: one live base plus run 4.  This sub-MB state is one bucket
     assert 0 < summary["state_bytes"] < 1 << 20
     assert summary["base_buckets"] == 1

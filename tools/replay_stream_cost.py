@@ -9,8 +9,9 @@ workload's shape: the snapshot changelog of a ``CDC_KEYS``-row lineitem
 base table is batch 0, then each of ``--increments`` increments of
 ``CDC_EVENTS_PER_INCREMENT`` events is one batch.  Every batch goes
 through the stream's own per-batch protocol — ``keyed_transitions``,
-``view_before``, ``run_buckets``, ``append``, ``commit`` — with no
-streaming query around it, so the walls are the state store's alone.
+``state_before`` the ``head``, ``run_buckets``, ``append``, ``commit``
+— with no streaming query around it, so the walls are the state
+store's alone.
 
     python tools/replay_stream_cost.py [--increments 40] [--max-runs 8] [--seed 7]
 
@@ -80,7 +81,7 @@ def main() -> None:
         _transition_fold,
         keyed_transitions,
     )
-    from mysql_cdc_redis_spark.streaming.runstore import run_dir
+    from mysql_cdc_redis_spark.streaming.runstore import run_dir, state_before
 
     work = tempfile.mkdtemp(prefix="replay_stream_cost_")
     spark = get_spark(
@@ -106,23 +107,22 @@ def main() -> None:
             spark.sparkContext.setJobDescription(f"replay batch {b}")
             batch = spark.read.parquet(path)
             delta = keyed_transitions(batch, LINEITEM_PK, LINEITEM_PAYLOAD)
-            prev, n_buckets = slots.view_before(b), slots.run_buckets(batch)
+            prev, n_buckets = state_before(slots.head(), b), slots.run_buckets(batch)
             t0 = time.perf_counter()
             view = slots.append(delta, b, prev, fold, n_buckets)
             rec = {
                 "batch": b,
                 "append_s": round(time.perf_counter() - t0, 3),
                 "write_run_s": round(write_s[-1], 3),
-                "compacted": view["base"] != (prev[1]["base"] if prev else None),
+                "compacted": view["base"] != prev["base"],
                 # before the commit: its GC drops runs a compaction folded in
                 "run_bytes": slots.fs.du(run_dir(slots.runs_root, {"gen": 0, "rid": b})),
             }
-            slots.commit(b, view)
+            slots.commit(view)
             batches.append(rec)
             print(json.dumps(rec), flush=True)
 
-        final = slots.final_view()
-        live_runs = [r for v in slots.load_views().values() for r in v["runs"]]
+        final = slots.head()
         state_bytes = slots.fs.du(slots.runs_root) + sum(
             slots.table_bytes(slot) for slot in (0, 1)
         )
@@ -151,7 +151,7 @@ def main() -> None:
             "final_fold_s": final_fold_s,
             "state_bytes": state_bytes,
             "base_buckets": final["buckets"],
-            "run_buckets": max((r["n_buckets"] for r in live_runs), default=None),
+            "run_buckets": max((r["n_buckets"] for r in final["runs"]), default=None),
             "state_rows": int(got["n"]),
             "state_chk": str(got["chk"]),
             "state_equals_compact": got == want,
