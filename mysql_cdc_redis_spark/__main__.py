@@ -32,7 +32,9 @@ def main() -> None:
     p_dump.add_argument("csv_dir")
     p_dump.add_argument("--max-rows", type=int, default=1_000_000)
 
-    p_replay = sub.add_parser("replay", help="re-merge a CSV dump (loadcsv.py)")
+    p_replay = sub.add_parser(
+        "replay", help="re-merge a CSV dump; exit 1 if not a fixpoint (loadcsv.py)"
+    )
     p_replay.add_argument("csv_dir")
 
     args = ap.parse_args()
@@ -41,30 +43,26 @@ def main() -> None:
     from .session import get_spark
 
     spark = get_spark(app_name=f"cdc-{args.cmd}")
-    pk = tuple(args.pk.split(","))
-    payload = tuple(args.payload.split(","))
-
-    if args.cmd == "ingest":
-        schema = spark.read.parquet(args.changelog_dir).schema
-        p = CdcPipeline(spark, args.work_dir, pk, payload, schema)
-        state = p.ingest(args.changelog_dir)
-        print(f"ingested; live state rows: {state.count()}")
+    ingest = args.cmd == "ingest"
+    schema = spark.read.parquet(args.changelog_dir).schema if ingest else None
+    pk, payload = tuple(args.pk.split(",")), tuple(args.payload.split(","))
+    p = CdcPipeline(spark, args.work_dir, pk, payload, schema)
+    fixpoint = True
+    if ingest:
+        print(f"ingested; live state rows: {p.ingest(args.changelog_dir).count()}")
     elif args.cmd == "dump":
-        p = CdcPipeline(spark, args.work_dir, pk, payload, None)
         p.dump(args.csv_dir, max_rows_per_file=args.max_rows)
         print(f"dumped state to {args.csv_dir}")
     elif args.cmd == "replay":
-        import shutil
+        from .benchutil import checksum_row
 
-        p = CdcPipeline(spark, args.work_dir, pk, payload, None)
-        state = p.replay(args.csv_dir)
-        # the new state's plan reads the old state dir — stage then swap
-        staging = p.state_dir + "_new"
-        state.write.mode("overwrite").parquet(staging)
-        shutil.rmtree(p.state_dir)
-        shutil.move(staging, p.state_dir)
-        print(f"replayed {args.csv_dir}; state rows: {p.state().count()}")
+        state = p.state()
+        after = checksum_row(p.replay(args.csv_dir).select(*state.columns))
+        fixpoint = checksum_row(state) == after
+        print(f"replayed {args.csv_dir}; state rows: {after.n}; fixpoint: {fixpoint}")
     spark.stop()
+    if not fixpoint:
+        raise SystemExit(1)
 
 
 if __name__ == "__main__":

@@ -52,11 +52,12 @@ def dump_to_csv(
 
 def read_dump(spark: SparkSession, out_dir: str, schema: StructType) -> DataFrame:
     """S4: scan a K1 dump back (readcsv, loadcsv.py:91-94) with an
-    explicit schema (no inference pass) plus the dt partition column."""
+    explicit schema (no inference pass) plus the dt partition column.
+    ``schema`` is not mutated: it may be a DataFrame's cached schema."""
     return (
         spark.read.option("header", True)
         .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-        .schema(schema.add("dt", "string"))
+        .schema(StructType(schema.fields).add("dt", "string"))
         .csv(out_dir)
     )
 

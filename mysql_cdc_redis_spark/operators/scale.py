@@ -165,10 +165,16 @@ def ensure_min_parallelism(df: DataFrame, target: int | None = None) -> DataFram
 
 
 def write_bucketed(
-    df: DataFrame, table_name: str, bucket_col: str, n_buckets: int | None = None
+    df: DataFrame,
+    table_name: str,
+    bucket_col: str,
+    n_buckets: int | None = None,
+    path: str | None = None,
 ) -> None:
     """Persist as a bucketed warehouse table (sorted within buckets so
-    merge joins skip the sort too), in ``STATE_CODEC`` pages.
+    merge joins skip the sort too), in ``STATE_CODEC`` pages, one file
+    per bucket (the write repartitions by the bucket key first); with
+    ``path``, an external table over that dir.
 
     ``n_buckets`` defaults to ``state_bucket_count`` of the plan's input
     bytes (``plan_input_bytes``) with the former constant 32 as both
@@ -180,9 +186,11 @@ def write_bucketed(
         n_buckets = state_bucket_count(
             plan_input_bytes(df), open_cost_bytes(df.sparkSession), lo=32, hi=32
         )
+    writer = state_writer(df.repartition(n_buckets, bucket_col))
+    if path is not None:
+        writer = writer.option("path", path)
     (
-        state_writer(df)
-        .mode("overwrite")
+        writer.mode("overwrite")
         .bucketBy(n_buckets, bucket_col)
         .sortBy(bucket_col)
         .format("parquet")

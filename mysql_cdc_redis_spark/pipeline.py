@@ -6,16 +6,16 @@ three entry points (SURVEY.md §3):
   loadcsv  (CSV → re-save through the same merge)      →  replay()
 
 One process, one SparkSession; offsets live in the stream checkpoint
-(K5), the stream's LSM state (transition runs + bucketed base, see
-streaming/compact_jvm.py) in its own sub-dir, the compacted-state
-snapshot in a parquet dir (K4), dumps in date-partitioned chunked CSV
-(K1).  Usage:
+(K5), the keyed state (K4) in one copy: the stream's LSM state dir
+(transition runs + bucketed base slots + manifest log, see
+streaming/compact_jvm.py), which ``state()`` reads at its committed
+view; dumps go to date-partitioned chunked CSV (K1).  Usage:
 
     from mysql_cdc_redis_spark.pipeline import CdcPipeline
     p = CdcPipeline(spark, work_dir, pk_cols, payload_cols, schema)
     p.ingest(changelog_dir)     # consume available binlog files
     p.dump(csv_out)             # dated CSV dump of current state
-    p.replay(csv_out)           # prove dump→replay is a fixpoint
+    p.replay(csv_out)           # the state after re-merging the dump
 """
 
 from __future__ import annotations
@@ -26,9 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .operators.compaction import compact, merge_state
+from .operators.compaction import merge_state
 from .operators.dump import dump_to_csv, read_dump
-from .streaming.compact_jvm import run_compaction_stream_jvm
+from .streaming.compact_jvm import read_state_jvm, run_compaction_stream_jvm
 
 
 class CdcPipeline:
@@ -46,15 +46,13 @@ class CdcPipeline:
         self.payload_cols = payload_cols
         self.schema = changelog_schema
         self.checkpoint_dir = os.path.join(work_dir, "checkpoint")  # K5 offsets
-        self.stream_state_dir = os.path.join(work_dir, "stream_state")
-        self.state_dir = os.path.join(work_dir, "state")  # K4 cache
+        self.stream_state_dir = os.path.join(work_dir, "stream_state")  # K4
 
     # -- cdc.py analog ----------------------------------------------------
     def ingest(self, changelog_dir: str) -> DataFrame:
         """Consume all currently-available changelog files (blocking=False
-        mode), fold through the keyed state, snapshot compacted state to
-        the durable parquet dir.  Returns the new state."""
-        state = run_compaction_stream_jvm(
+        mode) into the keyed state; returns the new state."""
+        return run_compaction_stream_jvm(
             self.spark,
             changelog_dir,
             self.schema,
@@ -63,11 +61,14 @@ class CdcPipeline:
             checkpoint_dir=self.checkpoint_dir,
             state_dir=self.stream_state_dir,
         )
-        state.write.mode("overwrite").parquet(self.state_dir)
-        return self.state()
 
     def state(self) -> DataFrame:
-        return self.spark.read.parquet(self.state_dir)
+        """The committed keyed state; a ValueError when nothing is
+        committed in ``work_dir``."""
+        state = read_state_jvm(self.spark, self.stream_state_dir, self.payload_cols)
+        if state is None:
+            raise ValueError(f"{self.work_dir}: no committed CDC state; ingest first")
+        return state
 
     # -- dump2csv analog --------------------------------------------------
     def dump(self, csv_dir: str, max_rows_per_file: int = 1_000_000) -> None:
@@ -84,11 +85,8 @@ class CdcPipeline:
     def replay(self, csv_dir: str) -> DataFrame:
         """M4: read a dump back and re-merge it into the current state via
         the same algebra; returns the post-replay state (must equal the
-        pre-replay state — M5)."""
-        state_schema = self.state().schema
-        dumped = read_dump(self.spark, csv_dir, schema=state_schema).drop("dt")
+        pre-replay state — M5).  Writes nothing."""
+        state = self.state()
+        dumped = read_dump(self.spark, csv_dir, schema=state.schema).drop("dt")
         replayed_events = dumped.withColumn("seq", F.lit(0).cast("long"))
-        new_state = merge_state(
-            self.state(), replayed_events, self.pk_cols, self.payload_cols
-        )
-        return new_state
+        return merge_state(state, replayed_events, self.pk_cols, self.payload_cols)

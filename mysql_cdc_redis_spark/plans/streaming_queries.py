@@ -163,8 +163,8 @@ def _compaction_stream_jvm(
         state_dir=state_dir,
         max_files_per_trigger=1,
     )
-    # detach the result from the state tables so they can be dropped
-    # (warehouse hygiene: nothing persists past the call)
+    # detach the result from the state so it can be dropped: nothing
+    # persists past the call
     staged = stage_parquet(out, "stream_jvm_result")
     drop_state_jvm(spark, state_dir)
     return staged

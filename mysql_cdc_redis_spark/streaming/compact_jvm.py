@@ -22,12 +22,8 @@ IMMUTABLE per-batch delta run; the state is the LSM of those runs:
   back to sort past 128 keys per task.
 * The batch's transition tuples are committed as an immutable RUN
   (generation 0, run id = batch_id, under ``state_dir/runs``) —
-  per-batch commit cost ∝ |batch|, NOT ∝ |state|.  The r1-r9 design ping-ponged the
-  ENTIRE state table through two slots every micro-batch: O(|state|)
-  I/O per batch, O(batches × |state|) over a stream's life — the
-  measured 75-85% of each ~2.1 s batch wall at sf0.1, and THE
-  scale-killer at 100 TB of state (round-9 verdict item 1).  Because transition tuples compose
-  associatively (`compose_transition_runs` — exhaustively pinned over
+  per-batch commit cost ∝ |batch|, NOT ∝ |state|.  Because transition
+  tuples compose associatively (`compose_transition_runs` — pinned over
   every action sequence × every split point), the state at any moment
   is the fold of base ∘ runs, recovered at read time.
 * RUN LAYOUT: runs live in the run store both streams share
@@ -47,7 +43,8 @@ IMMUTABLE per-batch delta run; the state is the LSM of those runs:
   compaction selection, streaming/runstore.py): once the run count
   exceeds ``max_runs`` (default 8), base ∘ every run but the batch's
   own folds into a new BASE — a bucketed-by-bkey ``write_bucketed``
-  table ping-ponged between two slots, so the fold's full-outer merge
+  table ping-ponged between two slots under ``state_dir/base``, so the
+  state dir alone is the state, and the fold's full-outer merge
   join plans Exchange-free above the base scan (only the composed runs
   shuffle).  Its bucket count follows the bytes the fold reads
   (``state_bucket_count``), and the commit that stops listing the
@@ -79,12 +76,8 @@ prev) -> (run_df, emit)``, appends the run, writes ``emit(view)`` over
 state (``emit`` is None when the variant emits nothing), and commits
 the view LAST.  The exactly-once order lives there alone; variants
 differ only in their hook, their fold (transition tuples or
-last-writer-wins) and finalize.
-
-Parity with the batch compactor under ANY micro-batch slicing is
-pinned by tests/test_streaming_parity_jvm.py, plus exhaustive
-transition-composition tests over all action sequences × split points
-for BOTH the pairwise merge and the multi-run compose.
+last-writer-wins) and finalize.  Parity with the batch compactor under
+any micro-batch slicing is pinned by tests/test_streaming_parity_jvm.py.
 """
 
 from __future__ import annotations
@@ -250,24 +243,16 @@ _VIEW_KEYS = {"base", "buckets", "runs"}
 class _StateRuns:
     """Immutable per-batch delta runs + two bucketed base slots (one
     holding data) + a manifest log of views ``{base, buckets, runs}``,
-    kept by the run store's rules (runstore.py; runs under
-    ``state_dir/runs``).
-    Table/dir names derive from state_dir, so a checkpoint-resumed run
-    (same dirs) finds its state; distinct runs (distinct dirs) never
-    collide in the shared warehouse.
+    kept by the run store's rules (runstore.py), all under
+    ``state_dir`` (``runs/``, ``base/<slot>``, ``_log/``): the dir alone
+    is the state, so a fresh process resumes from it.  Slot table names
+    derive from state_dir, so state dirs never collide in the catalog.
 
     Per-batch commit cost is ∝ |batch| (one run write + one O(1)
     manifest PUT); the O(|state|) fold is paid only when the run count
     exceeds ``max_runs`` (periodic compaction into the other base slot)
-    and at finalize — the LSM shape the dedup stream already set
-    (dedup_stream.py), replacing the r1-r9 full-state ping-pong that
-    rewrote O(|state|) EVERY batch (round-9 verdict item 1).
-
-    The view commits through the PUT-only ManifestLog
-    (streaming/commitlog.py) rather than an os.replace of _meta.json:
-    a torn commit self-invalidates and reads as the prior view — the
-    same crash semantics, with no atomic-rename requirement, so the
-    exactly-once contract survives on object stores (round-7 advice)."""
+    and at finalize.  Views commit through the PUT-only ManifestLog
+    (the module docstring's exactly-once bullet)."""
 
     def __init__(
         self,
@@ -278,7 +263,6 @@ class _StateRuns:
     ):
         self.spark = spark
         self.state_dir = state_dir
-        os.makedirs(state_dir, exist_ok=True)
         self.fs = fs or LocalFS()
         self.log = ManifestLog(self.fs, state_dir)
         self.runs_root = os.path.join(state_dir, "runs")
@@ -332,23 +316,30 @@ class _StateRuns:
         (the SCD2 hook joins it), and would size as the state."""
         return state_bucket_count(plan_input_bytes(batch), open_cost_bytes(self.spark))
 
-    def read_base(self, slot: int | None) -> DataFrame | None:
+    def read_base(self, slot: int | None, n_buckets=None) -> DataFrame | None:
+        """A base slot as its bucketed table, registered over
+        ``table_dir(slot)`` at the view's ``n_buckets`` when the session's
+        catalog lacks it (a fresh process resuming the state dir); Spark
+        takes bucketing only with a column list, read from the files."""
         if slot is None:
             return None
-        return self.spark.table(self.tables[slot])
+        name, d = self.tables[slot], self.table_dir(slot)
+        if not self.spark.catalog.tableExists(name):
+            cols = self.spark.read.parquet(d)._jdf.schema().toDDL()
+            self.spark.sql(
+                f"CREATE TABLE `{name}` ({cols}) USING parquet CLUSTERED BY (bkey) "
+                f"SORTED BY (bkey) INTO {n_buckets} BUCKETS LOCATION '{d}'"
+            )
+        return self.spark.table(name)
 
     def write_base(self, df: DataFrame, slot: int, n_buckets: int) -> None:
         write_bucketed(
-            df.repartition(n_buckets, "bkey"), self.tables[slot], "bkey", n_buckets
+            df, self.tables[slot], "bkey", n_buckets, path=self.table_dir(slot)
         )
 
     def table_dir(self, slot: int) -> str:
-        """A base slot's data dir.  The slots are always parquet
-        saveAsTable output, so it lives under the catalog warehouse dir
-        (DESCRIBE DETAIL is Delta-only and would just log a per-batch
-        analysis error)."""
-        wh = self.spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        return os.path.join(wh.removeprefix("file:"), self.tables[slot])
+        """A base slot's data dir, ``<state_dir>/base/<slot>``."""
+        return os.path.join(os.path.abspath(self.state_dir), "base", str(slot))
 
     def table_bytes(self, slot: int) -> int:
         """On-disk bytes of a base slot (0 when absent), sized through
@@ -406,7 +397,7 @@ class _StateRuns:
         semi-joins BEFORE the fold — the per-batch point-read path of
         the emission variants (the fold is per-key, so folding a key
         subset equals subsetting the fold)."""
-        base = self.read_base(view.get("base"))
+        base = self.read_base(view.get("base"), view.get("buckets"))
         runs = read_runs(self.spark, self.runs_root, view.get("runs", []))
         if runs is not None:
             # cast: a session with partition type inference off reads
@@ -419,10 +410,6 @@ class _StateRuns:
             base = base.join(kb, "bkey", "left_semi") if base is not None else None
             runs = runs.join(kb, "bkey", "left_semi") if runs is not None else None
         return fold(base, runs, view.get("buckets"))
-
-    def drop_all(self) -> None:
-        for t in self.tables:
-            self.spark.sql(f"DROP TABLE IF EXISTS `{t}`")
 
 
 def _ddl(head: str, schema: StructType, payload_cols: tuple[str, ...]) -> str:
@@ -493,7 +480,7 @@ def run_compaction_stream_jvm(
     (tbl, rid, cdc_action, payload...).
 
     Durability/restart: offsets live in ``checkpoint_dir`` (K5), state
-    in the run dirs + base slots + ``state_dir/_log``; a resumed run
+    in ``state_dir`` (runs, base slots, ``_log``); a resumed run
     continues from the committed view (tested: resume-midway parity
     and crash-retry determinism).  State survives across runs of the
     same state_dir — call ``drop_state_jvm`` to dispose of it when the
@@ -505,12 +492,10 @@ def run_compaction_stream_jvm(
         lambda df, prev: (keyed_transitions(df, pk_cols, payload_cols), None),
         max_files_per_trigger,
     )
-    state = slots.state_at(slots.head(), fold)
+    state = read_state_jvm(spark, state_dir, payload_cols, fs=fs)
     if state is None:  # empty source: no state stored
-        return spark.createDataFrame(
-            [], _ddl(_STATE_DDL, source_schema, payload_cols)
-        )
-    return state.select("tbl", "rid", "cdc_action", *payload_cols)
+        return spark.createDataFrame([], _ddl(_STATE_DDL, source_schema, payload_cols))
+    return state
 
 
 def run_retraction_stream_jvm(
@@ -801,21 +786,31 @@ def run_compaction_pipeline_dual_sink_jvm(
         spark, source_dir, source_schema, checkpoint_dir, slots, fold, batch,
         max_files_per_trigger, emit_dir=emissions_dir,
     )
-    state = slots.state_at(slots.head(), fold)
+    state = read_state_jvm(spark, state_dir, payload_cols, fs=fs)
     if state is None:  # empty source: no state stored
-        return spark.createDataFrame(
-            [], _ddl(_STATE_DDL, source_schema, payload_cols)
-        )
-    final = state.select("tbl", "rid", "cdc_action", *payload_cols)
-    dump_state_parquet(final, snapshot_dir)
+        return spark.createDataFrame([], _ddl(_STATE_DDL, source_schema, payload_cols))
+    dump_state_parquet(state, snapshot_dir)
     return spark.read.parquet(snapshot_dir).select(
         "tbl", "rid", "cdc_action", *payload_cols
     )
 
 
+def read_state_jvm(
+    spark: SparkSession, state_dir: str, payload_cols: tuple[str, ...], fs=None
+) -> DataFrame | None:
+    """The committed state of ``state_dir`` (the head view's base ∘
+    runs) in the batch compactor's columns (tbl, rid, cdc_action,
+    payload...); None when nothing is stored."""
+    slots = _StateRuns(spark, state_dir, fs=fs)
+    state = slots.state_at(slots.head(), _transition_fold(payload_cols))
+    if state is None:
+        return None
+    return state.select("tbl", "rid", "cdc_action", *payload_cols)
+
+
 def drop_state_jvm(spark: SparkSession, state_dir: str) -> None:
-    """Dispose of a pipeline's state (runs + base tables + commit log —
-    the K6-style destructive clear for this twin)."""
-    slots = _StateRuns(spark, state_dir)
-    slots.drop_all()
+    """Dispose of a pipeline's state (the slots' catalog entries, then
+    all of ``state_dir`` — the K6-style destructive clear for this twin)."""
+    for t in _StateRuns(spark, state_dir).tables:
+        spark.sql(f"DROP TABLE IF EXISTS `{t}`")
     shutil.rmtree(state_dir, ignore_errors=True)

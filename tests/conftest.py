@@ -273,6 +273,7 @@ _SLOW_NODE_IDS = frozenset({
     "tests/test_oracle_types.py::test_oracle_types_match_spark_schema[stream_session_event_spans]",
     "tests/test_oracle_types.py::test_oracle_types_match_spark_schema[stream_stream_interval_join]",
     "tests/test_oracle_types.py::test_oracle_types_match_spark_schema[stream_stream_left_outer_join]",
+    "tests/test_pipeline.py::test_cli_ingest_dump_replay",  # ~125 s: three CLI processes
     "tests/test_pipeline.py::test_full_pipeline_ingest_dump_replay",
     "tests/test_streaming_dedup.py::test_stream_dedup_auto_compaction_bounds_runs",
     "tests/test_streaming_dedup.py::test_stream_dedup_batch_torn_manifest_commit_replays",

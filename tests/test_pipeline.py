@@ -4,12 +4,17 @@ replay over the synthetic binlog, with incremental second ingest."""
 from __future__ import annotations
 
 import os
+import re
+import subprocess
+import sys
 import tempfile
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from mysql_cdc_redis_spark.operators.compaction import compact
+from mysql_cdc_redis_spark.operators.dump import read_dump
 from mysql_cdc_redis_spark.pipeline import CdcPipeline
 from mysql_cdc_redis_spark.sources.changelog import (
     ORDERS_PAYLOAD,
@@ -70,3 +75,41 @@ def test_pipeline_incremental_second_ingest(spark, sf_dir):
     expected = compact(ch, ORDERS_PK, ORDERS_PAYLOAD)
     cols = ["tbl", "rid", "cdc_action", *ORDERS_PAYLOAD]
     assert _rows(state, cols) == _rows(expected, cols)
+
+
+def test_cli_ingest_dump_replay(spark, sf_dir, tmp_path):
+    """The CLI's three commands, each in its own process: the state
+    lives only in the stream's dirs, the dump equals compact(), and the
+    replay reports a fixpoint."""
+    ch = orders_changelog(spark, sf_dir).filter(F.col("o_orderkey") % 10 == 3)
+    src, work, csv_dir = (str(tmp_path / d) for d in ("binlog", "work", "dump"))
+    stage_changelog_files(ch, src, n_chunks=3)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    keys = ["--pk", ",".join(ORDERS_PK), "--payload", ",".join(ORDERS_PAYLOAD)]
+    for cmd in (["ingest", src], ["dump", csv_dir], ["replay", csv_dir]):
+        p = subprocess.run(
+            [sys.executable, "-m", "mysql_cdc_redis_spark", "--work-dir", work,
+             *keys, *cmd],
+            cwd=tmp_path, env={**os.environ, "PYTHONPATH": repo},
+            capture_output=True, text=True, timeout=600,
+        )
+        assert p.returncode == 0, f"{cmd[0]}:\n{p.stdout}\n{p.stderr[-4000:]}"
+    assert "fixpoint: True" in p.stdout, p.stdout
+    assert sorted(os.listdir(work)) == ["checkpoint", "stream_state"]
+
+    cols = ["tbl", "rid", "cdc_action", *ORDERS_PAYLOAD]
+    expected = compact(ch, ORDERS_PK, ORDERS_PAYLOAD).select(*cols)
+    dumped = read_dump(spark, csv_dir, expected.schema).drop("dt")
+    assert _rows(dumped, cols) == _rows(expected, cols)
+
+
+def test_pipeline_without_committed_state_raises(spark, tmp_path):
+    """``dump`` and ``replay`` over a work dir with nothing committed
+    raise a ValueError naming it, and write nothing there."""
+    work = str(tmp_path / "work")
+    p = CdcPipeline(spark, work, ORDERS_PK, ORDERS_PAYLOAD, None)
+    with pytest.raises(ValueError, match=re.escape(work)):
+        p.dump(str(tmp_path / "dump"))
+    with pytest.raises(ValueError, match=re.escape(work)):
+        p.replay(str(tmp_path / "dump"))
+    assert os.listdir(tmp_path) == []

@@ -143,7 +143,10 @@ def test_state_bucket_count_sizing():
 def test_write_bucketed_sizes_from_input_stats(spark):
     """``write_bucketed``'s default count comes from the sizeInBytes
     statistics of the plan's input relations: a sub-MB input writes one
-    bucket; an explicit count still wins."""
+    bucket, as one data file whatever the input's partitioning; an
+    explicit count still wins."""
+    import os
+
     from mysql_cdc_redis_spark.operators.scale import plan_input_bytes
 
     df = spark.range(1000).select(F.col("id").cast("string").alias("k"))
@@ -154,6 +157,10 @@ def test_write_bucketed_sizes_from_input_stats(spark):
         for name, want in (("b_sized", "1"), ("b_fixed", "8")):
             info = {r[0]: r[1] for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()}
             assert info["Num Buckets"] == want, (name, info)
+            if name == "b_sized":
+                loc = info["Location"].removeprefix("file:")
+                files = [f for f in os.listdir(loc) if not f.startswith(("_", "."))]
+                assert len(files) == 1, files
         assert spark.table("b_sized").count() == 1000
     finally:
         spark.sql("DROP TABLE IF EXISTS b_sized")

@@ -10,6 +10,8 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import subprocess
+import sys
 import time
 from contextlib import contextmanager
 from itertools import product
@@ -1325,6 +1327,72 @@ def test_jvm_sized_base_keeps_compaction_join_exchange_free(spark, sf_dir):
         assert "SelectedBucketsCount: 1 out of 1" in plan, plan
         # the runs branch prints first and holds the one Exchange
         assert plan.count("Exchange", join_at, state_scan_at) <= 1, plan
+    finally:
+        drop_state_jvm(spark, state_dir)
+
+
+# streams the staged source through the JVM compactor in its own
+# process: argv = src, ckpt, state_dir, the changelog schema as JSON
+_CHILD_STREAM = """
+import json, sys
+from pyspark.sql.types import StructType
+from mysql_cdc_redis_spark.session import get_spark
+from mysql_cdc_redis_spark.sources.changelog import ORDERS_PAYLOAD, ORDERS_PK
+from mysql_cdc_redis_spark.streaming import run_compaction_stream_jvm
+
+src, ckpt, state_dir, schema = sys.argv[1:]
+spark = get_spark(app_name="jvm-stream-child")
+run_compaction_stream_jvm(
+    spark, src, StructType.fromJson(json.loads(schema)), ORDERS_PK, ORDERS_PAYLOAD,
+    ckpt, state_dir, max_files_per_trigger=1, max_runs=1,
+)
+spark.stop()
+"""
+
+
+def test_jvm_state_dir_resumes_in_a_fresh_session(spark, sf_dir, tmp_path):
+    """The state dir alone is the state.  A child process streams three
+    files through two compactions (max_runs=1); this session, whose
+    catalog never saw the state's base slots, then folds the child's
+    base with a compaction join whose base side is Exchange-free, and
+    resumes with a fourth file to compact() over all four."""
+    from mysql_cdc_redis_spark.streaming.compact_jvm import _StateRuns, _transition_fold
+
+    ch = orders_changelog(spark, sf_dir).filter(F.col("o_orderkey") % 10 == 3)
+    # seq = orderkey*4 + e: four seq-ordered per-key slices
+    parts = [ch.filter(F.col("seq") % 4 == e) for e in range(4)]
+    src, ckpt, state_dir = (str(tmp_path / d) for d in ("src", "ckpt", "state"))
+    cols = ["tbl", "rid", "cdc_action", *ORDERS_PAYLOAD]
+    for i in range(3):
+        _append_chunk(parts[i], src, f"chunk-000{i}")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.run(
+        [sys.executable, "-c", _CHILD_STREAM, src, ckpt, state_dir, ch.schema.json()],
+        cwd=tmp_path, env={**os.environ, "PYTHONPATH": repo},
+        capture_output=True, text=True, timeout=600,
+    )
+    assert child.returncode == 0, child.stderr[-4000:]
+
+    slots = _StateRuns(spark, state_dir)
+    try:
+        view = slots.head()
+        assert view["base"] is not None and view["buckets"] == 1, view
+        assert not spark.catalog.tableExists(slots.tables[view["base"]])
+        folded = slots.state_at(view, _transition_fold(ORDERS_PAYLOAD))
+        plan = folded._jdf.queryExecution().executedPlan().toString()
+        join_at = plan.find("SortMergeJoin")
+        state_scan_at = plan.find(slots.tables[view["base"]])
+        assert 0 <= join_at < state_scan_at, plan
+        assert "SelectedBucketsCount: 1 out of 1" in plan, plan
+        # the runs branch prints first and holds the one Exchange
+        assert plan.count("Exchange", join_at, state_scan_at) <= 1, plan
+
+        _append_chunk(parts[3], src, "chunk-0003")
+        out = run_compaction_stream_jvm(
+            spark, src, ch.schema, ORDERS_PK, ORDERS_PAYLOAD, ckpt, state_dir,
+            max_files_per_trigger=1, max_runs=1,
+        )
+        assert _rows(out, cols) == _rows(compact(ch, ORDERS_PK, ORDERS_PAYLOAD), cols)
     finally:
         drop_state_jvm(spark, state_dir)
 

@@ -165,7 +165,6 @@ def main() -> None:
                 f.write(note + _formatted(df))
             print(f"wrote {path}")
     finally:
-        slots.drop_all()
         shutil.rmtree(work, ignore_errors=True)
         spark.stop()
 

@@ -159,7 +159,6 @@ def main() -> None:
         if got != want:
             sys.exit(f"stream state {tuple(got)} != compact() {tuple(want)}")
     finally:
-        slots.drop_all()
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
 
