@@ -29,19 +29,18 @@ def dump_to_csv(
     date_col: str,
     fmt: str = "yyyyMMdd",
     max_rows_per_file: int = 1_000_000,
-    mode: str = "overwrite",
 ) -> None:
-    """K1: date-partitioned, header'd, chunked CSV dump.
+    """K1: date-partitioned, header'd, chunked CSV dump, overwriting
+    ``out_dir``.
 
     max_rows_per_file defaults to the reference's --max_rows=1,000,000
     (dump2csv.py:23, dump.conf:4).  Timestamps are ISO-formatted so the
-    read side round-trips exactly.  ``mode='append'`` is the streaming
-    fan-out spelling: each micro-batch adds its files under the same
-    date partitions (the reference's per-poll dump accretion,
-    dump2csv.py:62-103), instead of clobbering earlier batches."""
+    read side round-trips exactly.  A stream dumps each micro-batch into
+    its own ``batch_id=N`` dir (the reference's per-poll dump accretion,
+    dump2csv.py:62-103), so a replayed batch replaces its files."""
     (
         df.withColumn("dt", F.date_format(F.col(date_col), fmt))
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("dt")
         .option("header", True)
         .option("maxRecordsPerFile", max_rows_per_file)
@@ -52,7 +51,8 @@ def dump_to_csv(
 
 def read_dump(spark: SparkSession, out_dir: str, schema: StructType) -> DataFrame:
     """S4: scan a K1 dump back (readcsv, loadcsv.py:91-94) with an
-    explicit schema (no inference pass) plus the dt partition column.
+    explicit schema (no inference pass) plus the dt partition column
+    (and ``batch_id`` before it for a stream's per-batch dump).
     ``schema`` is not mutated: it may be a DataFrame's cached schema."""
     return (
         spark.read.option("header", True)

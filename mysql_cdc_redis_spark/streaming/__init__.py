@@ -5,10 +5,9 @@ from .compact_jvm import (
     run_retraction_stream_jvm,
     run_scd2_stream_jvm,
 )
-from .dedup_stream import compact_lsh_state, run_dedup_stream_minhash
+from .dedup_stream import run_dedup_stream_minhash
 
 __all__ = [
-    "compact_lsh_state",
     "drop_state_jvm",
     "run_compaction_pipeline_dual_sink_jvm",
     "run_compaction_stream_jvm",

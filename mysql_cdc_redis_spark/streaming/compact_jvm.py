@@ -66,18 +66,16 @@ IMMUTABLE per-batch delta run; the state is the LSM of those runs:
   This is the idempotent-replay contract the reference relies on (M5),
   upgraded to exactly-once.
 
-``_run_lsm_stream`` is the batch body all four public streams share;
-it reads through the package's one file source and runs on its one
-availableNow query loop (streaming/changelog_files.py: ``file_stream``,
-``run_available_now``).  Per micro-batch it reads the prior view
-(``state_before`` the head), calls the variant's hook ``batch(batch_df,
-prev) -> (run_df, emit)``, appends the run, writes ``emit(view)`` over
-``emit_dir/batch_id=<id>`` (``write_emission``) while the view holds
-state (``emit`` is None when the variant emits nothing), and commits
-the view LAST.  The exactly-once order lives there alone; variants
-differ only in their hook, their fold (transition tuples or
-last-writer-wins) and finalize.  Parity with the batch compactor under
-any micro-batch slicing is pinned by tests/test_streaming_parity_jvm.py.
+All four public streams run on the run store's one LSM batch driver
+(streaming/runstore.py: ``run_lsm_stream``, shared with the dedup
+stream), over the package's one file source.  ``_StateRuns`` is the
+JVM store: one ``runs`` relation keyed on ``bkey``, compaction into the
+other base slot, GC over the head alone plus the superseded slot's
+drop, and the legacy-layout check.  Each variant's hook yields the
+batch's run (``batch_runs``) and its emission, if any; variants differ
+only in that hook, their fold (transition tuples or last-writer-wins)
+and finalize.  Parity with the batch compactor under any micro-batch
+slicing is pinned by tests/test_streaming_parity_jvm.py.
 """
 
 from __future__ import annotations
@@ -85,6 +83,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,18 +104,8 @@ from ..operators.scale import (
     state_bucket_count,
     write_bucketed,
 )
-from .changelog_files import file_stream, run_available_now, write_emission
-from .commitlog import LocalFS, ManifestLog
-from .runstore import (
-    gc_live,
-    gc_runs,
-    read_runs,
-    run_dir,
-    runs_to_fold,
-    state_before,
-    with_run,
-    write_run,
-)
+from .changelog_files import file_stream
+from .runstore import BatchRuns, LsmStore, read_runs, run_dir, run_lsm_stream
 
 # what a stream state row carries besides tbl, rid, cdc_action, payload
 _STATE_CARRY = ("bkey", "last_seq")
@@ -233,44 +222,39 @@ def fold_lww_state(base: DataFrame | None, runs: DataFrame | None) -> DataFrame 
 # ---------------------------------------------------------------------------
 
 
-def _holds_state(view: dict) -> bool:
-    return view.get("base") is not None or bool(view.get("runs"))
-
-
 _VIEW_KEYS = {"base", "buckets", "runs"}
 
 
-class _StateRuns:
+class _StateRuns(LsmStore):
     """Immutable per-batch delta runs + two bucketed base slots (one
     holding data) + a manifest log of views ``{base, buckets, runs}``,
     kept by the run store's rules (runstore.py), all under
     ``state_dir`` (``runs/``, ``base/<slot>``, ``_log/``): the dir alone
     is the state, so a fresh process resumes from it.  Slot table names
     derive from state_dir, so state dirs never collide in the catalog.
+    ``fold`` is the stream's LSM read (``fold(base, runs, buckets)``).
 
     Per-batch commit cost is ∝ |batch| (one run write + one O(1)
     manifest PUT); the O(|state|) fold is paid only when the run count
     exceeds ``max_runs`` (periodic compaction into the other base slot)
-    and at finalize.  Views commit through the PUT-only ManifestLog
-    (the module docstring's exactly-once bullet)."""
+    and at finalize."""
+
+    relations = {"runs": "bkey"}
 
     def __init__(
         self,
         spark: SparkSession,
         state_dir: str,
+        fold=None,
         fs=None,
-        max_runs: int | None = None,
+        max_runs: int = 8,
     ):
+        super().__init__(state_dir, fs, max_runs)
         self.spark = spark
-        self.state_dir = state_dir
-        self.fs = fs or LocalFS()
-        self.log = ManifestLog(self.fs, state_dir)
-        self.runs_root = os.path.join(state_dir, "runs")
+        self.fold = fold
+        self.runs_root = self.root("runs")
         tag = uuid.uuid5(uuid.NAMESPACE_URL, os.path.abspath(state_dir)).hex[:16]
         self.tables = [f"cdc_jvm_state_{tag}_{i}" for i in (0, 1)]
-        self.max_runs = 8 if max_runs is None else max_runs
-        if self.max_runs < 1:
-            raise ValueError("max_runs must be >= 1")
 
     # ---- manifest ---------------------------------------------------
 
@@ -281,40 +265,44 @@ class _StateRuns:
         if head is None:
             return {"base": None, "buckets": None, "runs": []}
         view = head[1]
-        if set(view) != _VIEW_KEYS:
+        if set(view) != _VIEW_KEYS or (
+            view["base"] is not None and not self.fs.list(self.table_dir(view["base"]))
+        ):
             # a ``slots`` or ``views`` manifest (the latter may list bare
-            # run ids): resuming either as empty state would lose it —
-            # reject loudly (the dedup stream's legacy-state standard)
+            # run ids), or a view whose base slot lives outside state_dir:
+            # resuming any of them as empty state would lose it — reject
+            # loudly (the dedup stream's legacy-state standard)
             raise ValueError(
                 f"{self.state_dir}: state in a legacy ping-pong manifest "
-                "(pre-LSM), in the runs/b=<id> run layout or in a batch→view "
-                "map manifest is not resumable by this version; finalize it "
-                "with the version that wrote it or start a fresh state_dir"
+                "(pre-LSM), in the runs/b=<id> run layout, in a batch→view "
+                "map manifest or with its base outside state_dir/base (a "
+                "warehouse-table base) is not resumable by this version; "
+                "finalize it with the version that wrote it or start a "
+                "fresh state_dir"
             )
         return view
 
-    def commit(self, view: dict) -> None:
-        """Publish ``view`` as the new head, then GC the runs and base
-        slot it no longer lists (k = 1: a replay reads only the head,
-        whose base covers every ``rid < b``), so disk stays O(|state| +
-        max_runs · |batch|)."""
-        self.log.commit(view)
-        live_runs, live_bases = gc_live(self.log, 1)
-        gc_runs(self.fs, [self.runs_root], live_runs)
-        # one live base on disk instead of two: same best-effort
-        # FS-handle path as run GC; the slot's catalog entry stays, and
-        # the next compaction into it overwrites the table whole
+    def gc(self) -> set:
+        """k = 1: a replay reads only the head, whose base covers every
+        ``rid < b``.  Then drop the base slot the head does not list, so
+        one base is live on disk and disk stays O(|state| + max_runs ·
+        |batch|): same best-effort FS-handle path as run GC; the slot's
+        catalog entry stays, and the next compaction into it overwrites
+        the table whole."""
+        live_bases = super().gc()
         for slot in (0, 1):
             if slot not in live_bases and self.table_bytes(slot):
                 self.fs.delete(self.table_dir(slot))
+        return live_bases
 
     # ---- physical layout --------------------------------------------
 
-    def run_buckets(self, batch: DataFrame) -> int:
-        """The bucket modulus of a micro-batch's run, sized from the
-        batch's input bytes: its run's own plan may also read the state
-        (the SCD2 hook joins it), and would size as the state."""
-        return state_bucket_count(plan_input_bytes(batch), open_cost_bytes(self.spark))
+    def batch_runs(self, batch: DataFrame, delta: DataFrame) -> BatchRuns:
+        """A micro-batch's run ``delta``, at a bucket modulus sized from
+        the batch's input bytes: the run's own plan may also read the
+        state (the SCD2 hook joins it), and would size as the state."""
+        n = state_bucket_count(plan_input_bytes(batch), open_cost_bytes(self.spark))
+        return BatchRuns({"runs": delta}, {"n_buckets": n})
 
     def read_base(self, slot: int | None, n_buckets=None) -> DataFrame | None:
         """A base slot as its bucketed table, registered over
@@ -348,38 +336,11 @@ class _StateRuns:
 
     # ---- protocol ----------------------------------------------------
 
-    def append(
-        self,
-        delta: DataFrame,
-        batch_id: int,
-        prev: dict,
-        fold,
-        n_buckets: int = 1,
-    ) -> dict:
-        """Write batch_id's immutable run at ``n_buckets``
-        (``run_buckets``) onto ``prev``, the view before the batch
-        (``state_before``); once the run count exceeds ``max_runs``,
-        fold base ∘ every run but the batch's own into the OTHER base
-        slot (periodic compaction — deterministic on replay because it
-        reads only the prior view's immutable inputs, never the slot it
-        overwrites).  Returns the new view, NOT yet committed: callers
-        commit after their own idempotent per-batch emissions so a
-        crash anywhere before the meta commit leaves the prior view
-        intact."""
-        run = {"rid": int(batch_id), "gen": 0, "n_buckets": int(n_buckets)}
-        write_run(delta, self.runs_root, batch_id, "bkey", n_buckets)
-        runs = prev["runs"]
-        # a replayed batch overwrote its own dir; a run without a data
-        # file has no schema to read back
-        if any(
-            not n.startswith(("_", "."))
-            for n in self.fs.list(run_dir(self.runs_root, run))
-        ):
-            runs = with_run(runs, run)
-        folded = runs_to_fold(runs, self.max_runs)
-        if not folded:
-            return {**prev, "runs": runs}
-        src = prev["base"]
+    def compact(self, view: dict, folded: list[dict]) -> dict:
+        """Fold base ∘ the ``folded`` runs into the OTHER base slot
+        (deterministic on replay: it reads only the view's immutable
+        inputs, never the slot it overwrites)."""
+        src = view["base"]
         dst = 0 if src is None else 1 - src
         # the compaction join's parallelism IS the bucket count, so it
         # follows the bytes the fold reads: one file for a sub-MB state,
@@ -388,10 +349,10 @@ class _StateRuns:
             self.fs.du(run_dir(self.runs_root, r)) for r in folded
         )
         n_buckets = state_bucket_count(state_bytes, open_cost_bytes(self.spark))
-        self.write_base(self.state_at({**prev, "runs": folded}, fold), dst, n_buckets)
-        return {"base": dst, "buckets": n_buckets, "runs": runs[len(folded):]}
+        self.write_base(self.state_at({**view, "runs": folded}), dst, n_buckets)
+        return {"base": dst, "buckets": n_buckets, "runs": view["runs"][len(folded):]}
 
-    def state_at(self, view: dict, fold, keys: DataFrame | None = None):
+    def state_at(self, view: dict, keys: DataFrame | None = None):
         """The folded state as of ``view``; with ``keys`` (a DataFrame
         carrying bkey), restricted to those keys via broadcast
         semi-joins BEFORE the fold — the per-batch point-read path of
@@ -409,7 +370,7 @@ class _StateRuns:
             kb = F.broadcast(keys.select("bkey").distinct())
             base = base.join(kb, "bkey", "left_semi") if base is not None else None
             runs = runs.join(kb, "bkey", "left_semi") if runs is not None else None
-        return fold(base, runs, view.get("buckets"))
+        return self.fold(base, runs, view.get("buckets"))
 
 
 def _ddl(head: str, schema: StructType, payload_cols: tuple[str, ...]) -> str:
@@ -430,36 +391,6 @@ def _transition_fold(payload_cols: tuple[str, ...]):
     return fold
 
 
-def _run_lsm_stream(
-    spark: SparkSession,
-    source_dir: str,
-    source_schema: StructType,
-    checkpoint_dir: str,
-    slots: _StateRuns,
-    fold,
-    batch,
-    max_files_per_trigger: int | None = None,
-    emit_dir: str | None = None,
-) -> None:
-    """Drive one public stream's batches through the shared availableNow
-    loop (hook contract: see the module docstring).  ``emit_dir`` is
-    created up front, so finalize reads it with a known schema even
-    when nothing was emitted."""
-    if emit_dir is not None:
-        os.makedirs(emit_dir, exist_ok=True)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        prev = state_before(slots.head(), batch_id)
-        run, emit = batch(batch_df, prev)
-        view = slots.append(run, batch_id, prev, fold, slots.run_buckets(batch_df))
-        if emit is not None and _holds_state(view):
-            write_emission(emit(view), emit_dir, batch_id)
-        slots.commit(view)
-
-    stream = file_stream(spark, source_dir, source_schema, max_files_per_trigger)
-    run_available_now(stream, checkpoint_dir, _apply, output_mode="update")
-
-
 def run_compaction_stream_jvm(
     spark: SparkSession,
     source_dir: str,
@@ -470,7 +401,7 @@ def run_compaction_stream_jvm(
     state_dir: str,
     max_files_per_trigger: int | None = None,
     fs=None,
-    max_runs: int | None = None,
+    max_runs: int = 8,
 ) -> DataFrame:
     """End-to-end availableNow run of the JVM streaming compactor
     (blocking=False mode, cdc_config.py:36): tail the file changelog,
@@ -485,12 +416,17 @@ def run_compaction_stream_jvm(
     and crash-retry determinism).  State survives across runs of the
     same state_dir — call ``drop_state_jvm`` to dispose of it when the
     pipeline is decommissioned."""
-    slots = _StateRuns(spark, state_dir, fs=fs, max_runs=max_runs)
-    fold = _transition_fold(payload_cols)
-    _run_lsm_stream(
-        spark, source_dir, source_schema, checkpoint_dir, slots, fold,
-        lambda df, prev: (keyed_transitions(df, pk_cols, payload_cols), None),
-        max_files_per_trigger,
+    slots = _StateRuns(spark, state_dir, _transition_fold(payload_cols), fs, max_runs)
+
+    @contextmanager
+    def batch(batch_df: DataFrame, batch_id: int, prev: dict):
+        yield slots.batch_runs(
+            batch_df, keyed_transitions(batch_df, pk_cols, payload_cols)
+        ), None
+
+    run_lsm_stream(
+        slots, file_stream(spark, source_dir, source_schema, max_files_per_trigger),
+        checkpoint_dir, batch,
     )
     state = read_state_jvm(spark, state_dir, payload_cols, fs=fs)
     if state is None:  # empty source: no state stored
@@ -509,7 +445,7 @@ def run_retraction_stream_jvm(
     deltas_dir: str,
     max_files_per_trigger: int | None = None,
     fs=None,
-    max_runs: int | None = None,
+    max_runs: int = 8,
 ) -> DataFrame:
     """Pure-JVM retraction stream — the Flink-style
     changelog-of-the-aggregate (the streaming form of
@@ -536,8 +472,7 @@ def run_retraction_stream_jvm(
     Reference anchor: this is the streaming form of the reference's
     aggregate-maintenance pattern (rcache.py:224-259 merge keeps Redis
     aggregates current per poll loop)."""
-    slots = _StateRuns(spark, state_dir, fs=fs, max_runs=max_runs)
-    fold = _transition_fold(payload_cols)
+    slots = _StateRuns(spark, state_dir, _transition_fold(payload_cols), fs, max_runs)
 
     def _live_rows(state: DataFrame, sign: int) -> DataFrame:
         return (
@@ -546,20 +481,21 @@ def run_retraction_stream_jvm(
                     *payload_cols)
         )
 
-    def batch(batch_df: DataFrame, prev):
+    @contextmanager
+    def batch(batch_df: DataFrame, batch_id: int, prev: dict):
         delta = keyed_transitions(batch_df, pk_cols, payload_cols)
         touched = delta.select("bkey")
 
         def emit(view: dict) -> DataFrame:
-            plus = _live_rows(slots.state_at(view, fold, keys=touched), 1)
-            old = slots.state_at(prev, fold, keys=touched)
+            plus = _live_rows(slots.state_at(view, keys=touched), 1)
+            old = slots.state_at(prev, keys=touched)
             return plus if old is None else _live_rows(old, -1).unionByName(plus)
 
-        return delta, emit
+        yield slots.batch_runs(batch_df, delta), emit
 
-    _run_lsm_stream(
-        spark, source_dir, source_schema, checkpoint_dir, slots, fold, batch,
-        max_files_per_trigger, emit_dir=deltas_dir,
+    run_lsm_stream(
+        slots, file_stream(spark, source_dir, source_schema, max_files_per_trigger),
+        checkpoint_dir, batch, emit_dir=deltas_dir,
     )
     ddl = _ddl("tbl string, rid string, sign long", source_schema, payload_cols)
     out = spark.read.schema(ddl).parquet(deltas_dir)
@@ -577,7 +513,7 @@ def run_scd2_stream_jvm(
     emissions_dir: str,
     max_files_per_trigger: int | None = None,
     fs=None,
-    max_runs: int | None = None,
+    max_runs: int = 8,
 ) -> DataFrame:
     """Pure-JVM incremental SCD2 (the streaming form of batch
     ``scd2_history``), zero per-key Python crossings.
@@ -598,17 +534,18 @@ def run_scd2_stream_jvm(
     semantics identical to ``run_compaction_stream_jvm``."""
     from pyspark.sql.window import Window
 
-    slots = _StateRuns(spark, state_dir, fs=fs, max_runs=max_runs)
+    slots = _StateRuns(
+        spark, state_dir, lambda base, runs, buckets: fold_lww_state(base, runs),
+        fs, max_runs,
+    )
     state_ddl = _ddl(
         "bkey string, tbl string, rid string, version long, last_seq long, "
         "valid_from string, cdc_action string",
         source_schema, payload_cols,
     )
 
-    def fold(base, runs, buckets=None):
-        return fold_lww_state(base, runs)
-
-    def batch(batch_df: DataFrame, prev):
+    @contextmanager
+    def batch(batch_df: DataFrame, batch_id: int, prev: dict):
         keyed = (
             with_rid(batch_df, pk_cols)
             .filter(F.col("rid").isNotNull())
@@ -620,7 +557,7 @@ def run_scd2_stream_jvm(
             )
             .dropDuplicates(["bkey", "seq"])
         )
-        state_prev = slots.state_at(prev, fold, keys=keyed)
+        state_prev = slots.state_at(prev, keys=keyed)
         if state_prev is None:
             state_prev = spark.createDataFrame([], state_ddl)
         s = state_prev.select(
@@ -665,11 +602,11 @@ def run_scd2_stream_jvm(
             *payload_as("_p_"),
         )
         closed = closed_batch.unionByName(closed_prior)
-        return opens, lambda view: closed
+        yield slots.batch_runs(batch_df, opens), lambda view: closed
 
-    _run_lsm_stream(
-        spark, source_dir, source_schema, checkpoint_dir, slots, fold, batch,
-        max_files_per_trigger, emit_dir=emissions_dir,
+    run_lsm_stream(
+        slots, file_stream(spark, source_dir, source_schema, max_files_per_trigger),
+        checkpoint_dir, batch, emit_dir=emissions_dir,
     )
     # the stored version is a long (stored_version + row_number())
     emitted_ddl = _ddl(
@@ -683,7 +620,7 @@ def run_scd2_stream_jvm(
         F.col("version").cast("int").alias("version"),
         *payload_cols,
     )
-    state = slots.state_at(slots.head(), fold)
+    state = slots.state_at(slots.head())
     if state is None:  # empty source: no state stored
         return closed
     open_rows = state.select(
@@ -711,7 +648,7 @@ def run_compaction_pipeline_dual_sink_jvm(
     fmt: str = "yyyyMM",
     max_files_per_trigger: int | None = None,
     fs=None,
-    max_runs: int | None = None,
+    max_runs: int = 8,
 ) -> DataFrame:
     """The reference's COMPOSED loop — cdc.py (binlog tail) → rcache.py
     (keyed cache merge) → dump2csv.py (date-partitioned CSV dump) — as
@@ -726,11 +663,11 @@ def run_compaction_pipeline_dual_sink_jvm(
       emitted as explicit ``ACTION_FOLD_SENTINEL`` tombstones —
       overwrite ``emissions_dir/batch_id=N``: an exactly-once commit
       log;
-    * sink 2 (K1): the same batch's LIVE rows accrete into the
-      date-partitioned CSV dump (``mode='append'`` — each poll adds
-      files under its date partitions exactly like the reference's
-      periodic dumps; a retried batch may re-append, and the finalize
-      below is immune because it reads sink 1, not the CSVs);
+    * sink 2 (K1): the same batch's rows go to the date-partitioned
+      CSV dump under its own ``csv_dir/batch_id=N/dt=…`` dir,
+      overwritten like sink 1, so a retried batch replaces its rows;
+      ``read_dump`` reads the whole dump as one table (the reference's
+      periodic dumps accrete by poll the same way);
     * sink 3 (K4): after the availableNow run terminates, the finalized
       compacted state is dumped table-partitioned to ``snapshot_dir``
       (the durable Redis-state analog) and returned.
@@ -742,10 +679,10 @@ def run_compaction_pipeline_dual_sink_jvm(
         raise ValueError(f"date_col {date_col!r} must be in payload_cols")
     from ..operators.dump import dump_state_parquet, dump_to_csv
 
-    slots = _StateRuns(spark, state_dir, fs=fs, max_runs=max_runs)
-    fold = _transition_fold(payload_cols)
+    slots = _StateRuns(spark, state_dir, _transition_fold(payload_cols), fs, max_runs)
 
-    def batch(batch_df: DataFrame, prev):
+    @contextmanager
+    def batch(batch_df: DataFrame, batch_id: int, prev: dict):
         delta = keyed_transitions(batch_df, pk_cols, payload_cols)
 
         def emit(view: dict) -> DataFrame:
@@ -757,7 +694,7 @@ def run_compaction_pipeline_dual_sink_jvm(
             # supersedes the key's earlier live rows; a re-insert
             # supersedes the tombstone)
             touched = delta.select("bkey", "tbl", "rid", "last_seq")
-            live = slots.state_at(view, fold, keys=touched)
+            live = slots.state_at(view, keys=touched)
             gone = (
                 touched.join(live.select("bkey"), "bkey", "left_anti")
                 .select(
@@ -776,15 +713,19 @@ def run_compaction_pipeline_dual_sink_jvm(
             # tombstones ride into the CSV dump too: without them the
             # dump's finalize could resurrect a key annihilated in a
             # later poll.  Their date partition falls back to the dump's
-            # null-date bucket.
-            dump_to_csv(out, csv_dir, date_col=date_col, fmt=fmt, mode="append")
+            # null-date bucket.  The batch's own dir is overwritten, so
+            # a replayed batch replaces its rows.
+            dump_to_csv(
+                out, os.path.join(csv_dir, f"batch_id={batch_id}"),
+                date_col=date_col, fmt=fmt,
+            )
             return out
 
-        return delta, emit
+        yield slots.batch_runs(batch_df, delta), emit
 
-    _run_lsm_stream(
-        spark, source_dir, source_schema, checkpoint_dir, slots, fold, batch,
-        max_files_per_trigger, emit_dir=emissions_dir,
+    run_lsm_stream(
+        slots, file_stream(spark, source_dir, source_schema, max_files_per_trigger),
+        checkpoint_dir, batch, emit_dir=emissions_dir,
     )
     state = read_state_jvm(spark, state_dir, payload_cols, fs=fs)
     if state is None:  # empty source: no state stored
@@ -801,8 +742,8 @@ def read_state_jvm(
     """The committed state of ``state_dir`` (the head view's base ∘
     runs) in the batch compactor's columns (tbl, rid, cdc_action,
     payload...); None when nothing is stored."""
-    slots = _StateRuns(spark, state_dir, fs=fs)
-    state = slots.state_at(slots.head(), _transition_fold(payload_cols))
+    slots = _StateRuns(spark, state_dir, _transition_fold(payload_cols), fs)
+    state = slots.state_at(slots.head())
     if state is None:
         return None
     return state.select("tbl", "rid", "cdc_action", *payload_cols)

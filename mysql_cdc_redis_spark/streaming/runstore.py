@@ -1,5 +1,6 @@
 """The LSM run store under both streams (compact_jvm.py, dedup_stream.py):
-the one module that names, writes, reads and deletes a run directory.
+the one module that names, writes, reads and deletes a run directory,
+and the one batch driver both streams run on.
 
 A run is written once, never rewritten, at
 ``<root>/gen=G/ingest_id=N/bucket=B``: ``ingest_id`` is the batch id
@@ -16,20 +17,27 @@ attempt's partial run cannot be read.  GC deletes every run dir outside
 the live ``(gen, rid)`` set through the state FS handle.
 
 Both streams keep their run log by the four rules below (replay,
-commit, compaction selection, GC-live); a manifest lists the live runs,
-and the JVM stream's base slot, beside its stream's own payload.
+commit, compaction selection, GC-live) and drive each micro-batch
+through ``run_lsm_stream`` in one order, the versioned state-store
+protocol of *Structured Streaming* (SIGMOD 2018): read the state before
+the batch, write the batch's runs, compact, emit, then commit ONE
+manifest per batch id and GC.  A store (``LsmStore``) carries only what
+differs between the streams: its relations, its compaction, its
+manifest payload, its GC window and its legacy-layout check.
 """
 
 from __future__ import annotations
 
 import functools
 import os
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.scale import state_writer
-from .commitlog import ManifestLog
+from .changelog_files import run_available_now, write_emission
+from .commitlog import LocalFS, ManifestLog
 
 # Touched-bucket partition filters are literal isin lists, and each
 # literal costs ~2 ms of driver planning (the dedup probe's
@@ -186,3 +194,122 @@ def gc_live(log: ManifestLog, k: int) -> tuple[set[tuple[int, int]], set]:
     recent = [payload for _v, payload in log.recent(k)]
     runs = {(int(r["gen"]), int(r["rid"])) for p in recent for r in p.get("runs", [])}
     return runs, {p.get("base") for p in recent}
+
+
+# ---------------------------------------------------------------------------
+# The one LSM batch driver
+# ---------------------------------------------------------------------------
+
+
+class BatchRuns(NamedTuple):
+    """A batch hook's runs: one DataFrame per relation (``{relation:
+    df}``), the fields its manifest entry adds to ``{rid, gen}``
+    (``n_buckets`` at least), and whether each run is one task's write."""
+
+    frames: dict
+    entry: dict
+    single_task: bool = False
+
+
+class LsmStore:
+    """One stream's LSM state under ``state_dir``: a run root per
+    relation (``relations`` maps its dir name to its sort key) and a
+    manifest log.  Subclasses supply what differs between the streams:
+    ``head`` (the empty view, and the legacy-layout check), ``compact``,
+    ``payload`` and ``gc``; ``retain`` is the GC-live window k."""
+
+    relations: dict[str, str] = {}
+
+    def __init__(self, state_dir: str, fs, max_runs: int, retain: int = 1):
+        if max_runs < 1:
+            raise ValueError("max_runs must be >= 1")
+        self.state_dir = state_dir
+        self.fs = fs or LocalFS()
+        self.log = ManifestLog(self.fs, state_dir)
+        self.max_runs = max_runs
+        self.retain = retain
+
+    def root(self, relation: str) -> str:
+        return os.path.join(self.state_dir, relation)
+
+    def head(self) -> dict:
+        """The newest committed manifest payload."""
+        raise NotImplementedError
+
+    def compact(self, view: dict, folded: list[dict]) -> dict:
+        """``view`` with the ``folded`` runs merged, written but not
+        committed; it reads only immutable listed inputs, so a replay
+        recomputes it."""
+        raise NotImplementedError
+
+    def payload(self, view: dict, batch_id: int) -> dict:
+        """What batch ``batch_id``'s manifest records for ``view``."""
+        return view
+
+    def gc(self) -> set:
+        """Delete every run dir the newest ``retain`` valid manifests do
+        not list; returns the bases they list."""
+        live_runs, live_bases = gc_live(self.log, self.retain)
+        gc_runs(self.fs, [self.root(r) for r in self.relations], live_runs)
+        return live_bases
+
+
+def write_batch(store: LsmStore, runs: BatchRuns, batch_id: int, prev: dict) -> dict:
+    """Write batch ``batch_id``'s run of every relation onto ``prev``
+    (``state_before`` the head) and record its entry by the commit rule,
+    then compact once the selection picks runs.  A run whose dirs hold
+    no data file changed nothing and has no schema to read back, so it
+    is not recorded.  Returns the view, NOT yet committed."""
+    entry = {"rid": int(batch_id), "gen": 0, **runs.entry}
+    has_data = False
+    for rel, df in runs.frames.items():
+        root = store.root(rel)
+        write_run(
+            df, root, batch_id, store.relations[rel], int(entry["n_buckets"]),
+            single_task=runs.single_task,
+        )
+        has_data = has_data or any(
+            not n.startswith(("_", ".")) for n in store.fs.list(run_dir(root, entry))
+        )
+    view = {**prev, "runs": with_run(prev["runs"], entry) if has_data else prev["runs"]}
+    folded = runs_to_fold(view["runs"], store.max_runs)
+    return store.compact(view, folded) if folded else view
+
+
+def commit_batch(store: LsmStore, view: dict, batch_id: int) -> None:
+    """Publish ``view`` as batch ``batch_id``'s one manifest, then GC."""
+    store.log.commit(store.payload(view, batch_id))
+    store.gc()
+
+
+def run_lsm_stream(
+    store: LsmStore,
+    stream: DataFrame,
+    checkpoint_dir: str,
+    hook,
+    emit_dir: str | None = None,
+) -> None:
+    """Drain ``stream`` through the shared availableNow loop, one batch
+    at a time in one order: ``prev = state_before(head, b)``; ``with
+    hook(batch_df, b, prev) as (runs, emit)``; ``write_batch`` (runs,
+    then any compaction); ``write_emission(emit(view))`` over
+    ``emit_dir/batch_id=<b>`` while the view holds state (``emit`` is
+    None when the stream emits nothing); and ``commit_batch`` LAST.  A
+    crash anywhere before the commit leaves the prior manifest intact,
+    and the replay overwrites every dir the attempt wrote.  The hook is
+    a context manager so it can hold per-batch caches until the
+    driver's writes are done.  ``emit_dir`` is created up front, so a
+    finalize reads it with a known schema even when nothing was
+    emitted."""
+    if emit_dir is not None:
+        os.makedirs(emit_dir, exist_ok=True)
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        prev = state_before(store.head(), batch_id)
+        with hook(batch_df, batch_id, prev) as (runs, emit):
+            view = write_batch(store, runs, batch_id, prev)
+            if emit is not None and (view.get("base") is not None or view["runs"]):
+                write_emission(emit(view), emit_dir, batch_id)
+            commit_batch(store, view, batch_id)
+
+    run_available_now(stream, checkpoint_dir, _apply, output_mode="update")

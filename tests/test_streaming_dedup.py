@@ -19,15 +19,13 @@ from pyspark.sql import functions as F
 from mysql_cdc_redis_spark.operators.dedup import minhash_lsh_pairs
 from mysql_cdc_redis_spark.plans.streaming_queries import _tmp  # removed at exit
 from mysql_cdc_redis_spark.sources import load_table
-from mysql_cdc_redis_spark.streaming import (
-    compact_lsh_state,
-    run_dedup_stream_minhash,
-)
+from mysql_cdc_redis_spark.streaming import run_dedup_stream_minhash
+from mysql_cdc_redis_spark.streaming import dedup_stream as ds
 from mysql_cdc_redis_spark.streaming.changelog_files import stage_changelog_files
-from mysql_cdc_redis_spark.streaming.commitlog import LocalFS
-from mysql_cdc_redis_spark.streaming.dedup_stream import _load_state
+from mysql_cdc_redis_spark.streaming.commitlog import LocalFS, ManifestLog
+from mysql_cdc_redis_spark.streaming.runstore import run_dir
 
-from .fs_double import HostileFS, InjectedCrash
+from .fs_double import HostileFS
 
 FS_BACKENDS = [LocalFS, HostileFS]
 
@@ -38,16 +36,49 @@ def _pairs(df):
     )
 
 
-def _run(spark, source_dir, schema, dirs=None, **kw):
-    dirs = dirs or {
-        "checkpoint_dir": _tmp("dstream_ckpt"),
-        "state_dir": _tmp("dstream_state"),
-        "pairs_dir": _tmp("dstream_pairs"),
+def _dirs(tag: str = "dstream") -> dict:
+    return {
+        "checkpoint_dir": _tmp(f"{tag}_ckpt"),
+        "state_dir": _tmp(f"{tag}_state"),
+        "pairs_dir": _tmp(f"{tag}_pairs"),
     }
+
+
+def _run(spark, source_dir, schema, dirs=None, **kw):
+    dirs = dirs or _dirs()
     out = run_dedup_stream_minhash(
         spark, source_dir, schema, max_files_per_trigger=1, **dirs, **kw
     )
     return out, dirs
+
+
+def _head(dirs) -> dict:
+    """The state's newest committed manifest payload."""
+    return ManifestLog(LocalFS(), dirs["state_dir"]).head()[1]
+
+
+def _add_chunks(df, src: str, n_chunks: int = 1) -> None:
+    """Stage ``df`` as ``n_chunks`` more (newest) files of ``src``."""
+    stage = f"{src}_more"
+    stage_changelog_files(df, stage, n_chunks=n_chunks, key_col="doc_id")
+    now = time.time()
+    for i, f in enumerate(sorted(os.listdir(stage))):
+        dst = os.path.join(src, f"more-{now:.0f}-{f}")
+        shutil.move(os.path.join(stage, f), dst)
+        os.utime(dst, (now + i, now + i))
+    shutil.rmtree(stage)
+
+
+def _on_disk(dirs, rel: str) -> set[tuple[int, int]]:
+    """The ``(gen, rid)`` of every run dir of relation ``rel``."""
+    root = os.path.join(dirs["state_dir"], rel)
+    return {
+        (int(g.split("=", 1)[1]), int(r.split("=", 1)[1]))
+        for g in os.listdir(root)
+        if g.startswith("gen=")
+        for r in os.listdir(os.path.join(root, g))
+        if r.startswith("ingest_id=")
+    }
 
 
 def _cleanup(*paths):
@@ -96,7 +127,6 @@ def test_stream_dedup_probe_footprint_overflow_falls_back_to_buckets(spark):
     bucket_of expression the writes use."""
     from pyspark.sql import functions as F  # noqa: F811
 
-    from mysql_cdc_redis_spark.streaming import dedup_stream as ds
     from mysql_cdc_redis_spark.streaming.runstore import bucket_of
 
     big = spark.range(ds._KEY_PUSH_CAP + 200).select(
@@ -152,14 +182,7 @@ def test_stream_dedup_checkpoint_resume_midway(spark, sf_dir, fs_cls):
     )
 
     # append the second half as later-mtime files, same checkpoint
-    tmp = f"{src}/_stage_x"
-    second.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    dst = f"{src}/chunk-9999.parquet"
-    shutil.move(f"{tmp}/{part}", dst)
-    shutil.rmtree(tmp)
-    os.utime(dst, (time.time(), time.time()))
-
+    _add_chunks(second, src)
     out2, _ = _run(spark, src, docs.schema, dirs=dirs, fs=fs_cls())
     assert _pairs(out2) == _pairs(
         minhash_lsh_pairs(docs, n=3, k=16, bands=4, threshold=0.2)
@@ -189,15 +212,12 @@ def test_stream_dedup_crashed_partial_run_is_replaced(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     src = _tmp("dstream_crash_src")
     stage_changelog_files(docs, src, n_chunks=1, key_col="doc_id")
-    dirs = {
-        "checkpoint_dir": _tmp("dstream_crash_ckpt"),
-        "state_dir": _tmp("dstream_crash_state"),
-        "pairs_dir": _tmp("dstream_crash_pairs"),
-    }
+    dirs = _dirs("dstream_crash")
     # partial state/pairs from a "crashed attempt" of batch 0 — at the
-    # locations the CURRENT writer claims (gen=0/ingest_id=0; the
-    # root-level ingest_id= location is the retired legacy layout,
-    # which _load_state now rejects loudly — tested separately)
+    # locations the CURRENT writer claims (gen=0/ingest_id=0 runs and a
+    # batch_id=0 pairs partition; the root-level ingest_id= run location
+    # and ingest_id= pairs partitions are retired layouts, which the
+    # store rejects loudly — tested separately)
     junk_sig = spark.createDataFrame(
         [(999_999_999, 0, "deadbeef")], "doc_id long, band int, bkey string"
     )
@@ -209,7 +229,7 @@ def test_stream_dedup_crashed_partial_run_is_replaced(spark, sf_dir):
     ).write.parquet(os.path.join(dirs["state_dir"], "sh", "gen=0", "ingest_id=0"))
     spark.createDataFrame(
         [(1, 2, 0.999999)], "a long, b long, jaccard double"
-    ).write.parquet(os.path.join(dirs["pairs_dir"], "ingest_id=0"))
+    ).write.parquet(os.path.join(dirs["pairs_dir"], "batch_id=0"))
 
     out, _ = _run(spark, src, docs.schema, dirs=dirs)
     got = _pairs(out)
@@ -220,49 +240,33 @@ def test_stream_dedup_crashed_partial_run_is_replaced(spark, sf_dir):
 
 
 def test_stream_dedup_lsm_compaction_preserves_results(spark, sf_dir):
-    """compact_lsh_state merges the runs without changing what later
-    batches see: ingest half, compact, ingest the rest — final pairs
+    """The mid-stream compaction merges the runs without changing what
+    later batches see: ingest half in three batches at max_runs=2 (batch
+    2 folds runs 0-1 before its commit), then the rest — final pairs
     still equal the full-corpus batch run, and each state relation is
-    down to a single run before the second ingest."""
+    down to the merged run plus the newest before the second ingest."""
     docs = load_table(spark, sf_dir, "documents")
     first = docs.filter(F.col("doc_id") % 2 == 0)
     second = docs.filter(F.col("doc_id") % 2 == 1)
     src = _tmp("dstream_lsm_src")
     stage_changelog_files(first, src, n_chunks=3, key_col="doc_id")
-    out1, dirs = _run(spark, src, docs.schema)
+    out1, dirs = _run(spark, src, docs.schema, max_runs=2)
     out1.count()  # drain
 
-    assert compact_lsh_state(spark, dirs["state_dir"])
     # merged run at the second-highest id + the preserved newest run
     # (the possibly-replayable one is never a compaction target).  GC
     # is retention-lagged (round-8 verdict #4): the LIVE set is the two
     # manifest runs, which must both be on disk; superseded runs may
     # linger until they age out of the retention window — that is the
     # reader-snapshot contract, tested separately below.
-    state = _load_state(dirs["state_dir"], LocalFS())
-    assert len(state["runs"]) == 2, state["runs"]
-    assert state["runs"][0]["gen"] > state["runs"][1]["gen"]  # merged is fresh-gen
+    state = _head(dirs)
+    assert [(r["gen"], r["rid"]) for r in state["runs"]] == [(1, 1), (0, 2)]
     for rel in ("sig", "sh"):
-        root = os.path.join(dirs["state_dir"], rel)
-        on_disk = {
-            (int(g.split("=", 1)[1]), int(r.split("=", 1)[1]))
-            for g in os.listdir(root)
-            if g.startswith("gen=")
-            for r in os.listdir(os.path.join(root, g))
-            if r.startswith("ingest_id=")
-        }
         live = {(int(r["gen"]), int(r["rid"])) for r in state["runs"]}
-        assert live <= on_disk, (rel, live, on_disk)
+        assert live <= _on_disk(dirs, rel), (rel, live, _on_disk(dirs, rel))
 
-    tmp = f"{src}/_stage_x"
-    second.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    dst = f"{src}/chunk-9999.parquet"
-    shutil.move(f"{tmp}/{part}", dst)
-    shutil.rmtree(tmp)
-    os.utime(dst, (time.time(), time.time()))
-
-    out2, _ = _run(spark, src, docs.schema, dirs=dirs)
+    _add_chunks(second, src)
+    out2, _ = _run(spark, src, docs.schema, dirs=dirs, max_runs=2)
     assert _pairs(out2) == _pairs(
         minhash_lsh_pairs(docs, n=3, k=16, bands=4, threshold=0.2)
     )
@@ -345,12 +349,7 @@ def test_stream_dedup_probe_reads_only_touched_buckets(spark, sf_dir):
     assert n_corrupted > 0, "vacuous: the batch touched every bucket"
 
     # ingest the probe doc: must succeed despite the corruption...
-    tmp = f"{src}/_stage_x"
-    second.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    shutil.move(f"{tmp}/{part}", f"{src}/chunk-9999.parquet")
-    shutil.rmtree(tmp)
-    os.utime(f"{src}/chunk-9999.parquet", (time.time(), time.time()))
+    _add_chunks(second, src)
     out2, _ = _run(spark, src, docs.schema, dirs=dirs, n_buckets=n_buckets)
     got = _pairs(out2)
     # ...and emit every expected pair involving the probe doc
@@ -368,30 +367,25 @@ def test_stream_dedup_auto_compaction_bounds_runs(spark, sf_dir):
     """A long-lived ingest loop must not grow the LSM forever — and
     compaction must fire MID-STREAM (round-8 verdict #5: a 24/7
     blocking=True trickle stream never drains, so a drain-only trigger
-    would grow its run count without bound).  With auto_compact_runs=2
-    and 5 one-file batches, the run count after batch 2 exceeds the
-    bound, so compaction MUST fire inside the foreachBatch loop more
-    than once: every retained manifest stays ≤ bound+1 runs, the merged
-    run's generation counts multiple compactions, and parity holds."""
-    from mysql_cdc_redis_spark.streaming.commitlog import ManifestLog
-
+    would grow its run count without bound).  With max_runs=2 and 5
+    one-file batches, batches 2-4 each fold every run but their own
+    before their one commit: 5 batches commit 5 manifests, no manifest
+    ever lists more than max_runs runs, the merged run's generation
+    counts multiple compactions, and parity holds."""
     docs = load_table(spark, sf_dir, "documents")
     src = _tmp("dstream_auto_src")
     stage_changelog_files(docs, src, n_chunks=5, key_col="doc_id")
-    out, dirs = _run(spark, src, docs.schema, auto_compact_runs=2)
+    out, dirs = _run(spark, src, docs.schema, max_runs=2)
     assert _pairs(out) == _pairs(
         minhash_lsh_pairs(docs, n=3, k=16, bands=4, threshold=0.2)
     )
-    state = _load_state(dirs["state_dir"], LocalFS())
+    state = _head(dirs)
     assert len(state["runs"]) == 2
     # the run count was bounded THROUGHOUT the stream, not just at the
-    # end: no committed manifest ever listed more than bound+1 runs
-    # (bound+1 is the instant the over-bound batch commits, before its
-    # own safe-point compaction folds it)
-    log = ManifestLog(LocalFS(), dirs["state_dir"])
-    history = log.recent(1_000)
-    assert len(history) >= 8  # 5 batch commits + >=3 compaction commits
-    assert max(len(p["runs"]) for _v, p in history) <= 3
+    # end, and each batch committed exactly one manifest
+    history = ManifestLog(LocalFS(), dirs["state_dir"]).recent(1_000)
+    assert len(history) == 5
+    assert max(len(p["runs"]) for _v, p in history) <= 2
     # >=2 generations of merged runs = compaction fired mid-stream
     # (a single drain-time pass could only ever reach gen 1)
     assert max(int(r["gen"]) for r in state["runs"]) >= 2, state["runs"]
@@ -399,120 +393,125 @@ def test_stream_dedup_auto_compaction_bounds_runs(spark, sf_dir):
 
 
 def test_stream_dedup_compaction_safe_under_checkpoint_replay(spark, sf_dir):
-    """The round-6 advice scenario: the stream's LAST batch committed
-    its state meta but crashed BEFORE the checkpoint commit (simulated
-    by deleting the checkpoint's newest commit file).  A compaction run
-    in that window must not merge the replayable batch away — the
-    restarted stream replays it, and the final pair set must still
-    telescope to the batch oracle with no state loss."""
+    """The round-6 advice scenario: the stream's LAST batch compacted and
+    committed its state manifest but crashed BEFORE the checkpoint
+    commit (simulated by deleting the checkpoint's newest commit file).
+    The restarted stream replays it from the runs before it — the merged
+    run, never its own — and the final pair set must still telescope to
+    the batch oracle with no state loss."""
     docs = load_table(spark, sf_dir, "documents")
     src = _tmp("dstream_replay_src")
     stage_changelog_files(docs, src, n_chunks=3, key_col="doc_id")
-    out1, dirs = _run(spark, src, docs.schema, auto_compact_runs=None)
+    out1, dirs = _run(spark, src, docs.schema, max_runs=2)
     out1.count()
+    compacted = _head(dirs)
+    assert [(r["gen"], r["rid"]) for r in compacted["runs"]] == [(1, 1), (0, 2)]
 
     commits = os.path.join(dirs["checkpoint_dir"], "commits")
     newest = max((f for f in os.listdir(commits) if f.isdigit()), key=int)
-    os.remove(os.path.join(commits, newest))  # batch `newest` will replay
+    assert newest == "2"
+    os.remove(os.path.join(commits, newest))  # batch 2 will replay
     crc = os.path.join(commits, f".{newest}.crc")  # hadoop checksum sidecar
     if os.path.exists(crc):
         os.remove(crc)
 
-    assert compact_lsh_state(spark, dirs["state_dir"])
-    out2, _ = _run(spark, src, docs.schema, dirs=dirs, auto_compact_runs=None)
+    out2, _ = _run(spark, src, docs.schema, dirs=dirs, max_runs=2)
     assert _pairs(out2) == _pairs(
         minhash_lsh_pairs(docs, n=3, k=16, bands=4, threshold=0.2)
     )
+    assert _head(dirs)["runs"] == compacted["runs"]
     _cleanup(src, *dirs.values())
 
 
 def test_stream_dedup_compaction_torn_manifest_commit_recovers(spark, sf_dir):
-    """The commit-layer crash window: the compaction wrote its merged
-    run but DIED mid-manifest-PUT (torn object).  The torn manifest
-    self-invalidates, so the state reads as pre-compaction (old runs
-    intact, merged dir = invisible garbage); a later compaction and a
-    later stream run must both proceed to the full correct result."""
+    """The commit-layer crash window: the compacting batch wrote its
+    merged run but DIED mid-manifest-PUT (torn object).  The torn
+    manifest self-invalidates, so the state reads as pre-batch (old runs
+    intact, merged dir = invisible garbage); the restart replays the
+    batch and proceeds to the full correct result."""
     docs = load_table(spark, sf_dir, "documents")
     src = _tmp("dstream_torn_src")
     stage_changelog_files(docs, src, n_chunks=3, key_col="doc_id")
-    out1, dirs = _run(spark, src, docs.schema, auto_compact_runs=None)
-    out1.count()
-    before = _load_state(dirs["state_dir"], LocalFS())
-
+    dirs = _dirs("dstream_torn")
     fs = HostileFS()
-    fs.arm_tear_write()  # the compaction's only fs write IS the commit
-    with pytest.raises(InjectedCrash):
-        compact_lsh_state(spark, dirs["state_dir"], fs=fs)
-    # the transition never happened: state is byte-identical
-    assert _load_state(dirs["state_dir"], LocalFS()) == before
+    fs.tear_write_at = 3  # batches 0-1 commit; batch 2 compacts, then its commit tears
+    with pytest.raises(Exception):  # surfaces as a StreamingQueryException
+        _run(spark, src, docs.schema, dirs=dirs, max_runs=2, fs=fs)
+    # the transition never happened: runs 0-1 are live, the merged run
+    # is on disk but unlisted
+    assert [(r["gen"], r["rid"]) for r in _head(dirs)["runs"]] == [(0, 0), (0, 1)]
+    assert (1, 1) in _on_disk(dirs, "sig")
 
     fs.disarm()
-    assert compact_lsh_state(spark, dirs["state_dir"], fs=fs)
-    assert len(_load_state(dirs["state_dir"], LocalFS())["runs"]) == 2
-    out2, _ = _run(spark, src, docs.schema, dirs=dirs, auto_compact_runs=None)
+    out2, _ = _run(spark, src, docs.schema, dirs=dirs, max_runs=2, fs=fs)
+    assert [(r["gen"], r["rid"]) for r in _head(dirs)["runs"]] == [(1, 1), (0, 2)]
     assert _pairs(out2) == _pairs(
         minhash_lsh_pairs(docs, n=3, k=16, bands=4, threshold=0.2)
     )
     _cleanup(src, *dirs.values())
 
 
-def test_stream_dedup_compaction_crash_mid_gc_recovers(spark, sf_dir):
-    """GC is off the correctness path: a compaction that committed its
-    manifest but died HALFWAY through deleting superseded run dirs must
-    leave a fully consistent state — garbage is invisible to readers
-    and cleared by the next compaction pass."""
+def test_stream_dedup_compaction_crash_mid_gc_recovers(spark, sf_dir, monkeypatch):
+    """GC is off the correctness path: a compacting batch that committed
+    its manifest but died HALFWAY through deleting superseded run dirs
+    must leave a fully consistent state — garbage is invisible to
+    readers and cleared by the replay's GC."""
+    # a one-manifest window, so the compacting batch's GC has something
+    # to delete in this short lifecycle (the retention contract itself
+    # is tested separately)
+    monkeypatch.setattr(ds, "_GC_RETAIN_MANIFESTS", 1)
     docs = load_table(spark, sf_dir, "documents")
     src = _tmp("dstream_gc_src")
     stage_changelog_files(docs, src, n_chunks=3, key_col="doc_id")
-    out1, dirs = _run(spark, src, docs.schema, auto_compact_runs=None)
-    out1.count()
-
+    dirs = _dirs("dstream_gc")
     fs = HostileFS()
-    fs.arm_crash_delete()  # first post-commit GC delete dies halfway
-    # gc_retain_manifests=1 collapses the retention window so the
-    # post-commit GC has something to delete in this short lifecycle
-    # (the retention contract itself is tested separately)
-    with pytest.raises(InjectedCrash):
-        compact_lsh_state(spark, dirs["state_dir"], fs=fs, gc_retain_manifests=1)
+    fs.arm_crash_delete()  # batch 2's first GC delete (run 0) dies halfway
+    with pytest.raises(Exception):
+        _run(spark, src, docs.schema, dirs=dirs, max_runs=2, fs=fs)
     # the commit preceded GC: the compacted state is already live
-    state = _load_state(dirs["state_dir"], LocalFS())
-    assert len(state["runs"]) == 2
+    assert [(r["gen"], r["rid"]) for r in _head(dirs)["runs"]] == [(1, 1), (0, 2)]
+    assert (0, 0) in _on_disk(dirs, "sig"), "crash must leave run 0 half-deleted"
 
     fs.disarm()
-    out2, _ = _run(spark, src, docs.schema, dirs=dirs, auto_compact_runs=None, fs=fs)
+    out2, _ = _run(spark, src, docs.schema, dirs=dirs, max_runs=2, fs=fs)
     assert _pairs(out2) == _pairs(
         minhash_lsh_pairs(docs, n=3, k=16, bands=4, threshold=0.2)
     )
+    for rel in ("sig", "sh"):
+        assert _on_disk(dirs, rel) == {(1, 1), (0, 2)}, rel
     _cleanup(src, *dirs.values())
 
 
 def test_stream_dedup_reader_snapshot_survives_compaction(spark, sf_dir):
     """Round-8 verdict #4: a reader that planned its scan from the
-    pre-compaction manifest must COMPLETE that scan after a concurrent
-    compaction commits and garbage-collects — retention-lagged GC keeps
+    pre-compaction manifest must COMPLETE that scan after a later batch
+    compacts, commits and garbage-collects — retention-lagged GC keeps
     every directory any of the newest _GC_RETAIN_MANIFESTS manifests
     references.  (Immediate GC failed exactly this: the planned file
     list pointed at deleted runs.)"""
-    from mysql_cdc_redis_spark.streaming.runstore import run_dir
-
     docs = load_table(spark, sf_dir, "documents")
+    first = docs.filter(F.col("doc_id") % 3 != 0)
+    second = docs.filter(F.col("doc_id") % 3 == 0)
     src = _tmp("dstream_snap_src")
-    stage_changelog_files(docs, src, n_chunks=3, key_col="doc_id")
-    out1, dirs = _run(spark, src, docs.schema, auto_compact_runs=None)
+    stage_changelog_files(first, src, n_chunks=2, key_col="doc_id")
+    out1, dirs = _run(spark, src, docs.schema, max_runs=2)
     out1.count()
 
     # the reader: plan (lazily) a full scan of the sig relation from
     # the CURRENT manifest's explicit run list — the engine's own read
     # idiom — and record what it should see
-    state_v_n = _load_state(dirs["state_dir"], LocalFS())
+    state_v_n = _head(dirs)
     sig_root = os.path.join(dirs["state_dir"], "sig")
     planned = spark.read.option("basePath", sig_root).parquet(
         *[run_dir(sig_root, r) for r in state_v_n["runs"]]
     )
     expected_rows = sum(4 * r["n_docs"] for r in state_v_n["runs"])  # 4 bands/doc
 
-    # the compactor commits vN+1 and GCs — with retention lag
-    assert compact_lsh_state(spark, dirs["state_dir"])
+    # batch 2 compacts runs 0-1, commits and GCs — with retention lag
+    _add_chunks(second, src)
+    out2, _ = _run(spark, src, docs.schema, dirs=dirs, max_runs=2)
+    out2.count()
+    assert _head(dirs)["runs"][0]["gen"] == 1
 
     # the vN reader still completes (files intact on disk)
     assert planned.count() == expected_rows
@@ -521,54 +520,28 @@ def test_stream_dedup_reader_snapshot_survives_compaction(spark, sf_dir):
 
 def test_stream_dedup_gc_eventually_reclaims_aged_out_runs(spark, sf_dir):
     """The flip side of the reader-snapshot grace: once a superseded
-    run falls out of the newest _GC_RETAIN_MANIFESTS manifests, the
-    next compaction pass reclaims its directory — retention is a LAG,
-    not a leak."""
+    run falls out of the newest _GC_RETAIN_MANIFESTS manifests, a later
+    batch's GC reclaims its directory — retention is a LAG, not a leak."""
     docs = load_table(spark, sf_dir, "documents")
     first = docs.filter(F.col("doc_id") % 2 == 0)
     second = docs.filter(F.col("doc_id") % 2 == 1)
     src = _tmp("dstream_reclaim_src")
     stage_changelog_files(first, src, n_chunks=3, key_col="doc_id")
-    out1, dirs = _run(spark, src, docs.schema, auto_compact_runs=None)
+    out1, dirs = _run(spark, src, docs.schema, max_runs=2)
     out1.count()
-    gen0_runs = {
-        (r["gen"], r["rid"])
-        for r in _load_state(dirs["state_dir"], LocalFS())["runs"]
-    }
+    # batch 2 folded runs 0-1; within the retention window they stay
+    gen0_runs = {(0, 0), (0, 1)}
+    assert _head(dirs)["runs"][0]["gen"] == 1
+    assert gen0_runs <= _on_disk(dirs, "sig")
 
-    def on_disk(rel):
-        root = os.path.join(dirs["state_dir"], rel)
-        return {
-            (int(g.split("=", 1)[1]), int(r.split("=", 1)[1]))
-            for g in os.listdir(root)
-            if g.startswith("gen=")
-            for r in os.listdir(os.path.join(root, g))
-            if r.startswith("ingest_id=")
-        }
-
-    assert compact_lsh_state(spark, dirs["state_dir"])
-    # within the retention window: superseded gen-0 runs still on disk
-    assert gen0_runs <= on_disk("sig")
-
-    # age the superseded runs out of the window: more ingests + another
-    # compaction push >= _GC_RETAIN_MANIFESTS commits past them
-    tmp = f"{src}/_stage_x"
-    second.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    dst = f"{src}/chunk-9999.parquet"
-    shutil.move(f"{tmp}/{part}", dst)
-    shutil.rmtree(tmp)
-    os.utime(dst, (time.time(), time.time()))
-    out2, _ = _run(spark, src, docs.schema, dirs=dirs, auto_compact_runs=None)
+    # age the superseded runs out of the window: three more batches,
+    # each compacting, push >= _GC_RETAIN_MANIFESTS commits past them
+    _add_chunks(second, src, n_chunks=3)
+    out2, _ = _run(spark, src, docs.schema, dirs=dirs, max_runs=2)
     out2.count()
-    assert compact_lsh_state(spark, dirs["state_dir"])
-    assert compact_lsh_state(spark, dirs["state_dir"])
 
     # exactly the runs outside the CURRENT retention window must be
     # gone; anything a retained manifest still references must remain
-    from mysql_cdc_redis_spark.streaming import dedup_stream as ds
-    from mysql_cdc_redis_spark.streaming.commitlog import ManifestLog
-
     log = ManifestLog(LocalFS(), dirs["state_dir"])
     recent_live = {
         (int(r["gen"]), int(r["rid"]))
@@ -578,7 +551,8 @@ def test_stream_dedup_gc_eventually_reclaims_aged_out_runs(spark, sf_dir):
     reclaimable = gen0_runs - recent_live
     assert reclaimable, "vacuous: no gen-0 run aged out of the window"
     for rel in ("sig", "sh"):
-        assert not (on_disk(rel) & reclaimable), (rel, on_disk(rel), reclaimable)
+        assert not (_on_disk(dirs, rel) & reclaimable), (rel, reclaimable)
+        assert recent_live <= _on_disk(dirs, rel), rel
     # and parity survived the whole lifecycle
     assert _pairs(out2) == _pairs(
         minhash_lsh_pairs(docs, n=3, k=16, bands=4, threshold=0.2)
@@ -591,8 +565,13 @@ def test_stream_dedup_legacy_pre_manifest_state_rejected_loudly(spark, sf_dir):
     _meta.json/rename-based format has data but no manifest — reading
     it as EMPTY state would silently drop the accumulated corpus
     (probes against nothing, final read returns no pairs).  It must
-    raise with a migration hint instead, for both legacy markers."""
-    from mysql_cdc_redis_spark.streaming.dedup_stream import _load_state as _ls
+    raise with a migration hint instead, for both legacy markers.  A
+    pairs_dir holding an earlier version's ``ingest_id=`` pair
+    partitions is rejected by name too."""
+
+    def head(state_dir, pairs_dir=None):
+        pairs_dir = pairs_dir or _tmp("dstream_legacy_pairs")
+        return ds._LshState(spark, state_dir, pairs_dir, LocalFS(), 8).head()
 
     # marker 1: root-level _meta.json
     d1 = _tmp("dstream_legacy1")
@@ -600,18 +579,18 @@ def test_stream_dedup_legacy_pre_manifest_state_rejected_loudly(spark, sf_dir):
     with open(os.path.join(d1, "_meta.json"), "w") as f:
         f.write('{"runs": [0, 1]}')
     with pytest.raises(ValueError, match="pre-manifest"):
-        _ls(d1, LocalFS())
+        head(d1)
 
     # marker 2: sig/ingest_id=N runs without the gen= level
     d2 = _tmp("dstream_legacy2")
     os.makedirs(os.path.join(d2, "sig", "ingest_id=0"))
     with pytest.raises(ValueError, match="pre-manifest"):
-        _ls(d2, LocalFS())
+        head(d2)
 
     # a genuinely fresh dir still reads as empty state
     d3 = _tmp("dstream_legacy3")
     os.makedirs(d3)
-    assert _ls(d3, LocalFS()) == {"runs": [], "pair_ranges": []}
+    assert head(d3) == {"runs": [], "pair_ranges": []}
     # ...and the stream itself surfaces the legacy error, not empty output
     docs = load_table(spark, sf_dir, "documents")
     src = _tmp("dstream_legacy_src")
@@ -622,7 +601,16 @@ def test_stream_dedup_legacy_pre_manifest_state_rejected_loudly(spark, sf_dir):
             checkpoint_dir=_tmp("dstream_legacy_ckpt"),
             state_dir=d1, pairs_dir=_tmp("dstream_legacy_pairs"),
         )
-    _cleanup(d1, d2, d3, src)
+
+    # pairs partitions in the earlier ingest_id= layout
+    p_old = _tmp("dstream_legacy_pairs_old")
+    os.makedirs(os.path.join(p_old, "ingest_id=0"))
+    with pytest.raises(ValueError, match="ingest_id= pair partitions"):
+        run_dedup_stream_minhash(
+            spark, src, docs.schema,
+            checkpoint_dir=_tmp("dstream_legacy_ckpt2"), state_dir=d3, pairs_dir=p_old,
+        )
+    _cleanup(d1, d2, d3, src, p_old)
 
 
 def test_stream_dedup_batch_torn_manifest_commit_replays(spark, sf_dir):
@@ -634,18 +622,13 @@ def test_stream_dedup_batch_torn_manifest_commit_replays(spark, sf_dir):
     src = _tmp("dstream_bt_src")
     stage_changelog_files(docs, src, n_chunks=3, key_col="doc_id")
     fs2 = HostileFS()
-    dirs = {
-        "checkpoint_dir": _tmp("dstream_bt_ckpt"),
-        "state_dir": _tmp("dstream_bt_state"),
-        "pairs_dir": _tmp("dstream_bt_pairs"),
-    }
+    dirs = _dirs("dstream_bt")
     fs2.tear_write_at = 2  # batch 0 commits (write 1); batch 1 tears
     with pytest.raises(Exception):  # surfaces as a StreamingQueryException
         run_dedup_stream_minhash(
             spark, src, docs.schema, max_files_per_trigger=1, **dirs, fs=fs2
         )
-    state_mid = _load_state(dirs["state_dir"], LocalFS())
-    assert [r["rid"] for r in state_mid["runs"]] == [0]  # batch 1 never committed
+    assert [r["rid"] for r in _head(dirs)["runs"]] == [0]  # batch 1 never committed
 
     fs2.disarm()
     out = run_dedup_stream_minhash(
@@ -665,8 +648,6 @@ def test_stream_dedup_large_batch_writes_proportionally_more_buckets(
     in the manifest), and the next batch's probe — computed at the new
     larger modulus, projected onto every run — must still telescope to
     the batch oracle."""
-    from mysql_cdc_redis_spark.streaming import dedup_stream as ds
-
     monkeypatch.setattr(ds, "_DOCS_PER_BUCKET", 100)
     docs = load_table(spark, sf_dir, "documents")
     first = docs.filter(F.col("doc_id") % 2 == 0)
@@ -675,25 +656,16 @@ def test_stream_dedup_large_batch_writes_proportionally_more_buckets(
     assert n_first > 200  # enough to outgrow the floor at 100 docs/bucket
     src = _tmp("dstream_big_src")
     stage_changelog_files(first, src, n_chunks=1, key_col="doc_id")
-    out1, dirs = _run(
-        spark, src, docs.schema, n_buckets=2, auto_compact_runs=None
-    )
+    out1, dirs = _run(spark, src, docs.schema, n_buckets=2)
     out1.count()
-    state = _load_state(dirs["state_dir"], LocalFS())
+    state = _head(dirs)
     m = state["runs"][0]["n_buckets"]
     want = 1 << ((-(-n_first // 100)) - 1).bit_length()
     assert m == max(2, want) and m > 2, state["runs"]
 
-    tmp = f"{src}/_stage_x"
-    second.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    dst = f"{src}/chunk-9999.parquet"
-    shutil.move(f"{tmp}/{part}", dst)
-    shutil.rmtree(tmp)
-    os.utime(dst, (time.time(), time.time()))
+    _add_chunks(second, src)
     out2, _ = _run(
-        spark, src, docs.schema, dirs=dirs, n_buckets=2,
-        auto_compact_runs=None, prune_min_state_ratio=0.0,
+        spark, src, docs.schema, dirs=dirs, n_buckets=2, prune_min_state_ratio=0.0,
     )
     assert _pairs(out2) == _pairs(
         minhash_lsh_pairs(docs, n=3, k=16, bands=4, threshold=0.2)
@@ -701,40 +673,34 @@ def test_stream_dedup_large_batch_writes_proportionally_more_buckets(
     _cleanup(src, *dirs.values())
 
 
-def test_stream_dedup_compaction_rebuckets_when_state_outgrows_layout(spark, sf_dir):
+def test_stream_dedup_compaction_rebuckets_when_state_outgrows_layout(
+    spark, sf_dir, monkeypatch
+):
     """Round-7 advice #4: compaction re-sizes the merged run's bucket
-    modulus from its actual bytes.  With a tiny target_bucket_bytes the
+    modulus from its actual bytes.  With a tiny _TARGET_BUCKET_BYTES the
     merged run must come out with MORE (power-of-two) buckets than the
     ingest runs' 16, new ingest runs keep their own modulus, and the
     mixed-moduli probe still telescopes to the batch oracle."""
+    monkeypatch.setattr(ds, "_TARGET_BUCKET_BYTES", 4096)
     docs = load_table(spark, sf_dir, "documents")
     first = docs.filter(F.col("doc_id") % 2 == 0)
     second = docs.filter(F.col("doc_id") % 2 == 1)
     src = _tmp("dstream_rb_src")
     stage_changelog_files(first, src, n_chunks=3, key_col="doc_id")
-    out1, dirs = _run(spark, src, docs.schema, auto_compact_runs=None)
+    out1, dirs = _run(spark, src, docs.schema, max_runs=2)  # batch 2 compacts
     out1.count()
 
-    assert compact_lsh_state(spark, dirs["state_dir"], target_bucket_bytes=4096)
-    state = _load_state(dirs["state_dir"], LocalFS())
+    state = _head(dirs)
     merged = min(state["runs"], key=lambda r: r["rid"])
     m = merged["n_buckets"]
-    assert m > 16 and (m & (m - 1)) == 0, state["runs"]
-
-    tmp = f"{src}/_stage_x"
-    second.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    dst = f"{src}/chunk-9999.parquet"
-    shutil.move(f"{tmp}/{part}", dst)
-    shutil.rmtree(tmp)
-    os.utime(dst, (time.time(), time.time()))
+    assert merged["gen"] == 1 and m > 16 and (m & (m - 1)) == 0, state["runs"]
 
     # force the PRUNED probe across the re-bucketed state: the footprint
     # at the (larger) merged modulus must project exactly onto both
-    out2, _ = _run(
-        spark, src, docs.schema, dirs=dirs, auto_compact_runs=None,
-        prune_min_state_ratio=0.0,
-    )
+    # (the default max_runs keeps the new run beside the merged one)
+    _add_chunks(second, src)
+    out2, _ = _run(spark, src, docs.schema, dirs=dirs, prune_min_state_ratio=0.0)
+    assert {r["n_buckets"] for r in _head(dirs)["runs"]} == {m, 16}
     assert _pairs(out2) == _pairs(
         minhash_lsh_pairs(docs, n=3, k=16, bands=4, threshold=0.2)
     )
@@ -749,8 +715,6 @@ def test_stream_dedup_mega_batch_path_drops_broadcast_and_agrees(
     Monkeypatching the cap to 1 forces every batch onto the mega-batch
     plan; the pair set must still telescope to the batch oracle (the
     broadcast is a strategy hint, never semantics)."""
-    from mysql_cdc_redis_spark.streaming import dedup_stream as ds
-
     monkeypatch.setattr(ds, "_BROADCAST_DOC_CAP", 1)
     docs = load_table(spark, sf_dir, "documents")
     expected = _pairs(minhash_lsh_pairs(docs, n=3, k=16, bands=4, threshold=0.2))
@@ -768,8 +732,6 @@ def test_stream_dedup_grand_composition(spark, sf_dir, monkeypatch):
     size-based re-bucket), forced pruned probes across the mixed
     layout, and a checkpoint resume — the final pair set must still
     telescope to the one-shot batch oracle."""
-    from mysql_cdc_redis_spark.streaming import dedup_stream as ds
-
     monkeypatch.setattr(ds, "_DOCS_PER_BUCKET", 64)
     docs = load_table(spark, sf_dir, "documents")
     first = docs.filter(F.col("doc_id") % 3 != 0)
@@ -777,32 +739,21 @@ def test_stream_dedup_grand_composition(spark, sf_dir, monkeypatch):
     src = _tmp("dstream_grand_src")
     stage_changelog_files(first, src, n_chunks=3, key_col="doc_id")
     fs = HostileFS()
-    dirs = {
-        "checkpoint_dir": _tmp("dstream_grand_ckpt"),
-        "state_dir": _tmp("dstream_grand_state"),
-        "pairs_dir": _tmp("dstream_grand_pairs"),
-    }
+    dirs = _dirs("dstream_grand")
     out1 = run_dedup_stream_minhash(
         spark, src, docs.schema, max_files_per_trigger=1, **dirs,
-        n_buckets=2, auto_compact_runs=2, prune_min_state_ratio=0.0, fs=fs,
+        n_buckets=2, max_runs=2, prune_min_state_ratio=0.0, fs=fs,
     )
     out1.count()
-    state = _load_state(dirs["state_dir"], LocalFS())
+    state = _head(dirs)
     assert len(state["runs"]) == 2  # auto-compacted
     moduli = {r["n_buckets"] for r in state["runs"]}
     assert all(m & (m - 1) == 0 for m in moduli)
 
-    tmp = f"{src}/_stage_x"
-    second.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    dst = f"{src}/chunk-9999.parquet"
-    shutil.move(f"{tmp}/{part}", dst)
-    shutil.rmtree(tmp)
-    os.utime(dst, (time.time(), time.time()))
-
+    _add_chunks(second, src)
     out2 = run_dedup_stream_minhash(
         spark, src, docs.schema, max_files_per_trigger=1, **dirs,
-        n_buckets=2, auto_compact_runs=2, prune_min_state_ratio=0.0, fs=fs,
+        n_buckets=2, max_runs=2, prune_min_state_ratio=0.0, fs=fs,
     )
     assert _pairs(out2) == _pairs(
         minhash_lsh_pairs(docs, n=3, k=16, bands=4, threshold=0.2)
@@ -821,7 +772,7 @@ def test_stream_dedup_uncommitted_pairs_partition_is_invisible(spark, sf_dir):
     out1, dirs = _run(spark, src, docs.schema)
     expected = _pairs(out1)
 
-    junk = os.path.join(dirs["pairs_dir"], "ingest_id=9999")
+    junk = os.path.join(dirs["pairs_dir"], "batch_id=9999")
     os.makedirs(junk)
     with open(os.path.join(junk, "part-00000.parquet"), "wb") as f:
         f.write(b"\x00not parquet at all\x00")

@@ -36,7 +36,12 @@ from mysql_cdc_redis_spark.streaming import (
     run_compaction_stream_jvm,
 )
 from mysql_cdc_redis_spark.streaming.changelog_files import stage_changelog_files
-from mysql_cdc_redis_spark.streaming.runstore import run_dir
+from mysql_cdc_redis_spark.streaming.runstore import (
+    BatchRuns,
+    commit_batch,
+    run_dir,
+    write_batch,
+)
 
 
 def _rows(df, cols):
@@ -50,6 +55,11 @@ def _run(rid: int) -> dict:
 
 def _run_path(slots, rid: int) -> str:
     return run_dir(slots.runs_root, _run(rid))
+
+
+def _append(slots, delta, batch_id: int, prev: dict) -> dict:
+    """The shared ``write_batch`` step for a one-bucket JVM run."""
+    return write_batch(slots, BatchRuns({"runs": delta}, {"n_buckets": 1}), batch_id, prev)
 
 
 def _append_chunk(df, src_dir: str, name: str) -> None:
@@ -289,7 +299,7 @@ def test_jvm_retry_is_deterministic(spark, sf_dir):
     when the first attempt compacted."""
     from mysql_cdc_redis_spark.streaming.compact_jvm import (
         _StateRuns,
-        fold_transition_state,
+        _transition_fold,
         keyed_transitions,
     )
     from mysql_cdc_redis_spark.streaming.runstore import state_before
@@ -300,34 +310,27 @@ def test_jvm_retry_is_deterministic(spark, sf_dir):
     state_dir = _tmp("jvm_retry_state")
     pk, payload = ORDERS_PK, ORDERS_PAYLOAD
     # max_runs=1 → batch 1 triggers a compaction, the risky replay path
-    slots = _StateRuns(spark, state_dir, max_runs=1)
-
-    def fold(base, runs, buckets=None):
-        return fold_transition_state(base, runs, payload, buckets)
+    slots = _StateRuns(spark, state_dir, _transition_fold(payload), max_runs=1)
 
     cols = ["tbl", "rid", "cdc_action", *payload]
     try:
         prev0 = state_before(slots.head(), 0)
         assert prev0 == {"base": None, "buckets": None, "runs": []}
-        slots.commit(slots.append(
-            keyed_transitions(b1, pk, payload), 0, prev0, fold
-        ))
+        commit_batch(slots, _append(slots, keyed_transitions(b1, pk, payload), 0, prev0), 0)
 
         def apply_batch_1():
             prev = state_before(slots.head(), 1)
             # run 0 alone, or (on the retry) the base that folded it
             assert prev["base"] is not None or prev["runs"] == [_run(0)]
-            view = slots.append(
-                keyed_transitions(b2, pk, payload), 1, prev, fold
-            )
-            slots.commit(view)
+            view = _append(slots, keyed_transitions(b2, pk, payload), 1, prev)
+            commit_batch(slots, view, 1)
             return view
 
         v1 = apply_batch_1()
         assert v1["base"] is not None and v1["runs"] == [_run(1)]  # compacted
-        first = _rows(slots.state_at(v1, fold).select(*cols), cols)
+        first = _rows(slots.state_at(v1).select(*cols), cols)
         v1b = apply_batch_1()  # the retry: same batch id, meta has it
-        second = _rows(slots.state_at(v1b, fold).select(*cols), cols)
+        second = _rows(slots.state_at(v1b).select(*cols), cols)
         assert first == second
         assert first == _rows(
             compact(b1.unionByName(b2), pk, payload).select(*cols), cols
@@ -355,16 +358,16 @@ def test_jvm_view_meta_torn_commit_reads_as_prior_state(spark):
     v0 = {"base": None, "buckets": None, "runs": [_run(0)]}
     v1 = {"base": None, "buckets": None, "runs": [_run(0), _run(1)]}
     try:
-        slots.commit(v0)
+        commit_batch(slots, v0, 0)
         assert state_before(slots.head(), 1) == v0
         fs.arm_tear_write()
         with pytest.raises(InjectedCrash):
-            slots.commit(v1)
+            commit_batch(slots, v1, 1)
         # the torn commit is invisible: batch 1 still folds from view 0
         assert slots.head() == v0
         assert state_before(slots.head(), 2) == v0
         fs.disarm()
-        slots.commit(v1)  # the replay's commit
+        commit_batch(slots, v1, 1)  # the replay's commit
         assert state_before(slots.head(), 2) == v1
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
@@ -393,8 +396,8 @@ def test_jvm_view_map_stays_o1_over_many_batches(spark):
 
     try:
         for b in range(100):
-            slots.commit({"base": b % 2, "buckets": None, "runs": [_run(b)]})
-        v99 = {"base": 1, "buckets": None, "runs": [_run(99)]}
+            commit_batch(slots, {"base": None, "buckets": None, "runs": [_run(b)]}, b)
+        v99 = {"base": None, "buckets": None, "runs": [_run(99)]}
         assert slots.head() == v99
         # the lookups the protocol can still issue: a replay of batch 99
         # and the next batch
@@ -403,7 +406,7 @@ def test_jvm_view_map_stays_o1_over_many_batches(spark):
         # the on-disk head payload itself is bounded, not just the view
         assert head_payload() == v99
         # a replayed newest batch re-commits without growing the view
-        slots.commit(v99)
+        commit_batch(slots, v99, 99)
         assert head_payload() == v99
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
@@ -415,14 +418,17 @@ def test_jvm_view_map_stays_o1_over_many_batches(spark):
         {"views": {"0": {"base": None, "buckets": None, "runs": [0]}}},
         {"views": {"0": {"base": None, "buckets": None, "runs": [_run(0)]}}},
         {"slots": {"0": 0}},
+        {"base": 0, "buckets": 1, "runs": []},
     ],
-    ids=["bare_ids", "view_map", "slots"],
+    ids=["bare_ids", "view_map", "slots", "base_outside_state_dir"],
 )
 def test_jvm_bare_run_ids_rejected(spark, sf_dir, payload):
     """State in a retired layout — views that list bare int run ids (the
-    ``runs/b=<id>`` layout), a batch→view map of run entries, or a
-    pre-LSM ping-pong ``slots`` manifest — makes the stream raise
-    instead of resuming it as empty state, and nothing is committed
+    ``runs/b=<id>`` layout), a batch→view map of run entries, a pre-LSM
+    ping-pong ``slots`` manifest, or a view whose base slot has no
+    ``state_dir/base/<slot>`` dir (its base was a warehouse table) —
+    makes the stream raise the named error instead of resuming it as
+    empty state or failing on a missing path, and nothing is committed
     over it."""
     from mysql_cdc_redis_spark.streaming.commitlog import LocalFS, ManifestLog
 
@@ -497,6 +503,8 @@ def test_jvm_resume_over_four_tuple_runs(spark, sf_dir):
         out = resume()
         assert slots.head()["base"] is not None
         assert _rows(out, cols) == _rows(compact(ch, ORDERS_PK, ORDERS_PAYLOAD), cols)
+        # one manifest per batch, the compacting batch included
+        assert [v for v, _ in slots.log.recent(100)] == [3, 2, 1]
     finally:
         drop_state_jvm(spark, state_dir)
 
@@ -545,7 +553,7 @@ def test_jvm_run_without_data_file_is_not_recorded(spark, sf_dir):
     from mysql_cdc_redis_spark.streaming.commitlog import LocalFS
     from mysql_cdc_redis_spark.streaming.compact_jvm import (
         _StateRuns,
-        fold_transition_state,
+        _transition_fold,
         keyed_transitions,
     )
 
@@ -554,19 +562,16 @@ def test_jvm_run_without_data_file_is_not_recorded(spark, sf_dir):
             return [n for n in super().list(path) if n.startswith(("_", "."))]
 
     state_dir = _tmp("jvm_nodata_state")
-    slots = _StateRuns(spark, state_dir, fs=NoDataFS())
+    slots = _StateRuns(spark, state_dir, _transition_fold(ORDERS_PAYLOAD), NoDataFS())
     ch = orders_changelog(spark, sf_dir)
     try:
-        def fold(base, runs, buckets=None):
-            return fold_transition_state(base, runs, ORDERS_PAYLOAD, buckets)
-
-        view = slots.append(
-            keyed_transitions(ch.limit(0), ORDERS_PK, ORDERS_PAYLOAD), 0,
-            slots.head(), fold,
+        view = _append(
+            slots, keyed_transitions(ch.limit(0), ORDERS_PK, ORDERS_PAYLOAD), 0,
+            slots.head(),
         )
         assert view == {"base": None, "buckets": None, "runs": []}
-        slots.commit(view)
-        assert slots.state_at(slots.head(), fold) is None
+        commit_batch(slots, view, 0)
+        assert slots.state_at(slots.head()) is None
     finally:
         drop_state_jvm(spark, state_dir)
 
@@ -748,13 +753,12 @@ def _persisted_state(spark, sf_dir):
     ch = _ltz(orders_changelog(spark, sf_dir).filter(F.col("o_orderkey") % 20 == 7))
     state_dir = _tmp("jvm_zstd_state")
     # max_runs=1: the second batch compacts the first's run into a base
-    slots = _StateRuns(spark, state_dir, max_runs=1)
+    slots = _StateRuns(spark, state_dir, _transition_fold(ORDERS_PAYLOAD), max_runs=1)
     dedup_root = _tmp("dedup_zstd_runs")
     try:
         delta = keyed_transitions(ch, ORDERS_PK, ORDERS_PAYLOAD)
-        fold = _transition_fold(ORDERS_PAYLOAD)
-        view = slots.append(delta, 0, slots.head(), fold)
-        view = slots.append(delta, 1, view, fold)
+        view = _append(slots, delta, 0, slots.head())
+        view = _append(slots, delta, 1, view)
         assert view["base"] == 0
         write_bucketed(ch, "zstd_bucketed", "o_orderkey")
         write_run(ch.select(F.col("o_orderkey").alias("k")), dedup_root, 0, "k", 4)
@@ -921,7 +925,7 @@ def test_jvm_commit_cost_scales_with_batch_not_state(spark, sf_dir):
     runs the head no longer lists must be GC'd after a compaction."""
     from mysql_cdc_redis_spark.streaming.compact_jvm import (
         _StateRuns,
-        fold_transition_state,
+        _transition_fold,
         keyed_transitions,
     )
     from mysql_cdc_redis_spark.streaming.runstore import state_before
@@ -934,10 +938,7 @@ def test_jvm_commit_cost_scales_with_batch_not_state(spark, sf_dir):
     tiny2 = ch.filter(F.col("o_orderkey") % 16 == 1)  # ~6%
     state_dir = _tmp("jvm_cost_state")
     pk, payload = ORDERS_PK, ORDERS_PAYLOAD
-    slots = _StateRuns(spark, state_dir, max_runs=2)
-
-    def fold(base, runs, buckets=None):
-        return fold_transition_state(base, runs, payload, buckets)
+    slots = _StateRuns(spark, state_dir, _transition_fold(payload), max_runs=2)
 
     def dir_bytes(p):
         return sum(
@@ -947,14 +948,14 @@ def test_jvm_commit_cost_scales_with_batch_not_state(spark, sf_dir):
         ) if os.path.isdir(p) else 0
 
     try:
-        slots.commit(slots.append(
-            keyed_transitions(big, pk, payload), 0, slots.head(), fold
-        ))
+        commit_batch(
+            slots, _append(slots, keyed_transitions(big, pk, payload), 0, slots.head()), 0
+        )
         big_run_bytes = dir_bytes(_run_path(slots, 0))
         state_rows = spark.read.parquet(_run_path(slots, 0)).count()
         prev = state_before(slots.head(), 1)
-        v1 = slots.append(keyed_transitions(tiny, pk, payload), 1, prev, fold)
-        slots.commit(v1)
+        v1 = _append(slots, keyed_transitions(tiny, pk, payload), 1, prev)
+        commit_batch(slots, v1, 1)
         tiny_run_bytes = dir_bytes(_run_path(slots, 1))
         tiny_run_rows = spark.read.parquet(_run_path(slots, 1)).count()
         # commit cost followed the batch, not the accumulated state:
@@ -967,12 +968,12 @@ def test_jvm_commit_cost_scales_with_batch_not_state(spark, sf_dir):
         # third batch exceeds max_runs: compaction folds runs 0-1 into a
         # base and keeps run 2...
         prev = state_before(slots.head(), 2)
-        v2 = slots.append(keyed_transitions(tiny2, pk, payload), 2, prev, fold)
-        slots.commit(v2)
+        v2 = _append(slots, keyed_transitions(tiny2, pk, payload), 2, prev)
+        commit_batch(slots, v2, 2)
         assert v2["base"] is not None and v2["runs"] == [_run(2)]
         # ...and the state equals the batch compactor over everything
         cols = ["tbl", "rid", "cdc_action", *payload]
-        assert _rows(slots.state_at(v2, fold).select(*cols), cols) == _rows(
+        assert _rows(slots.state_at(v2).select(*cols), cols) == _rows(
             compact(big.unionByName(tiny).unionByName(tiny2), pk, payload), cols
         )
         # GC: the head lists neither run 0 nor run 1
@@ -1295,7 +1296,7 @@ def test_jvm_compaction_join_is_exchange_free_on_base_side(spark, sf_dir):
 
 
 def test_jvm_sized_base_keeps_compaction_join_exchange_free(spark, sf_dir):
-    """A base written by ``append()`` at its byte-sized bucket count
+    """A base written by the compaction at its byte-sized bucket count
     (one bucket for this sub-MB state) still folds with the next runs
     through a merge join whose base side has no Exchange."""
     from mysql_cdc_redis_spark.streaming.compact_jvm import (
@@ -1307,12 +1308,12 @@ def test_jvm_sized_base_keeps_compaction_join_exchange_free(spark, sf_dir):
 
     ch = orders_changelog(spark, sf_dir).filter(F.col("o_orderkey") % 20 == 7)
     state_dir = _tmp("jvm_sized_plan_state")
-    slots = _StateRuns(spark, state_dir, max_runs=1)
     pk, payload = ORDERS_PK, ORDERS_PAYLOAD
+    slots = _StateRuns(spark, state_dir, _transition_fold(payload), max_runs=1)
     try:
         delta = keyed_transitions(ch, pk, payload)
-        view = slots.append(delta, 0, slots.head(), _transition_fold(payload))
-        view = slots.append(delta, 1, view, _transition_fold(payload))
+        view = _append(slots, delta, 0, slots.head())
+        view = _append(slots, delta, 1, view)
         assert view["buckets"] == 1, view
         merged = fold_transition_state(
             slots.read_base(view["base"]),
@@ -1373,12 +1374,12 @@ def test_jvm_state_dir_resumes_in_a_fresh_session(spark, sf_dir, tmp_path):
     )
     assert child.returncode == 0, child.stderr[-4000:]
 
-    slots = _StateRuns(spark, state_dir)
+    slots = _StateRuns(spark, state_dir, _transition_fold(ORDERS_PAYLOAD))
     try:
         view = slots.head()
         assert view["base"] is not None and view["buckets"] == 1, view
         assert not spark.catalog.tableExists(slots.tables[view["base"]])
-        folded = slots.state_at(view, _transition_fold(ORDERS_PAYLOAD))
+        folded = slots.state_at(view)
         plan = folded._jdf.queryExecution().executedPlan().toString()
         join_at = plan.find("SortMergeJoin")
         state_scan_at = plan.find(slots.tables[view["base"]])
@@ -1524,6 +1525,55 @@ def test_jvm_retraction_torn_commit_emits_exactly_once(spark, sf_dir):
     finally:
         drop_state_jvm(spark, torn[1])
         drop_state_jvm(spark, clean[1])
+
+
+def test_dual_sink_torn_commit_dumps_each_row_once(spark, sf_dir):
+    """A crash between a dual-sink batch's CSV write and its manifest
+    commit: batch 1 dumps its CSV rows, then its commit TEARS.  The
+    restart replays batch 1 over its own ``batch_id=1`` CSV dir, so the
+    dump holds each emitted ``(tbl, rid, last_seq)`` row exactly once."""
+    from pyspark.sql.types import StructType
+
+    from mysql_cdc_redis_spark.operators.dump import read_dump
+    from mysql_cdc_redis_spark.streaming import run_compaction_pipeline_dual_sink_jvm
+
+    from .fs_double import HostileFS
+
+    ch = orders_changelog(spark, sf_dir).filter(F.col("o_orderkey") % 5 == 2)
+    src = _tmp("jdual_torn_src")
+    stage_changelog_files(ch, src, n_chunks=3)
+    dirs = dict(
+        checkpoint_dir=_tmp("jdual_torn_ckpt"),
+        emissions_dir=_tmp("jdual_torn_emit"),
+        csv_dir=_tmp("jdual_torn_csv"),
+        state_dir=_tmp("jdual_torn_state"),
+        snapshot_dir=_tmp("jdual_torn_snap"),
+    )
+    csv_schema = StructType().add("tbl", "string").add("rid", "string")
+    csv_schema = csv_schema.add("cdc_action", "string").add("last_seq", "long")
+    for c in ORDERS_PAYLOAD:
+        csv_schema = csv_schema.add(ch.schema[c])
+    key = ["tbl", "rid", "last_seq"]
+
+    def run(fs):
+        run_compaction_pipeline_dual_sink_jvm(
+            spark, src, ch.schema, ORDERS_PK, ORDERS_PAYLOAD,
+            max_files_per_trigger=1, fs=fs, **dirs,
+        )
+
+    fs = HostileFS()
+    fs.tear_write_at = 2  # batch 0 commits; batch 1 dumps, then its commit tears
+    try:
+        with pytest.raises(Exception):
+            run(fs)
+        assert read_dump(spark, dirs["csv_dir"], csv_schema).count() > 0
+        fs.disarm()
+        run(fs)
+        dumped = _rows(read_dump(spark, dirs["csv_dir"], csv_schema), key)
+        assert len(dumped) == len(set(dumped)), "a replayed batch dumped its rows twice"
+        assert dumped == _rows(spark.read.parquet(dirs["emissions_dir"]), key)
+    finally:
+        drop_state_jvm(spark, dirs["state_dir"])
 
 
 @pytest.mark.parametrize("variant", ["retraction", "scd2"])

@@ -91,7 +91,8 @@ def main() -> None:
             state_dir=os.path.join(tree, "state"),
             pairs_dir=os.path.join(tree, "pairs"),
             n=3, k=16, bands=4, threshold=0.2,
-            max_files_per_trigger=1, auto_compact_runs=None,
+            # above the tree's batch count: no compaction moves the state
+            max_files_per_trigger=1, max_runs=64,
         )
         return out.count()
 

@@ -108,7 +108,8 @@ def _experiment(spark, docs, sliced, base, src, ckpt, state, pairs) -> None:
         out = run_dedup_stream_minhash(
             spark, src, docs.schema, checkpoint_dir=ckpt, state_dir=state,
             pairs_dir=pairs, n=3, k=16, bands=4, threshold=0.2,
-            max_files_per_trigger=1, auto_compact_runs=None, **kw,
+            # above the tool's batch count: no compaction moves the state
+            max_files_per_trigger=1, max_runs=64, **kw,
         )
         n_pairs = out.count()
         for b in sorted((x for x in os.listdir(f"{ckpt}/commits")

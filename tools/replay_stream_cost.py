@@ -1,5 +1,6 @@
-"""Per-batch cost replay of the LSM stream state store (``_StateRuns``,
-streaming/compact_jvm.py, over streaming/runstore.py): how much of each
+"""Per-batch cost replay of the LSM stream state store (the JVM store
+``_StateRuns``, streaming/compact_jvm.py, on the run store's batch
+steps, streaming/runstore.py): how much of each
 micro-batch is its O(|batch|) run commit and how much the periodic
 O(|state|) compaction — the delta/snapshot split of Structured
 Streaming's state store.
@@ -8,10 +9,10 @@ Input is perfbench's seeded CDC generator at the cdc_pipeline
 workload's shape: the snapshot changelog of a ``CDC_KEYS``-row lineitem
 base table is batch 0, then each of ``--increments`` increments of
 ``CDC_EVENTS_PER_INCREMENT`` events is one batch.  Every batch goes
-through the stream's own per-batch protocol — ``keyed_transitions``,
-``state_before`` the ``head``, ``run_buckets``, ``append``, ``commit``
-— with no streaming query around it, so the walls are the state
-store's alone.
+through the stream driver's own per-batch steps — ``keyed_transitions``
+and ``batch_runs``, ``state_before`` the ``head``, ``write_batch``,
+``commit_batch`` — with no streaming query around it, so the walls are
+the state store's alone.
 
     python tools/replay_stream_cost.py [--increments 40] [--max-runs 8] [--seed 7]
 
@@ -65,8 +66,8 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--increments", type=int, default=40)
     ap.add_argument(
-        "--max-runs", type=int, default=None,
-        help="run count that triggers a periodic compaction (default: the stream's)",
+        "--max-runs", type=int, default=8,
+        help="run count that triggers a periodic compaction (default: the stream's 8)",
     )
     ap.add_argument("--seed", type=int, default=7)
     args = ap.parse_args()
@@ -75,24 +76,31 @@ def main() -> None:
     from mysql_cdc_redis_spark.operators.compaction import compact
     from mysql_cdc_redis_spark.session import get_spark
     from mysql_cdc_redis_spark.sources.changelog import LINEITEM_PAYLOAD, LINEITEM_PK
-    from mysql_cdc_redis_spark.streaming import compact_jvm
+    from mysql_cdc_redis_spark.streaming import runstore
     from mysql_cdc_redis_spark.streaming.compact_jvm import (
         _StateRuns,
         _transition_fold,
         keyed_transitions,
     )
-    from mysql_cdc_redis_spark.streaming.runstore import run_dir, state_before
+    from mysql_cdc_redis_spark.streaming.runstore import (
+        commit_batch,
+        run_dir,
+        state_before,
+        write_batch,
+    )
 
     work = tempfile.mkdtemp(prefix="replay_stream_cost_")
     spark = get_spark(
         app_name="replay-stream-cost",
         extra_conf={"spark.sql.warehouse.dir": os.path.join(work, "warehouse")},
     )
-    slots = _StateRuns(spark, os.path.join(work, "state"), max_runs=args.max_runs)
+    slots = _StateRuns(
+        spark, os.path.join(work, "state"), _transition_fold(LINEITEM_PAYLOAD),
+        max_runs=args.max_runs,
+    )
     try:
         files = _stage(spark, work, args.increments, args.seed)
-        fold = _transition_fold(LINEITEM_PAYLOAD)
-        write_run, write_s = compact_jvm.write_run, []
+        write_run, write_s = runstore.write_run, []
 
         def timed_write_run(*args, **kwargs):
             t0 = time.perf_counter()
@@ -101,15 +109,17 @@ def main() -> None:
             finally:
                 write_s.append(time.perf_counter() - t0)
 
-        compact_jvm.write_run = timed_write_run
+        runstore.write_run = timed_write_run
         batches = []
         for b, path in enumerate(files):
             spark.sparkContext.setJobDescription(f"replay batch {b}")
             batch = spark.read.parquet(path)
-            delta = keyed_transitions(batch, LINEITEM_PK, LINEITEM_PAYLOAD)
-            prev, n_buckets = state_before(slots.head(), b), slots.run_buckets(batch)
+            runs = slots.batch_runs(
+                batch, keyed_transitions(batch, LINEITEM_PK, LINEITEM_PAYLOAD)
+            )
+            prev = state_before(slots.head(), b)
             t0 = time.perf_counter()
-            view = slots.append(delta, b, prev, fold, n_buckets)
+            view = write_batch(slots, runs, b, prev)
             rec = {
                 "batch": b,
                 "append_s": round(time.perf_counter() - t0, 3),
@@ -118,7 +128,7 @@ def main() -> None:
                 # before the commit: its GC drops runs a compaction folded in
                 "run_bytes": slots.fs.du(run_dir(slots.runs_root, {"gen": 0, "rid": b})),
             }
-            slots.commit(view)
+            commit_batch(slots, view, b)
             batches.append(rec)
             print(json.dumps(rec), flush=True)
 
@@ -129,7 +139,7 @@ def main() -> None:
         spark.sparkContext.setJobDescription("replay final fold")
         cols = ["tbl", "rid", "cdc_action", *LINEITEM_PAYLOAD]
         t0 = time.perf_counter()
-        got = checksum_row(slots.state_at(final, fold).select(*cols))
+        got = checksum_row(slots.state_at(final).select(*cols))
         final_fold_s = round(time.perf_counter() - t0, 3)
         want = checksum_row(
             compact(spark.read.parquet(*files), LINEITEM_PK, LINEITEM_PAYLOAD).select(*cols)
